@@ -95,10 +95,12 @@ final class GraftRawdataClient(
     def topicName: String = topic
 
     /** Publish a message DataFrame (id, orderingGroup, sequenceNumber,
-      * position, data) — the distributed equivalent of the reference's
-      * buffer(...).publish(positions): one shuffle clusters messages into
-      * the reference's (time-window, byte-chunk) file layout. Repeated
-      * publishes append new files to the topic (Topic.write).
+      * position, data) — the distributed entry point, for bulk loads: one
+      * shuffle clusters messages into the reference's (time-window,
+      * byte-chunk) file layout. The driver-held entry point is
+      * buffer(...).publish(positions), which writes the same layout on the
+      * driver (one rule, Topic.write). Repeated publishes append new files
+      * to the topic.
       */
     def publish(messages: DataFrame): Seq[TopicFile] = {
       if (producerClosed) throw new RawdataClosedException("rawdata producer")
@@ -119,17 +121,15 @@ final class GraftRawdataClient(
     private var openedAtMs: Long = -1L
     private var openBytes: Long = 0L
 
-    private def approxBytes(m: RawdataMessage): Long =
-      m.data.valuesIterator.map(_.length.toLong).sum + m.position.length + 48L
-
-    /** land the open file (no-op when nothing is open) */
+    /** land the open file, written on the driver (no-op when nothing is
+      * open)
+      */
     private def flushOpen(): Seq[TopicFile] = {
       if (openMsgs.isEmpty) Seq.empty
       else {
-        import spark.implicits._
         val batch = openMsgs.toSeq
         openMsgs.clear(); openedAtMs = -1L; openBytes = 0L
-        Topic.write(spark.createDataset(batch).toDF(), topicDir(topic), cfg)
+        Topic.write(batch, topicDir(topic), cfg)
       }
     }
 
@@ -144,7 +144,7 @@ final class GraftRawdataClient(
       batch.foreach { m =>
         if (openedAtMs < 0) openedAtMs = now
         openMsgs += m
-        openBytes += approxBytes(m)
+        openBytes += Topic.approxBytes(m)
         if (openBytes >= cfg.maxBytes) landed ++= flushOpen()
       }
       landed.result()
@@ -156,8 +156,10 @@ final class GraftRawdataClient(
       * the reference producer's staging area (rawdata API
       * buffer(builder) → publish(positions...)). Driver-side state by
       * design: the two-phase contract exists for SMALL transactional
-      * batches where the caller wants per-position control; bulk loads
-      * use the distributed publish(DataFrame) path above.
+      * batches where the caller wants per-position control, so a publish
+      * writes them on the driver with no Spark job; bulk loads use the
+      * distributed publish(DataFrame) path above. Both lay files out by
+      * the same rule (Topic.write).
       */
     private val pending =
       new java.util.LinkedHashMap[String, RawdataMessage]()
@@ -179,10 +181,14 @@ final class GraftRawdataClient(
     }
 
     /** Publish exactly the named buffered positions and drop them from
-      * the buffer. Naming an unbuffered position fails LOUDLY with
+      * the buffer, writing their files on the driver (Topic.write over
+      * driver-held messages: the DataFrame path's layout, no Spark job).
+      * Naming an unbuffered position — or one position twice, since the
+      * first naming already drops it — fails LOUDLY with
       * RawdataNotBufferedException BEFORE anything is written (the
-      * reference's all-or-nothing per-call contract), so a partial
-      * publish can't slip through silently.
+      * reference's all-or-nothing per-call contract), so a partial or
+      * duplicated publish can't slip through silently. No positions: no
+      * listing, no write, `Seq.empty`.
       *
       * In wall-clock mode the batch enters the producer's OPEN file and
       * the returned seq holds only files that actually landed (a roll or
@@ -191,15 +197,13 @@ final class GraftRawdataClient(
       */
     def publish(positions: String*): Seq[TopicFile] = synchronized {
       if (producerClosed) throw new RawdataClosedException("rawdata producer")
-      val missing = positions.filterNot(pending.containsKey)
-      if (missing.nonEmpty) throw new RawdataNotBufferedException(missing.head)
-      val batch = positions.map(pending.get)
-      positions.foreach(pending.remove)
-      if (cfg.wallClockWindows) stageWallClock(batch.toSeq)
-      else {
-        import spark.implicits._
-        publish(spark.createDataset(batch.toSeq).toDF())
-      }
+      val named = scala.collection.mutable.HashSet.empty[String]
+      positions.find(p => !pending.containsKey(p) || !named.add(p))
+        .foreach(p => throw new RawdataNotBufferedException(p))
+      val batch = positions.map(pending.remove).toSeq
+      if (batch.isEmpty) Seq.empty
+      else if (cfg.wallClockWindows) stageWallClock(batch)
+      else Topic.write(batch, topicDir(topic), cfg)
     }
 
     /** fire-and-track publish (reference AvroRawdataProducer.publishAsync:

@@ -4,8 +4,9 @@ import java.time.{Instant, ZoneOffset, ZonedDateTime}
 import java.time.format.DateTimeFormatter
 import java.util.UUID
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -47,8 +48,8 @@ object PreExisting {
   * arbitrary ULID timestamps still rolls files by elapsed producer
   * time. Wall-clock windowing lives in the client producer
   * (GraftRawdataClient.Producer — the surface with a producer
-  * lifetime); bulk Topic.write treats the whole batch as one ingest
-  * instant in this mode (byte-rolling still chunks it).
+  * lifetime); Topic.write treats the whole batch as one ingest instant
+  * in this mode (byte-rolling still chunks it).
   */
 case class TopicConfig(
     maxWindowMs: Long = 3600L * 1000,
@@ -66,17 +67,20 @@ case class TopicConfig(
   * (cloudstorage/GCSRawdataUtils.java vs filesystem/
   * FilesystemRawdataUtils.java behind one provider interface).
   *
-  * Writer: one shuffle clusters messages into (time-window, byte-chunk)
-  * files — the distributed equivalent of the reference producer's
-  * max.seconds/max.bytes rolling (AvroRawdataProducer.java). Each task
-  * streams its group through an Avro DataFileWriter with real sync blocks,
-  * writing to a dot-prefixed temp name and renaming on completion (on
-  * object stores the rename is a copy, matching the reference's
-  * write-local-then-upload pattern).
+  * Writer: one layout rule cuts messages into (time-window, byte-chunk)
+  * files — the reference producer's max.seconds/max.bytes rolling
+  * (AvroRawdataProducer.java). A DataFrame publish applies it with one
+  * shuffle and writes each group in a Spark task; driver-held messages
+  * (the producer's buffer → publish) are placed and written on the
+  * driver, with no Spark job. Both stream each group through an Avro
+  * DataFileWriter with real sync blocks, writing to a dot-prefixed temp
+  * name and renaming on completion (on object stores the rename is a
+  * copy, matching the reference's write-local-then-upload pattern).
   *
-  * Reader: driver lists + prunes by filename, then one Spark task per
-  * file decodes Avro → rows. Parallelism scales with file count, which is
-  * how the data grows; within-file order is ULID order by construction.
+  * Reader: driver lists + prunes by filename, then Spark tasks decode
+  * Avro → rows, one file per task up to [[Topic.readPartitionCap]].
+  * Parallelism scales with file count, which is how the data grows;
+  * within-file order is ULID order by construction.
   */
 object Topic {
 
@@ -91,17 +95,57 @@ object Topic {
   implicit private def msgEncoder: Encoder[RawdataMessage] = Encoders.product[RawdataMessage]
   implicit private def fileEncoder: Encoder[TopicFile] = Encoders.product[TopicFile]
 
+  // ---------------------------------------------------------- file layout
+
+  /** Bytes a message counts toward `maxBytes`: payload bytes + position
+    * length + 48. Part of the one layout rule both write paths share (see
+    * [[write]]); [[approxBytesCol]] is its SQL twin.
+    */
+  private[graft] def approxBytes(m: RawdataMessage): Long =
+    m.data.valuesIterator.map(_.length.toLong).sum + m.position.codePointCount(0, m.position.length) + 48L
+
+  private def approxBytesCol: Column =
+    expr("aggregate(map_values(data), 0L, (acc, v) -> acc + length(v))") + length(col("position")) + lit(48L)
+
+  /** A message's time window: ULID ms ÷ `maxWindowMs`, or 0 in wall-clock
+    * mode (the publish IS one ingest instant). [[windowCol]] is its SQL twin.
+    */
+  private def windowOf(id: Array[Byte], cfg: TopicConfig): Long =
+    if (cfg.wallClockWindows) 0L else ulidTs(id) / cfg.maxWindowMs
+
+  private def windowCol(cfg: TopicConfig): Column =
+    if (cfg.wallClockWindows) lit(0L)
+    else Ulid.timestampMs(col("id")).divide(lit(cfg.maxWindowMs)).cast("long")
+
+  /** Byte rolling is effectively off when `maxBytes` is so large that no
+    * window can reach an eighth of it (the time-window-only configs): the
+    * chunk is then the constant 0, and the DataFrame path skips the
+    * prefix-sum window stage that would compute it.
+    */
+  private def byteRolling(cfg: TopicConfig): Boolean = cfg.maxBytes < Long.MaxValue / 8
+
+  private val ulidOrder: Ordering[Array[Byte]] = (a, b) => java.util.Arrays.compareUnsigned(a, b)
+
+  /** The layout rule over driver-held messages: (window, chunk, message)
+    * in (window, chunk, ULID) order, chunk = message bytes before this one
+    * in its window, in ULID order, ÷ `maxBytes`.
+    */
+  private def place(messages: Seq[RawdataMessage], cfg: TopicConfig): Seq[(Long, Long, RawdataMessage)] = {
+    val rolling = byteRolling(cfg)
+    var win = Long.MinValue
+    var before = 0L
+    messages.map(m => (windowOf(m.id, cfg), m))
+      .sortBy { case (w, m) => (w, m.id) }(Ordering.Tuple2(Ordering.Long, ulidOrder))
+      .map { case (w, m) =>
+        if (w != win) { win = w; before = 0L }
+        val chunk = if (rolling) before / cfg.maxBytes else 0L
+        before += approxBytes(m)
+        (w, chunk, m)
+      }
+  }
+
   // ---------------------------------------------------------------- write
 
-  /** Write a message DataFrame (columns id, orderingGroup, sequenceNumber,
-    * position, data) as a topic directory; returns per-file metadata.
-    *
-    * Incremental append is supported: a second publish into an existing
-    * topic adds files alongside the old ones (names differ whenever the
-    * batches differ — the name is derived from the window's first message).
-    * A literal re-publish of identical data fails fast on the name
-    * collision rather than silently overwriting.
-    */
   /** Orphaned temp files older than this are reclaimed at the next
     * publish. The age gate keeps a CONCURRENT publish's in-flight temps
     * safe (writer tasks stream for seconds, not hours); anything older
@@ -113,55 +157,55 @@ object Topic {
     */
   private[graft] val TempOrphanAgeMs: Long = 3600L * 1000
 
-  /** delete crashed-writer temp debris past the age gate (one listing,
-    * best-effort — a racing delete is fine)
+  /** The one listing a publish makes: creates the topic directory,
+    * deletes crashed-writer temp debris past the age gate (best-effort —
+    * a racing delete is fine), and snapshots the names present before
+    * this publish for [[commitTopicFile]]'s re-publish check.
     */
-  private def cleanOrphanTemps(fs: org.apache.hadoop.fs.FileSystem, topicDir: String): Unit = {
+  private def prepareTopicDir(fs: FileSystem, topicDir: String): PreExisting = {
+    val dir = new Path(topicDir)
+    fs.mkdirs(dir)
+    val files =
+      try fs.listStatus(dir).filter(_.isFile)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
     val cutoff = System.currentTimeMillis() - TempOrphanAgeMs
-    try fs.listStatus(new Path(topicDir)).iterator
-      .filter(st => st.isFile && st.getPath.getName.startsWith(".inprogress-") &&
-        st.getPath.getName.endsWith(".tmp") && st.getModificationTime < cutoff)
-      .foreach(st => fs.delete(st.getPath, false))
-    catch { case _: java.io.FileNotFoundException => () }
+    files.foreach { st =>
+      val name = st.getPath.getName
+      if (name.startsWith(".inprogress-") && name.endsWith(".tmp") && st.getModificationTime < cutoff)
+        fs.delete(st.getPath, false)
+    }
+    PreExisting.of(files.iterator.map(_.getPath.getName).filter(_.endsWith(".avro")).toSeq)
   }
 
+  /** Write a message DataFrame (columns id, orderingGroup, sequenceNumber,
+    * position, data) as topic files; returns per-file metadata in
+    * (window, chunk) order, which is `fromTsMs` order.
+    *
+    * Two entry points, chosen by where the data lives, share every
+    * decision that shapes a file:
+    *  - this one, for distributed data (bulk loads, compaction): one
+    *    shuffle clusters messages into (window, chunk) groups, and each
+    *    task streams its groups through [[FileGroupWriter]];
+    *  - `write(Seq[RawdataMessage], ...)`, for messages already on the
+    *    driver (the producer's buffer → publish): the same rule placed on
+    *    the driver, the same writer, no Spark job.
+    * Layout: window = ULID ms ÷ `maxWindowMs` (0 in wall-clock mode);
+    * chunk = message bytes ([[approxBytes]]) before this one in its
+    * window, in ULID order, ÷ `maxBytes`; one file per (window, chunk),
+    * in ULID order — the reference producer's max.seconds/max.bytes
+    * rolling (AvroRawdataProducer.java). Commit: each file is written to
+    * a dot-prefixed temp name and renamed on completion (on object stores
+    * the rename is a copy, matching the reference's
+    * write-local-then-upload pattern) by [[commitTopicFile]].
+    *
+    * Incremental append is supported: a second publish into an existing
+    * topic adds files alongside the old ones (names differ whenever the
+    * batches differ — the name is derived from the file's first message).
+    * A literal re-publish of identical data fails fast on the name
+    * collision rather than silently overwriting.
+    */
   def write(messages: DataFrame, topicDir: String, cfg: TopicConfig = TopicConfig()): Seq[TopicFile] = {
-    val conf = HadoopIO.conf()
-    val topicFs = HadoopIO.fs(topicDir, conf)
-    topicFs.mkdirs(new Path(topicDir))
-    cleanOrphanTemps(topicFs, topicDir)
-    val idHex = Ulid.hexOf(col("id"))
-    val tsMs = Ulid.timestampMs(col("id"))
-    val win = Window.partitionBy(col("_win")).orderBy(col("_ulid_hex"))
-
-    // wall-clock mode: this publish IS one ingest instant — a single
-    // time window for the whole batch (byte-rolling still chunks it)
-    val winCol =
-      if (cfg.wallClockWindows) lit(0L)
-      else tsMs.divide(lit(cfg.maxWindowMs)).cast("long")
-    // Byte-chunk assignment needs a per-window running byte total — a
-    // full sort of every window. When byte rolling is effectively
-    // DISABLED (maxBytes so large no window can reach an eighth of it —
-    // the time-window-only configs), the chunk is provably the constant
-    // 0 and the whole prefix-sum window stage (plus the per-row payload
-    // byte-size aggregate feeding it) is skipped: one fewer wide stage
-    // on the producer hot path.
-    val byteRolling = cfg.maxBytes < Long.MaxValue / 8
-    val approxBytes = expr("aggregate(map_values(data), 0L, (acc, v) -> acc + length(v))") +
-      length(col("position")) + lit(48L)
-    val chunked = messages
-      .withColumn("_ulid_hex", idHex)
-      .withColumn("_win", winCol)
-    val staged = (if (byteRolling)
-        chunked
-          .withColumn("_bytes", approxBytes)
-          .withColumn("_chunk", ((sum(col("_bytes")).over(win) - col("_bytes")) / lit(cfg.maxBytes)).cast("long"))
-      else chunked.withColumn("_chunk", lit(0L)))
-      .repartition(col("_win"), col("_chunk"))
-      .sortWithinPartitions(col("_win"), col("_chunk"), col("_ulid_hex"))
-
-    val sync = cfg.syncIntervalBytes
-    val sconf = HadoopIO.serializable()
+    val fs = HadoopIO.fs(topicDir, HadoopIO.conf())
     // Names present before this publish, shipped into the writer tasks:
     // lets a task distinguish a genuine re-publish (dest predates the job
     // → loud failure) from its own earlier attempt under Spark task
@@ -169,61 +213,92 @@ object Topic {
     // skip). Broadcast once as 8-byte name hashes (PreExisting), so a
     // 1.5M-file topic costs one ~12 MB broadcast, not a per-task closure
     // of full name strings.
-    val pre = messages.sparkSession.sparkContext.broadcast(
-      PreExisting.of(listFiles(topicDir).map(f => new Path(f.path).getName)))
-    val metas = staged.toDF().mapPartitions { rows =>
-      new FileGroupWriter(topicDir, sync, sconf, pre.value, rows).run()
-    }.collect().toSeq
-    pre.destroy()
-
-    invalidateListing(topicDir)
-    metas.sortBy(_.fromTsMs)
+    val pre = messages.sparkSession.sparkContext.broadcast(prepareTopicDir(fs, topicDir))
+    val written =
+      try {
+        val win = Window.partitionBy(col("_win")).orderBy(col("_ulid_hex"))
+        val chunked = messages
+          .withColumn("_ulid_hex", Ulid.hexOf(col("id")))
+          .withColumn("_win", windowCol(cfg))
+        val staged = (if (byteRolling(cfg))
+            chunked
+              .withColumn("_bytes", approxBytesCol)
+              .withColumn("_chunk", ((sum(col("_bytes")).over(win) - col("_bytes")) / lit(cfg.maxBytes)).cast("long"))
+          else chunked.withColumn("_chunk", lit(0L)))
+          .repartition(col("_win"), col("_chunk"))
+          .sortWithinPartitions(col("_win"), col("_chunk"), col("_ulid_hex"))
+          .select(col("_win").as("_1"), col("_chunk").as("_2"),
+            struct(col("id"), col("orderingGroup"), col("sequenceNumber"), col("position"), col("data")).as("_3"))
+          .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, msgEncoder))
+        val sync = cfg.syncIntervalBytes
+        val sconf = HadoopIO.serializable()
+        staged.mapPartitions { placed =>
+          new FileGroupWriter(topicDir, sync, HadoopIO.fs(topicDir, sconf.value), pre.value).run(placed)
+        }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, fileEncoder)).collect().toSeq
+      } finally pre.destroy()
+    landed(topicDir, written)
   }
 
-  /** Streams one task's rows (already clustered+sorted by _win,_chunk,id)
-    * into one Avro file per (_win,_chunk) group.
+  /** Write driver-held messages as topic files: the same layout rule,
+    * writer and commit as the DataFrame [[write]], run on the driver
+    * without a Spark job — what a small buffered publish needs (the
+    * reference producer likewise writes its window straight to a file).
+    */
+  def write(messages: Seq[RawdataMessage], topicDir: String, cfg: TopicConfig): Seq[TopicFile] = {
+    val fs = HadoopIO.fs(topicDir, HadoopIO.conf())
+    val writer = new FileGroupWriter(topicDir, cfg.syncIntervalBytes, fs, prepareTopicDir(fs, topicDir))
+    landed(topicDir, writer.run(place(messages, cfg).iterator).toSeq)
+  }
+
+  /** files of a finished publish in (window, chunk) order */
+  private def landed(topicDir: String, written: Seq[(Long, Long, TopicFile)]): Seq[TopicFile] = {
+    invalidateListing(topicDir)
+    written.sortBy(w => (w._1, w._2)).map(_._3)
+  }
+
+  /** Streams (window, chunk, message) triples, clustered by (window,
+    * chunk) and ULID-ordered within, into one Avro file per group. Runs in
+    * a Spark task (DataFrame path) or on the driver (driver-held path). A
+    * failure closes and deletes the open temp file before it propagates.
     */
   private final class FileGroupWriter(
-      topicDir: String, syncBytes: Long, sconf: HadoopIO.SerializableConf,
-      preExisting: PreExisting, rows: Iterator[Row]) {
-    def run(): Iterator[TopicFile] = {
-      val fs = HadoopIO.fs(topicDir, sconf.value)
-      val out = Seq.newBuilder[TopicFile]
+      topicDir: String, syncBytes: Long, fs: FileSystem, preExisting: PreExisting) {
+    def run(placed: Iterator[(Long, Long, RawdataMessage)]): Iterator[(Long, Long, TopicFile)] = {
+      val out = Seq.newBuilder[(Long, Long, TopicFile)]
       var key: (Long, Long) = null
       var writer: AvroCodec.FileWriter = null
       var tmp: Path = null
 
       def finish(): Unit = if (writer != null) {
-        writer.close()
-        val meta = TopicFile(
-          path = "",
-          fromTsMs = ulidTs(writer.firstId),
-          count = writer.count,
-          lastBlockOffset = writer.lastBlockOffset,
-          firstPosition = writer.firstPosition)
-        val name = s"${formatTs(meta.fromTsMs)}_${meta.count}_${meta.lastBlockOffset}_${meta.firstPosition}.avro"
+        val w = writer
+        writer = null
+        w.close()
+        val fromTsMs = ulidTs(w.firstId)
+        val name = s"${formatTs(fromTsMs)}_${w.count}_${w.lastBlockOffset}_${w.firstPosition}.avro"
         val dest = HadoopIO.child(topicDir, name)
         commitTopicFile(fs, tmp, dest, name, preExisting)
-        out += meta.copy(path = fs.makeQualified(dest).toString)
-        writer = null
+        out += ((key._1, key._2,
+          TopicFile(fs.makeQualified(dest).toString, fromTsMs, w.count, w.lastBlockOffset, w.firstPosition)))
       }
 
-      rows.foreach { row =>
-        val k = (row.getAs[Long]("_win"), row.getAs[Long]("_chunk"))
-        if (k != key) {
-          finish()
-          key = k
-          tmp = HadoopIO.child(topicDir, s".inprogress-${UUID.randomUUID().toString.take(12)}.tmp")
-          writer = new AvroCodec.FileWriter(fs.create(tmp, false), syncBytes)
+      try {
+        placed.foreach { case (win, chunk, m) =>
+          val k = (win, chunk)
+          if (k != key) {
+            finish()
+            key = k
+            tmp = HadoopIO.child(topicDir, s".inprogress-${UUID.randomUUID().toString.take(12)}.tmp")
+            writer = new AvroCodec.FileWriter(fs.create(tmp, false), syncBytes)
+          }
+          writer.append(m)
         }
-        writer.append(RawdataMessage(
-          id = row.getAs[Array[Byte]]("id"),
-          orderingGroup = Option(row.getAs[String]("orderingGroup")),
-          sequenceNumber = row.getAs[Long]("sequenceNumber"),
-          position = row.getAs[String]("position"),
-          data = row.getAs[Map[String, Array[Byte]]]("data").map(identity)))
+        finish()
+      } catch {
+        case e: Throwable =>
+          if (writer != null) try writer.close() catch { case _: Exception => () }
+          if (tmp != null) try fs.delete(tmp, false) catch { case _: Exception => () }
+          throw e
       }
-      finish()
       out.result().iterator
     }
   }
@@ -261,7 +336,8 @@ object Topic {
     }
   }
 
-  private def ulidTs(id: Array[Byte]): Long = {
+  /** milliseconds since epoch from a ULID's first 6 bytes */
+  private[graft] def ulidTs(id: Array[Byte]): Long = {
     var ts = 0L
     var i = 0
     while (i < 6) { ts = (ts << 8) | (id(i) & 0xffL); i += 1 }
@@ -356,17 +432,23 @@ object Topic {
 
   // ----------------------------------------------------------------- read
 
-  /** Distributed read of an explicit file list. One task per file up to a
-    * scheduling-friendly cap: a 1.6M-file topic gets ~4 waves of tasks per
-    * core (each decoding a run of files sequentially) instead of 1.6M
+  /** Most read tasks a topic scan plans: one task per file up to this
+    * scheduling-friendly cap, so a 1.6M-file topic gets ~4 waves of tasks
+    * per core (each decoding a run of files sequentially) instead of 1.6M
     * task launches — parallelism is bounded by cores either way, the cap
-    * only bounds scheduler pressure.
+    * only bounds scheduler pressure. Shared by every topic read path
+    * (readFiles, readWithOrigin, the graft-topic batch and stream scans).
+    */
+  private[graft] def readPartitionCap(sc: SparkContext): Int = math.max(sc.defaultParallelism * 4, 64)
+
+  /** Distributed read of an explicit file list, at most
+    * [[readPartitionCap]] tasks.
     */
   def readFiles(spark: SparkSession, files: Seq[TopicFile]): Dataset[RawdataMessage] = {
     if (files.isEmpty) return spark.emptyDataset[RawdataMessage]
     val paths = files.map(_.path)
     val sconf = HadoopIO.serializable()
-    val parts = math.min(paths.size, math.max(spark.sparkContext.defaultParallelism * 4, 64))
+    val parts = math.min(paths.size, readPartitionCap(spark.sparkContext))
     spark.createDataset(paths)(Encoders.STRING)
       .repartition(parts)
       .flatMap(p => AvroCodec.readFile(p, sconf.value))
@@ -387,7 +469,7 @@ object Topic {
         .toDF("file_path", "msg")
     val paths = files.map(_.path)
     val sconf = HadoopIO.serializable()
-    val parts = math.min(paths.size, math.max(spark.sparkContext.defaultParallelism * 4, 64))
+    val parts = math.min(paths.size, readPartitionCap(spark.sparkContext))
     spark.createDataset(paths)(Encoders.STRING)
       .repartition(parts)
       .flatMap(p => AvroCodec.readFile(p, sconf.value).map(m => (p, m)))(

@@ -150,13 +150,6 @@ final class TopicDataWriter(
   private val committed = Seq.newBuilder[String]
   private val temps = scala.collection.mutable.ArrayBuffer.empty[Path]
 
-  private def tsOf(id: Array[Byte]): Long = {
-    var ts = 0L
-    var i = 0
-    while (i < 6) { ts = (ts << 8) | (id(i) & 0xffL); i += 1 }
-    ts
-  }
-
   private def toMessage(row: InternalRow): RawdataMessage = {
     val data = row.getMap(iData)
     val keys = data.keyArray()
@@ -177,7 +170,7 @@ final class TopicDataWriter(
 
   private def finishFile(): Unit = if (writer != null) {
     writer.close()
-    val name = s"${Topic.formatTs(tsOf(writer.firstId))}_${writer.count}_${writer.lastBlockOffset}_${writer.firstPosition}.avro"
+    val name = s"${Topic.formatTs(Topic.ulidTs(writer.firstId))}_${writer.count}_${writer.lastBlockOffset}_${writer.firstPosition}.avro"
     val dest = HadoopIO.child(topicDir, name)
     Topic.commitTopicFile(fs, tmp, dest, name, preExisting)
     committed += name
@@ -186,8 +179,8 @@ final class TopicDataWriter(
 
   override def write(row: InternalRow): Unit = {
     val m = toMessage(row)
-    val win = tsOf(m.id) / cfg.maxWindowMs
-    val approx = 48L + m.position.length + m.data.valuesIterator.map(_.length.toLong).sum
+    val win = Topic.ulidTs(m.id) / cfg.maxWindowMs
+    val approx = Topic.approxBytes(m)
     if (writer == null || win != curWin || bytesInFile + approx > cfg.maxBytes) {
       finishFile()
       curWin = win

@@ -28,8 +28,9 @@ import graft.rawdata.{AvroCodec, HadoopIO, Topic, TopicFile}
   * (plain filter, join pushdown, partition of a larger query) reaches
   * `planInputPartitions` and drops non-overlapping files BEFORE any byte
   * is read, and column pruning skips decoding the payload map when only
-  * metadata columns are selected. One file = one InputPartition, so scan
-  * parallelism tracks the data like the rest of the engine.
+  * metadata columns are selected. One file = one InputPartition up to the
+  * shared read cap, so scan parallelism tracks the data like the rest of
+  * the engine.
   *
   * Filters are reported but also left as residuals (Spark re-evaluates
   * them row-by-row): file pruning is a containment bound, not an exact
@@ -60,6 +61,19 @@ object TopicDataSource {
     StructField("data", MapType(StringType, BinaryType), nullable = false),
     StructField("ulid_hex", StringType, nullable = false),
     StructField("ts_ms", LongType, nullable = false)))
+
+  /** Input partitions over `paths`, order kept: one file per partition up
+    * to [[Topic.readPartitionCap]]; beyond it, contiguous runs of files
+    * share a partition. Shared by the batch scan and the micro-batch tail,
+    * whose first batch over a large backlog would otherwise launch one
+    * task per file.
+    */
+  def partitions(paths: Seq[String]): Array[InputPartition] = {
+    val cap = Topic.readPartitionCap(org.apache.spark.sql.SparkSession.active.sparkContext)
+    val per = math.max(1, math.ceil(paths.size.toDouble / cap).toInt)
+    val sconf = HadoopIO.serializable()
+    paths.grouped(per).map(g => TopicInputPartition(g, sconf): InputPartition).toArray
+  }
 }
 
 final class TopicTable(path: String) extends Table with SupportsRead with SupportsWrite {
@@ -125,23 +139,8 @@ final class TopicScan(path: String, loMs: Long, hiMs: Long, required: StructType
     if (hiMs == Long.MaxValue) fromLo else fromLo.takeWhile(_.fromTsMs <= hiMs)
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val sconf = HadoopIO.serializable()
-    val files = prunedFiles().map(_.path)
-    // one file per partition up to a scheduling-friendly cap; beyond it,
-    // contiguous runs of files share a partition (a 1.6M-file topic
-    // should not cost 1.6M task launches — parallelism is bounded by
-    // cores either way)
-    val maxParts = math.max(
-      org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism * 4, 64)
-    val groups =
-      if (files.size <= maxParts) files.map(Seq(_))
-      else {
-        val per = math.ceil(files.size.toDouble / maxParts).toInt
-        files.grouped(per).toSeq
-      }
-    groups.map(g => TopicInputPartition(g, sconf): InputPartition).toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    TopicDataSource.partitions(prunedFiles().map(_.path))
 
   override def createReaderFactory(): PartitionReaderFactory =
     new TopicReaderFactory(required)
@@ -154,8 +153,10 @@ final class TopicScan(path: String, loMs: Long, hiMs: Long, required: StructType
   * (reference AvroRawdataConsumer.java:71-96) as a DSv2 stream: each
   * trigger lists the topic (one LIST per trigger, like the reference's
   * TopicAvroFileCache interval) and the newly landed files become that
-  * micro-batch's partitions. Topic files appear atomically (temp-name
-  * rename), so per-file discovery can neither lose nor split a file.
+  * micro-batch's partitions, grouped as the batch scan groups them (a
+  * catch-up over a large backlog stays within the partition cap). Topic
+  * files appear atomically (temp-name rename), so per-file discovery can
+  * neither lose nor split a file.
   *
   * Offsets index this stream's DISCOVERY ORDER (files sorted by name can
   * land out of ULID order under a distributed publish; discovery order is
@@ -234,10 +235,9 @@ final class TopicMicroBatchStream(
         throw new IllegalStateException(
           s"discovery log covers ${discovered.size} files but the checkpoint references offset $e " +
             s"— checkpoint/log mismatch for $logPath")
-      discovered.slice(s, e).toArray
+      discovered.slice(s, e).toVector
     }
-    val sconf = HadoopIO.serializable()
-    slice.map(p => TopicInputPartition(Seq(p), sconf): InputPartition)
+    TopicDataSource.partitions(slice)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new TopicReaderFactory(required)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.rawdata.{EventsAsTopic, Topic}
+import graft.rawdata.{EventsAsTopic, RawdataMessage, Topic, TopicConfig}
 
 /** The DataSource V2 topic connector must agree with the imperative read
   * path AND prove its planning-time behaviors: ts_ms predicates prune
@@ -127,6 +127,49 @@ class TopicSourceSpec extends SparkSpec {
     val out = spark.read.parquet(outDir).select($"ulid_hex").as[String].collect()
     assert(out.length === batch1.count() + batch2.count(),
       "a restart must not re-deliver files committed by the previous run")
+    assert(out.distinct.length === out.length, "no duplicate deliveries across restarts")
+  }
+
+  test("a stream over more files than the partition cap plans at most the cap, exactly once across a restart") {
+    val cap = Topic.readPartitionCap(spark.sparkContext)
+    val sdir = Topic.tempDir("dsv2-cap")
+    val ckpt = Topic.tempDir("dsv2-cap-ckpt")
+    val outDir = Topic.tempDir("dsv2-cap-out")
+    // one message per one-second file
+    def batch(from: Int, n: Int): Seq[RawdataMessage] = (from until from + n).map { i =>
+      val ts = 1700000000000L + i * 1000L
+      val id = new Array[Byte](16)
+      (0 until 6).foreach(k => id(k) = ((ts >>> (8 * (5 - k))) & 0xff).toByte)
+      id(15) = (i & 0xff).toByte
+      RawdataMessage(id, None, i.toLong, s"p$i", Map("d" -> Array(i.toByte)))
+    }
+    val cfg = TopicConfig(maxWindowMs = 1000L)
+    Topic.write(batch(0, cap * 2 + 5), sdir, cfg)
+
+    // planning: contiguous runs of discovered files, at most the cap
+    val stream = new TopicMicroBatchStream(sdir, Long.MinValue, Long.MaxValue, TopicDataSource.Schema,
+      Topic.tempDir("dsv2-cap-plan"))
+    val parts = stream.planInputPartitions(stream.initialOffset(), stream.latestOffset())
+      .map(_.asInstanceOf[TopicInputPartition])
+    assert(parts.length <= cap)
+    assert(parts.flatMap(_.filePaths).toSeq === Topic.listFiles(sdir).map(_.path))
+
+    def runOnce(): Unit = {
+      val q = spark.readStream.format("graft-topic").load(sdir)
+        .select($"ulid_hex", $"position")
+        .writeStream.format("parquet")
+        .option("checkpointLocation", ckpt)
+        .option("path", outDir)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
+
+    runOnce()
+    Topic.write(batch(cap * 2 + 5, cap + 3), sdir, cfg)
+    runOnce()
+
+    val out = spark.read.parquet(outDir).select($"position").as[String].collect()
+    assert(out.length === cap * 3 + 8)
     assert(out.distinct.length === out.length, "no duplicate deliveries across restarts")
   }
 
