@@ -330,7 +330,7 @@ final class GraftRawdataClient(
           }
         if (fresh.nonEmpty) {
           val msgs = Topic.readFiles(spark, fresh).collect()
-            .map(m => (m.id.map("%02x".format(_)).mkString, m))
+            .map(m => (Ulid.hex(m.id), m))
             .filter { case (h, _) =>
               startAfterHex.forall(c => if (startInclusive) h >= c else h > c)
             }

@@ -111,7 +111,7 @@ object Topic {
     * mode (the publish IS one ingest instant). [[windowCol]] is its SQL twin.
     */
   private def windowOf(id: Array[Byte], cfg: TopicConfig): Long =
-    if (cfg.wallClockWindows) 0L else ulidTs(id) / cfg.maxWindowMs
+    if (cfg.wallClockWindows) 0L else Ulid.tsMs(id) / cfg.maxWindowMs
 
   private def windowCol(cfg: TopicConfig): Column =
     if (cfg.wallClockWindows) lit(0L)
@@ -183,9 +183,11 @@ object Topic {
     *
     * Two entry points, chosen by where the data lives, share every
     * decision that shapes a file:
-    *  - this one, for distributed data (bulk loads, compaction): one
-    *    shuffle clusters messages into (window, chunk) groups, and each
-    *    task streams its groups through [[FileGroupWriter]];
+    *  - this one, for distributed data: one shuffle clusters messages
+    *    into (window, chunk) groups, and each task streams its groups
+    *    through [[FileGroupWriter]]. Its callers are `publish(df)`, bulk
+    *    loads and compaction, and the `graft-topic` batch and streaming
+    *    sinks (graft.sources.TopicDataSource);
     *  - `write(Seq[RawdataMessage], ...)`, for messages already on the
     *    driver (the producer's buffer → publish): the same rule placed on
     *    the driver, the same writer, no Spark job.
@@ -203,8 +205,16 @@ object Topic {
     * batches differ — the name is derived from the file's first message).
     * A literal re-publish of identical data fails fast on the name
     * collision rather than silently overwriting.
+    *
+    * `replay = true` (the streaming sink) treats names already in the
+    * topic as this write's own earlier attempt: a micro-batch replayed
+    * after a restart (its files landed, its commit marker did not)
+    * re-derives the same names and converges on the committed files
+    * instead of failing. A name collision with different bytes still
+    * fails.
     */
-  def write(messages: DataFrame, topicDir: String, cfg: TopicConfig = TopicConfig()): Seq[TopicFile] = {
+  def write(messages: DataFrame, topicDir: String, cfg: TopicConfig = TopicConfig(),
+      replay: Boolean = false): Seq[TopicFile] = {
     val fs = HadoopIO.fs(topicDir, HadoopIO.conf())
     // Names present before this publish, shipped into the writer tasks:
     // lets a task distinguish a genuine re-publish (dest predates the job
@@ -212,8 +222,9 @@ object Topic {
     // retry/speculation (dest appeared during the job → already committed,
     // skip). Broadcast once as 8-byte name hashes (PreExisting), so a
     // 1.5M-file topic costs one ~12 MB broadcast, not a per-task closure
-    // of full name strings.
-    val pre = messages.sparkSession.sparkContext.broadcast(prepareTopicDir(fs, topicDir))
+    // of full name strings. A replay ships an empty snapshot.
+    val listed = prepareTopicDir(fs, topicDir)
+    val pre = messages.sparkSession.sparkContext.broadcast(if (replay) PreExisting.of(Nil) else listed)
     val written =
       try {
         val win = Window.partitionBy(col("_win")).orderBy(col("_ulid_hex"))
@@ -273,7 +284,7 @@ object Topic {
         val w = writer
         writer = null
         w.close()
-        val fromTsMs = ulidTs(w.firstId)
+        val fromTsMs = Ulid.tsMs(w.firstId)
         val name = s"${formatTs(fromTsMs)}_${w.count}_${w.lastBlockOffset}_${w.firstPosition}.avro"
         val dest = HadoopIO.child(topicDir, name)
         commitTopicFile(fs, tmp, dest, name, preExisting)
@@ -336,14 +347,6 @@ object Topic {
     }
   }
 
-  /** milliseconds since epoch from a ULID's first 6 bytes */
-  private[graft] def ulidTs(id: Array[Byte]): Long = {
-    var ts = 0L
-    var i = 0
-    while (i < 6) { ts = (ts << 8) | (id(i) & 0xffL); i += 1 }
-    ts
-  }
-
   // ----------------------------------------------------------------- list
 
   /** Metadata-only topic listing, sorted by from-timestamp. One
@@ -389,7 +392,7 @@ object Topic {
 
   /** Hex ULID of a file's first record (tie-break helper; one-record read). */
   private def firstUlidHex(path: String): String =
-    AvroCodec.readFirst(path, HadoopIO.conf()).map(m => m.id.map("%02x".format(_)).mkString).getOrElse("")
+    AvroCodec.readFirst(path, HadoopIO.conf()).map(m => Ulid.hex(m.id)).getOrElse("")
 
   // ------------------------------------------------------- listing cache
 
@@ -595,7 +598,7 @@ object Topic {
     val it = AvroCodec.readFileFrom(f.path, f.lastBlockOffset, conf)
     var last: RawdataMessage = null
     while (it.hasNext) last = it.next()
-    if (last == null) Long.MaxValue else ulidTs(last.id)
+    if (last == null) Long.MaxValue else Ulid.tsMs(last.id)
   }
 
   def tempDir(prefix: String): String = {

@@ -1,6 +1,7 @@
 package graft.rawdata
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions._
 
 /** ULID column helpers.
@@ -18,7 +19,17 @@ object Ulid {
     * unsigned byte order on the ULID (fixed width), which is the stream
     * order of the reference.
     */
-  def hexOf(id: Column): Column = lower(hex(id))
+  def hexOf(id: Column): Column = lower(functions.hex(id))
+
+  /** Byte-level twins of [[hexOf]] and [[timestampMs]], for ids already
+    * held on the driver or in a task: `hex` is lowercase, two chars per
+    * byte (32 for a ULID) and equal to `hexOf`; `tsMs` reads a 16-byte
+    * ULID's first 6 bytes as an unsigned big-endian number, equal to
+    * `timestampMs`.
+    */
+  def hex(id: Array[Byte]): String = java.util.HexFormat.of().formatHex(id)
+
+  def tsMs(id: Array[Byte]): Long = java.nio.ByteBuffer.wrap(id).getLong >>> 16
 
   /** Milliseconds since epoch from the first 6 bytes — the native
     * codegen'd expression (graft.functions.UlidTimestampMs). The
@@ -50,7 +61,7 @@ object Ulid {
     * seed and ordering within a millisecond is stable).
     */
   def deterministic(tsMs: Column, seed: Column): Column =
-    unhex(concat(lpad(hex(tsMs), 12, "0"), substring(md5(seed.cast("string")), 1, 20)))
+    unhex(concat(lpad(functions.hex(tsMs), 12, "0"), substring(md5(seed.cast("string")), 1, 20)))
 
   /** Per-producer strictly-monotonic ULID generator — the reference
     * producer's id discipline (AvroRawdataProducer.java:231
@@ -94,15 +105,8 @@ object Ulid {
       out
     }
 
-    private def tsOf(id: Array[Byte]): Long = {
-      var ts = 0L
-      var i = 0
-      while (i < 6) { ts = (ts << 8) | (id(i) & 0xffL); i += 1 }
-      ts
-    }
-
     def next(nowMs: Long = System.currentTimeMillis()): Array[Byte] = synchronized {
-      prev = if (nowMs <= tsOf(prev)) incremented(prev) else fresh(nowMs)
+      prev = if (nowMs <= tsMs(prev)) incremented(prev) else fresh(nowMs)
       prev.clone()
     }
   }

@@ -4,19 +4,21 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{DataFrame, SaveMode, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.execution.streaming.Sink
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, StreamSinkProvider}
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.rawdata.{AvroCodec, HadoopIO, Topic, TopicFile}
+import graft.rawdata.{AvroCodec, HadoopIO, Topic, Ulid}
 
 /** DataSource V2 connector for rawdata topics:
   * `spark.read.format("graft-topic").load(dir)`.
@@ -35,8 +37,16 @@ import graft.rawdata.{AvroCodec, HadoopIO, Topic, TopicFile}
   * Filters are reported but also left as residuals (Spark re-evaluates
   * them row-by-row): file pruning is a containment bound, not an exact
   * answer, because a file only bounds its messages' timestamps from below.
+  *
+  * Reads go through DataSource V2; writes do not. The table is
+  * read-only, so `df.write.format("graft-topic")` falls back to
+  * [[CreatableRelationProvider]] and `writeStream.format("graft-topic")`
+  * to [[StreamSinkProvider]], and both call `Topic.write` (see
+  * TopicDataSink.scala): the sinks land the same files as
+  * `producer.publish(df)`.
   */
-class TopicDataSource extends TableProvider with DataSourceRegister {
+class TopicDataSource extends TableProvider with DataSourceRegister
+    with CreatableRelationProvider with StreamSinkProvider {
 
   override def shortName(): String = "graft-topic"
 
@@ -47,6 +57,22 @@ class TopicDataSource extends TableProvider with DataSourceRegister {
       .getOrElse(throw new IllegalArgumentException("graft-topic requires .load(<topic dir>)")))
 
   override def supportsExternalMetadata(): Boolean = false
+
+  override def createRelation(sqlContext: SQLContext, mode: SaveMode,
+      parameters: Map[String, String], data: DataFrame): BaseRelation = {
+    TopicSink.writeBatch(mode, parameters, data)
+    new BaseRelation {
+      override def sqlContext: SQLContext = data.sparkSession.sqlContext
+      override def schema: StructType = TopicDataSource.Schema
+    }
+  }
+
+  override def createSink(sqlContext: SQLContext, parameters: Map[String, String],
+      partitionColumns: Seq[String], outputMode: OutputMode): Sink = {
+    require(outputMode != OutputMode.Complete(),
+      "graft-topic sink is append-only; Complete output mode is not supported")
+    new TopicSink(TopicSink.path(parameters), TopicSink.config(parameters))
+  }
 }
 
 object TopicDataSource {
@@ -76,17 +102,16 @@ object TopicDataSource {
   }
 }
 
-final class TopicTable(path: String) extends Table with SupportsRead with SupportsWrite {
+/** Read-only: writes fall back to the provider's sinks (see
+  * [[TopicDataSource]]).
+  */
+final class TopicTable(path: String) extends Table with SupportsRead {
   override def name(): String = s"graft-topic(`$path`)"
   override def schema(): StructType = TopicDataSource.Schema
   override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(
-      TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE)
+    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new TopicScanBuilder(path)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new TopicWriteBuilder(path, info)
 }
 
 final class TopicScanBuilder(path: String)
@@ -133,14 +158,8 @@ final class TopicScan(path: String, loMs: Long, hiMs: Long, required: StructType
     s"graft-topic $path [ts_ms in ${if (loMs == Long.MinValue) "-inf" else loMs}..${if (hiMs == Long.MaxValue) "+inf" else hiMs}]"
 
   /** the pruned file list — the reference's floorEntry seek, at plan time */
-  private def prunedFiles(): Seq[TopicFile] = {
-    val all = Topic.listFiles(path)
-    val fromLo = if (loMs == Long.MinValue) all else Topic.pruneFrom(all, loMs)
-    if (hiMs == Long.MaxValue) fromLo else fromLo.takeWhile(_.fromTsMs <= hiMs)
-  }
-
   override def planInputPartitions(): Array[InputPartition] =
-    TopicDataSource.partitions(prunedFiles().map(_.path))
+    TopicDataSource.partitions(Topic.pruneRange(Topic.listFiles(path), loMs, hiMs).map(_.path))
 
   override def createReaderFactory(): PartitionReaderFactory =
     new TopicReaderFactory(required)
@@ -209,11 +228,8 @@ final class TopicMicroBatchStream(
   }
 
   private def discover(): Unit = synchronized {
-    val all = Topic.listFiles(path)
-    val fromLo = if (loMs == Long.MinValue) all else Topic.pruneFrom(all, loMs)
-    val inRange = if (hiMs == Long.MaxValue) fromLo else fromLo.takeWhile(_.fromTsMs <= hiMs)
     var grew = false
-    inRange.foreach { f =>
+    Topic.pruneRange(Topic.listFiles(path), loMs, hiMs).foreach { f =>
       if (known.add(f.path)) { discovered += f.path; grew = true }
     }
     if (grew) saveLog()
@@ -281,19 +297,11 @@ final class TopicPartitionReader(filePaths: Seq[String], sconf: HadoopIO.Seriali
           ArrayBasedMapData(
             m.data.keysIterator.map(UTF8String.fromString).toArray[Any],
             m.data.valuesIterator.toArray[Any])
-        case "ulid_hex" => (m: graft.rawdata.RawdataMessage) =>
-          UTF8String.fromString(m.id.map("%02x".format(_)).mkString)
-        case "ts_ms" => (m: graft.rawdata.RawdataMessage) => tsOf(m.id)
+        case "ulid_hex" => (m: graft.rawdata.RawdataMessage) => UTF8String.fromString(Ulid.hex(m.id))
+        case "ts_ms" => (m: graft.rawdata.RawdataMessage) => Ulid.tsMs(m.id)
         case other => throw new IllegalArgumentException(s"unknown topic column: $other")
       }
     }
-
-  private def tsOf(id: Array[Byte]): Long = {
-    var ts = 0L
-    var i = 0
-    while (i < 6) { ts = (ts << 8) | (id(i) & 0xffL); i += 1 }
-    ts
-  }
 
   override def next(): Boolean =
     if (it.hasNext) {

@@ -28,4 +28,28 @@ class UlidExprSpec extends SparkSpec {
       .filter(Ulid.timestampMs($"id") >= 0L).count()
     assert(n > 0)
   }
+
+  test("byte-level hex and tsMs equal their column forms, high-bit bytes included") {
+    // timestamps and entropy whose bytes have the high bit set: a signed
+    // byte read as negative would break both decodes
+    val rnd = new scala.util.Random(3)
+    val ids = Seq(0x8000000000ffL, 0xffffffffffffL, 1705276800123L, 0L).map { ts =>
+      val id = new Array[Byte](16)
+      (0 until 6).foreach(k => id(k) = ((ts >>> (8 * (5 - k))) & 0xff).toByte)
+      (6 until 16).foreach(k => id(k) = (0x80 | rnd.nextInt(0x80)).toByte)
+      id
+    } :+ Array.fill[Byte](16)(-1)
+    val rows = ids.toDF("id")
+      .select($"id", Ulid.hexOf($"id").as("hex"), Ulid.timestampMs($"id").as("ts"))
+      .collect()
+    assert(rows.length === ids.size)
+    rows.foreach { r =>
+      val id = r.getAs[Array[Byte]]("id")
+      assert(Ulid.hex(id) === r.getAs[String]("hex"))
+      assert(Ulid.hex(id).length === 32)
+      assert(Ulid.tsMs(id) === r.getAs[Long]("ts"))
+    }
+    assert(Ulid.hex(ids.last) === "f" * 32)
+    assert(Ulid.tsMs(ids.head) === 0x8000000000ffL)
+  }
 }

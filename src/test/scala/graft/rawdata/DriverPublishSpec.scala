@@ -14,9 +14,10 @@ import graft.SparkSpec
 
 /** The two publish entry points — driver-held `buffer(...).publish(positions)`
   * and distributed `publish(df)` — share one layout rule, one writer and
-  * one commit protocol. For the same messages they must land identical
-  * files (names, counts, last-block offsets, first positions, decoded
-  * content), and the driver-held path must not start a Spark job.
+  * one commit protocol, and so does the `graft-topic` batch sink. For the
+  * same messages they must land identical files (names, counts,
+  * last-block offsets, first positions, decoded content), and the
+  * driver-held path must not start a Spark job.
   */
 class DriverPublishSpec extends SparkSpec {
   import spark.implicits._
@@ -60,7 +61,8 @@ class DriverPublishSpec extends SparkSpec {
   }
 
   /** the same messages through both entry points, the buffered ones
-    * staged and named in a shuffled order; returns (buffered, frame)
+    * staged and named in a shuffled order, and through the batch sink
+    * from three input partitions; returns (buffered, frame)
     */
   private def publishBoth(base: String, cfg: TopicConfig, msgs: Seq[RawdataMessage])
       : (Seq[TopicFile], Seq[TopicFile]) = {
@@ -73,6 +75,13 @@ class DriverPublishSpec extends SparkSpec {
       val frame = client.producer("frame", cfg).publish(spark.createDataset(msgs).toDF())
       assert(shape(buffered) === shape(Topic.listFiles(client.topicDir("buffered"))),
         "a publish returns its files in listing order")
+      val sinkDir = client.topicDir("sink")
+      spark.createDataset(msgs).toDF().repartition(3).write.format("graft-topic")
+        .option("maxWindowMs", cfg.maxWindowMs)
+        .option("maxBytes", cfg.maxBytes)
+        .option("syncIntervalBytes", cfg.syncIntervalBytes)
+        .mode("append").save(sinkDir)
+      assertSameFiles(frame, Topic.listFiles(sinkDir))
       (buffered, frame)
     } finally client.close()
   }

@@ -117,7 +117,8 @@ class TornMaintenanceSpec extends SparkSpec {
     assert(Topic.listFiles(dest).map(f => (f.path, f.count)) === committed,
       "replayed epoch must re-derive exactly the committed files")
     assert(Topic.readDF(spark, dest).count() === n, "no duplicate deliveries")
-    // sink replay doesn't reclaim; the next publish does (shared gate)
+    // the replay is a publish: it reclaims aged debris, never a fresh temp
+    assert(!fs.exists(aged), "aged orphan temp reclaimed by the replayed epoch")
     assert(fs.exists(fresh))
     Topic.write(EventsAsTopic.messagesFromEvents(spark, sf)
       .filter($"sequenceNumber" > 400 && $"sequenceNumber" <= 420), dest, EventsAsTopic.cfg)

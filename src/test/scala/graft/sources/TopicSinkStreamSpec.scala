@@ -47,4 +47,14 @@ class TopicSinkStreamSpec extends SparkSpec {
     val hexes = msgs.map(_.id.map("%02x".format(_)).mkString)
     assert(hexes === hexes.sorted, "within-file ULID order")
   }
+
+  test("writeStream format(graft-topic) rejects Complete output mode: a topic is append-only") {
+    val counts = spark.readStream.format("graft-topic").load(Topic.tempDir("sink-complete-src"))
+      .groupBy($"position").count()
+    val ex = intercept[IllegalArgumentException](counts.writeStream.format("graft-topic")
+      .option("checkpointLocation", Topic.tempDir("sink-complete-ckpt"))
+      .option("path", Topic.tempDir("sink-complete-dest"))
+      .outputMode("complete").start())
+    assert(ex.getMessage.contains("Complete output mode"), ex.getMessage)
+  }
 }

@@ -88,8 +88,8 @@ class TopicSourceSpec extends SparkSpec {
     val files = Topic.listFiles(dest)
     assert(files.nonEmpty)
     // filename metadata is real: counts sum to the message total, the
-    // fromTimestamp of each file is its true first message (input was
-    // ULID-sorted by the sink's required ordering)
+    // fromTimestamp of each file is its true first message (the sink
+    // writes through Topic.write, which ULID-sorts each file)
     assert(files.map(_.count).sum === graft.Tables.events(spark, sf).count())
     val a = Topic.readDF(spark, dir).select($"ulid_hex", $"position", $"sequenceNumber")
     val b = Topic.readDF(spark, dest).select($"ulid_hex", $"position", $"sequenceNumber")
@@ -99,6 +99,27 @@ class TopicSourceSpec extends SparkSpec {
     val msgs = graft.rawdata.AvroCodec.readFile(f.path, graft.rawdata.HadoopIO.conf()).toSeq
     val hexes = msgs.map(_.id.map("%02x".format(_)).mkString)
     assert(hexes === hexes.sorted, "within-file ULID order")
+  }
+
+  test("sink input: a 5-column message frame writes; a missing column or a non-append mode fails first") {
+    val msgs = Topic.readDF(spark, dir).select($"id", $"orderingGroup", $"sequenceNumber", $"position", $"data")
+      .limit(50)
+    val ok = Topic.tempDir("dsv2-sink-ok")
+    msgs.write.format("graft-topic").mode("append").save(ok)
+    assert(Topic.listFiles(ok).map(_.count).sum === 50)
+
+    val missing = intercept[IllegalArgumentException](
+      msgs.drop("position").write.format("graft-topic").mode("append").save(Topic.tempDir("dsv2-sink-missing")))
+    assert(missing.getMessage.contains("requires message columns"), missing.getMessage)
+    assert(missing.getMessage.contains("missing: position"), missing.getMessage)
+
+    val overwrite = Topic.tempDir("dsv2-sink-overwrite")
+    intercept[IllegalArgumentException](msgs.write.format("graft-topic").mode("overwrite").save(overwrite))
+    assert(Topic.listFiles(overwrite).isEmpty, "nothing may be written")
+
+    val default = Topic.tempDir("dsv2-sink-default")
+    intercept[IllegalArgumentException](msgs.write.format("graft-topic").save(default))
+    assert(Topic.listFiles(default).isEmpty, "nothing may be written")
   }
 
   test("restart from checkpoint resumes exactly after delivered files (durable discovery log)") {
