@@ -183,7 +183,7 @@ object AvroCodec {
       private var reader: DataFileReader[GenericRecord] = null
       private var closed = false
       // A partially consumed iterator (e.g. a local limit short-circuiting
-      // the flatMap in Topic.readFiles) would otherwise leak the file
+      // the graft-topic partition reader) would otherwise leak the file
       // handle for the executor's lifetime.
       private val tc = org.apache.spark.TaskContext.get()
       if (tc != null) tc.addTaskCompletionListener[Unit](_ => closeOnce())
@@ -253,8 +253,8 @@ object AvroCodec {
       private var closed = false
       private def closeOnce(): Unit = if (!closed) { closed = true; reader.close() }
       // A partially consumed iterator (e.g. a local limit short-circuiting
-      // the flatMap in Topic.readFiles) would otherwise leak the file handle
-      // for the executor's lifetime.
+      // the graft-topic partition reader) would otherwise leak the file
+      // handle for the executor's lifetime.
       private val tc = org.apache.spark.TaskContext.get()
       if (tc != null) tc.addTaskCompletionListener[Unit](_ => closeOnce())
       def hasNext: Boolean = {

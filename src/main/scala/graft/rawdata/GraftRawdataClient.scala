@@ -299,14 +299,17 @@ final class GraftRawdataClient(
       * deliver their messages in ULID order and remember the files.
       * Returns empty on timeout (instead of the reference's null). Each
       * poll reads only the new files, so the cost is proportional to the
-      * arriving data, not the topic.
+      * arriving data, not the topic (a cursor start prunes the listing to
+      * its floor file, as `after` does). The poll is decoded on the
+      * driver, no Spark job: it is capped and collected here anyway.
       */
     def receive(timeoutMs: Long): Seq[RawdataMessage] = {
       if (consumerClosed) throw new RawdataClosedException("rawdata consumer")
       val dir = topicDir(topic)
       val deadline = System.nanoTime() + timeoutMs * 1000000L
       while (true) {
-        val files = Topic.listFilesCached(dir, pollIntervalMs)
+        val listed = Topic.listFilesCached(dir, pollIntervalMs)
+        val files = startAfterHex.fold(listed)(c => Topic.pruneFrom(listed, Ulid.tsMsOfHex(c)))
         val freshAll = files.filterNot(f => consumedFiles.contains(f.path))
         // Backlog guard: each poll materializes its batch on the driver
         // (reference parity — AvroRawdataConsumer buffers per file), so a
@@ -329,7 +332,8 @@ final class GraftRawdataClient(
             if (take.nonEmpty) take else ordered.take(1)
           }
         if (fresh.nonEmpty) {
-          val msgs = Topic.readFiles(spark, fresh).collect()
+          val conf = HadoopIO.conf()
+          val msgs = fresh.flatMap(f => AvroCodec.readFile(f.path, conf))
             .map(m => (Ulid.hex(m.id), m))
             .filter { case (h, _) =>
               startAfterHex.forall(c => if (startInclusive) h >= c else h > c)

@@ -204,15 +204,15 @@ object RawdataQueries {
     // metadata) vs the count a real distributed read of that exact file
     // yields — the trust-but-verify pass an operator runs before relying
     // on filename pruning over a 100 TB topic. Metadata side is one LIST;
-    // the read side is the normal per-file parallel scan with the task's
-    // own input path as attribution (costs nothing extra). The oracle
+    // the read side is the normal per-file parallel scan with its hidden
+    // file_path column as attribution (costs nothing extra). The oracle
     // replays the producer's windowing from `events`, so a mismatch on
     // EITHER side (bad filename or short file) fails the check.
     "rd_integrity" -> { (s, d) =>
       val dir = topic(s, d)
       val meta = Topic.fileListingDF(s, dir)
         .select(col("path"), col("fromTsMs").as("from_ts_ms"), col("count").as("meta_n"))
-      val actual = Topic.readWithOrigin(s, dir)
+      val actual = Topic.readDF(s, dir)
         .groupBy(col("file_path")).agg(count(lit(1)).as("actual_n"))
       meta.join(actual, meta("path") === actual("file_path"), "left")
         .select(col("from_ts_ms"), col("meta_n"),
@@ -510,15 +510,15 @@ object RawdataQueries {
     // sit inside its own window file's day range. A violation means a
     // producer wrote with a skewed clock mid-window and pruned reads
     // will silently MISS that message. Scale shape: the per-file
-    // parallel scan with task-path attribution (the rd_integrity trick,
+    // parallel scan with file_path attribution (the rd_integrity trick,
     // costs nothing extra) joined to the |files| listing, 1-row report;
     // worst_skew_ms quantifies how far out the worst offender sits.
     "rd_ulid_sanity" -> { (s, d) =>
       val dir = topic(s, d)
       val files = Topic.fileListingDF(s, dir)
         .select(col("path"), col("fromTsMs").as("from_ts_ms"))
-      Topic.readWithOrigin(s, dir)
-        .select(col("file_path"), expr("ulid_ts_ms(msg.id)").as("u_ts"))
+      Topic.readDF(s, dir)
+        .select(col("file_path"), expr("ulid_ts_ms(id)").as("u_ts"))
         .join(files, col("file_path") === col("path"))
         .withColumn("skew_ms", greatest(
           col("from_ts_ms") - col("u_ts"),

@@ -77,10 +77,11 @@ case class TopicConfig(
   * name and renaming on completion (on object stores the rename is a
   * copy, matching the reference's write-local-then-upload pattern).
   *
-  * Reader: driver lists + prunes by filename, then Spark tasks decode
-  * Avro → rows, one file per task up to [[Topic.readPartitionCap]].
-  * Parallelism scales with file count, which is how the data grows;
-  * within-file order is ULID order by construction.
+  * Reader: every distributed read is an expression over the
+  * `graft-topic` scan ([[readDF]]): the driver lists + prunes by filename
+  * from a `ts_ms` predicate, then Spark tasks decode Avro → rows, one file
+  * per task up to [[Topic.readPartitionCap]]. Within-file order is ULID
+  * order by construction.
   */
 object Topic {
 
@@ -439,67 +440,35 @@ object Topic {
     * scheduling-friendly cap, so a 1.6M-file topic gets ~4 waves of tasks
     * per core (each decoding a run of files sequentially) instead of 1.6M
     * task launches — parallelism is bounded by cores either way, the cap
-    * only bounds scheduler pressure. Shared by every topic read path
-    * (readFiles, readWithOrigin, the graft-topic batch and stream scans).
+    * only bounds scheduler pressure. Shared by the graft-topic batch scan
+    * and stream tail.
     */
   private[graft] def readPartitionCap(sc: SparkContext): Int = math.max(sc.defaultParallelism * 4, 64)
 
-  /** Distributed read of an explicit file list, at most
-    * [[readPartitionCap]] tasks.
+  /** Message DataFrame with decoded ULID columns (`ulid_hex`, `ts_ms`):
+    * the graft-topic scan, which every read below filters.
     */
-  def readFiles(spark: SparkSession, files: Seq[TopicFile]): Dataset[RawdataMessage] = {
-    if (files.isEmpty) return spark.emptyDataset[RawdataMessage]
-    val paths = files.map(_.path)
-    val sconf = HadoopIO.serializable()
-    val parts = math.min(paths.size, readPartitionCap(spark.sparkContext))
-    spark.createDataset(paths)(Encoders.STRING)
-      .repartition(parts)
-      .flatMap(p => AvroCodec.readFile(p, sconf.value))
-  }
+  def readDF(spark: SparkSession, topicDir: String): DataFrame =
+    spark.read.format("graft-topic").load(topicDir)
+
+  /** the five message columns of a topic frame (batch or stream) */
+  def messagesOf(df: DataFrame): Dataset[RawdataMessage] =
+    df.select(col("id"), col("orderingGroup"), col("sequenceNumber"), col("position"), col("data"))
+      .as[RawdataMessage]
 
   def read(spark: SparkSession, topicDir: String): Dataset[RawdataMessage] =
-    readFiles(spark, listFiles(topicDir))
+    messagesOf(readDF(spark, topicDir))
 
-  /** Origin-attributed read: (file_path, message) rows — what the
-    * integrity audit (rd_integrity) joins against the filename metadata.
-    * Same distributed shape as [[readFiles]]; the extra column is the
-    * task's own input path, so attribution costs nothing.
-    */
-  def readWithOrigin(spark: SparkSession, topicDir: String): DataFrame = {
-    val files = listFiles(topicDir)
-    if (files.isEmpty)
-      return spark.emptyDataset(Encoders.tuple(Encoders.STRING, msgEncoder))
-        .toDF("file_path", "msg")
-    val paths = files.map(_.path)
-    val sconf = HadoopIO.serializable()
-    val parts = math.min(paths.size, readPartitionCap(spark.sparkContext))
-    spark.createDataset(paths)(Encoders.STRING)
-      .repartition(parts)
-      .flatMap(p => AvroCodec.readFile(p, sconf.value).map(m => (p, m)))(
-        Encoders.tuple(Encoders.STRING, msgEncoder))
-      .toDF("file_path", "msg")
-  }
-
-  /** Message DataFrame with decoded ULID columns. */
-  def readDF(spark: SparkSession, topicDir: String): DataFrame =
-    decorate(read(spark, topicDir).toDF())
-
-  def decorate(df: DataFrame): DataFrame = df
-    .withColumn("ulid_hex", Ulid.hexOf(col("id")))
-    .withColumn("ts_ms", Ulid.timestampMs(col("id")))
-
-  /** consumer.seek(ts): pruned read of messages with ts >= fromTsMs. */
+  /** consumer.seek(ts): messages with ts >= fromTsMs, pruned to the floor file. */
   def seek(spark: SparkSession, topicDir: String, fromTsMs: Long): DataFrame =
-    decorate(readFiles(spark, pruneFrom(listFiles(topicDir), fromTsMs)).toDF())
-      .filter(col("ts_ms") >= fromTsMs)
+    readDF(spark, topicDir).filter(col("ts_ms") >= fromTsMs)
 
   /** cursorOf(position, approxTs, tolerance) → the message's ULID hex
     * (reference AvroRawdataClient.java:89-115): bounded time-range scan.
     */
   def positionToUlidHex(spark: SparkSession, topicDir: String, position: String,
       approxTsMs: Long, toleranceMs: Long): Option[String] = {
-    val files = pruneRange(listFiles(topicDir), approxTsMs - toleranceMs, approxTsMs + toleranceMs)
-    val hit = decorate(readFiles(spark, files).toDF())
+    val hit = readDF(spark, topicDir)
       .filter(col("ts_ms").between(approxTsMs - toleranceMs, approxTsMs + toleranceMs) &&
         col("position") === position)
       .select(min(col("ulid_hex")))
@@ -509,9 +478,7 @@ object Topic {
 
   /** Resume strictly after (or at, if inclusive) a cursor ULID. */
   def afterCursor(spark: SparkSession, topicDir: String, ulidHex: String, inclusive: Boolean): DataFrame = {
-    val tsMs = java.lang.Long.parseLong(ulidHex.take(12), 16)
-    val pruned = pruneFrom(listFiles(topicDir), tsMs)
-    val df = decorate(readFiles(spark, pruned).toDF())
+    val df = seek(spark, topicDir, Ulid.tsMsOfHex(ulidHex))
     if (inclusive) df.filter(col("ulid_hex") >= ulidHex) else df.filter(col("ulid_hex") > ulidHex)
   }
 
@@ -519,24 +486,18 @@ object Topic {
     * last Avro block (offset from the filename) — O(one block) I/O no
     * matter the topic size (reference AvroRawdataClient.java:126-147).
     */
-  def lastMessage(topicDir: String): Option[RawdataMessage] = {
-    val files = listFiles(topicDir)
-    files.lastOption.flatMap { f =>
-      val it = AvroCodec.readFileFrom(f.path, f.lastBlockOffset, HadoopIO.conf())
-      var last: RawdataMessage = null
-      while (it.hasNext) last = it.next()
-      Option(last)
-    }
-  }
+  def lastMessage(topicDir: String): Option[RawdataMessage] =
+    listFiles(topicDir).lastOption.flatMap(lastOf(_, HadoopIO.conf()))
 
-  /** The same, as a (tiny) DataFrame via a pruned distributed read. */
-  def lastMessageDF(spark: SparkSession, topicDir: String): DataFrame = {
-    val files = listFiles(topicDir)
-    val lastFile = files.takeRight(1)
-    decorate(readFiles(spark, lastFile).toDF())
+  /** The same, as a (tiny) DataFrame: a seek to the last file's start. */
+  def lastMessageDF(spark: SparkSession, topicDir: String): DataFrame =
+    seek(spark, topicDir, listFiles(topicDir).lastOption.fold(Long.MaxValue)(_.fromTsMs))
       .orderBy(col("ulid_hex").desc)
       .limit(1)
-  }
+
+  /** a file's last message: one seek to its last block via the filename's offset */
+  private def lastOf(f: TopicFile, conf: org.apache.hadoop.conf.Configuration): Option[RawdataMessage] =
+    AvroCodec.readFileFrom(f.path, f.lastBlockOffset, conf).reduceOption((_, m) => m)
 
   /** Topic stats straight from the file listing — a metadata-only query. */
   def fileListingDF(spark: SparkSession, topicDir: String): DataFrame = {
@@ -584,21 +545,12 @@ object Topic {
     val conf = HadoopIO.conf()
     val fs = HadoopIO.fs(topicDir, conf)
     val expired = files.zip(files.tail).collect {
-      case (f, next) if next.fromTsMs < beforeTsMs && lastTsMs(f, conf) < beforeTsMs => f
+      case (f, next) if next.fromTsMs < beforeTsMs &&
+          lastOf(f, conf).fold(Long.MaxValue)(m => Ulid.tsMs(m.id)) < beforeTsMs => f
     }
     expired.foreach(f => fs.delete(new Path(f.path), false): Unit)
     if (expired.nonEmpty) invalidateListing(topicDir)
     expired
-  }
-
-  /** timestamp of a file's LAST message — one seek to the last block via
-    * the filename's offset
-    */
-  private def lastTsMs(f: TopicFile, conf: org.apache.hadoop.conf.Configuration): Long = {
-    val it = AvroCodec.readFileFrom(f.path, f.lastBlockOffset, conf)
-    var last: RawdataMessage = null
-    while (it.hasNext) last = it.next()
-    if (last == null) Long.MaxValue else Ulid.tsMs(last.id)
   }
 
   def tempDir(prefix: String): String = {

@@ -31,6 +31,9 @@ object Ulid {
 
   def tsMs(id: Array[Byte]): Long = java.nio.ByteBuffer.wrap(id).getLong >>> 16
 
+  /** `tsMs` of the ULID a [[hex]] string (a cursor) encodes */
+  def tsMsOfHex(hex: String): Long = java.lang.Long.parseLong(hex.take(12), 16)
+
   /** Milliseconds since epoch from the first 6 bytes — the native
     * codegen'd expression (graft.functions.UlidTimestampMs). The
     * expression is constructed directly into the Column (not resolved

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
@@ -24,15 +24,16 @@ import graft.rawdata.{AvroCodec, HadoopIO, Topic, Ulid}
   * `spark.read.format("graft-topic").load(dir)`.
   *
   * This is the Spark-first re-expression of the reference consumer's seek
-  * path (AvroRawdataConsumer.java:141-177 floorEntry file pruning): the
-  * declarative route. `Topic.seek` prunes manually; here the SAME pruning
-  * happens inside Catalyst — any `ts_ms` range predicate a user writes
-  * (plain filter, join pushdown, partition of a larger query) reaches
+  * path (AvroRawdataConsumer.java:141-177 floorEntry file pruning), and
+  * the engine's one distributed topic reader (`Topic.readDF` and the reads
+  * built on it). Any `ts_ms` range predicate a user writes (plain filter,
+  * join pushdown, partition of a larger query) reaches
   * `planInputPartitions` and drops non-overlapping files BEFORE any byte
   * is read, and column pruning skips decoding the payload map when only
   * metadata columns are selected. One file = one InputPartition up to the
   * shared read cap, so scan parallelism tracks the data like the rest of
-  * the engine.
+  * the engine. A hidden `file_path` column (not in `df.columns`; filled
+  * only when selected) names the listed file each row was decoded from.
   *
   * Filters are reported but also left as residuals (Spark re-evaluates
   * them row-by-row): file pruning is a containment bound, not an exact
@@ -77,7 +78,7 @@ class TopicDataSource extends TableProvider with DataSourceRegister
 
 object TopicDataSource {
   /** message schema + the decoded ULID columns (ts_ms is what pushdown
-    * prunes on — same order as Topic.decorate emits)
+    * prunes on)
     */
   val Schema: StructType = StructType(Seq(
     StructField("id", BinaryType, nullable = false),
@@ -87,6 +88,13 @@ object TopicDataSource {
     StructField("data", MapType(StringType, BinaryType), nullable = false),
     StructField("ulid_hex", StringType, nullable = false),
     StructField("ts_ms", LongType, nullable = false)))
+
+  /** the hidden column naming each row's source file */
+  object FilePath extends MetadataColumn {
+    override def name(): String = "file_path"
+    override def dataType(): DataType = StringType
+    override def isNullable(): Boolean = false
+  }
 
   /** Input partitions over `paths`, order kept: one file per partition up
     * to [[Topic.readPartitionCap]]; beyond it, contiguous runs of files
@@ -105,9 +113,10 @@ object TopicDataSource {
 /** Read-only: writes fall back to the provider's sinks (see
   * [[TopicDataSource]]).
   */
-final class TopicTable(path: String) extends Table with SupportsRead {
+final class TopicTable(path: String) extends Table with SupportsRead with SupportsMetadataColumns {
   override def name(): String = s"graft-topic(`$path`)"
   override def schema(): StructType = TopicDataSource.Schema
+  override def metadataColumns(): Array[MetadataColumn] = Array(TopicDataSource.FilePath)
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -282,7 +291,12 @@ final class TopicReaderFactory(required: StructType) extends PartitionReaderFact
 final class TopicPartitionReader(filePaths: Seq[String], sconf: HadoopIO.SerializableConf, required: StructType)
     extends PartitionReader[InternalRow] {
 
-  private val it = filePaths.iterator.flatMap(p => AvroCodec.readFile(p, sconf.value))
+  // flatMap opens the next file only once the previous one is exhausted
+  private var file: UTF8String = _
+  private val it = filePaths.iterator.flatMap { p =>
+    file = UTF8String.fromString(p)
+    AvroCodec.readFile(p, sconf.value)
+  }
   private var row: InternalRow = _
 
   private val fieldGetters: Array[graft.rawdata.RawdataMessage => Any] =
@@ -299,6 +313,7 @@ final class TopicPartitionReader(filePaths: Seq[String], sconf: HadoopIO.Seriali
             m.data.valuesIterator.toArray[Any])
         case "ulid_hex" => (m: graft.rawdata.RawdataMessage) => UTF8String.fromString(Ulid.hex(m.id))
         case "ts_ms" => (m: graft.rawdata.RawdataMessage) => Ulid.tsMs(m.id)
+        case "file_path" => (_: graft.rawdata.RawdataMessage) => file
         case other => throw new IllegalArgumentException(s"unknown topic column: $other")
       }
     }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.rawdata.{RawdataMessage, Ulid}
+import graft.rawdata.{RawdataMessage, Topic, Ulid}
 
 /** Structured-Streaming tail of a rawdata topic — the consumer's
   * "wait for new files" loop (reference AvroRawdataConsumer.receive,
@@ -17,14 +17,8 @@ import graft.rawdata.{RawdataMessage, Ulid}
 object TopicStream {
 
   /** Unbounded Dataset of messages from a topic directory. */
-  def messages(spark: SparkSession, topicDir: String): Dataset[RawdataMessage] = {
-    implicit val enc: org.apache.spark.sql.Encoder[RawdataMessage] = Encoders.product[RawdataMessage]
-    spark.readStream
-      .format("graft-topic")
-      .load(topicDir)
-      .select(col("id"), col("orderingGroup"), col("sequenceNumber"), col("position"), col("data"))
-      .as[RawdataMessage]
-  }
+  def messages(spark: SparkSession, topicDir: String): Dataset[RawdataMessage] =
+    Topic.messagesOf(spark.readStream.format("graft-topic").load(topicDir))
 
   /** Exactly-once-style tail: duplicate deliveries (re-uploaded files,
     * producer retries — the reference consumer deduplicates by ULID on

@@ -130,6 +130,28 @@ class FakeGsSpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
+  test("a cursor-resume receive opens only the files pruneFrom keeps") {
+    val client = new GraftRawdataClient(spark, bucketDir("fakegs-resume"))
+    try {
+      // 60 s message spacing with a 120 s window → 20 topic files
+      client.producer("t", TopicConfig(maxWindowMs = 120000L)).publish(msgs(0 until 40))
+      val dir = client.topicDir("t")
+      val files = Topic.listFiles(dir)
+      assert(files.size >= 10, s"fixture built only ${files.size} files")
+      val hexes = DriverDecode.messages(dir).map(m => Ulid.hex(m.id)).sorted
+      val cursor = hexes(30)
+      val kept = Topic.pruneFrom(files, Ulid.tsMsOfHex(cursor))
+      assert(kept.size < files.size)
+
+      val consumer = client.consumer("t", cursor, inclusive = false)
+      val opens0 = FakeGsFileSystem.nOpens.get()
+      val got = consumer.receive(5000L)
+      val opened = FakeGsFileSystem.nOpens.get() - opens0
+      assert(opened <= kept.size, s"receive opened $opened files, pruneFrom keeps ${kept.size}")
+      assert(got.map(m => Ulid.hex(m.id)) === hexes.filter(_ > cursor))
+    } finally client.close()
+  }
+
   test("a missing/wrong credential fails loudly, not as an empty result") {
     val dir = bucketDir("fakegs-denied")
     Topic.write(msgs(0 until 5), dir, TopicConfig(maxWindowMs = 600000L))

@@ -14,7 +14,7 @@ class IntegritySpec extends SparkSpec {
   private def audit(dir: String) = {
     val meta = Topic.fileListingDF(spark, dir)
       .select($"path", $"fromTsMs".as("from_ts_ms"), $"count".as("meta_n"))
-    val actual = Topic.readWithOrigin(spark, dir)
+    val actual = Topic.readDF(spark, dir)
       .groupBy($"file_path").agg(count(lit(1)).as("actual_n"))
     meta.join(actual, meta("path") === actual("file_path"), "left")
       .select($"from_ts_ms", $"meta_n",

@@ -1,12 +1,44 @@
 package graft.rawdata
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
 
 import graft.SparkSpec
 
-class TopicSpec extends SparkSpec {
+class TopicSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def messages = EventsAsTopic.messagesFromEvents(spark, sf)
+
+  /** Input partitions of every scan of `dir` in the queries `body` ran.
+    * Execution listeners run on the asynchronous listener bus: a sentinel
+    * query, run after the body, is seen last.
+    */
+  private def scanPartitions(dir: String)(body: => Unit): Seq[Int] = {
+    val seen = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    }
+    def sentinel(qe: QueryExecution) = qe.analyzed.output.exists(_.name == "scan_partitions_sentinel")
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.sql("SELECT 1 AS scan_partitions_sentinel").collect()
+      eventually(timeout(10.seconds), interval(20.millis))(assert(seen.asScala.exists(sentinel)))
+      seen.asScala.toSeq.filterNot(sentinel).flatMap(qe => collect(qe.executedPlan) {
+        case b: BatchScanExec if b.scan.description().contains(dir) => b.inputPartitions.size
+      })
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("round trip: write topic, read back every message in ULID order") {
     val dir = Topic.tempDir("topic-roundtrip")
@@ -47,28 +79,36 @@ class TopicSpec extends SparkSpec {
     assert(pruned.head.fromTsMs <= cut && pruned.tail.forall(_.fromTsMs > cut))
 
     val got = Topic.seek(spark, dir, cut)
-    val expected = Topic.readDF(spark, dir).filter(col("ts_ms") >= cut)
+    val expected = DriverDecode.frame(spark, dir).filter(col("ts_ms") >= cut)
     assert(got.count() === expected.count())
+    assert(scanPartitions(dir)(Topic.readDF(spark, dir).collect()) === Seq(files.size))
+    assert(scanPartitions(dir)(got.collect()) === Seq(pruned.size))
   }
 
   test("lastMessage fast path (seek to last block) equals full-scan max") {
     val dir = Topic.tempDir("topic-last")
     Topic.write(messages, dir, TopicConfig(maxWindowMs = 7L * 86400 * 1000, maxBytes = 32 * 1024, syncIntervalBytes = 2048))
     val fast = Topic.lastMessage(dir).get
-    val full = Topic.readDF(spark, dir).orderBy(col("ulid_hex").desc).limit(1)
+    val full = DriverDecode.frame(spark, dir).orderBy(col("ulid_hex").desc).limit(1)
       .select("position").collect().head.getString(0)
     assert(fast.position === full)
+    val viaScan = Topic.lastMessageDF(spark, dir).select("position")
+    assert(viaScan.collect().head.getString(0) === full)
+    val parts = scanPartitions(dir)(viaScan.collect())
+    assert(parts.nonEmpty && parts.forall(_ < Topic.listFiles(dir).size), s"$parts")
   }
 
   test("cursor: exclusive resume yields the immediately-next message") {
     val dir = Topic.tempDir("topic-cursor")
     Topic.write(messages, dir, EventsAsTopic.cfg)
-    val all = Topic.readDF(spark, dir).orderBy("ulid_hex")
+    val all = DriverDecode.frame(spark, dir).orderBy("ulid_hex")
       .select("ulid_hex", "position").collect()
     val mid = all(all.length / 2)
-    val next = Topic.afterCursor(spark, dir, mid.getString(0), inclusive = false)
-      .orderBy("ulid_hex").limit(1).select("position").collect().head.getString(0)
+    val after = Topic.afterCursor(spark, dir, mid.getString(0), inclusive = false)
+    val next = after.orderBy("ulid_hex").limit(1).select("position").collect().head.getString(0)
     assert(next === all(all.length / 2 + 1).getString(1))
+    val parts = scanPartitions(dir)(after.collect())
+    assert(parts.nonEmpty && parts.forall(_ < Topic.listFiles(dir).size), s"$parts")
     val same = Topic.afterCursor(spark, dir, mid.getString(0), inclusive = true)
       .orderBy("ulid_hex").limit(1).select("position").collect().head.getString(0)
     assert(same === mid.getString(1))
@@ -77,10 +117,12 @@ class TopicSpec extends SparkSpec {
   test("positionToUlidHex honours the tolerance bound") {
     val dir = Topic.tempDir("topic-pos")
     Topic.write(messages, dir, EventsAsTopic.cfg)
-    val row = Topic.readDF(spark, dir).filter(col("position") === "evt-500")
+    val row = DriverDecode.frame(spark, dir).filter(col("position") === "evt-500")
       .select("ulid_hex", "ts_ms").collect().head
     val (hex, ts) = (row.getString(0), row.getLong(1))
     assert(Topic.positionToUlidHex(spark, dir, "evt-500", ts, 60000).contains(hex))
+    val parts = scanPartitions(dir)(Topic.positionToUlidHex(spark, dir, "evt-500", ts, 60000))
+    assert(parts.nonEmpty && parts.forall(_ < Topic.listFiles(dir).size), s"$parts")
     // a window far away from the message must not find it
     assert(Topic.positionToUlidHex(spark, dir, "evt-500", ts + 10L * 86400 * 1000, 3600 * 1000).isEmpty)
   }

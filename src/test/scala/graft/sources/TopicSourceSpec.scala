@@ -4,11 +4,12 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.rawdata.{EventsAsTopic, RawdataMessage, Topic, TopicConfig}
+import graft.rawdata.{DriverDecode, EventsAsTopic, RawdataMessage, Topic, TopicConfig, Ulid}
 
-/** The DataSource V2 topic connector must agree with the imperative read
-  * path AND prove its planning-time behaviors: ts_ms predicates prune
-  * files before any read, and column pruning reaches the decoder.
+/** The DataSource V2 topic connector must agree with a driver decode of
+  * every listed file AND prove its planning-time behaviors: ts_ms
+  * predicates prune files before any read, and column pruning reaches the
+  * decoder.
   */
 class TopicSourceSpec extends SparkSpec {
   import spark.implicits._
@@ -29,6 +30,9 @@ class TopicSourceSpec extends SparkSpec {
       .select($"ulid_hex", $"position", $"sequenceNumber", $"ts_ms")
     val viaTopic = Topic.readDF(spark, dir)
       .select($"ulid_hex", $"position", $"sequenceNumber", $"ts_ms")
+    val decoded = DriverDecode.frame(spark, dir)
+      .select($"ulid_hex", $"position", $"sequenceNumber", $"ts_ms")
+    assert(viaSource.collect().toSet === decoded.collect().toSet)
     assert(viaSource.collect().toSet === viaTopic.collect().toSet)
   }
 
@@ -44,8 +48,8 @@ class TopicSourceSpec extends SparkSpec {
     assert(parts.length < files.size, "pruned scan must not read every file")
     assert(parts.length <= 3, s"±1-window bound expected, got ${parts.length} files")
 
-    // and the answer still matches the unpruned/manual path
-    val expected = Topic.readDF(spark, dir)
+    // and the answer still matches an unpruned driver decode
+    val expected = DriverDecode.frame(spark, dir)
       .filter($"ts_ms" >= cut && $"ts_ms" <= hi)
       .select($"ulid_hex").as[String].collect().toSet
     assert(df.select($"ulid_hex").as[String].collect().toSet === expected)
@@ -198,7 +202,25 @@ class TopicSourceSpec extends SparkSpec {
     spark.read.format("graft-topic").load(dir).createOrReplaceTempView("topic_v")
     val mid = Topic.listFiles(dir)(Topic.listFiles(dir).size / 2).fromTsMs
     val n = spark.sql(s"SELECT COUNT(*) FROM topic_v WHERE ts_ms >= $mid").as[Long].collect().head
-    val expected = Topic.seek(spark, dir, mid).count()
+    val expected = DriverDecode.messages(dir).count(m => Ulid.tsMs(m.id) >= mid)
     assert(n === expected)
+  }
+
+  test("hidden file_path column: the listed file of each row, never a pruned one") {
+    val df = spark.read.format("graft-topic").load(dir)
+    assert(!df.columns.contains("file_path"))
+    assert(!Topic.readDF(spark, dir).columns.contains("file_path"))
+
+    val files = Topic.listFiles(dir)
+    val paths = df.select($"file_path").distinct().as[String].collect()
+    assert(paths.sorted.toSeq === files.map(_.path).sorted)
+    val perFile = df.groupBy($"file_path").count().as[(String, Long)].collect().toMap
+    assert(perFile === files.map(f => f.path -> f.count).toMap)
+
+    val cut = files(files.size / 2).fromTsMs + 1
+    val kept = Topic.pruneFrom(files, cut).map(_.path).toSet
+    assert(kept.size < files.size)
+    val seen = df.filter($"ts_ms" >= cut).select($"file_path").distinct().as[String].collect().toSet
+    assert(seen.nonEmpty && seen.subsetOf(kept), s"pruned files seen: ${seen -- kept}")
   }
 }
