@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.rawdata.HadoopIO
+
 /** Session factory with the engine's shared configuration.
   *
   * Design notes (100 TB): nothing here hard-codes local scale except the
@@ -37,7 +39,14 @@ object GraftSession {
     // (it builds the relative ".<name>.crc" path, and a relative Hadoop Path
     // may not contain ':' — HADOOP-3257). Raw local FS skips crc shadow
     // files; object stores (GCS/S3 connectors) don't use checksum paths.
-    .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+    // Without libhadoop's native library, Hadoop's RawLocalFileSystem forks
+    // one `chmod` per create/mkdirs and one `readlink` per link-status call
+    // (four per FileContext rename), about 4-5 ms each; the fork-free
+    // subclass does both in-process. Its FileContext twin, which Spark's
+    // streaming checkpoints and state stores write through, keeps Hadoop's
+    // ChecksumFs layer, so their files still get and verify `.crc` files.
+    .config("spark.hadoop.fs.file.impl", HadoopIO.LocalFileSystemImpl)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", HadoopIO.LocalAbstractFileSystemImpl)
     .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
     // the materialized indexes (CorpusTokenIndex, CorpusLshIndex) write
     // one sorted file per bucket; reporting the scan's sort order lets

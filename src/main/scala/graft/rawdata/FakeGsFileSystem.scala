@@ -2,7 +2,7 @@ package graft.rawdata
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, FSDataOutputStream, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -28,11 +28,14 @@ import org.apache.hadoop.util.Progressable
   *    ships `spark.hadoop.*` credentials to executors (HadoopIO
   *    SerializableConf), the wiring a live bucket would exercise.
   *
+  * It extends [[ForkFreeLocalFileSystem]], so its creates and mkdirs
+  * start no `chmod` process.
+  *
   * Static operation counters let the spec assert the scheme was
   * actually driven (a silently-file://-resolved path would leave them
   * at zero).
   */
-class FakeGsFileSystem extends RawLocalFileSystem {
+class FakeGsFileSystem extends ForkFreeLocalFileSystem {
   // a real connector qualifies against its bucket URI; keep the
   // authority we were initialized with so listing-derived paths carry
   // the full fakegs://bucket prefix back to the caller

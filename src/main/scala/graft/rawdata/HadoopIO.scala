@@ -1,9 +1,15 @@
 package graft.rawdata
 
+import java.net.URI
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FileSystem, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
 /** Hadoop FileSystem plumbing for topic + metadata I/O.
@@ -15,8 +21,19 @@ import org.apache.spark.sql.SparkSession
   * is a single code path over Hadoop's `FileSystem`, which resolves
   * `file://`, `gs://`, `s3a://`, `hdfs://` ... from the URI scheme alone,
   * so a topic directory is portable across backends unmodified.
+  *
+  * Local files (`file:`) resolve to [[ForkFreeLocalFileSystem]] through
+  * `FileSystem` and to [[ForkFreeLocalFs]] through `FileContext` (which
+  * Spark's streaming checkpoint manager uses); [[GraftSession]] and
+  * [[HadoopIO.conf]] register both by the constants below.
   */
 object HadoopIO {
+
+  /** `fs.file.impl`: the raw local file system without forked helpers. */
+  val LocalFileSystemImpl: String = classOf[ForkFreeLocalFileSystem].getName
+
+  /** `fs.AbstractFileSystem.file.impl`: its checksummed FileContext twin. */
+  val LocalAbstractFileSystemImpl: String = classOf[ForkFreeLocalFs].getName
 
   /** Effective Hadoop configuration: the active Spark session's (it carries
     * `spark.hadoop.*` — connector credentials, endpoints), else defaults.
@@ -26,7 +43,9 @@ object HadoopIO {
     *  - the raw (checksum-free) local filesystem, because topic filenames
     *    embed ISO timestamps whose ':' breaks ChecksumFileSystem's relative
     *    ".<name>.crc" shadow paths (HADOOP-3257). Object-store connectors
-    *    don't use checksum paths.
+    *    don't use checksum paths. It is [[ForkFreeLocalFileSystem]], not
+    *    Hadoop's `RawLocalFileSystem`, which forks a process per call
+    *    where no native library is loaded.
     *  - `fs.file.impl.disable.cache=true`, because Hadoop's FileSystem
     *    cache is keyed by scheme+authority only: if anything in the JVM
     *    already opened a `file://` path (e.g. a session not built through
@@ -46,7 +65,7 @@ object HadoopIO {
     else {
       val base =
         if (src == null) new Configuration() else new Configuration(src)
-      base.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+      base.set("fs.file.impl", LocalFileSystemImpl)
       base.setBoolean("fs.file.impl.disable.cache", true)
       cached = (src, base)
       base
@@ -91,3 +110,67 @@ object HadoopIO {
 
   def serializable(): SerializableConf = new SerializableConf(conf())
 }
+
+/** Hadoop's `RawLocalFileSystem` without its forked helpers. Where
+  * libhadoop's native library is not loaded (the common case for a Spark
+  * install from jars), `RawLocalFileSystem` starts an external process for
+  * two calls: `chmod` in `setPermission`, which every `create` and
+  * `mkdirs` runs, and `readlink` in `getFileLinkStatus`, which a
+  * `FileContext` rename calls four times. A process start costs
+  * milliseconds, so a streaming checkpoint file whose create + rename
+  * takes 0.3 ms on disk took 50-58 ms (4-core x86 host). This class does
+  * both calls through `java.nio.file` in-process; every other call is
+  * Hadoop's own.
+  */
+class ForkFreeLocalFileSystem extends RawLocalFileSystem {
+
+  /** The 9 rwx bits via `Files.setPosixFilePermissions` (which, like
+    * `chmod`, follows a symlink). A mode with the sticky bit (or any bit
+    * above rwx), or a store without POSIX permissions, takes Hadoop's path.
+    */
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    val mode = permission.toShort.toInt
+    if ((mode & ~0x1ff) != 0) super.setPermission(p, permission)
+    else {
+      val perms = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
+      // values() runs OWNER_READ .. OTHERS_EXECUTE: bit 8 down to bit 0
+      PosixFilePermission.values().zipWithIndex.foreach { case (pp, i) =>
+        if ((mode & (1 << (8 - i))) != 0) perms.add(pp)
+      }
+      try Files.setPosixFilePermissions(pathToFile(p).toPath, perms)
+      catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
+    }
+  }
+
+  /** For a path that is not a symlink, Hadoop returns `getFileStatus(f)`
+    * (and its `FileNotFoundException` for a missing path) after forking
+    * `readlink` to find that out; ask `Files.isSymbolicLink` instead and
+    * leave links, dangling ones included, to Hadoop.
+    */
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+    else getFileStatus(f)
+}
+
+/** `FileContext`'s raw local layer over [[ForkFreeLocalFileSystem]]: the
+  * same overrides as Hadoop's `RawLocalFs`, whose constructors are
+  * package-private.
+  */
+class ForkFreeRawLocalFs(uri: URI, conf: Configuration)
+    extends DelegateToFileSystem(uri, new ForkFreeLocalFileSystem, conf,
+      FsConstants.LOCAL_FS_URI.getScheme, false) {
+  override def getUriDefaultPort: Int = -1
+  override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults()
+  override def getServerDefaults(): FsServerDefaults =
+    LocalConfigKeys.getServerDefaults()
+  override def isValidName(src: String): Boolean = true
+}
+
+/** `FileContext`'s `file:` file system, in Hadoop's `LocalFs` shape:
+  * `ChecksumFs` over the raw layer. Spark's streaming checkpoint manager
+  * writes offset, commit and state-store files through `FileContext`;
+  * those names carry no ':' and keep their `.crc` files, written and
+  * verified as before. Topic files go through `FileSystem` and stay raw.
+  */
+class ForkFreeLocalFs(uri: URI, conf: Configuration)
+    extends ChecksumFs(new ForkFreeRawLocalFs(uri, conf))

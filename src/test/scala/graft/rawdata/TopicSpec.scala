@@ -240,9 +240,9 @@ class TopicSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // scheme-keyed FileSystem cache. The per-call fs.file.impl override is
     // ignored for cached instances — HadoopIO must bypass the cache
     // (fs.file.impl.disable.cache) or ':'-bearing topic filenames break.
-    // (In this JVM GraftSession already cached a RawLocalFileSystem, so
-    // first drop the cache, then pin the checksum flavour the way a
-    // foreign session would.)
+    // (In this JVM the cache already holds the raw file system that
+    // GraftSession registers, so first drop the cache, then pin the
+    // checksum flavour the way a foreign session would.)
     org.apache.hadoop.fs.FileSystem.closeAll()
     try {
       val plain = new org.apache.hadoop.conf.Configuration()
