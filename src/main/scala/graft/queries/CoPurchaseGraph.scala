@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
@@ -36,9 +36,9 @@ import graft.Tables.t
   * groups the deduplicated (order, part) pairs into per-order part
   * arrays, the pair expansion is a narrow lambda-filtered explode
   * (`filter(ps, x -> x > u)` keeps each undirected pair once), and the
-  * only other wide stage is the distinct on the pair stream. Same
-  * session/tmpdir lifecycle as the other indexes; on a cluster these
-  * tables live in the warehouse across jobs.
+  * only other wide stage is the distinct on the pair stream. Naming,
+  * location, writes, compaction and drop follow the [[IndexStore]]
+  * contract (family `cpg`).
   *
   * Correctness: definitionally the distinct co-occurrence pairs of the
   * lineitem table — CoPurchaseGraphSpec asserts set-equality of the index
@@ -47,9 +47,7 @@ import graft.Tables.t
   */
 object CoPurchaseGraph {
 
-  import IndexBuckets.{buckets, bucketsOf}
-
-  private def tableName(part: String, tg: String) = s"graft_cpg_${part}_$tg"
+  import IndexStore.{Cpg, bucketed, tag}
 
   /** Build the two graph tables if this session hasn't yet.
     *
@@ -62,21 +60,14 @@ object CoPurchaseGraph {
     */
   def ensure(s: SparkSession, d: String,
       onStage: (String, Double) => Unit = (_, _) => ()): Unit = synchronized {
-    val tg = CorpusLshIndex.tag(d)
-    if (!s.catalog.tableExists(tableName("deg", tg))) {
+    val tg = tag(d)
+    if (!Cpg.exists(s, "deg", tg)) {
       import s.implicits._
-      val dir = new java.io.File(
-        new java.io.File(sys.props("java.io.tmpdir"), "graft-cpg-index"), tg)
-      dir.mkdirs()
-      def save(df: DataFrame, part: String, bucketCols: Seq[String]): DataFrame = {
-        val tbl = tableName(part, tg)
+      def save(df: DataFrame, part: String, bucketCol: String): DataFrame = {
         val t0 = System.nanoTime()
-        df.write.mode(SaveMode.Overwrite)
-          .option("path", new java.io.File(dir, part).getAbsolutePath)
-          .bucketBy(buckets(s), bucketCols.head, bucketCols.tail: _*)
-          .saveAsTable(tbl)
+        val tbl = Cpg.create(s, df, part, tg, bucketed(bucketCol))
         onStage(part, (System.nanoTime() - t0) / 1e9)
-        s.table(tbl)
+        tbl
       }
       // the distinct (order, part) relation feeds THREE build stages
       // (edge pairs, item counts, the wm guard) — persist it so the
@@ -91,21 +82,21 @@ object CoPurchaseGraph {
           .select(explode($"ps").as("u"), $"ps")
           .select($"u", explode(expr("filter(ps, x -> x > u)")).as("v"))
         val edge = save(rawPairs.groupBy($"u", $"v")
-          .agg(count(lit(1)).as("supp")), "edge", Seq("u"))
+          .agg(count(lit(1)).as("supp")), "edge", "u")
         save(li.groupBy($"p".as("x")).agg(count(lit(1)).as("n_ord")),
-          "item", Seq("x"))
+          "item", "x")
         // symmetrized adjacency (both orientations), bucketed on the
         // scatter key — the iterative consumers (q40 PageRank, q42 BFS)
         // join it against a per-round frontier every round; storing it
         // saves each of them a runtime union + re-materialization, and
         // the u-bucketing co-locates the scatter with any u-keyed build.
         save(edge.select($"u", $"v")
-          .unionByName(edge.select($"v".as("u"), $"u".as("v"))), "sym", Seq("u"))
+          .unionByName(edge.select($"v".as("u"), $"u".as("v"))), "sym", "u")
         // order high-watermark: the append contract's guard relation (one
         // row — max indexed order key)
-        save(li.agg(max($"o").as("max_o")), "wm", Seq("max_o"))
+        save(li.agg(max($"o").as("max_o")), "wm", "max_o")
         val ends = edge.select($"u".as("x")).unionByName(edge.select($"v".as("x")))
-        save(ends.groupBy($"x").agg(count(lit(1)).as("dg")), "deg", Seq("x"))
+        save(ends.groupBy($"x").agg(count(lit(1)).as("dg")), "deg", "x")
       } finally li.unpersist()
     }
   }
@@ -116,9 +107,8 @@ object CoPurchaseGraph {
     * the merges (edge ∪ delta pairs → summed supports, item ∪ delta
     * counts) are index-sized aggregations; sym and deg re-derive from
     * the merged edge relation. Merged relations are localCheckpoint-
-    * pinned before the in-place Overwrite (the
-    * [[CorpusTokenIndex.compact]] pattern — lineage to the files being
-    * replaced is cut first).
+    * pinned before the in-place [[IndexStore.Family.overwrite]] (lineage
+    * to the files being replaced is cut first).
     *
     * Atomicity: unlike ensure (where deg not existing yet IS the
     * uncommitted state), during an append all tables already exist — so
@@ -126,7 +116,7 @@ object CoPurchaseGraph {
     * recreated LAST. A failure anywhere in between leaves no deg entry,
     * and the next ensure() sees the index uncommitted and rebuilds every
     * table from the base fact table (appended batches are lost — the
-    * session-scoped repair contract shared with [[CorpusLshIndex]]); a
+    * [[IndexStore]] repair contract); a
     * reader can never observe a merged edge beside a stale deg/sym.
     *
     * Contract: each batch must carry COMPLETE, never-before-indexed
@@ -142,31 +132,23 @@ object CoPurchaseGraph {
   def append(s: SparkSession, d: String, newLineitems: DataFrame): Unit = synchronized {
     ensure(s, d)
     import s.implicits._
-    val tg = CorpusLshIndex.tag(d)
-    val dir = new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft-cpg-index"), tg)
-    def save(df: DataFrame, part: String, bucketCols: Seq[String]): Unit =
-      df.write.mode(SaveMode.Overwrite)
-        .option("path", new java.io.File(dir, part).getAbsolutePath)
-        .bucketBy(bucketsOf(s, tableName(part, tg)), bucketCols.head, bucketCols.tail: _*)
-        .saveAsTable(tableName(part, tg))
+    val tg = tag(d)
     val li = newLineitems
       .select($"l_orderkey".as("o"), $"l_partkey".as("p")).distinct()
       .localCheckpoint(true)
     // an empty batch is a no-op, not a NULL-unboxing error on its min
     if (li.isEmpty) { li.unpersist(): Unit }
-    else appendNonEmpty(s, tg, dir, li, save)
+    else appendNonEmpty(s, tg, li)
   }
 
-  private def appendNonEmpty(s: SparkSession, tg: String, dir: java.io.File,
-      li: DataFrame, save: (DataFrame, String, Seq[String]) => Unit): Unit = {
+  private def appendNonEmpty(s: SparkSession, tg: String, li: DataFrame): Unit = {
     import s.implicits._
     // high-watermark guard (two 1-row scalar reads, bounded by
     // construction). An index built over an EMPTY corpus has a NULL
     // watermark (max over zero orders) — the first real crawl batch is
     // then new by definition (the new-tenant-then-first-crawl shape),
     // so NULL reads as the minimum key, never an unboxing throw.
-    val wmRow = s.table(tableName("wm", tg)).select($"max_o").head()
+    val wmRow = s.table(Cpg.table("wm", tg)).select($"max_o").head()
     val wm = if (wmRow.isNullAt(0)) Long.MinValue else wmRow.getLong(0)
     val batchMin = li.agg(min($"o")).as[Long].head()
     require(batchMin > wm,
@@ -178,104 +160,61 @@ object CoPurchaseGraph {
       .select(explode($"ps").as("u"), $"ps")
       .select($"u", explode(expr("filter(ps, x -> x > u)")).as("v"))
       .groupBy($"u", $"v").agg(count(lit(1)).as("supp"))
-    val mergedEdge = s.table(tableName("edge", tg)).unionByName(pairsNew)
+    val mergedEdge = s.table(Cpg.table("edge", tg)).unionByName(pairsNew)
       .groupBy($"u", $"v").agg(sum($"supp").as("supp"))
       .localCheckpoint(true)
-    val mergedItem = s.table(tableName("item", tg))
+    val mergedItem = s.table(Cpg.table("item", tg))
       .unionByName(li.groupBy($"p".as("x")).agg(count(lit(1)).as("n_ord")))
       .groupBy($"x").agg(sum($"n_ord").as("n_ord"))
       .localCheckpoint(true)
-    // uncommit: drop the marker BEFORE any table is mutated (its bucket
-    // count is captured first — the recreate must match its siblings)
-    val degBuckets = bucketsOf(s, tableName("deg", tg))
-    s.sql(s"DROP TABLE IF EXISTS ${tableName("deg", tg)}")
-    save(mergedEdge, "edge", Seq("u"))
-    save(mergedItem, "item", Seq("x"))
-    save(mergedEdge.select($"u", $"v")
-      .unionByName(mergedEdge.select($"v".as("u"), $"u".as("v"))), "sym", Seq("u"))
-    save(li.agg(max($"o").as("max_o")), "wm", Seq("max_o"))
+    // uncommit: drop the marker BEFORE any table is mutated (its layout
+    // is captured first — the recreate must match its siblings)
+    val degLayout = Cpg.layout(s, "deg", tg)
+    Cpg.dropTables(s, tg, Seq("deg"))
+    Cpg.overwrite(s, mergedEdge, "edge", tg)
+    Cpg.overwrite(s, mergedItem, "item", tg)
+    Cpg.overwrite(s, mergedEdge.select($"u", $"v")
+      .unionByName(mergedEdge.select($"v".as("u"), $"u".as("v"))), "sym", tg)
+    Cpg.overwrite(s, li.agg(max($"o").as("max_o")), "wm", tg)
     val ends = mergedEdge.select($"u".as("x"))
       .unionByName(mergedEdge.select($"v".as("x")))
     // recommit: deg recreated LAST
-    ends.groupBy($"x").agg(count(lit(1)).as("dg"))
-      .write.mode(SaveMode.Overwrite)
-      .option("path", new java.io.File(dir, "deg").getAbsolutePath)
-      .bucketBy(degBuckets, "x")
-      .saveAsTable(tableName("deg", tg))
+    Cpg.create(s, ends.groupBy($"x").agg(count(lit(1)).as("dg")), "deg", tg, degLayout): Unit
     Seq(li, mergedEdge, mergedItem).foreach(_.unpersist(): Unit)
   }
 
-  /** Bucket-preserving file-collapse rewrite — the graph twin of
-    * [[CorpusLshIndex.compact]] (the last append-only family member to
-    * gain one). Unlike the LSH index (SaveMode.Append → one NEW file
-    * per bucket per append), [[append]] here merges and Overwrites, and
-    * Spark's planned bucketed write shuffles onto the bucket columns —
-    * so on THIS write path every table already sits at one file per
-    * bucket and compact is a cheap idempotent rewrite
+  /** Bucket-preserving file-collapse rewrite
+    * ([[IndexStore.Family.compact]]). Unlike the LSH index (SaveMode.Append
+    * → one NEW file per bucket per append), [[append]] here merges and
+    * Overwrites, and Spark's planned bucketed write shuffles onto the
+    * bucket columns — so on THIS write path every table already sits at
+    * one file per bucket and compact is a cheap idempotent rewrite
     * (CoPurchaseGraphSpec pins both properties). It exists for layouts
     * this engine did not write: a cluster writer with planned writes
     * disabled, or an external tool, leaves each bucket scattered across
-    * ~|tasks| files, and this repartition-onto-bucket-columns rewrite
-    * restores one file per bucket with bucket counts (and therefore the
-    * exchange-free consumer joins) preserved. Content is untouched — a
-    * crash mid-way leaves every already-rewritten table byte-
-    * equivalent, so no drop/recreate commit dance is needed (unlike
-    * [[append]]). Rows are localCheckpoint-pinned BEFORE the in-place
-    * Overwrite (the [[CorpusTokenIndex.compact]] pattern — lineage to
-    * the files being replaced is cut first); pinned relations are
-    * id/count rows only, never payloads.
+    * ~|tasks| files, and the rewrite restores one file per bucket with
+    * bucket counts (and therefore the exchange-free consumer joins)
+    * preserved. Content is untouched — a crash mid-way leaves every
+    * already-rewritten table byte-equivalent, so no drop/recreate commit
+    * dance is needed (unlike [[append]]). Pinned relations are id/count
+    * rows only, never payloads.
     */
   def compact(s: SparkSession, d: String): Unit = synchronized {
     ensure(s, d)
-    val tg = CorpusLshIndex.tag(d)
-    val dir = new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft-cpg-index"), tg)
-    val specs = Seq("edge" -> Seq("u"), "item" -> Seq("x"), "sym" -> Seq("u"),
-      "wm" -> Seq("max_o"), "deg" -> Seq("x"))
-    for ((part, cols) <- specs) {
-      val tbl = tableName(part, tg)
-      val n = bucketsOf(s, tbl)
-      val pinned = s.table(tbl).localCheckpoint(true)
-      pinned
-        .repartition(n, cols.map(col): _*)
-        .write.mode(SaveMode.Overwrite)
-        .option("path", new java.io.File(dir, part).getAbsolutePath)
-        .bucketBy(n, cols.head, cols.tail: _*)
-        .saveAsTable(tbl)
-      pinned.unpersist()
-      s.catalog.refreshTable(tbl)
-    }
+    Cpg.compact(s, tag(d), Seq("edge", "item", "sym", "wm", "deg"))
   }
 
-  /** Drop this corpus dir's graph index: catalog tables AND the on-disk
-    * files — the cleanup for throwaway corpora (Bench's graph-compact
-    * side corpus would otherwise leak one index per run), mirroring
-    * [[CorpusLshIndex.dropFor]].
+  /** Drop this corpus dir's graph index ([[IndexStore.Family.drop]]) —
+    * the cleanup for throwaway corpora (Bench's graph-compact side corpus
+    * would otherwise leak one index per run).
     */
   def dropFor(s: SparkSession, d: String): Unit = synchronized {
-    val tg = CorpusLshIndex.tag(d)
-    Seq("edge", "item", "sym", "wm", "deg").foreach { part =>
-      val tbl = tableName(part, tg)
-      if (s.catalog.tableExists(tbl)) s.sql(s"DROP TABLE $tbl"): Unit
-    }
-    graft.ScaleProbe.rmTree(new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft-cpg-index"), tg))
-  }
-
-  /** on-disk data-file count for one index table — the compaction
-    * observable (CoPurchaseGraphSpec + Bench's graph_compact stage)
-    */
-  def fileCount(s: SparkSession, d: String, part: String): Int = {
-    val tg = CorpusLshIndex.tag(d)
-    val f = new java.io.File(new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft-cpg-index"), tg), part)
-    Option(f.listFiles()).getOrElse(Array.empty)
-      .count(x => x.isFile && !x.getName.startsWith("_") && !x.getName.startsWith("."))
+    Cpg.drop(s, tag(d))
   }
 
   private def read(s: SparkSession, d: String, part: String): DataFrame = {
     ensure(s, d)
-    s.table(tableName(part, CorpusLshIndex.tag(d)))
+    s.table(Cpg.table(part, tag(d)))
   }
 
   /** distinct undirected edges (u < v) with basket-support counts */

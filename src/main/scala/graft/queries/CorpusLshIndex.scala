@@ -1,8 +1,6 @@
 package graft.queries
 
-import java.security.MessageDigest
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
@@ -36,11 +34,11 @@ import graft.Tables.t
   * Bucketing is load-bearing, not decorative: band is bucketed on the
   * band self-join keys, so candidate generation reads co-located buckets
   * with NO exchange (LshIndexSpec proves the shuffle-free plan); sh/sig
-  * are bucketed on doc_id, the key of every verification join. On a cluster the same tables live in the
-  * warehouse and survive across jobs; here they live for the session
-  * under java.io.tmpdir (external-table path) and the in-memory catalog,
-  * so a fresh session rebuilds — the same cache-once-per-run contract as
-  * the streaming gate's persisted index.
+  * are bucketed on doc_id, the key of every verification join. Naming,
+  * location, appends, compaction and drop follow the [[IndexStore]]
+  * contract (family `lsh`, which also holds the token table): a fresh
+  * session rebuilds — the same cache-once-per-run contract as the
+  * streaming gate's persisted index.
   *
   * Correctness: every derived relation is definitionally identical to
   * the inline chain each query ran before (per-doc signatures depend
@@ -50,19 +48,7 @@ import graft.Tables.t
   */
 object CorpusLshIndex {
 
-  import IndexBuckets.{buckets, bucketsOf}
-
-  private[queries] def tag(d: String): String = {
-    val md = MessageDigest.getInstance("MD5")
-    md.digest(new java.io.File(d).getCanonicalPath.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(10)
-  }
-
-  private def tableName(part: String, tg: String) = s"graft_lsh_${part}_$tg"
-
-  /** catalog table name for a corpus dir's index part (spec access) */
-  private[queries] def tableNameFor(part: String, d: String): String =
-    tableName(part, tag(d))
+  import IndexStore.{Lsh, bucketed, tag}
 
   /** Build the four index tables if this session hasn't yet. `jac` is
     * written LAST so its catalog entry marks the whole index committed —
@@ -72,54 +58,35 @@ object CorpusLshIndex {
     */
   def ensure(s: SparkSession, d: String): Unit = synchronized {
     val tg = tag(d)
-    if (!s.catalog.tableExists(tableName("jac", tg))) {
-      val dir = new java.io.File(
-        new java.io.File(sys.props("java.io.tmpdir"), "graft-lsh-index"), tg)
-      dir.mkdirs()
-      def save(df: DataFrame, part: String, bucketCols: Seq[String]): DataFrame = {
-        val tbl = tableName(part, tg)
-        df.write.mode(SaveMode.Overwrite)
-          .option("path", new java.io.File(dir, part).getAbsolutePath)
-          .bucketBy(buckets(s), bucketCols.head, bucketCols.tail: _*)
-          .saveAsTable(tbl)
-        s.table(tbl)
-      }
-      val sh = save(DedupQueries.shingleArrays(t(s, d, "documents")), "sh", Seq("doc_id"))
+    if (!Lsh.exists(s, "jac", tg)) {
+      def save(df: DataFrame, part: String, bucketCols: String*): DataFrame =
+        Lsh.create(s, df, part, tg, bucketed(bucketCols: _*))
+      val sh = save(DedupQueries.shingleArrays(t(s, d, "documents")), "sh", "doc_id")
       val sig = save(DedupQueries.signaturesFrom(
-        sh.select(col("doc_id"), explode(col("ss")).as("s"))), "sig", Seq("doc_id"))
+        sh.select(col("doc_id"), explode(col("ss")).as("s"))), "sig", "doc_id")
       // bucketed on BOTH self-join keys: co-partition compatibility
       // requires the partitioning to cover every join key (a bkey-only
       // bucketing still shuffles both sides under the default
       // requireAllClusterKeysForCoPartition)
-      val band = save(DedupQueries.bandsOfSigs(sig), "band", Seq("band", "bkey"))
+      val band = save(DedupQueries.bandsOfSigs(sig), "band", "band", "bkey")
       // candidate generation is skew-aware: hot buckets (boilerplate
       // shingles) are salted so no single task materializes a bucket's m²
       // pairs; output is identical to the plain self-join
       save(DedupQueries.jaccardFor(sh,
-        DedupQueries.pairsOfBandsSkewAware(band)), "jac", Seq("doc_a"))
+        DedupQueries.pairsOfBandsSkewAware(band)), "jac", "doc_a")
     }
   }
 
   private def read(s: SparkSession, d: String, part: String): DataFrame = {
     ensure(s, d)
-    s.table(tableName(part, tag(d)))
+    s.table(Lsh.table(part, tag(d)))
   }
 
-  /** Invalidate `s`'s cached file listings for this corpus's index
-    * tables. A session caches a table's relation (with its file list)
-    * on first resolution, so files appended by ANOTHER session — e.g. a
-    * streaming micro-batch's cloned session — stay invisible until the
-    * reader refreshes (standard Spark external-append semantics). The
-    * append methods refresh their own session; cross-session readers
-    * (the self-maintaining streaming gate's root session) call this.
+  /** [[IndexStore.Family.refresh]] for this corpus: the append methods
+    * refresh their own session; cross-session readers (the
+    * self-maintaining streaming gate's root session) call this.
     */
-  def refresh(s: SparkSession, d: String): Unit = {
-    val tg = tag(d)
-    Seq("sh", "sig", "band", "jac", "epair", "eband").foreach { part =>
-      val tbl = tableName(part, tg)
-      if (s.catalog.tableExists(tbl)) s.catalog.refreshTable(tbl)
-    }
-  }
+  def refresh(s: SparkSession, d: String): Unit = Lsh.refresh(s, tag(d))
 
   /** Incrementally extend the text index with a new document batch — the
     * crawl-loop lifecycle at corpus scale: per-doc relations (sh, sig,
@@ -136,10 +103,10 @@ object CorpusLshIndex {
     *
     * The new relations are materialized BEFORE any table is mutated
     * (they read the pre-append tables; persisting then forcing them
-    * keeps the lazy plans from observing their own appends), and the
-    * per-doc tables append through the same bucket spec, so bucket
-    * distribution — what candidate generation and the verify joins rely
-    * on — is preserved (each append adds one file per bucket).
+    * keeps the lazy plans from observing their own appends), and every
+    * table appends on its catalog layout, so bucket distribution — what
+    * candidate generation and the verify joins rely on — is preserved
+    * (each append adds one file per bucket).
     *
     * `newDocs`: (doc_id, text, …) with doc_ids disjoint from the
     * indexed corpus. Session-scoped like the rest of the index: a crash
@@ -153,7 +120,7 @@ object CorpusLshIndex {
     val sigNew = DedupQueries.signaturesFrom(
       shNew.select(col("doc_id"), explode(col("ss")).as("s"))).persist()
     val bandNew = DedupQueries.bandsOfSigs(sigNew).persist()
-    val bandOld = s.table(tableName("band", tg))
+    val bandOld = s.table(Lsh.table("band", tg))
     val cross = bandNew.as("a").join(bandOld.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.doc_id") =!= col("b.doc_id"))
@@ -162,17 +129,11 @@ object CorpusLshIndex {
     val candNew = cross
       .unionByName(DedupQueries.pairsOfBandsSkewAware(bandNew))
       .distinct()
-    val shAll = s.table(tableName("sh", tg)).unionByName(shNew)
+    val shAll = s.table(Lsh.table("sh", tg)).unionByName(shNew)
     val jacNew = DedupQueries.jaccardFor(shAll, candNew).persist()
     jacNew.count(): Unit // force off the pre-append tables
-    def add(df: DataFrame, part: String, bucketCols: Seq[String]): Unit =
-      df.write.mode(SaveMode.Append)
-        .bucketBy(bucketsOf(s, tableName(part, tg)), bucketCols.head, bucketCols.tail: _*)
-        .saveAsTable(tableName(part, tg))
-    add(jacNew, "jac", Seq("doc_a"))
-    add(shNew, "sh", Seq("doc_id"))
-    add(sigNew, "sig", Seq("doc_id"))
-    add(bandNew, "band", Seq("band", "bkey"))
+    Seq(jacNew -> "jac", shNew -> "sh", sigNew -> "sig", bandNew -> "band")
+      .foreach { case (df, part) => Lsh.append(s, df, part, tg) }
     Seq(shNew, sigNew, bandNew, jacNew).foreach(_.unpersist())
     refresh(s, d)
   }
@@ -198,11 +159,8 @@ object CorpusLshIndex {
     */
   private[graft] def embedPairsStaged(s: SparkSession, d: String,
       onStage: (String, Double) => Unit): DataFrame = synchronized {
-    val tbl = tableName("epair", tag(d))
-    if (!s.catalog.tableExists(tbl)) {
-      val dir = new java.io.File(
-        new java.io.File(sys.props("java.io.tmpdir"), "graft-lsh-index"), tag(d))
-      dir.mkdirs()
+    val tg = tag(d)
+    if (!Lsh.exists(s, "epair", tg)) {
       def timed[T](name: String)(body: => T): T = {
         val t0 = System.nanoTime()
         val r = body
@@ -221,11 +179,7 @@ object CorpusLshIndex {
       // pairs: appendEmbeddings joins a new batch's probes against it,
       // so extending the index never re-bands the existing corpus
       timed("band") {
-        DedupQueries.embedExactBands(e)
-          .write.mode(SaveMode.Overwrite)
-          .option("path", new java.io.File(dir, "eband").getAbsolutePath)
-          .bucketBy(buckets(s), "tbl", "bits")
-          .saveAsTable(tableName("eband", tag(d)))
+        Lsh.create(s, DedupQueries.embedExactBands(e), "eband", tg, bucketed("tbl", "bits"))
       }
       // verify: hamming-1 multi-probe × exact bands → distinct candidate
       // pairs → exact integer cosine, streamed straight into the bucketed
@@ -239,18 +193,14 @@ object CorpusLshIndex {
           .filter(col("va") < col("vb"))
           .select(col("va"), col("vb"))
           .distinct()
-        DedupQueries.embedVerify(cand, e, e)
-          .write.mode(SaveMode.Overwrite)
-          .option("path", new java.io.File(dir, "epair").getAbsolutePath)
-          .bucketBy(buckets(s), "vec_a")
-          .saveAsTable(tbl)
+        Lsh.create(s, DedupQueries.embedVerify(cand, e, e), "epair", tg, bucketed("vec_a"))
       }
       // finally: a failed band/verify stage (the case ScaleProbe's
       // fault isolation continues past) must not leave the full banded
       // corpus pinned in the cache manager for the rest of the JVM
       } finally e.unpersist(): Unit
     }
-    s.table(tbl)
+    s.table(Lsh.table("epair", tg))
   }
 
   /** The embedding-side twin of [[append]]: extend the epair index with a
@@ -275,7 +225,7 @@ object CorpusLshIndex {
     val eNew = DedupQueries.embedBanded(newVecs, bits).persist()
     val bandNew = DedupQueries.embedExactBands(eNew)
     val probesNew = DedupQueries.embedProbes(eNew, bits)
-    val bandOld = s.table(tableName("eband", tg))
+    val bandOld = s.table(Lsh.table("eband", tg))
     val cross = probesNew.withColumnRenamed("vec_id", "vn")
       .join(bandOld.withColumnRenamed("vec_id", "vo"), Seq("tbl", "bits"))
       .select(least(col("vn"), col("vo")).as("va"),
@@ -292,74 +242,36 @@ object CorpusLshIndex {
       .unionByName(eNew.select(col("vec_id"), col("q"), col("nn")))
     val jacNew = DedupQueries.embedVerify(cand, qAll, qAll).persist()
     jacNew.count(): Unit // force off the pre-append tables
-    jacNew.write.mode(SaveMode.Append)
-      .bucketBy(bucketsOf(s, tableName("epair", tg)), "vec_a")
-      .saveAsTable(tableName("epair", tg))
-    bandNew.write.mode(SaveMode.Append)
-      .bucketBy(bucketsOf(s, tableName("eband", tg)), "tbl", "bits")
-      .saveAsTable(tableName("eband", tg))
+    Lsh.append(s, jacNew, "epair", tg)
+    Lsh.append(s, bandNew, "eband", tg)
     Seq(eNew, jacNew).foreach(_.unpersist())
     refresh(s, d)
   }
 
-  /** Rewrite every index table into fresh single-file-per-bucket form —
-    * the maintenance op the append path defers (each append adds one
-    * file per bucket, so after N appends every bucketed read opens N
-    * files per bucket and candidate generation pays N× the listing +
-    * open cost; compaction restores fresh-build read shape without
-    * re-deriving anything — no shingling, no banding, no verify, just a
-    * bucket-preserving rewrite of rows the index already holds). The
-    * bucket COUNT is read back from each table's catalog spec (never the
-    * session conf), and the rewrite repartitions on the exact bucket
-    * keys so every task holds one whole bucket — one file per bucket,
-    * and the exchange-free join guarantees are preserved (LshIndexSpec
-    * proves compact == the pre-compact relations, the file collapse,
-    * and the post-compact shuffle-free self-join). Same
-    * localCheckpoint-pin-then-overwrite pattern as
-    * CorpusTokenIndex.compact: the rows are pinned BEFORE the overwrite
-    * so the write never reads the path it replaces (on a cluster the
-    * same rewrite stages to a new table + metastore swap; the pinned
-    * relations here are all candidate-proportional or per-doc hash
-    * tables, never raw corpus text).
+  /** Rewrite every index table into fresh single-file-per-bucket form
+    * ([[IndexStore.Family.compact]]) — the maintenance op the append path
+    * defers: each append adds one file per bucket, so after N appends
+    * every bucketed read opens N files per bucket and candidate
+    * generation pays N× the listing + open cost; compaction restores
+    * fresh-build read shape without re-deriving anything — no shingling,
+    * no banding, no verify (LshIndexSpec proves compact == the
+    * pre-compact relations, the file collapse, and the post-compact
+    * shuffle-free self-join). The pinned relations are all
+    * candidate-proportional or per-doc hash tables, never raw corpus
+    * text. The token table compacts on its own
+    * ([[CorpusTokenIndex.compact]]).
     */
   def compact(s: SparkSession, d: String): Unit = synchronized {
-    val tg = tag(d)
-    val dir = new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft-lsh-index"), tg)
-    val specs = Seq(
-      "sh" -> Seq("doc_id"), "sig" -> Seq("doc_id"), "band" -> Seq("band", "bkey"),
-      "jac" -> Seq("doc_a"), "eband" -> Seq("tbl", "bits"), "epair" -> Seq("vec_a"))
-    for ((part, cols) <- specs) {
-      val tbl = tableName(part, tg)
-      if (s.catalog.tableExists(tbl)) {
-        val n = bucketsOf(s, tbl)
-        val pinned = s.table(tbl).localCheckpoint(true)
-        pinned
-          .repartition(n, cols.map(col): _*)
-          .write.mode(SaveMode.Overwrite)
-          .option("path", new java.io.File(dir, part).getAbsolutePath)
-          .bucketBy(n, cols.head, cols.tail: _*)
-          .saveAsTable(tbl)
-        pinned.unpersist(): Unit
-      }
-    }
-    refresh(s, d)
+    Lsh.compact(s, tag(d), Seq("sh", "sig", "band", "jac", "eband", "epair"))
   }
 
-  /** Drop this corpus dir's index: catalog tables AND the on-disk
-    * files — the repair path for a crash mid-append (ensure rebuilds
-    * from scratch) and the cleanup for throwaway corpora (Bench's
-    * compact-stage side corpus would otherwise leak one index per run
-    * under java.io.tmpdir).
+  /** Drop this corpus dir's `lsh` family — the text, embed-pair AND token
+    * tables, catalog entries and files ([[IndexStore.Family.drop]]).
+    * Bench's compact-stage side corpus would otherwise leak one index per
+    * run under java.io.tmpdir.
     */
   def dropFor(s: SparkSession, d: String): Unit = synchronized {
-    val tg = tag(d)
-    Seq("sh", "sig", "band", "jac", "eband", "epair").foreach { part =>
-      val tbl = tableName(part, tg)
-      if (s.catalog.tableExists(tbl)) s.sql(s"DROP TABLE $tbl"): Unit
-    }
-    graft.ScaleProbe.rmTree(new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft-lsh-index"), tg))
+    Lsh.drop(s, tag(d))
   }
 
   /** Drop ONLY the embedding-side tables (epair + eband) so the staged
@@ -371,11 +283,7 @@ object CorpusLshIndex {
     * beside a stale eband.
     */
   private[graft] def dropEmbedPairs(s: SparkSession, d: String): Unit = synchronized {
-    val tg = tag(d)
-    Seq("epair", "eband").foreach { part =>
-      val tbl = tableName(part, tg)
-      if (s.catalog.tableExists(tbl)) s.sql(s"DROP TABLE $tbl"): Unit
-    }
+    Lsh.dropTables(s, tag(d), Seq("epair", "eband"))
   }
 
   /** per-doc DISTINCT word-3-shingle arrays (doc_id, ss) */

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
@@ -25,17 +25,16 @@ import graft.Tables.t
   * size to the text it replaces while every read is column-pruned to the
   * 1–3 columns a query needs.
   *
-  * Bucketing is load-bearing: shuffle-parallelism-many buckets on doc_id
-  * ([[IndexBuckets]]) with files sorted by
+  * Bucketing is load-bearing: [[IndexStore.buckets]] buckets on doc_id
+  * with files sorted by
   * (doc_id, pos) and exactly one file per bucket (the pre-write
   * repartition matches task→bucket one-to-one), so every per-doc window
   * (bigram lead, phrase leads, skip-gram context) and every
   * groupBy(doc_id, …) consumes the bucket distribution AND the file sort
   * order directly — no exchange, no sort, straight into the window
-  * (TokenIndexSpec proves the exchange-free, sort-free plan). On a
-  * cluster the same table lives in the warehouse bucketed by the
-  * executor count; here it lives for the session under java.io.tmpdir
-  * and the in-memory catalog, same contract as the LSH index.
+  * (TokenIndexSpec proves the exchange-free, sort-free plan). The table
+  * is `tok` in the [[IndexStore]] `lsh` family, so naming, location,
+  * appends, compaction and drop follow the store's contract.
   *
   * Correctness: the relation is definitionally identical to the inline
   * split+explode each consumer ran before (TokenIndexSpec asserts row-set
@@ -44,34 +43,23 @@ import graft.Tables.t
   */
 object CorpusTokenIndex {
 
-  import IndexBuckets.{buckets, bucketsOf}
+  import IndexStore.{Layout, Lsh, tag}
 
-  private def tableName(tg: String) = s"graft_lsh_tok_$tg"
+  /** bucketed on doc_id, files sorted by (doc_id, pos) */
+  private val TokLayout = Layout(Seq("doc_id"), Seq("doc_id", "pos"))
 
-  /** Build the token table if this session hasn't yet. Overwrite-mode
-    * write: stale on-disk leftovers from a previous JVM are replaced,
-    * never read.
+  private def tokenize(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("source"), col("lang"), posexplode(split(col("text"), " +")))
+      .toDF("doc_id", "source", "lang", "pos", "tok")
+
+  /** Build the token table if this session hasn't yet, clustered — one
+    * shuffle task per bucket ⇒ one file per bucket ⇒ the scan reports
+    * the (doc_id, pos) sort order and windows skip the sort.
     */
   def ensure(s: SparkSession, d: String): Unit = synchronized {
-    val tg = CorpusLshIndex.tag(d)
-    val tbl = tableName(tg)
-    if (!s.catalog.tableExists(tbl)) {
-      val dir = new java.io.File(
-        new java.io.File(sys.props("java.io.tmpdir"), "graft-lsh-index"), tg)
-      dir.mkdirs()
-      t(s, d, "documents")
-        .select(col("doc_id"), col("source"), col("lang"),
-          posexplode(split(col("text"), " +")))
-        .toDF("doc_id", "source", "lang", "pos", "tok")
-        // one shuffle task per bucket ⇒ one file per bucket ⇒ the scan
-        // reports the (doc_id, pos) sort order and windows skip the sort
-        .repartition(buckets(s), col("doc_id"))
-        .write.mode(SaveMode.Overwrite)
-        .option("path", new java.io.File(dir, "tok").getAbsolutePath)
-        .bucketBy(buckets(s), "doc_id")
-        .sortBy("doc_id", "pos")
-        .saveAsTable(tbl)
-    }
+    val tg = tag(d)
+    if (!Lsh.exists(s, "tok", tg))
+      Lsh.create(s, tokenize(t(s, d, "documents")), "tok", tg, TokLayout, cluster = true): Unit
   }
 
   /** (doc_id, source, lang, pos, tok) — every whitespace token of every
@@ -81,7 +69,7 @@ object CorpusTokenIndex {
     */
   def tokens(s: SparkSession, d: String): DataFrame = {
     ensure(s, d)
-    s.table(tableName(CorpusLshIndex.tag(d)))
+    s.table(Lsh.table("tok", tag(d)))
   }
 
   /** Incrementally extend the token index with a new document batch —
@@ -101,40 +89,15 @@ object CorpusTokenIndex {
     */
   def append(s: SparkSession, d: String, newDocs: DataFrame): Unit = synchronized {
     ensure(s, d)
-    newDocs
-      .select(col("doc_id"), col("source"), col("lang"),
-        posexplode(split(col("text"), " +")))
-      .toDF("doc_id", "source", "lang", "pos", "tok")
-      .repartition(bucketsOf(s, tableName(CorpusLshIndex.tag(d))), col("doc_id"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(bucketsOf(s, tableName(CorpusLshIndex.tag(d))), "doc_id")
-      .sortBy("doc_id", "pos")
-      .saveAsTable(tableName(CorpusLshIndex.tag(d)))
+    Lsh.append(s, tokenize(newDocs), "tok", tag(d), cluster = true)
   }
 
   /** Restore the one-sorted-file-per-bucket layout appends dilute (the
-    * periodic compaction every bucketed warehouse table schedules):
-    * rewrite the current rows through the original write path, after
-    * which per-doc windows read the file sort again (no SortExec —
-    * TokenIndexSpec's append+compact case). The rows are localCheckpoint-
-    * pinned before the overwrite so the rewrite never reads the files it
-    * is replacing.
+    * periodic compaction every bucketed warehouse table schedules,
+    * [[IndexStore.Family.compact]]), after which per-doc windows read the
+    * file sort again (no SortExec — TokenIndexSpec's append+compact case).
     */
   def compact(s: SparkSession, d: String): Unit = synchronized {
-    val tg = CorpusLshIndex.tag(d)
-    val tbl = tableName(tg)
-    if (s.catalog.tableExists(tbl)) {
-      val pinned = s.table(tbl).localCheckpoint(true)
-      val dir = new java.io.File(
-        new java.io.File(sys.props("java.io.tmpdir"), "graft-lsh-index"), tg)
-      pinned
-        .repartition(buckets(s), col("doc_id"))
-        .write.mode(SaveMode.Overwrite)
-        .option("path", new java.io.File(dir, "tok").getAbsolutePath)
-        .bucketBy(buckets(s), "doc_id")
-        .sortBy("doc_id", "pos")
-        .saveAsTable(tbl)
-      pinned.unpersist(): Unit
-    }
+    Lsh.compact(s, tag(d), Seq("tok"))
   }
 }

@@ -319,16 +319,12 @@ object CurationQueries {
     * every executor. Cross-engine parity is unchanged: the DuckDB
     * oracles replay the full training chain in SQL; CurationOpsSpec /
     * BpeVocabScaleSpec hold the artifact to the plain-Scala reference.
+    * Stored as `merges` in the [[IndexStore]] `bpe` family.
     */
-  private def mergesTableName(tg: String) = s"graft_bpe_merges_$tg"
-
   private def ensureMerges(s: SparkSession, d: String): Unit = synchronized {
     import s.implicits._
-    val tg = CorpusLshIndex.tag(d)
-    if (!s.catalog.tableExists(mergesTableName(tg))) {
-      val dir = new java.io.File(
-        new java.io.File(sys.props("java.io.tmpdir"), "graft-bpe-artifact"), tg)
-      dir.mkdirs()
+    val tg = IndexStore.tag(d)
+    if (!IndexStore.Bpe.exists(s, "merges", tg)) {
       var words = CorpusTokenIndex.tokens(s, d)
         .select($"tok")
         .filter(length($"tok") > 0)
@@ -355,11 +351,9 @@ object CurationQueries {
       // written empty table still marks the artifact built
       val empty = s.range(0).select(lit(0L).as("round"), lit(0).as("rn"),
         lit("").as("a"), lit("").as("b"), lit(0L).as("pair_n"))
-      (empty +: tops.result()).reduce(_.union(_))
-        .coalesce(1) // ≤BpeMerges rows — one artifact file, like a shipped tokenizer.json
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("path", new java.io.File(dir, "merges").getAbsolutePath)
-        .saveAsTable(mergesTableName(tg))
+      // ≤BpeMerges rows — one artifact file, like a shipped tokenizer.json
+      IndexStore.Bpe.create(s, (empty +: tops.result()).reduce(_.union(_)).coalesce(1),
+        "merges", tg, IndexStore.Plain): Unit
     }
   }
 
@@ -368,7 +362,7 @@ object CurationQueries {
     */
   private[graft] def merges(s: SparkSession, d: String): DataFrame = {
     ensureMerges(s, d)
-    s.table(mergesTableName(CorpusLshIndex.tag(d)))
+    s.table(IndexStore.Bpe.table("merges", IndexStore.tag(d)))
   }
 
   /** the encode map (orig → cur): the corpus's distinct wrapped-word

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Materialized IVF index over the embedding corpus — the DEPLOY shape
@@ -15,8 +15,7 @@ import org.apache.spark.sql.functions._
   * probed cells' partitions, and that the probe result is row-identical
   * to ann_ivf_topk's inline computation).
   *
-  * Stored tables (session-scoped catalog + tmpdir path, the same
-  * lifecycle contract as [[CorpusLshIndex]]):
+  * Stored tables (the [[IndexStore]] `ivf` family):
   *   - cent  (cent_id, qc, nc)               — the frozen coarse codebook
   *     (deterministic vec_id % CentroidStep seeds, ann_ivf_topk's rule)
   *   - cells (cent_id, vec_id, q, nn)        — posting lists,
@@ -36,7 +35,7 @@ import org.apache.spark.sql.functions._
   */
 object EmbIvfIndex {
 
-  private def tableName(part: String, tg: String) = s"graft_ivf_${part}_$tg"
+  import IndexStore.{Ivf, Layout, Plain, tag}
 
   private def assignOnce(e: DataFrame, cents: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
@@ -55,11 +54,8 @@ object EmbIvfIndex {
   /** Build the codebook + posting lists if this session hasn't yet. */
   def ensure(s: SparkSession, d: String): Unit = synchronized {
     import s.implicits._
-    val tg = CorpusLshIndex.tag(d)
-    if (!s.catalog.tableExists(tableName("cells", tg))) {
-      val dir = new java.io.File(
-        new java.io.File(sys.props("java.io.tmpdir"), "graft-ivf-index"), tg)
-      dir.mkdirs()
+    val tg = tag(d)
+    if (!Ivf.exists(s, "cells", tg)) {
       // zero-norm vectors are un-indexable under cosine (no direction to
       // assign) — excluded here exactly like the AnnQueries `unit` rule,
       // so neither a seed nor a posting row can put a 0 denominator in
@@ -68,25 +64,19 @@ object EmbIvfIndex {
       // corpus-scaled seed step (sqrt-scaled nlist — AnnQueries.centroidStep)
       val cents = e.filter($"vec_id" % AnnQueries.centroidStep(s, d) === 0)
         .select($"vec_id".as("cent_id"), $"q".as("qc"), $"nn".as("nc"))
-      cents.write.mode(SaveMode.Overwrite)
-        .option("path", new java.io.File(dir, "cent").getAbsolutePath)
-        .saveAsTable(tableName("cent", tg))
-      assignOnce(e, s.table(tableName("cent", tg)))
-        .write.mode(SaveMode.Overwrite)
-        .option("path", new java.io.File(dir, "cells").getAbsolutePath)
-        .partitionBy("cent_id")
-        .saveAsTable(tableName("cells", tg))
+      val cent = Ivf.create(s, cents, "cent", tg, Plain)
+      Ivf.create(s, assignOnce(e, cent), "cells", tg, Layout(partCols = Seq("cent_id"))): Unit
     }
   }
 
   def cents(s: SparkSession, d: String): DataFrame = {
     ensure(s, d)
-    s.table(tableName("cent", CorpusLshIndex.tag(d)))
+    s.table(Ivf.table("cent", tag(d)))
   }
 
   def cells(s: SparkSession, d: String): DataFrame = {
     ensure(s, d)
-    s.table(tableName("cells", CorpusLshIndex.tag(d)))
+    s.table(Ivf.table("cells", tag(d)))
   }
 
   /** Assign a new vector batch to the FROZEN codebook and append to the
@@ -95,7 +85,7 @@ object EmbIvfIndex {
     */
   def append(s: SparkSession, d: String, newVecs: DataFrame): Unit = {
     import s.implicits._
-    val tg = CorpusLshIndex.tag(d)
+    val tg = tag(d)
     ensure(s, d)
     // Guard the contract instead of only documenting it: a batch that
     // adds a seed position (vec_id % CentroidStep == 0) or re-sends a
@@ -108,7 +98,7 @@ object EmbIvfIndex {
     // batch silently vanishes while consumers keep trusting append ==
     // rebuild. Fail loudly with the repair path instead (the frozen-
     // codebook contract genuinely needs base vectors to freeze against).
-    require(!s.table(tableName("cent", tg)).isEmpty,
+    require(!s.table(Ivf.table("cent", tg)).isEmpty,
       "EmbIvfIndex.append: the index was built over an EMPTY corpus " +
         "(zero centroids) — a frozen-codebook append has no cells to " +
         "assign to and would silently drop the batch; dropFor + ensure " +
@@ -121,7 +111,7 @@ object EmbIvfIndex {
         s"(vec_id % $step == 0) — the codebook is " +
         "frozen; such a batch would diverge from a rebuild")
     val dups = newVecs.join(
-      s.table(tableName("cells", tg)).select($"vec_id"), Seq("vec_id"),
+      s.table(Ivf.table("cells", tg)).select($"vec_id"), Seq("vec_id"),
       "left_semi").limit(1).count()
     require(dups == 0L,
       "EmbIvfIndex.append: batch contains vec_ids already present in the " +
@@ -136,63 +126,36 @@ object EmbIvfIndex {
     require(total == distinct,
       s"EmbIvfIndex.append: batch repeats vec_ids internally ($total rows, " +
         s"$distinct distinct vec_ids) — appends must carry unique ids")
-    // insertInto is position-based; a partitioned saveAsTable catalogs
-    // the partition column LAST (vec_id, q, nn, cent_id). Zero-norm rows
-    // are dropped exactly as ensure's rebuild drops them — append ==
-    // rebuild must hold for degenerate batches too.
-    assignOnce(newVecs.filter(col("nn") > 0), s.table(tableName("cent", tg)))
-      .select(col("vec_id"), col("q"), col("nn"), col("cent_id"))
-      .write.mode(SaveMode.Append)
-      .format("parquet")
-      .insertInto(tableName("cells", tg))
-    s.catalog.refreshTable(tableName("cells", tg))
+    // Zero-norm rows are dropped exactly as ensure's rebuild drops them —
+    // append == rebuild must hold for degenerate batches too.
+    Ivf.append(s, assignOnce(newVecs.filter(col("nn") > 0), s.table(Ivf.table("cent", tg))),
+      "cells", tg)
+    Ivf.refresh(s, tg)
   }
 
-  /** Rewrite the posting lists into fresh one-file-per-cell form — the
-    * maintenance op the append path defers (each append adds one file
-    * set to every touched cent_id partition directory, so after N
-    * appends a probe of k cells opens up to k·(N+1) files; compaction
-    * restores the fresh-build read shape without re-deriving anything —
-    * no re-assignment, no codebook touch, just a partition-preserving
-    * rewrite of rows the index already holds). Mirrors
-    * [[CorpusLshIndex.compact]]: rows are localCheckpoint-PINNED before
-    * the Overwrite so the write never reads the directories it replaces,
-    * and the rewrite repartitions ON cent_id so each task holds whole
-    * cells — one file per partition directory. The codebook (cent) is
-    * written once at build and never appended, so only cells compacts.
-    * Serving is unchanged: the table keeps its cent_id partitioning, so
-    * the probe path's partition pruning survives (IvfIndexSpec proves
-    * compact == pre-compact cells, the per-cell file collapse, and that
-    * the pruned probe still serves row-identically).
+  /** Rewrite the posting lists into fresh one-file-per-cell form
+    * ([[IndexStore.Family.compact]], clustered on cent_id so each task
+    * holds whole cells) — the maintenance op the append path defers (each
+    * append adds one file set to every touched cent_id partition
+    * directory, so after N appends a probe of k cells opens up to k·(N+1)
+    * files; compaction restores the fresh-build read shape with no
+    * re-assignment and no codebook touch). The codebook (cent) is written
+    * once at build and never appended, so only cells compacts. Serving is
+    * unchanged: the table keeps its cent_id partitioning, so the probe
+    * path's partition pruning survives (IvfIndexSpec proves compact ==
+    * pre-compact cells, the per-cell file collapse, and that the pruned
+    * probe still serves row-identically).
     */
   def compact(s: SparkSession, d: String): Unit = synchronized {
-    val tg = CorpusLshIndex.tag(d)
     ensure(s, d)
-    val dir = new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft-ivf-index"), tg)
-    val tbl = tableName("cells", tg)
-    val pinned = s.table(tbl).localCheckpoint(true)
-    pinned
-      .repartition(col("cent_id"))
-      .write.mode(SaveMode.Overwrite)
-      .option("path", new java.io.File(dir, "cells").getAbsolutePath)
-      .partitionBy("cent_id")
-      .saveAsTable(tbl)
-    pinned.unpersist(): Unit
-    s.catalog.refreshTable(tbl)
+    Ivf.compact(s, tag(d), Seq("cells"))
   }
 
-  /** Drop this corpus dir's IVF index (catalog tables + files) — the
+  /** Drop this corpus dir's IVF index ([[IndexStore.Family.drop]]) — the
     * cleanup for throwaway corpora (the bench's maintenance-stage side
     * corpus) and the crash-mid-append repair path (ensure rebuilds).
     */
   def dropFor(s: SparkSession, d: String): Unit = synchronized {
-    val tg = CorpusLshIndex.tag(d)
-    Seq("cells", "cent").foreach { part =>
-      val tbl = tableName(part, tg)
-      if (s.catalog.tableExists(tbl)) s.sql(s"DROP TABLE $tbl"): Unit
-    }
-    graft.ScaleProbe.rmTree(new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft-ivf-index"), tg))
+    Ivf.drop(s, tag(d))
   }
 }

@@ -2,9 +2,10 @@ package graft.tools
 
 /** Dev tool: `runMain graft.tools.Probe [explain|time <sfDir>] <query>...`
   * — show results (default), the formatted physical plan, or isolated
-  * cold/warm timings (cache cleared before each run) for SparkEntry
-  * queries. show/explain run at sf0.01; time runs at the given dir on
-  * local[32] to match Bench.
+  * timings for SparkEntry queries: two passes each with the cache cleared
+  * before each, reporting the min, both passes and the row count.
+  * show/explain run at sf0.01; time runs at the given dir on local[32] to
+  * match Bench.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -22,12 +23,13 @@ object Probe {
         case "explain" => df.explain("formatted")
         case "show" => df.show(50, false)
         case "time" =>
-          for (i <- 1 to 2) {
+          val runs = (1 to 2).map { _ =>
             spark.catalog.clearCache()
             val t0 = System.nanoTime()
-            val cnt = graft.SparkEntry.queries(n)(spark, dir).count()
-            println(f"  run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($cnt rows)")
+            val rows = graft.SparkEntry.queries(n)(spark, dir).count()
+            ((System.nanoTime() - t0) / 1e9, rows)
           }
+          println(f"  ${runs.map(_._1).min}%.2f s  (passes ${runs.map(r => f"${r._1}%.2f").mkString("/")}, rows ${runs.head._2})")
       }
     }
     spark.stop()

@@ -115,7 +115,7 @@ class CoPurchaseGraphSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().sorted.toSeq
     // simulate a failure inside append's uncommitted window: deg dropped,
     // edge mutated to garbage
-    val tg = CorpusLshIndex.tag(dir)
+    val tg = IndexStore.tag(dir)
     spark.sql(s"DROP TABLE IF EXISTS graft_cpg_deg_$tg")
     // the next read-through ensure() must detect the missing marker and
     // rebuild EVERY table from the base fact table — serving the prior
@@ -150,7 +150,7 @@ class CoPurchaseGraphSpec extends SparkSpec {
       "item" -> snap(CoPurchaseGraph.items(spark, dir)),
       "sym" -> snap(CoPurchaseGraph.symEdges(spark, dir)),
       "deg" -> snap(CoPurchaseGraph.degrees(spark, dir)))
-    val filesBefore = CoPurchaseGraph.fileCount(spark, dir, "edge")
+    val filesBefore = IndexStore.Cpg.fileCount("edge", IndexStore.tag(dir))
     CoPurchaseGraph.compact(spark, dir)
     assert(snap(CoPurchaseGraph.edges(spark, dir)) === want("edge"),
       "compact changed the edge/support relation")
@@ -160,9 +160,9 @@ class CoPurchaseGraphSpec extends SparkSpec {
       "compact changed the symmetrized adjacency")
     assert(snap(CoPurchaseGraph.degrees(spark, dir)) === want("deg"),
       "compact changed the degree relation")
-    val tg = CorpusLshIndex.tag(dir)
-    val buckets = IndexBuckets.bucketsOf(spark, s"graft_cpg_edge_$tg")
-    val filesAfter = CoPurchaseGraph.fileCount(spark, dir, "edge")
+    val tg = IndexStore.tag(dir)
+    val buckets = IndexStore.Cpg.layout(spark, "edge", tg).buckets
+    val filesAfter = IndexStore.Cpg.fileCount("edge", tg)
     // unlike the LSH index (SaveMode.Append → one new file per bucket
     // per append), the graph append MERGES and Overwrites, and Spark's
     // planned bucketed write shuffles onto the bucket columns — so the

@@ -96,8 +96,7 @@ class IvfIndexSpec extends SparkSpec {
           $"vec_id" % step =!= 0))
 
     def cellFiles(): Map[String, Int] = {
-      val cellsDir = new java.io.File(new java.io.File(new java.io.File(
-        sys.props("java.io.tmpdir"), "graft-ivf-index"), CorpusLshIndex.tag(base)), "cells")
+      val cellsDir = IndexStore.Ivf.location("cells", IndexStore.tag(base))
       Option(cellsDir.listFiles()).getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith("cent_id="))
         .map(d => d.getName ->

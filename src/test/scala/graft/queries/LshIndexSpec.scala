@@ -147,7 +147,7 @@ class LshIndexSpec extends SparkSpec {
     // rebuild of the union corpus (compact == rebuild, transitively)
     val shAll = DedupQueries.shingleArrays(all).persist()
     assert(rows(CorpusLshIndex.jaccard(spark, dir)) == rows(DedupQueries.jaccardOf(shAll)))
-    val buckets = IndexBuckets.bucketsOf(spark, CorpusLshIndex.tableNameFor("band", dir))
+    val buckets = IndexStore.Lsh.layout(spark, "band", IndexStore.tag(dir)).buckets
     val filesAfter = s_table(dir, "band").inputFiles.length
     assert(filesBefore > buckets, s"appends should have multiplied files (got $filesBefore)")
     assert(filesAfter == buckets, s"compact must leave one file per bucket, got $filesAfter/$buckets")
@@ -168,12 +168,12 @@ class LshIndexSpec extends SparkSpec {
     CorpusLshIndex.compact(spark, dir)
     assert(rows(CorpusLshIndex.embedPairs(spark, dir)) == want,
       "compact changed the epair relation")
-    val buckets = IndexBuckets.bucketsOf(spark, CorpusLshIndex.tableNameFor("epair", dir))
+    val buckets = IndexStore.Lsh.layout(spark, "epair", IndexStore.tag(dir)).buckets
     assert(CorpusLshIndex.embedPairs(spark, dir).inputFiles.length == buckets,
       "compact must leave one epair file per bucket")
     spark.catalog.clearCache()
   }
 
   private def s_table(dir: String, part: String) =
-    spark.table(CorpusLshIndex.tableNameFor(part, dir))
+    spark.table(IndexStore.Lsh.table(part, IndexStore.tag(dir)))
 }
