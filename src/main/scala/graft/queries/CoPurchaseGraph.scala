@@ -59,7 +59,7 @@ object CoPurchaseGraph {
     * action.
     */
   def ensure(s: SparkSession, d: String,
-      onStage: (String, Double) => Unit = (_, _) => ()): Unit = synchronized {
+      onStage: (String, Double) => Unit = (_, _) => ()): Unit = Cpg.synchronized {
     val tg = tag(d)
     if (!Cpg.exists(s, "deg", tg)) {
       import s.implicits._
@@ -129,7 +129,7 @@ object CoPurchaseGraph {
     * batches with monotone keys satisfy it by construction; anything
     * else fails LOUDLY here instead of corrupting supports silently.
     */
-  def append(s: SparkSession, d: String, newLineitems: DataFrame): Unit = synchronized {
+  def append(s: SparkSession, d: String, newLineitems: DataFrame): Unit = Cpg.synchronized {
     ensure(s, d)
     import s.implicits._
     val tg = tag(d)
@@ -199,7 +199,7 @@ object CoPurchaseGraph {
     * dance is needed (unlike [[append]]). Pinned relations are id/count
     * rows only, never payloads.
     */
-  def compact(s: SparkSession, d: String): Unit = synchronized {
+  def compact(s: SparkSession, d: String): Unit = Cpg.synchronized {
     ensure(s, d)
     Cpg.compact(s, tag(d), Seq("edge", "item", "sym", "wm", "deg"))
   }
@@ -208,7 +208,7 @@ object CoPurchaseGraph {
     * the cleanup for throwaway corpora (Bench's graph-compact side corpus
     * would otherwise leak one index per run).
     */
-  def dropFor(s: SparkSession, d: String): Unit = synchronized {
+  def dropFor(s: SparkSession, d: String): Unit = Cpg.synchronized {
     Cpg.drop(s, tag(d))
   }
 

@@ -56,7 +56,7 @@ object CorpusLshIndex {
     * Overwrite, so stale on-disk leftovers from a previous JVM are
     * replaced, never read).
     */
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
+  def ensure(s: SparkSession, d: String): Unit = Lsh.synchronized {
     val tg = tag(d)
     if (!Lsh.exists(s, "jac", tg)) {
       def save(df: DataFrame, part: String, bucketCols: String*): DataFrame =
@@ -113,7 +113,7 @@ object CorpusLshIndex {
     * mid-append is repaired by dropping the four tables (ensure then
     * rebuilds from scratch).
     */
-  def append(s: SparkSession, d: String, newDocs: DataFrame): Unit = synchronized {
+  def append(s: SparkSession, d: String, newDocs: DataFrame): Unit = Lsh.synchronized {
     ensure(s, d)
     val tg = tag(d)
     val shNew = DedupQueries.shingleArrays(newDocs).persist()
@@ -158,7 +158,7 @@ object CorpusLshIndex {
     * used to recompute the whole quantize+signature pass.
     */
   private[graft] def embedPairsStaged(s: SparkSession, d: String,
-      onStage: (String, Double) => Unit): DataFrame = synchronized {
+      onStage: (String, Double) => Unit): DataFrame = Lsh.synchronized {
     val tg = tag(d)
     if (!Lsh.exists(s, "epair", tg)) {
       def timed[T](name: String)(body: => T): T = {
@@ -215,7 +215,7 @@ object CorpusLshIndex {
     * `newVecs`: (vec_id, embedding) with vec_ids disjoint from the
     * indexed corpus.
     */
-  def appendEmbeddings(s: SparkSession, d: String, newVecs: DataFrame): Unit = synchronized {
+  def appendEmbeddings(s: SparkSession, d: String, newVecs: DataFrame): Unit = Lsh.synchronized {
     embedPairs(s, d): Unit
     val tg = tag(d)
     // the batch MUST band at the INDEX's width (a function of the
@@ -261,7 +261,7 @@ object CorpusLshIndex {
     * text. The token table compacts on its own
     * ([[CorpusTokenIndex.compact]]).
     */
-  def compact(s: SparkSession, d: String): Unit = synchronized {
+  def compact(s: SparkSession, d: String): Unit = Lsh.synchronized {
     Lsh.compact(s, tag(d), Seq("sh", "sig", "band", "jac", "eband", "epair"))
   }
 
@@ -270,7 +270,7 @@ object CorpusLshIndex {
     * Bench's compact-stage side corpus would otherwise leak one index per
     * run under java.io.tmpdir.
     */
-  def dropFor(s: SparkSession, d: String): Unit = synchronized {
+  def dropFor(s: SparkSession, d: String): Unit = Lsh.synchronized {
     Lsh.drop(s, tag(d))
   }
 
@@ -282,7 +282,7 @@ object CorpusLshIndex {
     * drops still leaves the pair uncommitted, never a fresh epair
     * beside a stale eband.
     */
-  private[graft] def dropEmbedPairs(s: SparkSession, d: String): Unit = synchronized {
+  private[graft] def dropEmbedPairs(s: SparkSession, d: String): Unit = Lsh.synchronized {
     Lsh.dropTables(s, tag(d), Seq("epair", "eband"))
   }
 

@@ -56,7 +56,7 @@ object CorpusTokenIndex {
     * shuffle task per bucket ⇒ one file per bucket ⇒ the scan reports
     * the (doc_id, pos) sort order and windows skip the sort.
     */
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
+  def ensure(s: SparkSession, d: String): Unit = Lsh.synchronized {
     val tg = tag(d)
     if (!Lsh.exists(s, "tok", tg))
       Lsh.create(s, tokenize(t(s, d, "documents")), "tok", tg, TokLayout, cluster = true): Unit
@@ -87,7 +87,7 @@ object CorpusTokenIndex {
     * `newDocs`: (doc_id, source, lang, text) with doc_ids disjoint from
     * the indexed corpus.
     */
-  def append(s: SparkSession, d: String, newDocs: DataFrame): Unit = synchronized {
+  def append(s: SparkSession, d: String, newDocs: DataFrame): Unit = Lsh.synchronized {
     ensure(s, d)
     Lsh.append(s, tokenize(newDocs), "tok", tag(d), cluster = true)
   }
@@ -97,7 +97,7 @@ object CorpusTokenIndex {
     * [[IndexStore.Family.compact]]), after which per-doc windows read the
     * file sort again (no SortExec — TokenIndexSpec's append+compact case).
     */
-  def compact(s: SparkSession, d: String): Unit = synchronized {
+  def compact(s: SparkSession, d: String): Unit = Lsh.synchronized {
     Lsh.compact(s, tag(d), Seq("tok"))
   }
 }

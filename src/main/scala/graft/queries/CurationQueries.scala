@@ -321,7 +321,7 @@ object CurationQueries {
     * BpeVocabScaleSpec hold the artifact to the plain-Scala reference.
     * Stored as `merges` in the [[IndexStore]] `bpe` family.
     */
-  private def ensureMerges(s: SparkSession, d: String): Unit = synchronized {
+  private def ensureMerges(s: SparkSession, d: String): Unit = IndexStore.Bpe.synchronized {
     import s.implicits._
     val tg = IndexStore.tag(d)
     if (!IndexStore.Bpe.exists(s, "merges", tg)) {

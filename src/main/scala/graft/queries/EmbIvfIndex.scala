@@ -52,7 +52,7 @@ object EmbIvfIndex {
   }
 
   /** Build the codebook + posting lists if this session hasn't yet. */
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
+  def ensure(s: SparkSession, d: String): Unit = Ivf.synchronized {
     import s.implicits._
     val tg = tag(d)
     if (!Ivf.exists(s, "cells", tg)) {
@@ -83,7 +83,7 @@ object EmbIvfIndex {
     * cells' partitions. Batches must carry never-seen vec_ids (same
     * whole-batch contract as the other indexes' appends).
     */
-  def append(s: SparkSession, d: String, newVecs: DataFrame): Unit = {
+  def append(s: SparkSession, d: String, newVecs: DataFrame): Unit = Ivf.synchronized {
     import s.implicits._
     val tg = tag(d)
     ensure(s, d)
@@ -146,7 +146,7 @@ object EmbIvfIndex {
     * pre-compact cells, the per-cell file collapse, and that the pruned
     * probe still serves row-identically).
     */
-  def compact(s: SparkSession, d: String): Unit = synchronized {
+  def compact(s: SparkSession, d: String): Unit = Ivf.synchronized {
     ensure(s, d)
     Ivf.compact(s, tag(d), Seq("cells"))
   }
@@ -155,7 +155,7 @@ object EmbIvfIndex {
     * cleanup for throwaway corpora (the bench's maintenance-stage side
     * corpus) and the crash-mid-append repair path (ensure rebuilds).
     */
-  def dropFor(s: SparkSession, d: String): Unit = synchronized {
+  def dropFor(s: SparkSession, d: String): Unit = Ivf.synchronized {
     Ivf.drop(s, tag(d))
   }
 }

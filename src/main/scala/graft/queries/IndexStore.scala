@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions.col
   * index families ([[CorpusLshIndex]] with [[CorpusTokenIndex]],
   * [[EmbIvfIndex]], [[CoPurchaseGraph]] and the BPE merge artifact in
   * CurationQueries) keep only what is theirs: the derivations, the
-  * commit-marker order, the append guards and their own lock. The store
-  * holds no state and no lock.
+  * commit-marker order and the append guards. The store holds no state.
   *
   * Contract:
   *   - Naming: a corpus dir `d` has the [[tag]] `md5(canonical path)`
@@ -49,6 +48,12 @@ import org.apache.spark.sql.functions.col
   *     a tag, then deletes the tag's directory: the repair path for a crash
   *     mid-append (the next ensure rebuilds) and the cleanup for
   *     throwaway corpora.
+  *   - Lock: each [[Family]] instance is its family's one lock. Every
+  *     ensure, append, compact and drop of the family runs under its
+  *     monitor (`Lsh.synchronized { ... }`), so a token build and an LSH
+  *     drop, which share the `lsh` directory, never interleave. The one
+  *     cross-family order is `Bpe` → `Lsh` (the BPE build reads the token
+  *     table); nothing takes them the other way round.
   */
 object IndexStore {
 

@@ -96,9 +96,10 @@ final class GraftRawdataClient(
 
     /** Publish a message DataFrame (id, orderingGroup, sequenceNumber,
       * position, data) — the distributed entry point, for bulk loads: one
-      * shuffle clusters messages into the reference's (time-window,
-      * byte-chunk) file layout. The driver-held entry point is
-      * buffer(...).publish(positions), which writes the same layout on the
+      * shuffle puts each time window, ULID-sorted, in one task, whose
+      * writer cuts it into the reference's (time-window, byte-chunk) file
+      * layout. The driver-held entry point is
+      * buffer(...).publish(positions), which feeds the same writer on the
       * driver (one rule, Topic.write). Repeated publishes append new files
       * to the topic.
       */
@@ -467,7 +468,6 @@ final class GraftRawdataClient(
       put(Seq((key, value)).toDF("key", "value"))
     }
     def remove(key: String): Unit = MetadataStore.remove(spark, topicDir(topic), Seq(key))
-    def asDF: DataFrame = MetadataStore.readAll(spark, topicDir(topic))
   }
 
   def metadata(topic: String): Metadata = {

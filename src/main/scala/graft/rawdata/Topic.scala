@@ -7,7 +7,6 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** One Avro file of a topic, as described by its filename alone
@@ -69,13 +68,15 @@ case class TopicConfig(
   *
   * Writer: one layout rule cuts messages into (time-window, byte-chunk)
   * files — the reference producer's max.seconds/max.bytes rolling
-  * (AvroRawdataProducer.java). A DataFrame publish applies it with one
-  * shuffle and writes each group in a Spark task; driver-held messages
-  * (the producer's buffer → publish) are placed and written on the
-  * driver, with no Spark job. Both stream each group through an Avro
-  * DataFileWriter with real sync blocks, writing to a dot-prefixed temp
-  * name and renaming on completion (on object stores the rename is a
-  * copy, matching the reference's write-local-then-upload pattern).
+  * (AvroRawdataProducer.java), applied in one place, `FileGroupWriter`,
+  * over messages in (window, ULID) order. A DataFrame publish gets that
+  * order from one shuffle (each window whole in one Spark task);
+  * driver-held messages (the producer's buffer → publish) are sorted and
+  * written on the driver, with no Spark job. Each file streams through
+  * an Avro DataFileWriter with real sync blocks, writing to a
+  * dot-prefixed temp name and renaming on completion (on object stores
+  * the rename is a copy, matching the reference's
+  * write-local-then-upload pattern).
   *
   * Reader: every distributed read is an expression over the
   * `graft-topic` scan ([[readDF]]): the driver lists + prunes by filename
@@ -99,14 +100,11 @@ object Topic {
   // ---------------------------------------------------------- file layout
 
   /** Bytes a message counts toward `maxBytes`: payload bytes + position
-    * length + 48. Part of the one layout rule both write paths share (see
-    * [[write]]); [[approxBytesCol]] is its SQL twin.
+    * length + 48 — the byte half of the layout rule, applied by
+    * [[FileGroupWriter]] (and by the wall-clock producer's open file).
     */
   private[graft] def approxBytes(m: RawdataMessage): Long =
     m.data.valuesIterator.map(_.length.toLong).sum + m.position.codePointCount(0, m.position.length) + 48L
-
-  private def approxBytesCol: Column =
-    expr("aggregate(map_values(data), 0L, (acc, v) -> acc + length(v))") + length(col("position")) + lit(48L)
 
   /** A message's time window: ULID ms ÷ `maxWindowMs`, or 0 in wall-clock
     * mode (the publish IS one ingest instant). [[windowCol]] is its SQL twin.
@@ -118,32 +116,7 @@ object Topic {
     if (cfg.wallClockWindows) lit(0L)
     else Ulid.timestampMs(col("id")).divide(lit(cfg.maxWindowMs)).cast("long")
 
-  /** Byte rolling is effectively off when `maxBytes` is so large that no
-    * window can reach an eighth of it (the time-window-only configs): the
-    * chunk is then the constant 0, and the DataFrame path skips the
-    * prefix-sum window stage that would compute it.
-    */
-  private def byteRolling(cfg: TopicConfig): Boolean = cfg.maxBytes < Long.MaxValue / 8
-
   private val ulidOrder: Ordering[Array[Byte]] = (a, b) => java.util.Arrays.compareUnsigned(a, b)
-
-  /** The layout rule over driver-held messages: (window, chunk, message)
-    * in (window, chunk, ULID) order, chunk = message bytes before this one
-    * in its window, in ULID order, ÷ `maxBytes`.
-    */
-  private def place(messages: Seq[RawdataMessage], cfg: TopicConfig): Seq[(Long, Long, RawdataMessage)] = {
-    val rolling = byteRolling(cfg)
-    var win = Long.MinValue
-    var before = 0L
-    messages.map(m => (windowOf(m.id, cfg), m))
-      .sortBy { case (w, m) => (w, m.id) }(Ordering.Tuple2(Ordering.Long, ulidOrder))
-      .map { case (w, m) =>
-        if (w != win) { win = w; before = 0L }
-        val chunk = if (rolling) before / cfg.maxBytes else 0L
-        before += approxBytes(m)
-        (w, chunk, m)
-      }
-  }
 
   // ---------------------------------------------------------------- write
 
@@ -182,16 +155,16 @@ object Topic {
     * position, data) as topic files; returns per-file metadata in
     * (window, chunk) order, which is `fromTsMs` order.
     *
-    * Two entry points, chosen by where the data lives, share every
-    * decision that shapes a file:
-    *  - this one, for distributed data: one shuffle clusters messages
-    *    into (window, chunk) groups, and each task streams its groups
-    *    through [[FileGroupWriter]]. Its callers are `publish(df)`, bulk
+    * Two entry points, chosen by where the data lives, feed the same
+    * [[FileGroupWriter]], which alone cuts files:
+    *  - this one, for distributed data: one shuffle puts each whole time
+    *    window in one task, sorted by ULID, and each task streams its
+    *    windows through the writer. Its callers are `publish(df)`, bulk
     *    loads and compaction, and the `graft-topic` batch and streaming
     *    sinks (graft.sources.TopicDataSource);
     *  - `write(Seq[RawdataMessage], ...)`, for messages already on the
-    *    driver (the producer's buffer → publish): the same rule placed on
-    *    the driver, the same writer, no Spark job.
+    *    driver (the producer's buffer → publish): sorted on the driver,
+    *    the same writer, no Spark job.
     * Layout: window = ULID ms ÷ `maxWindowMs` (0 in wall-clock mode);
     * chunk = message bytes ([[approxBytes]]) before this one in its
     * window, in ULID order, ÷ `maxBytes`; one file per (window, chunk),
@@ -228,38 +201,34 @@ object Topic {
     val pre = messages.sparkSession.sparkContext.broadcast(if (replay) PreExisting.of(Nil) else listed)
     val written =
       try {
-        val win = Window.partitionBy(col("_win")).orderBy(col("_ulid_hex"))
-        val chunked = messages
-          .withColumn("_ulid_hex", Ulid.hexOf(col("id")))
+        // repartition, not rebalance: the byte roll needs each window
+        // whole in one task. BINARY sorts as unsigned bytes: ULID order.
+        val windowed = messages
           .withColumn("_win", windowCol(cfg))
-        val staged = (if (byteRolling(cfg))
-            chunked
-              .withColumn("_bytes", approxBytesCol)
-              .withColumn("_chunk", ((sum(col("_bytes")).over(win) - col("_bytes")) / lit(cfg.maxBytes)).cast("long"))
-          else chunked.withColumn("_chunk", lit(0L)))
-          .repartition(col("_win"), col("_chunk"))
-          .sortWithinPartitions(col("_win"), col("_chunk"), col("_ulid_hex"))
-          .select(col("_win").as("_1"), col("_chunk").as("_2"),
-            struct(col("id"), col("orderingGroup"), col("sequenceNumber"), col("position"), col("data")).as("_3"))
-          .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, msgEncoder))
-        val sync = cfg.syncIntervalBytes
+          .repartition(col("_win"))
+          .sortWithinPartitions(col("_win"), col("id"))
+          .select(col("_win").as("_1"),
+            struct(col("id"), col("orderingGroup"), col("sequenceNumber"), col("position"), col("data")).as("_2"))
+          .as(Encoders.tuple(Encoders.scalaLong, msgEncoder))
         val sconf = HadoopIO.serializable()
-        staged.mapPartitions { placed =>
-          new FileGroupWriter(topicDir, sync, HadoopIO.fs(topicDir, sconf.value), pre.value).run(placed)
+        windowed.mapPartitions { in =>
+          new FileGroupWriter(topicDir, cfg, HadoopIO.fs(topicDir, sconf.value), pre.value).run(in)
         }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, fileEncoder)).collect().toSeq
       } finally pre.destroy()
     landed(topicDir, written)
   }
 
-  /** Write driver-held messages as topic files: the same layout rule,
-    * writer and commit as the DataFrame [[write]], run on the driver
-    * without a Spark job — what a small buffered publish needs (the
-    * reference producer likewise writes its window straight to a file).
+  /** Write driver-held messages as topic files: the same writer and
+    * commit as the DataFrame [[write]], run on the driver without a Spark
+    * job — what a small buffered publish needs (the reference producer
+    * likewise writes its window straight to a file).
     */
   def write(messages: Seq[RawdataMessage], topicDir: String, cfg: TopicConfig): Seq[TopicFile] = {
     val fs = HadoopIO.fs(topicDir, HadoopIO.conf())
-    val writer = new FileGroupWriter(topicDir, cfg.syncIntervalBytes, fs, prepareTopicDir(fs, topicDir))
-    landed(topicDir, writer.run(place(messages, cfg).iterator).toSeq)
+    val writer = new FileGroupWriter(topicDir, cfg, fs, prepareTopicDir(fs, topicDir))
+    val windowed = messages.map(m => (windowOf(m.id, cfg), m))
+      .sortBy { case (w, m) => (w, m.id) }(Ordering.Tuple2(Ordering.Long, ulidOrder))
+    landed(topicDir, writer.run(windowed.iterator).toSeq)
   }
 
   /** files of a finished publish in (window, chunk) order */
@@ -268,18 +237,28 @@ object Topic {
     written.sortBy(w => (w._1, w._2)).map(_._3)
   }
 
-  /** Streams (window, chunk, message) triples, clustered by (window,
-    * chunk) and ULID-ordered within, into one Avro file per group. Runs in
-    * a Spark task (DataFrame path) or on the driver (driver-held path). A
+  /** Streams (window, message) pairs in (window, ULID) order into topic
+    * files, cutting them by the one layout rule (see [[write]]): a new
+    * file starts wherever the window changes or the message bytes before
+    * this one in its window, ÷ `maxBytes`, change. Returns
+    * (window, chunk, file) per file. Runs in a Spark task over whole
+    * windows (DataFrame path) or on the driver (driver-held path). A
     * failure closes and deletes the open temp file before it propagates.
     */
   private final class FileGroupWriter(
-      topicDir: String, syncBytes: Long, fs: FileSystem, preExisting: PreExisting) {
-    def run(placed: Iterator[(Long, Long, RawdataMessage)]): Iterator[(Long, Long, TopicFile)] = {
+      topicDir: String, cfg: TopicConfig, fs: FileSystem, preExisting: PreExisting) {
+    def run(windowed: Iterator[(Long, RawdataMessage)]): Iterator[(Long, Long, TopicFile)] = {
       val out = Seq.newBuilder[(Long, Long, TopicFile)]
-      var key: (Long, Long) = null
+      var win = 0L
+      var chunk = 0L
+      var before = 0L
       var writer: AvroCodec.FileWriter = null
       var tmp: Path = null
+
+      def open(): Unit = {
+        tmp = HadoopIO.child(topicDir, s".inprogress-${UUID.randomUUID().toString.take(12)}.tmp")
+        writer = new AvroCodec.FileWriter(fs.create(tmp, false), cfg.syncIntervalBytes)
+      }
 
       def finish(): Unit = if (writer != null) {
         val w = writer
@@ -289,20 +268,23 @@ object Topic {
         val name = s"${formatTs(fromTsMs)}_${w.count}_${w.lastBlockOffset}_${w.firstPosition}.avro"
         val dest = HadoopIO.child(topicDir, name)
         commitTopicFile(fs, tmp, dest, name, preExisting)
-        out += ((key._1, key._2,
+        out += ((win, chunk,
           TopicFile(fs.makeQualified(dest).toString, fromTsMs, w.count, w.lastBlockOffset, w.firstPosition)))
       }
 
       try {
-        placed.foreach { case (win, chunk, m) =>
-          val k = (win, chunk)
-          if (k != key) {
+        windowed.foreach { case (w, m) =>
+          if (writer == null || w != win) {
             finish()
-            key = k
-            tmp = HadoopIO.child(topicDir, s".inprogress-${UUID.randomUUID().toString.take(12)}.tmp")
-            writer = new AvroCodec.FileWriter(fs.create(tmp, false), syncBytes)
+            win = w; chunk = 0L; before = 0L
+            open()
+          } else if (before / cfg.maxBytes != chunk) {
+            finish()
+            chunk = before / cfg.maxBytes
+            open()
           }
           writer.append(m)
+          before += approxBytes(m)
         }
         finish()
       } catch {

@@ -53,9 +53,6 @@ object Ulid {
   def timestampMsComposed(id: Column): Column =
     conv(substring(hexOf(id), 1, 12), 16, 10).cast("long")
 
-  /** 10-byte entropy tail as hex. */
-  def entropyHex(id: Column): Column = substring(hexOf(id), 13, 20)
-
   /** Deterministic ULID from a timestamp and a seed column: entropy is the
     * first 10 bytes of md5(seed). Used to give replayed/batch data stable,
     * reproducible ids (a distributed producer cannot hand out the

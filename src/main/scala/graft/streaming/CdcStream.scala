@@ -24,11 +24,9 @@ object CdcStream {
 
   /** per-chunk novelty verdicts. `docs`: streaming (doc_id, ts, text).
     * `corpus`: static (…, text). Returns
-    * (doc_id, ts, fp, chunk_chars, known 0/1).
+    * (doc_id, ts, fp, chunk_chars, known 0/1). The [[GateCaches]] own
+    * the persisted chunk store — close them when the gate stops.
     */
-  def chunkFlags(docs: DataFrame, corpus: DataFrame): DataFrame =
-    chunkFlagsScoped(docs, corpus)._1
-
   def chunkFlagsScoped(docs: DataFrame, corpus: DataFrame): (DataFrame, GateCaches) = {
     import corpus.sparkSession.implicits._
     val store = DedupQueries.cdcChunked(corpus)

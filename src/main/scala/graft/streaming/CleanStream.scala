@@ -134,26 +134,6 @@ object CleanStream {
     (flags, new GateCaches(Seq(benchIdx)))
   }
 
-  /** Streaming BLOOM pre-screen gate — dd_bloom's stream twin: every
-    * arriving document is screened against the corpus membership bloom
-    * (k=3 md5-derived positions in an m=65536 space) BEFORE any
-    * corpus-sized work happens. The bloom side is a ≤m-row broadcast
-    * relation probed by three stateless per-position left joins (no
-    * streaming aggregation, no watermark state at all); only the
-    * bloom-POSITIVE minority reaches the corpus-sized fingerprint
-    * verify join, and the bloom-negative majority is emitted as clean
-    * outright — sound because a bloom miss PROVES non-membership (the
-    * no-false-negative law AnalyticsOpsSpec asserts for the batch twin).
-    * That screened-before-joined shape is the entire point of a bloom
-    * gate at 100 TB: the expensive join's input is duplicates + the
-    * m-governed false-positive sliver, never the stream.
-    *
-    * `docs`: streaming (doc_id, text, ts). `corpus`: static
-    * (doc_id, text). Returns (doc_id, ts, bloom_hit, exact_dup,
-    * verdict) with dd_bloom's verdict domain. The scoped overload also
-    * hands back the [[GateCaches]] owning the persisted fingerprint/bit
-    * relations — close it when the gate stops.
-    */
   /** Streaming WINNOWING gate — dd_winnow's stream twin: each arriving
     * document is flagged the moment one of its winnowing fingerprints
     * appears in the static corpus index, i.e. the moment it provably
@@ -169,12 +149,10 @@ object CleanStream {
     * state is the watermark-bounded pair dedup.
     *
     * `docs`: streaming (doc_id, text, ts). `corpus`: static
-    * (doc_id, text). Returns (doc_id, ts, match_doc).
+    * (doc_id, text). Returns (doc_id, ts, match_doc). The
+    * [[GateCaches]] own the persisted fingerprint postings — close them
+    * when the gate stops.
     */
-  def winnowFlags(docs: DataFrame, corpus: DataFrame,
-      watermark: String = "1 hour"): DataFrame =
-    winnowFlagsScoped(docs, corpus, watermark)._1
-
   def winnowFlagsScoped(docs: DataFrame, corpus: DataFrame,
       watermark: String = "1 hour"): (DataFrame, GateCaches) = {
     import corpus.sparkSession.implicits._
@@ -194,9 +172,26 @@ object CleanStream {
     (flags, new GateCaches(Seq(sigC, postings)))
   }
 
-  def bloomFlags(docs: DataFrame, corpus: DataFrame): DataFrame =
-    bloomFlagsScoped(docs, corpus)._1
-
+  /** Streaming BLOOM pre-screen gate — dd_bloom's stream twin: every
+    * arriving document is screened against the corpus membership bloom
+    * (k=3 md5-derived positions in an m=65536 space) BEFORE any
+    * corpus-sized work happens. The bloom side is a ≤m-row broadcast
+    * relation probed by three stateless per-position left joins (no
+    * streaming aggregation, no watermark state at all); only the
+    * bloom-POSITIVE minority reaches the corpus-sized fingerprint
+    * verify join, and the bloom-negative majority is emitted as clean
+    * outright — sound because a bloom miss PROVES non-membership (the
+    * no-false-negative law AnalyticsOpsSpec asserts for the batch twin).
+    * That screened-before-joined shape is the entire point of a bloom
+    * gate at 100 TB: the expensive join's input is duplicates + the
+    * m-governed false-positive sliver, never the stream.
+    *
+    * `docs`: streaming (doc_id, text, ts). `corpus`: static
+    * (doc_id, text). Returns (doc_id, ts, bloom_hit, exact_dup,
+    * verdict) with dd_bloom's verdict domain. The [[GateCaches]] own the
+    * persisted fingerprint/bit relations — close them when the gate
+    * stops.
+    */
   def bloomFlagsScoped(docs: DataFrame, corpus: DataFrame): (DataFrame, GateCaches) = {
     import corpus.sparkSession.implicits._
     val normFp = DedupQueries.normFpCol(col("text"))

@@ -27,11 +27,10 @@ object SlideStream {
   /** per-window verdicts. `docs`: streaming (doc_id, ts, text).
     * `corpus`: static (…, doc_id, text). Returns
     * (doc_id, win_idx, h, known 0/1). Docs shorter than SlideLen tokens
-    * emit no windows (nothing to match at this granularity).
+    * emit no windows (nothing to match at this granularity). The
+    * [[GateCaches]] own the persisted window store — close them when the
+    * gate stops.
     */
-  def windowFlags(docs: DataFrame, corpus: DataFrame): DataFrame =
-    windowFlagsScoped(docs, corpus)._1
-
   def windowFlagsScoped(docs: DataFrame, corpus: DataFrame): (DataFrame, GateCaches) = {
     import corpus.sparkSession.implicits._
     val store = CurationQueries.slideWindows(corpus)

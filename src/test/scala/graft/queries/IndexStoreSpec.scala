@@ -32,6 +32,55 @@ class IndexStoreSpec extends SparkSpec {
     CorpusLshIndex.dropFor(spark, dir)
   }
 
+  /** Runs `op` on another thread while this thread holds `family`'s
+    * monitor: the thread must block on that monitor, and finish once it
+    * is released.
+    */
+  private def waitsForLock(family: IndexStore.Family)(op: => Unit): Unit = {
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val worker = new Thread(() => try op catch { case e: Throwable => failure.set(e) })
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+    def blockedOnFamily: Boolean = Option(mx.getThreadInfo(worker.getId)).exists { info =>
+      info.getThreadState == Thread.State.BLOCKED &&
+        Option(info.getLockInfo).exists(_.getIdentityHashCode == System.identityHashCode(family))
+    }
+    family.synchronized {
+      worker.start()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (worker.isAlive && !blockedOnFamily && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(worker.isAlive, s"finished while the ${family.prefix} lock was held")
+      assert(blockedOnFamily, s"never waited for the ${family.prefix} lock")
+    }
+    worker.join(120000)
+    assert(!worker.isAlive, s"still running after the ${family.prefix} lock was released")
+    Option(failure.get).foreach(throw _)
+  }
+
+  test("one lock per family: a token build waits for the lsh family's monitor") {
+    val dir = graft.rawdata.Topic.tempDir("store-lock-tok")
+    t(spark, sf, "documents").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    try {
+      waitsForLock(IndexStore.Lsh)(CorpusTokenIndex.ensure(spark, dir))
+      assert(spark.catalog.tableExists(IndexStore.Lsh.table("tok", IndexStore.tag(dir))))
+    } finally CorpusLshIndex.dropFor(spark, dir)
+  }
+
+  test("one lock per family: an IVF append waits for the ivf family's monitor") {
+    val dir = graft.rawdata.Topic.tempDir("store-lock-ivf")
+    val embs = t(spark, sf, "embeddings")
+    val cut = embs.agg(max($"vec_id")).head().getLong(0) * 3 / 4
+    embs.filter($"vec_id" < cut).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    try {
+      EmbIvfIndex.ensure(spark, dir)
+      val step = AnnQueries.centroidStep(spark, dir)
+      val batch = graft.operators.VectorOps.quantized(spark, sf)
+        .filter($"vec_id" >= cut && $"vec_id" % step =!= 0)
+      waitsForLock(IndexStore.Ivf)(EmbIvfIndex.append(spark, dir, batch))
+      assert(EmbIvfIndex.cells(spark, dir).filter($"vec_id" >= cut).count() ==
+        batch.filter($"nn" > 0).count())
+    } finally EmbIvfIndex.dropFor(spark, dir)
+  }
+
   /** (buckets, bucket cols, sort cols, partition cols) as the catalog holds them */
   private def catalogLayout(tbl: String): (Int, Seq[String], Seq[String], Seq[String]) = {
     val m = spark.sessionState.catalog.getTableMetadata(TableIdentifier(tbl))

@@ -132,6 +132,23 @@ class DriverPublishSpec extends SparkSpec {
     assertSameFiles(buffered, frame)
   }
 
+  test("ids sharing a millisecond land in unsigned ULID order on every path") {
+    // entropy first differs at byte 6: 0x7f against 0x80, 0x81 and 0xff,
+    // which are negative as signed bytes
+    val one = messages(1, 1L, size = 400).head
+    val msgs = Seq(0x80, 0x7f, 0xff, 0x00, 0x81).zipWithIndex.map { case (b, i) =>
+      val id = one.id.clone()
+      id(6) = b.toByte
+      one.copy(id = id, sequenceNumber = i.toLong, position = s"tie-$i")
+    }
+    val (buffered, frame) = publishBoth(Topic.tempDir("drv-unsigned"), ByteRolling, msgs)
+    assert(buffered.size >= 2, "the byte roll cuts inside the millisecond")
+    // unsigned order: 0x00, 0x7f, 0x80, 0x81, 0xff
+    assert(buffered.flatMap(f => AvroCodec.readFile(f.path, HadoopIO.conf()).map(_.position)) ===
+      Seq("tie-3", "tie-1", "tie-0", "tie-4", "tie-2"))
+    assertSameFiles(buffered, frame)
+  }
+
   test("wall-clock mode: the open file and the DataFrame publish land identical files") {
     // messages spanning hours: one ingest instant, so one file per chunk
     val msgs = messages(30, 20L * 60 * 1000)
@@ -186,6 +203,17 @@ class DriverPublishSpec extends SparkSpec {
     assert(jobsDuring("drv-frame")(client.producer("frame").publish(spark.createDataset(msgs).toDF())) > 0,
       "the listener must see the DataFrame publish's jobs")
     client.close()
+  }
+
+  test("a byte-rolled DataFrame publish shuffles once: at most two Spark jobs") {
+    val client = new GraftRawdataClient(spark, Topic.tempDir("drv-one-exchange"), ByteRolling)
+    try {
+      val df = spark.createDataset(messages(40, 1L)).toDF()
+      var files = Seq.empty[TopicFile]
+      val jobs = jobsDuring("drv-rolled") { files = client.producer("t").publish(df) }
+      assert(files.size >= 3, s"expected >= 3 byte chunks, got ${files.size}")
+      assert(jobs <= 2, s"a byte-rolled publish(df) started $jobs Spark jobs")
+    } finally client.close()
   }
 
   test("a buffered re-publish fails loudly and leaves no temp file behind") {

@@ -5,8 +5,9 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import jdk.jfr.Recording
-import jdk.jfr.consumer.RecordingFile
+import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.graftprobe.ProcfsPageSize
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -26,20 +27,34 @@ class ProcessStartSpec extends SparkSpec {
   private val Cfg = TopicConfig(maxWindowMs = 1000L)
 
   /** the commands of the processes the JVM started while `body` ran
-    * (the session is started first: its own start-up probes fork)
+    * (the session and Spark's once-per-JVM page-size probe are started
+    * first: they fork), except Spark's artifact-directory clean-up (see
+    * [[artifactCleanup]])
     */
   private def processStarts(body: => Unit): Seq[String] = {
     spark.sparkContext
+    ProcfsPageSize.init()
     val rec = new Recording()
-    rec.enable("jdk.ProcessStart")
+    rec.enable("jdk.ProcessStart").withStackTrace()
     rec.start()
     try body finally rec.stop()
     val file = Files.createTempFile("process-starts", ".jfr")
     try {
       rec.dump(file)
-      RecordingFile.readAllEvents(file).asScala.toSeq.map(_.getString("command"))
+      RecordingFile.readAllEvents(file).asScala.toSeq.filterNot(artifactCleanup).map(_.getString("command"))
     } finally { rec.close(); Files.deleteIfExists(file) }
   }
+
+  /** Spark's `ArtifactManager$StateCleanupRunner` deletes an earlier
+    * session's artifact directory (`rm -rf /tmp/artifacts-...`) on the
+    * JVM's Cleaner thread whenever the GC collects that session's
+    * ArtifactManager: a start the write under test did not cause, at a
+    * moment no test controls. Only starts with that class on the stack
+    * are ignored.
+    */
+  private def artifactCleanup(e: RecordedEvent): Boolean =
+    Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
+      _.getMethod.getType.getName.startsWith("org.apache.spark.sql.artifact.ArtifactManager")))
 
   private def messages(n: Int): Seq[RawdataMessage] = (0 until n).map { i =>
     val ts = T0 + i * 500L
