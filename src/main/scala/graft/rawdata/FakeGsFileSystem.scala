@@ -25,8 +25,8 @@ import org.apache.hadoop.util.Progressable
   *    INITIALIZED WITH to match [[FakeGsFileSystem.ExpectedToken]] —
   *    the stand-in for the reference's service-account key config.
   *    Reads run inside Spark tasks, so a pass only proves the engine
-  *    ships `spark.hadoop.*` credentials to executors (HadoopIO
-  *    SerializableConf), the wiring a live bucket would exercise.
+  *    ships `spark.hadoop.*` credentials to executors (the broadcast
+  *    HadoopIO conf), the wiring a live bucket would exercise.
   *
   * It extends [[ForkFreeLocalFileSystem]], so its creates and mkdirs
   * start no `chmod` process.

@@ -38,8 +38,8 @@ final class GraftRawdataClient(
 
   private val hasScheme = baseDir.matches("^[A-Za-z][A-Za-z0-9+.-]*:.*")
 
-  /** topic dirs handed out by this client — their listing caches are
-    * dropped on close()
+  /** topic dirs handed out by this client — their listings are marked
+    * stale on close()
     */
   private val touchedTopics = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -63,11 +63,11 @@ final class GraftRawdataClient(
 
   /** Reference AvroRawdataClient.java:147-152: close() flips the closed
     * flag and releases client-held resources; subsequent producer/consumer/
-    * metadata calls fail fast. Graft holds no sockets or threads — its
-    * per-client state is the topic listing caches, which close()
-    * invalidates (the SparkSession is shared and NOT stopped: the client
-    * borrows it, reference-style ownership stays with the caller).
-    * Idempotent, like the reference's.
+    * metadata calls fail fast. Graft holds no sockets or threads; close()
+    * marks its topics' process-wide listings stale (Topic.listFiles). The
+    * SparkSession is shared and NOT stopped: the client borrows it,
+    * reference-style ownership stays with the caller. Idempotent, like
+    * the reference's.
     */
   override def close(): Unit = {
     closed = true
@@ -295,8 +295,8 @@ final class GraftRawdataClient(
     /** Bounded tail — the reference consumer's blocking
       * `receive(timeout)` loop (AvroRawdataConsumer.java:71-96): poll the
       * topic listing (through Topic.listFilesCached, so a tight poll loop
-      * costs one LIST per poll interval — reference
-      * TopicAvroFileCache.java) until unconsumed files appear, then
+      * reads the directory once per poll interval and parses only new
+      * names — reference TopicAvroFileCache.java) until unconsumed files appear, then
       * deliver their messages in ULID order and remember the files.
       * Returns empty on timeout (instead of the reference's null). Each
       * poll reads only the new files, so the cost is proportional to the

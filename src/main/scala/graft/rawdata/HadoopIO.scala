@@ -4,8 +4,6 @@ import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FileSystem, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
@@ -26,6 +24,10 @@ import org.apache.spark.sql.SparkSession
   * `FileSystem` and to [[ForkFreeLocalFs]] through `FileContext` (which
   * Spark's streaming checkpoint manager uses); [[GraftSession]] and
   * [[HadoopIO.conf]] register both by the constants below.
+  *
+  * Executor tasks get [[HadoopIO.conf]] as one broadcast
+  * `SerializableConfiguration` per scan (`TopicReaderFactory`) or
+  * `Topic.write`, not as a copy inside every task.
   */
 object HadoopIO {
 
@@ -90,25 +92,6 @@ object HadoopIO {
     new Path(dir.stripSuffix("/") + "/" + name)
 
   def fs(dir: String, c: Configuration): FileSystem = new Path(dir).getFileSystem(c)
-
-  /** Hadoop `Configuration` is not `Serializable`; tasks that open topic
-    * files on executors get the driver's effective configuration through
-    * this wrapper (flattened to properties, rebuilt lazily per JVM).
-    */
-  final class SerializableConf(@transient c: Configuration) extends Serializable {
-    private val props: Array[(String, String)] =
-      c.iterator().asScala.map(e => e.getKey -> e.getValue).toArray
-
-    @transient private lazy val rebuilt: Configuration = {
-      val nc = new Configuration(false)
-      props.foreach { case (k, v) => nc.set(k, v) }
-      nc
-    }
-
-    def value: Configuration = rebuilt
-  }
-
-  def serializable(): SerializableConf = new SerializableConf(conf())
 }
 
 /** Hadoop's `RawLocalFileSystem` without its forked helpers. Where

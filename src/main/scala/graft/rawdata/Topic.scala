@@ -4,10 +4,13 @@ import java.time.{Instant, ZoneOffset, ZonedDateTime}
 import java.time.format.DateTimeFormatter
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** One Avro file of a topic, as described by its filename alone
   * (reference: AvroFileMetadata.java:53-57 and README naming section —
@@ -83,6 +86,8 @@ case class TopicConfig(
   * from a `ts_ms` predicate, then Spark tasks decode Avro → rows, one file
   * per task up to [[Topic.readPartitionCap]]. Within-file order is ULID
   * order by construction.
+  * Listing: one name read per call serves every publish, tail poll and
+  * lookup, each name parsed once per process ([[listFiles]]).
   */
 object Topic {
 
@@ -131,24 +136,19 @@ object Topic {
     */
   private[graft] val TempOrphanAgeMs: Long = 3600L * 1000
 
-  /** The one listing a publish makes: creates the topic directory,
-    * deletes crashed-writer temp debris past the age gate (best-effort —
-    * a racing delete is fine), and snapshots the names present before
-    * this publish for [[commitTopicFile]]'s re-publish check.
+  /** The one listing a publish makes, a fresh name read: creates the
+    * topic directory, deletes crashed-writer temp debris past the age gate
+    * (best-effort — a racing delete is fine), and snapshots the names
+    * present before this publish for [[commitTopicFile]]'s re-publish check.
     */
   private def prepareTopicDir(fs: FileSystem, topicDir: String): PreExisting = {
-    val dir = new Path(topicDir)
-    fs.mkdirs(dir)
-    val files =
-      try fs.listStatus(dir).filter(_.isFile)
-      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    fs.mkdirs(new Path(topicDir))
+    val listed = names(fs, new Path(topicDir)).fold(Array.empty[String])(_._1)
     val cutoff = System.currentTimeMillis() - TempOrphanAgeMs
-    files.foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith(".inprogress-") && name.endsWith(".tmp") && st.getModificationTime < cutoff)
-        fs.delete(st.getPath, false)
-    }
-    PreExisting.of(files.iterator.map(_.getPath.getName).filter(_.endsWith(".avro")).toSeq)
+    listed.filter(n => n.startsWith(".inprogress-") && n.endsWith(".tmp")).map(HadoopIO.child(topicDir, _))
+      .filter(tmp => Try(fs.getFileStatus(tmp)).toOption.exists(st => st.isFile && st.getModificationTime < cutoff))
+      .foreach(fs.delete(_, false))
+    PreExisting.of(listed.filter(_.endsWith(".avro")))
   }
 
   /** Write a message DataFrame (columns id, orderingGroup, sequenceNumber,
@@ -196,9 +196,12 @@ object Topic {
     // retry/speculation (dest appeared during the job → already committed,
     // skip). Broadcast once as 8-byte name hashes (PreExisting), so a
     // 1.5M-file topic costs one ~12 MB broadcast, not a per-task closure
-    // of full name strings. A replay ships an empty snapshot.
+    // of full name strings. A replay ships an empty snapshot. The tasks'
+    // Hadoop conf is broadcast once too.
     val listed = prepareTopicDir(fs, topicDir)
-    val pre = messages.sparkSession.sparkContext.broadcast(if (replay) PreExisting.of(Nil) else listed)
+    val sc = messages.sparkSession.sparkContext
+    val pre = sc.broadcast(if (replay) PreExisting.of(Nil) else listed)
+    val conf = sc.broadcast(new SerializableConfiguration(HadoopIO.conf()))
     val written =
       try {
         // repartition, not rebalance: the byte roll needs each window
@@ -210,11 +213,10 @@ object Topic {
           .select(col("_win").as("_1"),
             struct(col("id"), col("orderingGroup"), col("sequenceNumber"), col("position"), col("data")).as("_2"))
           .as(Encoders.tuple(Encoders.scalaLong, msgEncoder))
-        val sconf = HadoopIO.serializable()
         windowed.mapPartitions { in =>
-          new FileGroupWriter(topicDir, cfg, HadoopIO.fs(topicDir, sconf.value), pre.value).run(in)
+          new FileGroupWriter(topicDir, cfg, HadoopIO.fs(topicDir, conf.value.value), pre.value).run(in)
         }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, fileEncoder)).collect().toSeq
-      } finally pre.destroy()
+      } finally { pre.destroy(); conf.destroy() }
     landed(topicDir, written)
   }
 
@@ -332,77 +334,90 @@ object Topic {
 
   // ----------------------------------------------------------------- list
 
-  /** Metadata-only topic listing, sorted by from-timestamp. One
-    * `FileSystem.listStatus` — a single LIST request on an object store
-    * (the reference's GCSRawdataUtils.java prefix listing).
+  /** One read of a directory's names (`None`: missing) and, by index, an entry's path if a
+    * regular file. `file:` reads `File.list`, no `Path`/`URI`/`FileStatus` per entry; other
+    * schemes make one LIST (on an object store the reference's GCSRawdataUtils.java prefix listing).
+    */
+  private def names(fs: FileSystem, dir: Path): Option[(Array[String], Int => Option[String])] = fs match {
+    case local: RawLocalFileSystem if fs.getUri.getScheme == "file" =>
+      val d = local.pathToFile(dir)
+      val prefix = fs.makeQualified(new Path(d.getPath)).toString.stripSuffix("/") + "/"
+      Option(d.list()).map(read => (read, i => Option.when(new java.io.File(d, read(i)).isFile)(prefix + read(i))))
+    case _ =>
+      try {
+        val st = fs.listStatus(dir)
+        Some((st.map(_.getPath.getName), i => Option.when(st(i).isFile)(st(i).getPath.toString)))
+      } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** a listed topic file; its first ULID is read (one record) only on a `fromTsMs` tie */
+  private final class Listed(val file: TopicFile) {
+    lazy val firstUlid: String = AvroCodec.readFirst(file.path, HadoopIO.conf()).fold("")(m => Ulid.hex(m.id))
+  }
+
+  /** `<fromTimestamp>_<count>_<lastBlockOffset>_<firstPosition>.avro`, a regular file */
+  private def parse(name: String, path: => Option[String]): Option[Listed] =
+    name.stripSuffix(".avro").split("_", 4) match {
+      case Array(ts, count, offset, position) if name.endsWith(".avro") =>
+        Try((parseTs(ts), count.toLong, offset.toLong)).toOption
+          .flatMap { case (t, c, o) => path.map(p => new Listed(TopicFile(p, t, c, o, position))) }
+      case _ => None
+    }
+
+  /** a directory's last listing: names in read order, each one's topic file, the ordered files */
+  private final case class Snapshot(names: Array[String], byName: Map[String, Option[Listed]],
+      files: Vector[TopicFile], atMs: Long, stale: Boolean = false)
+
+  /** per qualified directory (`dir`, `file:dir`, `file://dir`, `dir/` are one) */
+  private val listings = new java.util.concurrent.ConcurrentHashMap[String, Snapshot]()
+
+  private def located(topicDir: String): (FileSystem, Path) = {
+    val fs = HadoopIO.fs(topicDir, HadoopIO.conf())
+    (fs, fs.makeQualified(new Path(topicDir)))
+  }
+
+  /** Metadata-only topic listing, sorted by from-timestamp. Every call
+    * reads the names afresh, so another writer's file is listed on the
+    * next call; an unchanged name set is neither parsed nor sorted, and
+    * otherwise only names not seen before are parsed.
     */
   def listFiles(topicDir: String): Seq[TopicFile] = {
-    val conf = HadoopIO.conf()
-    val fs = HadoopIO.fs(topicDir, conf)
-    val dir = new Path(topicDir)
-    val statuses =
-      try fs.listStatus(dir)
-      catch { case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus] }
-    orderTies(statuses.iterator
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".avro"))
-      .flatMap { st =>
-        val base = st.getPath.getName.stripSuffix(".avro")
-        val parts = base.split("_", 4)
-        if (parts.length == 4)
-          try Some(TopicFile(st.getPath.toString, parseTs(parts(0)), parts(1).toLong, parts(2).toLong, parts(3)))
-          catch { case _: Exception => None }
-        else None
-      }
-      .toSeq.sortBy(f => (f.fromTsMs, f.path)))
+    val (fs, dir) = located(topicDir)
+    val prev = Option(listings.get(dir.toString))
+    val next = names(fs, dir).map { case (read, fileAt) =>
+      val now = System.nanoTime() / 1000000L
+      prev.filter(_.names.sameElements(read)).fold {
+        val seen = prev.fold(Map.empty[String, Option[Listed]])(_.byName)
+        val byName = read.indices.map(i => read(i) -> seen.getOrElse(read(i), parse(read(i), fileAt(i)))).toMap
+        val same = byName.size == seen.size && byName.keysIterator.forall(seen.contains)
+        Snapshot(read, byName, prev.filter(_ => same).fold(ordered(byName.values.flatten))(_.files), now)
+      }(_.copy(atMs = now, stale = false))
+    }
+    // a missing directory drops out; an invalidation during the read leaves the listing stale
+    listings.compute(dir.toString,
+      (_, cur) => next.map(_.copy(stale = cur != null && cur.stale && !prev.exists(_ eq cur))).orNull)
+    next.fold(Vector.empty[TopicFile])(_.files)
   }
 
-  /** Files that share a fromTsMs (a byte-chunk roll within one millisecond)
-    * are not ordered by the timestamp alone; re-order such runs by the
-    * file's first ULID so lastMessage/pruneFrom pick the true latest chunk.
-    * Only tied files are opened, and only their first record is read.
+  /** Sorted by (fromTsMs, path), then runs sharing a fromTsMs (a byte roll within one
+    * millisecond) by first ULID, so lastMessage/pruneFrom pick the true latest chunk.
     */
-  private def orderTies(files: Seq[TopicFile]): Seq[TopicFile] = {
-    val anyTie = files.iterator.sliding(2).exists {
-      case Seq(a, b) => a.fromTsMs == b.fromTsMs
-      case _         => false
-    }
-    if (!anyTie) files
-    else files.groupBy(_.fromTsMs).toSeq.sortBy(_._1).flatMap {
-      case (_, group) if group.size == 1 => group
-      case (_, group) => group.sortBy(f => firstUlidHex(f.path))
-    }
-  }
+  private def ordered(listed: Iterable[Listed]): Vector[TopicFile] =
+    listed.toVector.sortBy(l => (l.file.fromTsMs, l.file.path)).groupBy(_.file.fromTsMs).toVector.sortBy(_._1)
+      .flatMap { case (_, run) => if (run.size == 1) run else run.sortBy(_.firstUlid) }.map(_.file)
 
-  /** Hex ULID of a file's first record (tie-break helper; one-record read). */
-  private def firstUlidHex(path: String): String =
-    AvroCodec.readFirst(path, HadoopIO.conf()).map(m => Ulid.hex(m.id)).getOrElse("")
-
-  // ------------------------------------------------------- listing cache
-
-  private val listingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Seq[TopicFile])]()
-
-  /** Min-interval cached listing (reference TopicAvroFileCache.java: the
-    * consumer's poll loop re-lists the topic at most once per configured
-    * interval). Within ttlMs of the last listing the cached snapshot is
-    * returned without touching the filesystem — on an object store that
-    * is the difference between one LIST per poll and one per interval.
-    * Wired into the bounded receive poll (GraftRawdataClient.Consumer);
-    * Topic.write invalidates after a publish from this process.
+  /** Min-interval listing (reference TopicAvroFileCache.java): the [[listFiles]] snapshot while
+    * younger than `ttlMs` and not stale, with no file system call — on an object store one LIST
+    * per interval, not per poll. Wired into the bounded receive poll (Consumer.receive).
     */
-  def listFilesCached(topicDir: String, ttlMs: Long): Seq[TopicFile] = {
-    val now = System.nanoTime() / 1000000L
-    val cached = listingCache.get(topicDir)
-    if (cached != null && now - cached._1 < ttlMs) cached._2
-    else {
-      val fresh = listFiles(topicDir)
-      listingCache.put(topicDir, (now, fresh))
-      fresh
-    }
-  }
+  def listFilesCached(topicDir: String, ttlMs: Long): Seq[TopicFile] =
+    Option(listings.get(located(topicDir)._2.toString))
+      .filter(s => !s.stale && System.nanoTime() / 1000000L - s.atMs < ttlMs)
+      .fold(listFiles(topicDir))(_.files)
 
-  /** Drop the cached listing (e.g. after this process wrote the topic). */
-  def invalidateListing(topicDir: String): Unit = listingCache.remove(topicDir): Unit
+  /** Mark the listing stale (Topic.write and expire do, after changing the topic). */
+  def invalidateListing(topicDir: String): Unit =
+    listings.computeIfPresent(located(topicDir)._2.toString, (_, s) => s.copy(stale = true)): Unit
 
   /** Files possibly containing messages with ts >= fromTsMs: everything
     * from the last file that starts at/before the target (floorEntry —
@@ -482,10 +497,8 @@ object Topic {
     AvroCodec.readFileFrom(f.path, f.lastBlockOffset, conf).reduceOption((_, m) => m)
 
   /** Topic stats straight from the file listing — a metadata-only query. */
-  def fileListingDF(spark: SparkSession, topicDir: String): DataFrame = {
-    val files = listFiles(topicDir)
-    spark.createDataset(files).toDF()
-  }
+  def fileListingDF(spark: SparkSession, topicDir: String): DataFrame =
+    spark.createDataset(listFiles(topicDir)).toDF()
 
   /** Maintenance compaction: rewrite a topic's files under a different
     * rolling config into `destDir` (typically: many small producer files

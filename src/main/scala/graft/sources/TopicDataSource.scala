@@ -4,7 +4,7 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SQLContext}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, Table, TableCapability, TableProvider}
@@ -17,6 +17,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.rawdata.{AvroCodec, HadoopIO, Topic, Ulid}
 
@@ -103,10 +104,9 @@ object TopicDataSource {
     * task per file.
     */
   def partitions(paths: Seq[String]): Array[InputPartition] = {
-    val cap = Topic.readPartitionCap(org.apache.spark.sql.SparkSession.active.sparkContext)
+    val cap = Topic.readPartitionCap(SparkSession.active.sparkContext)
     val per = math.max(1, math.ceil(paths.size.toDouble / cap).toInt)
-    val sconf = HadoopIO.serializable()
-    paths.grouped(per).map(g => TopicInputPartition(g, sconf): InputPartition).toArray
+    paths.grouped(per).map(g => TopicInputPartition(g): InputPartition).toArray
   }
 }
 
@@ -179,8 +179,8 @@ final class TopicScan(path: String, loMs: Long, hiMs: Long, required: StructType
 
 /** Micro-batch tail of a topic — the consumer's poll loop
   * (reference AvroRawdataConsumer.java:71-96) as a DSv2 stream: each
-  * trigger lists the topic (one LIST per trigger, like the reference's
-  * TopicAvroFileCache interval) and the newly landed files become that
+  * trigger lists the topic (`Topic.listFiles`: one name read, parsing
+  * only new names; one LIST on an object store) and the newly landed files become that
   * micro-batch's partitions, grouped as the batch scan groups them (a
   * catch-up over a large backlog stays within the partition cap). Topic
   * files appear atomically (temp-name rename), so per-file discovery can
@@ -276,26 +276,29 @@ final case class TopicOffset(n: Long) extends Offset {
   override def json(): String = n.toString
 }
 
-final case class TopicInputPartition(filePaths: Seq[String], sconf: HadoopIO.SerializableConf) extends InputPartition
+final case class TopicInputPartition(filePaths: Seq[String]) extends InputPartition
 
+/** One per scan (batch, or micro-batch): it broadcasts [[HadoopIO.conf]]
+  * once, and every task of the scan opens its files with it.
+  */
 final class TopicReaderFactory(required: StructType) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[TopicInputPartition]
-    new TopicPartitionReader(p.filePaths, p.sconf, required)
-  }
+  private val conf = SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(HadoopIO.conf()))
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new TopicPartitionReader(partition.asInstanceOf[TopicInputPartition].filePaths, conf.value.value, required)
 }
 
 /** Decodes a run of topic Avro files to InternalRows, materializing only
   * the columns the scan requires (the payload map is the expensive one).
   */
-final class TopicPartitionReader(filePaths: Seq[String], sconf: HadoopIO.SerializableConf, required: StructType)
+final class TopicPartitionReader(filePaths: Seq[String], conf: org.apache.hadoop.conf.Configuration, required: StructType)
     extends PartitionReader[InternalRow] {
 
   // flatMap opens the next file only once the previous one is exhausted
   private var file: UTF8String = _
   private val it = filePaths.iterator.flatMap { p =>
     file = UTF8String.fromString(p)
-    AvroCodec.readFile(p, sconf.value)
+    AvroCodec.readFile(p, conf)
   }
   private var row: InternalRow = _
 

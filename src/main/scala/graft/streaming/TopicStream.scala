@@ -12,7 +12,7 @@ import graft.rawdata.{RawdataMessage, Topic, Ulid}
   * once, newly landed Avro files become that micro-batch's partitions,
   * and records stream straight out of the Avro decoder (the earlier
   * binaryFile form materialized each whole file as one row first).
-  * Scale: one LIST per trigger; decode parallelism = files per batch.
+  * Scale: one name read per trigger (new names parsed); decode parallelism = files per batch.
   */
 object TopicStream {
 
