@@ -54,6 +54,16 @@ object VectorOps {
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(a),
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(b)))
 
+  /** Cosine in ppm of two quantized vectors from their exact integer dot
+    * product and squared norms: floor(dot / (√na·√nb)·1e6 + 0.5) as a
+    * long, the literal twin of the oracles' `CAST(FLOOR(dot / (sqrt(na) *
+    * sqrt(nb)) * 1000000.0 + 0.5) AS BIGINT)`. Norms must be nonzero: a
+    * zero-norm vector has no cosine (ANSI mode throws on the NaN cast).
+    */
+  def cosPpm(dot: org.apache.spark.sql.Column, na: org.apache.spark.sql.Column,
+      nb: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    floor(dot / (sqrt(na) * sqrt(nb)) * lit(1000000.0) + lit(0.5)).cast("long")
+
   /** Exact int64 squared euclidean distance via the native LongL2
     * expression — [[dotCol]]'s distance twin (the k-means / PQ
     * assignment kernel). Works on nullable-element array types too (the
@@ -87,9 +97,8 @@ object VectorOps {
       .withColumn("bucket", floor($"vb" / band))
     a.join(b, Seq("bucket"))
       .filter($"vb" > $"va" && $"vb" <= $"va" + band)
-      .withColumn("dot", graft.operators.VectorOps.dotCol(col("qa"), col("qb")))
-      .withColumn("cos_ppm",
-        floor($"dot" / (sqrt($"na") * sqrt($"nb")) * lit(1000000.0) + lit(0.5)).cast("long"))
+      .withColumn("dot", dotCol(col("qa"), col("qb")))
+      .withColumn("cos_ppm", cosPpm($"dot", $"na", $"nb"))
       .select($"va", $"vb", $"cos_ppm")
   }
 

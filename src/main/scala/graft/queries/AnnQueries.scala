@@ -116,6 +116,24 @@ object AnnQueries {
        |    FROM sym) WHERE rnk <= 5)""".stripMargin
 
   private val dotExpr = graft.operators.VectorOps.dotExpr
+  import graft.operators.VectorOps.{cosPpm, dotCol}
+
+  /** The exact cosine top-[[TopK]] every ANN search ends in: each candidate
+    * pair of `cand` (query `qid`, `qa`, `na`; corpus `cid`, `qb`, `nb`)
+    * other than a query with itself is scored `cos_ppm`
+    * ([[graft.operators.VectorOps.cosPpm]]), ranked per `partitionCols` by
+    * (`cos_ppm` desc, `cid`) and cut at TopK. Returns (`partitionCols`…,
+    * `rnk`, `cid`, `cos_ppm`), unordered.
+    */
+  private def cosineTopk(cand: DataFrame, partitionCols: String*): DataFrame = {
+    val w = Window.partitionBy(partitionCols.map(col): _*).orderBy(col("cos_ppm").desc, col("cid"))
+    cand.filter(col("cid") =!= col("qid"))
+      .withColumn("dot", dotCol(col("qa"), col("qb")))
+      .withColumn("cos_ppm", cosPpm(col("dot"), col("na"), col("nb")))
+      .withColumn("rnk", row_number().over(w).cast("long"))
+      .filter(col("rnk") <= TopK)
+      .select((partitionCols ++ Seq("rnk", "cid", "cos_ppm")).map(col): _*)
+  }
 
   /** exact brute-force cosine top-k: broadcast the query set, one narrow
     * pass over the corpus, per-query top-k window (shared with
@@ -127,15 +145,7 @@ object AnnQueries {
     val qs = e.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("qid"), $"q".as("qa"), $"nn".as("na"))
     val corpus = e.select($"vec_id".as("cid"), $"q".as("qb"), $"nn".as("nb"))
-    val w = Window.partitionBy($"qid").orderBy($"cos_ppm".desc, $"cid")
-    corpus.join(broadcast(qs), $"cid" =!= $"qid")
-      .withColumn("dot", graft.operators.VectorOps.dotCol(col("qa"), col("qb")))
-      .withColumn("cos_ppm",
-        floor($"dot" / (sqrt($"na") * sqrt($"nb")) * lit(1000000.0) + lit(0.5)).cast("long"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter($"rnk" <= TopK)
-      .select($"qid", $"rnk", $"cid", $"cos_ppm")
-      .orderBy($"qid", $"rnk")
+    cosineTopk(corpus.crossJoin(broadcast(qs)), "qid").orderBy($"qid", $"rnk")
   }
 
   /** LSH (random-hyperplane) bucketed ANN top-k: signature = sign bits
@@ -153,15 +163,60 @@ object AnnQueries {
         s"concat(array(sig), transform(sequence(0, ${Hyperplanes - 1}), j -> sig ^ shiftleft(1L, j)))")))
       .drop("sig")
     val corpus = e.select($"vec_id".as("cid"), $"q".as("qb"), $"nn".as("nb"), $"sig".as("probe"))
-    val w = Window.partitionBy($"qid").orderBy($"cos_ppm".desc, $"cid")
-    corpus.join(broadcast(qs), Seq("probe"))
-      .filter($"cid" =!= $"qid")
-      .withColumn("dot", graft.operators.VectorOps.dotCol(col("qa"), col("qb")))
-      .withColumn("cos_ppm",
-        floor($"dot" / (sqrt($"na") * sqrt($"nb")) * lit(1000000.0) + lit(0.5)).cast("long"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
+    cosineTopk(corpus.join(broadcast(qs), Seq("probe")), "qid").orderBy($"qid", $"rnk")
+  }
+
+  /** The PQ scan of ann_pq_topk and ann_ivf_pq (FAISS IndexPQ's ADC):
+    * 8 subspaces of 8 dims, codewords = the subvectors of vec_id < 16 (a
+    * deterministic codebook, no training); each corpus vector encoded to
+    * its nearest codeword per subspace (ties to the smaller code), a
+    * per-query LUT of subvector-to-codeword distances, the ADC shortlist
+    * (top 5·k by summed LUT distance, ties by cid) and an exact L2
+    * re-rank of the shortlist on the quantized vectors. `cand` (`qid`,
+    * `cid`) restricts the ADC scan to those pairs, cell restriction
+    * first (the IVF probe); `None` scans every corpus vector but the
+    * query itself. Returns (qid, rnk, cid, dist) ordered.
+    */
+  private def pqTopk(s: SparkSession, d: String, cand: Option[DataFrame]): DataFrame = {
+    import s.implicits._
+    val (m, subDim, nCodes, shortlist) = (8, 8, 16, 5 * TopK)
+    val e = quantized(s, d)
+    val subs = e.select($"vec_id", explode(expr(
+      s"transform(sequence(0, ${m - 1}), m -> struct(m AS sub, slice(q, m * $subDim + 1, $subDim) AS sv))")).as("x"))
+      .select($"vec_id", $"x.sub".as("sub"), $"x.sv".as("sv"))
+    val codebook = subs.filter($"vec_id" < nCodes)
+      .select($"vec_id".as("code"), $"sub", $"sv".as("cv"))
+    def sqDist = expr("aggregate(zip_with(sv, cv, (x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)")
+    val codes = subs.join(broadcast(codebook), Seq("sub"))
+      .withColumn("dist", sqDist)
+      .groupBy($"vec_id", $"sub")
+      .agg(min(struct($"dist", $"code")).as("mn"))
+      .select($"vec_id".as("cid"), $"sub", $"mn.code".as("code"))
+    val lut = subs.filter($"vec_id" < NumQueries)
+      .select($"vec_id".as("qid"), $"sub", $"sv")
+      .join(broadcast(codebook), Seq("sub"))
+      .withColumn("qdist", sqDist)
+      .select($"qid", $"sub", $"code", $"qdist")
+    val scanned = cand.fold(codes.join(broadcast(lut), Seq("sub", "code")).filter($"cid" =!= $"qid"))(
+      c => codes.join(c, Seq("cid")).join(broadcast(lut), Seq("qid", "sub", "code")))
+    val wAdc = Window.partitionBy($"qid").orderBy($"adist".asc, $"cid")
+    val short = scanned
+      .groupBy($"qid", $"cid")
+      .agg(sum($"qdist").as("adist"))
+      .withColumn("srnk", row_number().over(wAdc))
+      .filter($"srnk" <= shortlist)
+      .select($"qid", $"cid")
+    // exact re-rank of the shortlist on the original quantized vectors
+    val wExact = Window.partitionBy($"qid").orderBy($"dist".asc, $"cid")
+    broadcast(short)
+      .join(e.select($"vec_id".as("cid"), $"q".as("qb")), Seq("cid"))
+      .join(broadcast(e.filter($"vec_id" < NumQueries)
+        .select($"vec_id".as("qid"), $"q".as("qa"))), Seq("qid"))
+      .withColumn("dist", expr(
+        "aggregate(zip_with(qa, qb, (x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)"))
+      .withColumn("rnk", row_number().over(wExact).cast("long"))
       .filter($"rnk" <= TopK)
-      .select($"qid", $"rnk", $"cid", $"cos_ppm")
+      .select($"qid", $"rnk", $"cid", $"dist")
       .orderBy($"qid", $"rnk")
   }
 
@@ -214,17 +269,7 @@ object AnnQueries {
     // The remaining corpus pass is the exact brute-force truth itself.
     "ann_ivf_recall" -> { (s, d) =>
       import s.implicits._
-      val e = unit(s, d)
-      val cents = EmbIvfIndex.cents(s, d)
-      val w0 = Window.partitionBy($"vec_id").orderBy($"c_ppm".desc, $"cent_id")
-      val qasgn = e.filter($"vec_id" < NumQueries)
-        .join(broadcast(cents), lit(true))
-        .withColumn("dot", expr(
-          "aggregate(zip_with(q, qc, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"))
-        .withColumn("c_ppm",
-          floor($"dot" / (sqrt($"nn") * sqrt($"nc")) * lit(1000000.0) + lit(0.5)).cast("long"))
-        .withColumn("crnk", row_number().over(w0))
-        .filter($"crnk" <= 4)
+      val qasgn = EmbIvfIndex.rank(unit(s, d).filter($"vec_id" < NumQueries), EmbIvfIndex.cents(s, d), 4)
         .select($"vec_id", $"q", $"nn", $"cent_id", $"crnk")
         // ranked once: probe list + pruning ids + sweep points. r15
         // (ADVICE): localCheckpoint, NOT persist — the construct-time
@@ -233,26 +278,13 @@ object AnnQueries {
         // leak one pinned cache entry per invocation; checkpoint blocks
         // are context-cleaned when the result drops (the q46 contract).
         .localCheckpoint(true)
-      // bounded driver list (≤ NumQueries·4 ids) — the same partition-
-      // pruning contract ann_ivf_index serves with
-      val probed = qasgn.select($"cent_id").distinct()
-        .collect().map(_.getLong(0)).sorted.toSeq
-      val cells = EmbIvfIndex.cells(s, d)
-        .filter($"cent_id".isin(probed: _*))
-        .select($"vec_id".as("cid"), $"q".as("qb"), $"nn".as("nb"), $"cent_id")
+      val cells = EmbIvfIndex.probedCells(s, d, qasgn)
       val truth = bruteTopk(s, d).select($"qid", $"cid").localCheckpoint(true)
       val probes = qasgn
         .withColumn("nprobe", explode(expr("array(1L, 2L, 4L)")))
         .filter($"crnk" <= $"nprobe")
         .select($"nprobe", $"vec_id".as("qid"), $"q".as("qa"), $"nn".as("na"), $"cent_id")
-      val w = Window.partitionBy($"nprobe", $"qid").orderBy($"cos_ppm".desc, $"cid")
-      val top = cells.join(broadcast(probes), Seq("cent_id"))
-        .filter($"cid" =!= $"qid")
-        .withColumn("dot", graft.operators.VectorOps.dotCol(col("qa"), col("qb")))
-        .withColumn("cos_ppm",
-          floor($"dot" / (sqrt($"na") * sqrt($"nb")) * lit(1000000.0) + lit(0.5)).cast("long"))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter($"rnk" <= TopK)
+      val top = cosineTopk(cells.join(broadcast(probes), Seq("cent_id")), "nprobe", "qid")
         .select($"nprobe", $"qid", $"cid").withColumn("hit", lit(1L))
       truth.withColumn("nprobe", explode(expr("array(1L, 2L, 4L)")))
         .join(top, Seq("nprobe", "qid", "cid"), "left")
@@ -271,31 +303,11 @@ object AnnQueries {
       val e = unit(s, d)
       val cents = e.filter($"vec_id" % centroidStep(s, d) === 0)
         .select($"vec_id".as("cent_id"), $"q".as("qc"), $"nn".as("nc"))
-      // nearest-centroid assignment: max cosine, centroid id tie-break
-      def assign(df: DataFrame, keep: Int): DataFrame = {
-        val w = Window.partitionBy(col("vec_id")).orderBy(col("c_ppm").desc, col("cent_id"))
-        df.join(broadcast(cents), lit(true))
-          .withColumn("dot", expr("aggregate(zip_with(q, qc, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"))
-          .withColumn("c_ppm",
-            floor(col("dot") / (sqrt(col("nn")) * sqrt(col("nc"))) * lit(1000000.0) + lit(0.5)).cast("long"))
-          .withColumn("crnk", row_number().over(w))
-          .filter(col("crnk") <= keep)
-          .select(col("vec_id"), col("q"), col("nn"), col("cent_id"))
-      }
-      val cells = assign(e, 1)
+      val cells = EmbIvfIndex.rank(e, cents, 1)
         .select($"vec_id".as("cid"), $"q".as("qb"), $"nn".as("nb"), $"cent_id")
-      val probes = assign(e.filter($"vec_id" < NumQueries), 2)
+      val probes = EmbIvfIndex.rank(e.filter($"vec_id" < NumQueries), cents, 2)
         .select($"vec_id".as("qid"), $"q".as("qa"), $"nn".as("na"), $"cent_id")
-      val w = Window.partitionBy($"qid").orderBy($"cos_ppm".desc, $"cid")
-      cells.join(broadcast(probes), Seq("cent_id"))
-        .filter($"cid" =!= $"qid")
-        .withColumn("dot", graft.operators.VectorOps.dotCol(col("qa"), col("qb")))
-        .withColumn("cos_ppm",
-          floor($"dot" / (sqrt($"na") * sqrt($"nb")) * lit(1000000.0) + lit(0.5)).cast("long"))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter($"rnk" <= TopK)
-        .select($"qid", $"rnk", $"cid", $"cos_ppm")
-        .orderBy($"qid", $"rnk")
+      cosineTopk(cells.join(broadcast(probes), Seq("cent_id")), "qid").orderBy($"qid", $"rnk")
     },
 
     // the SAME IVF semantics served from the materialized
@@ -310,31 +322,9 @@ object AnnQueries {
     // pruned file count), so it shares ann_ivf_topk's oracle verbatim.
     "ann_ivf_index" -> { (s, d) =>
       import s.implicits._
-      val cents = EmbIvfIndex.cents(s, d)
-      val qs = unit(s, d).filter($"vec_id" < NumQueries)
-      val w0 = Window.partitionBy($"vec_id").orderBy($"c_ppm".desc, $"cent_id")
-      val probes = qs.join(broadcast(cents), lit(true))
-        .withColumn("dot", expr(
-          "aggregate(zip_with(q, qc, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"))
-        .withColumn("c_ppm",
-          floor($"dot" / (sqrt($"nn") * sqrt($"nc")) * lit(1000000.0) + lit(0.5)).cast("long"))
-        .withColumn("crnk", row_number().over(w0))
-        .filter($"crnk" <= 2)
+      val probes = EmbIvfIndex.rank(unit(s, d).filter($"vec_id" < NumQueries), EmbIvfIndex.cents(s, d), 2)
         .select($"vec_id".as("qid"), $"q".as("qa"), $"nn".as("na"), $"cent_id")
-      val probed = probes.select($"cent_id").distinct()
-        .collect().map(_.getLong(0)).sorted.toSeq
-      val cellRows = EmbIvfIndex.cells(s, d)
-        .filter($"cent_id".isin(probed: _*))
-        .select($"cent_id", $"vec_id".as("cid"), $"q".as("qb"), $"nn".as("nb"))
-      val w = Window.partitionBy($"qid").orderBy($"cos_ppm".desc, $"cid")
-      cellRows.join(broadcast(probes), Seq("cent_id"))
-        .filter($"cid" =!= $"qid")
-        .withColumn("dot", graft.operators.VectorOps.dotCol(col("qa"), col("qb")))
-        .withColumn("cos_ppm",
-          floor($"dot" / (sqrt($"na") * sqrt($"nb")) * lit(1000000.0) + lit(0.5)).cast("long"))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter($"rnk" <= TopK)
-        .select($"qid", $"rnk", $"cid", $"cos_ppm")
+      cosineTopk(EmbIvfIndex.probedCells(s, d, probes).join(broadcast(probes), Seq("cent_id")), "qid")
         .orderBy($"qid", $"rnk")
     },
 
@@ -583,8 +573,7 @@ object AnnQueries {
         .select($"label", $"n_even", $"n_odd",
           when($"na".isNull || $"nb".isNull || $"na" === 0 || $"nb" === 0,
             lit(null).cast("long"))
-            .otherwise(floor($"dot" / (sqrt($"na") * sqrt($"nb")) * lit(1000000.0) + lit(0.5))
-              .cast("long")).as("cos_ppm"))
+            .otherwise(cosPpm($"dot", $"na", $"nb")).as("cos_ppm"))
         .orderBy($"label")
     },
 
@@ -670,64 +659,13 @@ object AnnQueries {
         .orderBy($"label_lo", $"label_hi")
     },
 
-    // product-quantization ANN (ADC scan + exact re-rank): 8 subspaces
-    // x 8 dims, 16 deterministic codewords per subspace (the first 16
-    // vectors' subvectors). Corpus vectors are encoded once to 8 small
-    // codes (broadcast codebook + partial-agg argmin per (vector,
-    // subspace)); each query builds an exact 16-entry distance lookup
-    // table per subspace, and the scan is a broadcast equi-join of the
-    // code table against the LUT summed per (query, vector) — the
-    // memory-bandwidth ADC pattern, no full-dimension math in the hot
-    // loop. The ADC shortlist (top 5x k per query) is then re-ranked
-    // with EXACT L2 on the original vectors — the production IVF-PQ
-    // shape, where full-precision math touches only the shortlist. At
+    // product-quantization ANN over the whole corpus ([[pqTopk]]). At
     // corpus scale the encode is one shuffle of 8 ints per vector, the
-    // scan shuffles O(vectors x queries) tiny rows with map-side
+    // ADC scan shuffles O(vectors x queries) tiny rows with map-side
     // combine, and the re-rank is a broadcast of the tiny shortlist.
-    // Oracle: full replay (the codebook is deterministic — codewords
-    // are the first 16 vectors' subvectors); recall + shortlist
-    // exactness additionally asserted in AnnSpec.
-    "ann_pq_topk" -> { (s, d) =>
-      import s.implicits._
-      val (m, subDim, nCodes, shortlist) = (8, 8, 16, 5 * TopK)
-      val e = quantized(s, d)
-      val subs = e.select($"vec_id", explode(expr(
-        s"transform(sequence(0, ${m - 1}), m -> struct(m AS sub, slice(q, m * $subDim + 1, $subDim) AS sv))")).as("x"))
-        .select($"vec_id", $"x.sub".as("sub"), $"x.sv".as("sv"))
-      val codebook = subs.filter($"vec_id" < nCodes)
-        .select($"vec_id".as("code"), $"sub", $"sv".as("cv"))
-      def sqDist = expr("aggregate(zip_with(sv, cv, (x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)")
-      val codes = subs.join(broadcast(codebook), Seq("sub"))
-        .withColumn("dist", sqDist)
-        .groupBy($"vec_id", $"sub")
-        .agg(min(struct($"dist", $"code")).as("mn"))
-        .select($"vec_id".as("cid"), $"sub", $"mn.code".as("code"))
-      val lut = subs.filter($"vec_id" < NumQueries)
-        .select($"vec_id".as("qid"), $"sub", $"sv")
-        .join(broadcast(codebook), Seq("sub"))
-        .withColumn("qdist", sqDist)
-        .select($"qid", $"sub", $"code", $"qdist")
-      val wAdc = Window.partitionBy($"qid").orderBy($"adist".asc, $"cid")
-      val short = codes.join(broadcast(lut), Seq("sub", "code"))
-        .filter($"cid" =!= $"qid")
-        .groupBy($"qid", $"cid")
-        .agg(sum($"qdist").as("adist"))
-        .withColumn("srnk", row_number().over(wAdc))
-        .filter($"srnk" <= shortlist)
-        .select($"qid", $"cid")
-      // exact re-rank of the shortlist on the original quantized vectors
-      val wExact = Window.partitionBy($"qid").orderBy($"dist".asc, $"cid")
-      broadcast(short)
-        .join(e.select($"vec_id".as("cid"), $"q".as("qb")), Seq("cid"))
-        .join(broadcast(e.filter($"vec_id" < NumQueries)
-          .select($"vec_id".as("qid"), $"q".as("qa"))), Seq("qid"))
-        .withColumn("dist", expr(
-          "aggregate(zip_with(qa, qb, (x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)"))
-        .withColumn("rnk", row_number().over(wExact).cast("long"))
-        .filter($"rnk" <= TopK)
-        .select($"qid", $"rnk", $"cid", $"dist")
-        .orderBy($"qid", $"rnk")
-    },
+    // Oracle: full replay; recall + shortlist exactness additionally
+    // asserted in AnnSpec.
+    "ann_pq_topk" -> { (s, d) => pqTopk(s, d, None) },
 
     // IVF-PQ composed index scan — the production ANN shape (FAISS
     // IndexIVFPQ): the coarse quantizer (ann_ivf_topk's deterministic
@@ -745,80 +683,22 @@ object AnnQueries {
     // whole composition replays in the oracle.
     "ann_ivf_pq" -> { (s, d) =>
       import s.implicits._
-      val (mSub, subDim, nCodes, shortlist) = (8, 8, 16, 5 * TopK)
-      val e = quantized(s, d)
-      val eu = unit(s, d)
       // r14: the coarse assignment is served from the materialized
       // [[EmbIvfIndex]] posting lists (same frozen seeds + tie-break;
       // IvfIndexSpec pins index == inline assignment), so the composed
       // scan never recomputes the corpus×codebook ranking — only the
-      // |queries| probe vectors are ranked. The cells read is column-
-      // pruned to (vec_id, cent_id).
-      val cents = EmbIvfIndex.cents(s, d)
-      def assign(df: DataFrame, keep: Int): DataFrame = {
-        val w = Window.partitionBy(col("vec_id")).orderBy(col("c_ppm").desc, col("cent_id"))
-        df.join(broadcast(cents), lit(true))
-          .withColumn("dot", expr("aggregate(zip_with(q, qc, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"))
-          .withColumn("c_ppm",
-            floor(col("dot") / (sqrt(col("nn")) * sqrt(col("nc"))) * lit(1000000.0) + lit(0.5)).cast("long"))
-          .withColumn("crnk", row_number().over(w))
-          .filter(col("crnk") <= keep)
-          .select(col("vec_id"), col("cent_id"))
-      }
-      val probes = assign(eu.filter($"vec_id" < NumQueries), 2)
+      // |queries| probe vectors are ranked. The cells read is pruned to
+      // the probed cells' partitions and to (cid, cent_id).
+      val probes = EmbIvfIndex.rank(unit(s, d).filter($"vec_id" < NumQueries), EmbIvfIndex.cents(s, d), 2)
         .select($"vec_id".as("qid"), $"cent_id")
         // ranked once, read twice (pruning ids + the candidate join);
         // blocks context-cleaned when the result drops
         .localCheckpoint(true)
-      // r15 (ADVICE): prune the posting-list read to the probed cells —
-      // cells is PARTITIONED by cent_id, so without the bounded
-      // (≤ NumQueries·2) isin list the scan read every posting list in
-      // full before the join restored correctness; same construct-time
-      // collect contract as ann_ivf_recall/ann_ivf_index.
-      val probedCents = probes.select($"cent_id").distinct()
-        .collect().map(_.getLong(0)).sorted.toSeq
-      val cells = EmbIvfIndex.cells(s, d)
-        .filter($"cent_id".isin(probedCents: _*))
-        .select($"vec_id".as("cid"), $"cent_id")
-      val cand = cells.join(broadcast(probes), Seq("cent_id"))
+      val cand = EmbIvfIndex.probedCells(s, d, probes).select($"cid", $"cent_id")
+        .join(broadcast(probes), Seq("cent_id"))
         .filter($"cid" =!= $"qid")
         .select($"qid", $"cid")
-      val subs = e.select($"vec_id", explode(expr(
-        s"transform(sequence(0, ${mSub - 1}), m -> struct(m AS sub, slice(q, m * $subDim + 1, $subDim) AS sv))")).as("x"))
-        .select($"vec_id", $"x.sub".as("sub"), $"x.sv".as("sv"))
-      val codebook = subs.filter($"vec_id" < nCodes)
-        .select($"vec_id".as("code"), $"sub", $"sv".as("cv"))
-      def sqDist = expr("aggregate(zip_with(sv, cv, (x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)")
-      val codes = subs.join(broadcast(codebook), Seq("sub"))
-        .withColumn("dist", sqDist)
-        .groupBy($"vec_id", $"sub")
-        .agg(min(struct($"dist", $"code")).as("mn"))
-        .select($"vec_id".as("cid"), $"sub", $"mn.code".as("code"))
-      val lut = subs.filter($"vec_id" < NumQueries)
-        .select($"vec_id".as("qid"), $"sub", $"sv")
-        .join(broadcast(codebook), Seq("sub"))
-        .withColumn("qdist", sqDist)
-        .select($"qid", $"sub", $"code", $"qdist")
-      // cell restriction FIRST: only probed-cell members reach the ADC
-      val wAdc = Window.partitionBy($"qid").orderBy($"adist".asc, $"cid")
-      val short = codes.join(cand, Seq("cid"))
-        .join(broadcast(lut), Seq("qid", "sub", "code"))
-        .groupBy($"qid", $"cid")
-        .agg(sum($"qdist").as("adist"))
-        .withColumn("srnk", row_number().over(wAdc))
-        .filter($"srnk" <= shortlist)
-        .select($"qid", $"cid")
-      val wExact = Window.partitionBy($"qid").orderBy($"dist".asc, $"cid")
-      broadcast(short)
-        .join(e.select($"vec_id".as("cid"), $"q".as("qb")), Seq("cid"))
-        .join(broadcast(e.filter($"vec_id" < NumQueries)
-          .select($"vec_id".as("qid"), $"q".as("qa"))), Seq("qid"))
-        .withColumn("dist", expr(
-          "aggregate(zip_with(qa, qb, (x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)"))
-        .withColumn("rnk", row_number().over(wExact).cast("long"))
-        .filter($"rnk" <= TopK)
-        .select($"qid", $"rnk", $"cid", $"dist")
-        .orderBy($"qid", $"rnk")
+      pqTopk(s, d, Some(cand))
     },
 
     // per-label embedding cluster statistics — the k-means E-step summary
@@ -1092,8 +972,7 @@ object AnnQueries {
           size($"ta").cast("long") + size($"tb").cast("long") - $"inter")
         .withColumn("lex_ppm", expr("(inter * 1000000) div greatest(1L, uni)"))
         .withColumn("dot", graft.operators.VectorOps.dotCol(col("qa"), col("qb")))
-        .withColumn("cos_ppm",
-          floor($"dot" / (sqrt($"na") * sqrt($"nb")) * lit(1000000.0) + lit(0.5)).cast("long"))
+        .withColumn("cos_ppm", cosPpm($"dot", $"na", $"nb"))
         .withColumn("score", $"lex_ppm" + $"cos_ppm")
         .withColumn("rnk", row_number().over(w).cast("long"))
         .filter($"rnk" <= 10)
@@ -1183,8 +1062,7 @@ object AnnQueries {
       val corpus = e.select($"vec_id".as("cid"), $"q".as("qb"), $"nn".as("nb"))
       corpus.join(broadcast(qs), $"cid" =!= $"qid")
         .withColumn("dot", graft.operators.VectorOps.dotCol(col("qa"), col("qb")))
-        .withColumn("cos_ppm",
-          floor($"dot" / (sqrt($"na") * sqrt($"nb")) * lit(1000000.0) + lit(0.5)).cast("long"))
+        .withColumn("cos_ppm", cosPpm($"dot", $"na", $"nb"))
         .filter($"cos_ppm" >= RangeTau)
         .select($"qid", $"cid", $"cos_ppm")
         .orderBy($"qid", $"cos_ppm".desc, $"cid")
@@ -1204,10 +1082,6 @@ object AnnQueries {
     // touches the one narrow relevance pass.
     "emb_mmr" -> { (s, d) =>
       import s.implicits._
-      def cosPpm(dotC: org.apache.spark.sql.Column,
-                 n1: org.apache.spark.sql.Column,
-                 n2: org.apache.spark.sql.Column) =
-        floor(dotC / (sqrt(n1) * sqrt(n2)) * lit(1000000.0) + lit(0.5)).cast("long")
       val e = unit(s, d)
       val qs = e.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("qid"), $"q".as("qa"), $"nn".as("na"))
@@ -1385,8 +1259,7 @@ object AnnQueries {
         .join(broadcast(cents), lit(true))
         .withColumn("dot", graft.operators.VectorOps.dotCol($"q", $"cq"))
         .select($"clabel", $"label",
-          floor($"dot" / (sqrt($"nn") * sqrt($"cnn")) * lit(1000000.0) + lit(0.5))
-            .cast("long").as("score"))
+          cosPpm($"dot", $"nn", $"cnn").as("score"))
       val h = scored.groupBy($"clabel", $"score")
         .agg(sum(when($"label" === $"clabel", 1L).otherwise(0L)).as("np"),
           sum(when($"label" =!= $"clabel", 1L).otherwise(0L)).as("nng"))
@@ -1520,16 +1393,7 @@ object AnnQueries {
     // explodes 4 rows per (query, probe) — |queries|·nprobe² bounded.
     "ann_probe_cost" -> { (s, d) =>
       import s.implicits._
-      val cents = EmbIvfIndex.cents(s, d)
-      val w0 = Window.partitionBy($"vec_id").orderBy($"c_ppm".desc, $"cent_id")
-      val probes = unit(s, d).filter($"vec_id" < NumQueries)
-        .join(broadcast(cents), lit(true))
-        .withColumn("dot", expr(
-          "aggregate(zip_with(q, qc, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"))
-        .withColumn("c_ppm",
-          floor($"dot" / (sqrt($"nn") * sqrt($"nc")) * lit(1000000.0) + lit(0.5)).cast("long"))
-        .withColumn("crnk", row_number().over(w0))
-        .filter($"crnk" <= 4)
+      val probes = EmbIvfIndex.rank(unit(s, d).filter($"vec_id" < NumQueries), EmbIvfIndex.cents(s, d), 4)
         .select($"vec_id".as("qid"), $"cent_id", $"crnk")
       val sizes = EmbIvfIndex.cells(s, d)
         .groupBy($"cent_id").agg(count(lit(1)).as("cell_n"))
@@ -1561,10 +1425,7 @@ object AnnQueries {
       import s.implicits._
       EmbIvfIndex.cells(s, d)
         .join(broadcast(EmbIvfIndex.cents(s, d)), Seq("cent_id"))
-        .withColumn("dot", expr(
-          "aggregate(zip_with(q, qc, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"))
-        .withColumn("c_ppm",
-          floor($"dot" / (sqrt($"nn") * sqrt($"nc")) * lit(1000000.0) + lit(0.5)).cast("long"))
+        .withColumn("c_ppm", cosPpm(dotCol($"q", $"qc"), $"nn", $"nc"))
         .groupBy($"cent_id")
         .agg(count(lit(1)).as("n_vecs"), min($"c_ppm").as("min_cos_ppm"),
           sum($"c_ppm").as("sc"))
@@ -1650,6 +1511,67 @@ object AnnQueries {
       |  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i)),
       |n AS (SELECT vec_id, SUM(q * q) AS nn FROM e GROUP BY 1)
       |""".stripMargin
+
+  /** The nearest-centroid replay of [[EmbIvfIndex.rank]] over [[QuantCte]]:
+    * `cents` (the seed ids, vec_id % step == 0), `cdots` (every vector's
+    * exact dot with every seed) and `asgn` (vec_id, cent_id, crnk): the
+    * cells in max-cosine order, ties to the smaller cent_id. `crnk <= 1`
+    * is the cell assignment, `crnk <= nprobe` a query's probe set.
+    */
+  private val IvfCellsCte: String = QuantCte +
+    s""", cents AS (SELECT vec_id AS cent_id FROM n WHERE vec_id % $CentroidStepSql = 0 AND nn > 0),
+       |cdots AS (
+       |  SELECT a.vec_id, c.cent_id, SUM(a.q * b.q) AS dot
+       |  FROM e a
+       |  JOIN e b ON b.i = a.i
+       |  JOIN cents c ON c.cent_id = b.vec_id
+       |  GROUP BY 1, 2),
+       |asgn AS (
+       |  SELECT d.vec_id, d.cent_id,
+       |    ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
+       |      CAST(FLOOR(d.dot / (sqrt(nv.nn) * sqrt(nc.nn)) * 1000000.0 + 0.5) AS BIGINT) DESC,
+       |      d.cent_id) AS crnk
+       |  FROM cdots d
+       |  JOIN n nv ON nv.vec_id = d.vec_id AND nv.nn > 0
+       |  JOIN n nc ON nc.vec_id = d.cent_id)""".stripMargin
+
+  /** SQL twin of [[pqTopk]] from the codebook on: `sub`, `cdist`, `codes`
+    * and `lut` (the encode and the query LUT), then `adc` — the caller's
+    * (qid, cid, adist) CTE, which decides the pairs scanned — then the
+    * `short` list, the exact `ex` re-rank and the final top-k.
+    */
+  private def pqOracle(adc: String): String =
+    s"""sub AS (
+       |  SELECT vec_id, CAST((i - 1) // 8 AS INT) AS sub, CAST((i - 1) % 8 AS INT) AS pos, q
+       |  FROM e),
+       |cdist AS (
+       |  SELECT a.vec_id, a.sub, c.vec_id AS code, CAST(SUM((a.q - c.q) * (a.q - c.q)) AS BIGINT) AS dist
+       |  FROM sub a JOIN sub c ON c.sub = a.sub AND c.pos = a.pos AND c.vec_id < 16
+       |  GROUP BY 1, 2, 3),
+       |codes AS (
+       |  SELECT vec_id AS cid, sub, code FROM (
+       |    SELECT vec_id, sub, code,
+       |      ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, code) AS rn
+       |    FROM cdist) WHERE rn = 1),
+       |lut AS (SELECT vec_id AS qid, sub, code, dist AS qdist FROM cdist WHERE vec_id < $NumQueries),
+       |""".stripMargin + adc +
+      s""",
+         |short AS (
+         |  SELECT qid, cid FROM (
+         |    SELECT qid, cid,
+         |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adist, cid) AS srnk
+         |    FROM adc) WHERE srnk <= ${5 * TopK}),
+         |ex AS (
+         |  SELECT s.qid, s.cid, CAST(SUM((ea.q - eb.q) * (ea.q - eb.q)) AS BIGINT) AS dist
+         |  FROM short s
+         |  JOIN e ea ON ea.vec_id = s.qid
+         |  JOIN e eb ON eb.vec_id = s.cid AND eb.i = ea.i
+         |  GROUP BY 1, 2)
+         |SELECT qid, CAST(rnk AS BIGINT) AS rnk, cid, dist FROM (
+         |  SELECT qid, cid, dist,
+         |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist, cid) AS rnk
+         |  FROM ex) WHERE rnk <= $TopK
+         |ORDER BY qid, rnk""".stripMargin
 
   /** emb_fps oracle: the greedy trajectory unrolled — round r computes
     * pair distances ONLY from the ≤ k selected rows (never all-pairs, so
@@ -1875,22 +1797,8 @@ object AnnQueries {
           |FROM g ORDER BY label""".stripMargin),
 
     // the ann_ivf_topk assignment CTEs rolled up per cell
-    "ann_cell_stats" -> (QuantCte +
-      s""", cents AS (SELECT vec_id AS cent_id FROM n WHERE vec_id % $CentroidStepSql = 0 AND nn > 0),
-         |cdots AS (
-         |  SELECT a.vec_id, c.cent_id, SUM(a.q * b.q) AS dot
-         |  FROM e a
-         |  JOIN e b ON b.i = a.i
-         |  JOIN cents c ON c.cent_id = b.vec_id
-         |  GROUP BY 1, 2),
-         |asgn AS (
-         |  SELECT d.vec_id, d.cent_id,
-         |    ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
-         |      CAST(FLOOR(d.dot / (sqrt(nv.nn) * sqrt(nc.nn)) * 1000000.0 + 0.5) AS BIGINT) DESC,
-         |      d.cent_id) AS crnk
-         |  FROM cdots d
-         |  JOIN n nv ON nv.vec_id = d.vec_id AND nv.nn > 0
-         |  JOIN n nc ON nc.vec_id = d.cent_id),
+    "ann_cell_stats" -> (IvfCellsCte +
+      s""",
          |g AS (
          |  SELECT cent_id, CAST(COUNT(*) AS BIGINT) AS n_vecs
          |  FROM asgn WHERE crnk <= 1 GROUP BY 1),
@@ -1930,22 +1838,8 @@ object AnnQueries {
         |  CAST((sm - ((sm % n_vecs + n_vecs) % n_vecs)) // n_vecs AS BIGINT) AS mean_margin_ppm
         |FROM g ORDER BY label""".stripMargin),
 
-    "ann_probe_cost" -> (QuantCte +
-      s""", cents AS (SELECT vec_id AS cent_id FROM n WHERE vec_id % $CentroidStepSql = 0 AND nn > 0),
-         |cdots AS (
-         |  SELECT a.vec_id, c.cent_id, SUM(a.q * b.q) AS dot
-         |  FROM e a
-         |  JOIN e b ON b.i = a.i
-         |  JOIN cents c ON c.cent_id = b.vec_id
-         |  GROUP BY 1, 2),
-         |asgn AS (
-         |  SELECT d.vec_id, d.cent_id,
-         |    ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
-         |      CAST(FLOOR(d.dot / (sqrt(nv.nn) * sqrt(nc.nn)) * 1000000.0 + 0.5) AS BIGINT) DESC,
-         |      d.cent_id) AS crnk
-         |  FROM cdots d
-         |  JOIN n nv ON nv.vec_id = d.vec_id AND nv.nn > 0
-         |  JOIN n nc ON nc.vec_id = d.cent_id),
+    "ann_probe_cost" -> (IvfCellsCte +
+      s""",
          |sizes AS (
          |  SELECT cent_id, CAST(COUNT(*) AS BIGINT) AS cell_n
          |  FROM asgn WHERE crnk <= 1 GROUP BY 1),
@@ -1993,22 +1887,8 @@ object AnnQueries {
       val (lnG, lastG) = FixedLnSql.chain("cl", "cpa", Seq("cent_id"), Seq("c"))
       val (lnP, lastP) = FixedLnSql.chain("per", "cpb",
         Seq("cent_id", "n_labels", "top_n", "slc"), Seq("n_vecs"))
-      QuantCte +
-        s""", cents AS (SELECT vec_id AS cent_id FROM n WHERE vec_id % $CentroidStepSql = 0 AND nn > 0),
-           |cdots AS (
-           |  SELECT a.vec_id, c.cent_id, SUM(a.q * b.q) AS dot
-           |  FROM e a
-           |  JOIN e b ON b.i = a.i
-           |  JOIN cents c ON c.cent_id = b.vec_id
-           |  GROUP BY 1, 2),
-           |asgn AS (
-           |  SELECT d.vec_id, d.cent_id,
-           |    ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
-           |      CAST(FLOOR(d.dot / (sqrt(nv.nn) * sqrt(nc.nn)) * 1000000.0 + 0.5) AS BIGINT) DESC,
-           |      d.cent_id) AS crnk
-           |  FROM cdots d
-           |  JOIN n nv ON nv.vec_id = d.vec_id AND nv.nn > 0
-           |  JOIN n nc ON nc.vec_id = d.cent_id),
+      IvfCellsCte +
+        s""",
            |cl AS (
            |  SELECT g.cent_id, CAST(emb.label AS BIGINT) AS label,
            |    CAST(COUNT(*) AS BIGINT) AS c
@@ -2034,22 +1914,8 @@ object AnnQueries {
       val (lnG, lastG) = FixedLnSql.chain("g", "cea", Seq("cent_id"), Seq("n_vecs"))
       val (lnP, lastP) = FixedLnSql.chain("per", "ceb",
         Seq("max_cell", "sln"), Seq("n_cells", "n_vectors"))
-      QuantCte +
-        s""", cents AS (SELECT vec_id AS cent_id FROM n WHERE vec_id % $CentroidStepSql = 0 AND nn > 0),
-           |cdots AS (
-           |  SELECT a.vec_id, c.cent_id, SUM(a.q * b.q) AS dot
-           |  FROM e a
-           |  JOIN e b ON b.i = a.i
-           |  JOIN cents c ON c.cent_id = b.vec_id
-           |  GROUP BY 1, 2),
-           |asgn AS (
-           |  SELECT d.vec_id, d.cent_id,
-           |    ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
-           |      CAST(FLOOR(d.dot / (sqrt(nv.nn) * sqrt(nc.nn)) * 1000000.0 + 0.5) AS BIGINT) DESC,
-           |      d.cent_id) AS crnk
-           |  FROM cdots d
-           |  JOIN n nv ON nv.vec_id = d.vec_id AND nv.nn > 0
-           |  JOIN n nc ON nc.vec_id = d.cent_id),
+      IvfCellsCte +
+        s""",
            |g AS (
            |  SELECT cent_id, CAST(COUNT(*) AS BIGINT) AS n_vecs
            |  FROM asgn WHERE crnk <= 1 GROUP BY 1),
@@ -2101,22 +1967,8 @@ object AnnQueries {
     // DedupQueries.EmbedPairCtes regenerates the planes in SQL): the
     // UNTHRESHOLDED pair set symmetrized into the per-vector top-5
     // the ivf_recall + probe_cost CTE chains joined to per-nprobe means
-    "ann_operating_point" -> (QuantCte +
-      s""", cents AS (SELECT vec_id AS cent_id FROM n WHERE vec_id % $CentroidStepSql = 0 AND nn > 0),
-         |cdots AS (
-         |  SELECT a.vec_id, c.cent_id, SUM(a.q * b.q) AS dot
-         |  FROM e a
-         |  JOIN e b ON b.i = a.i
-         |  JOIN cents c ON c.cent_id = b.vec_id
-         |  GROUP BY 1, 2),
-         |asgn AS (
-         |  SELECT d.vec_id, d.cent_id,
-         |    ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
-         |      CAST(FLOOR(d.dot / (sqrt(nv.nn) * sqrt(nc.nn)) * 1000000.0 + 0.5) AS BIGINT) DESC,
-         |      d.cent_id) AS crnk
-         |  FROM cdots d
-         |  JOIN n nv ON nv.vec_id = d.vec_id AND nv.nn > 0
-         |  JOIN n nc ON nc.vec_id = d.cent_id),
+    "ann_operating_point" -> (IvfCellsCte +
+      s""",
          |cells AS (SELECT vec_id AS cid, cent_id FROM asgn WHERE crnk <= 1),
          |sizes AS (
          |  SELECT cent_id, CAST(COUNT(*) AS BIGINT) AS cell_n
@@ -2373,118 +2225,33 @@ object AnnQueries {
 
     // IVF-PQ composition: the IVF cell/probe CTEs restrict the candidate
     // pairs, the PQ code/LUT CTEs rank them by ADC, exact re-rank last
-    "ann_ivf_pq" -> (QuantCte +
-      s""", cents AS (SELECT vec_id AS cent_id FROM n WHERE vec_id % $CentroidStepSql = 0 AND nn > 0),
-         |cdots AS (
-         |  SELECT a.vec_id, c.cent_id, SUM(a.q * b.q) AS dot
-         |  FROM e a
-         |  JOIN e b ON b.i = a.i
-         |  JOIN cents c ON c.cent_id = b.vec_id
-         |  GROUP BY 1, 2),
-         |asgn AS (
-         |  SELECT d.vec_id, d.cent_id,
-         |    ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
-         |      CAST(FLOOR(d.dot / (sqrt(nv.nn) * sqrt(nc.nn)) * 1000000.0 + 0.5) AS BIGINT) DESC,
-         |      d.cent_id) AS crnk
-         |  FROM cdots d
-         |  JOIN n nv ON nv.vec_id = d.vec_id AND nv.nn > 0
-         |  JOIN n nc ON nc.vec_id = d.cent_id),
+    "ann_ivf_pq" -> (IvfCellsCte +
+      s""",
          |cells AS (SELECT vec_id AS cid, cent_id FROM asgn WHERE crnk <= 1),
          |qprobes AS (SELECT vec_id AS qid, cent_id FROM asgn WHERE crnk <= 2 AND vec_id < $NumQueries),
          |cand AS (
          |  SELECT q.qid, cl.cid FROM qprobes q JOIN cells cl ON cl.cent_id = q.cent_id
          |  WHERE cl.cid <> q.qid),
-         |sub AS (
-         |  SELECT vec_id, CAST((i - 1) // 8 AS INT) AS sub, CAST((i - 1) % 8 AS INT) AS pos, q
-         |  FROM e),
-         |cdist AS (
-         |  SELECT a.vec_id, a.sub, c.vec_id AS code, CAST(SUM((a.q - c.q) * (a.q - c.q)) AS BIGINT) AS dist
-         |  FROM sub a JOIN sub c ON c.sub = a.sub AND c.pos = a.pos AND c.vec_id < 16
-         |  GROUP BY 1, 2, 3),
-         |codes AS (
-         |  SELECT vec_id AS cid, sub, code FROM (
-         |    SELECT vec_id, sub, code,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, code) AS rn
-         |    FROM cdist) WHERE rn = 1),
-         |lut AS (SELECT vec_id AS qid, sub, code, dist AS qdist FROM cdist WHERE vec_id < $NumQueries),
-         |adc AS (
-         |  SELECT ca.qid, ca.cid, CAST(SUM(l.qdist) AS BIGINT) AS adist
-         |  FROM cand ca
-         |  JOIN codes c ON c.cid = ca.cid
-         |  JOIN lut l ON l.qid = ca.qid AND l.sub = c.sub AND l.code = c.code
-         |  GROUP BY 1, 2),
-         |short AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT qid, cid,
-         |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adist, cid) AS srnk
-         |    FROM adc) WHERE srnk <= ${5 * TopK}),
-         |ex AS (
-         |  SELECT s.qid, s.cid, CAST(SUM((ea.q - eb.q) * (ea.q - eb.q)) AS BIGINT) AS dist
-         |  FROM short s
-         |  JOIN e ea ON ea.vec_id = s.qid
-         |  JOIN e eb ON eb.vec_id = s.cid AND eb.i = ea.i
-         |  GROUP BY 1, 2)
-         |SELECT qid, CAST(rnk AS BIGINT) AS rnk, cid, dist FROM (
-         |  SELECT qid, cid, dist,
-         |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist, cid) AS rnk
-         |  FROM ex) WHERE rnk <= $TopK
-         |ORDER BY qid, rnk""".stripMargin),
+         |""".stripMargin + pqOracle(
+        """adc AS (
+          |  SELECT ca.qid, ca.cid, CAST(SUM(l.qdist) AS BIGINT) AS adist
+          |  FROM cand ca
+          |  JOIN codes c ON c.cid = ca.cid
+          |  JOIN lut l ON l.qid = ca.qid AND l.sub = c.sub AND l.code = c.code
+          |  GROUP BY 1, 2)""".stripMargin)),
 
-    "ann_pq_topk" -> (QuantCte +
-      s""", sub AS (
-         |  SELECT vec_id, CAST((i - 1) // 8 AS INT) AS sub, CAST((i - 1) % 8 AS INT) AS pos, q
-         |  FROM e),
-         |cdist AS (
-         |  SELECT a.vec_id, a.sub, c.vec_id AS code, CAST(SUM((a.q - c.q) * (a.q - c.q)) AS BIGINT) AS dist
-         |  FROM sub a JOIN sub c ON c.sub = a.sub AND c.pos = a.pos AND c.vec_id < 16
-         |  GROUP BY 1, 2, 3),
-         |codes AS (
-         |  SELECT vec_id AS cid, sub, code FROM (
-         |    SELECT vec_id, sub, code,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, code) AS rn
-         |    FROM cdist) WHERE rn = 1),
-         |lut AS (SELECT vec_id AS qid, sub, code, dist AS qdist FROM cdist WHERE vec_id < $NumQueries),
-         |adc AS (
-         |  SELECT l.qid, c.cid, CAST(SUM(l.qdist) AS BIGINT) AS adist
-         |  FROM codes c JOIN lut l ON l.sub = c.sub AND l.code = c.code
-         |  WHERE c.cid <> l.qid
-         |  GROUP BY 1, 2),
-         |short AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT qid, cid,
-         |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adist, cid) AS srnk
-         |    FROM adc) WHERE srnk <= ${5 * TopK}),
-         |ex AS (
-         |  SELECT s.qid, s.cid, CAST(SUM((ea.q - eb.q) * (ea.q - eb.q)) AS BIGINT) AS dist
-         |  FROM short s
-         |  JOIN e ea ON ea.vec_id = s.qid
-         |  JOIN e eb ON eb.vec_id = s.cid AND eb.i = ea.i
-         |  GROUP BY 1, 2)
-         |SELECT qid, CAST(rnk AS BIGINT) AS rnk, cid, dist FROM (
-         |  SELECT qid, cid, dist,
-         |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist, cid) AS rnk
-         |  FROM ex) WHERE rnk <= $TopK
-         |ORDER BY qid, rnk""".stripMargin),
+    "ann_pq_topk" -> (QuantCte + ", " + pqOracle(
+      """adc AS (
+        |  SELECT l.qid, c.cid, CAST(SUM(l.qdist) AS BIGINT) AS adist
+        |  FROM codes c JOIN lut l ON l.sub = c.sub AND l.code = c.code
+        |  WHERE c.cid <> l.qid
+        |  GROUP BY 1, 2)""".stripMargin)),
 
     // IVF replay: deterministic seed centroids (vec_id % step), nearest-
     // cell assignment by max cosine with centroid-id tie-break, queries
     // probe their 2 nearest cells, exact cosine on the probed cells
-    "ann_ivf_topk" -> (QuantCte +
-      s""", cents AS (SELECT vec_id AS cent_id FROM n WHERE vec_id % $CentroidStepSql = 0 AND nn > 0),
-         |cdots AS (
-         |  SELECT a.vec_id, c.cent_id, SUM(a.q * b.q) AS dot
-         |  FROM e a
-         |  JOIN e b ON b.i = a.i
-         |  JOIN cents c ON c.cent_id = b.vec_id
-         |  GROUP BY 1, 2),
-         |asgn AS (
-         |  SELECT d.vec_id, d.cent_id,
-         |    ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
-         |      CAST(FLOOR(d.dot / (sqrt(nv.nn) * sqrt(nc.nn)) * 1000000.0 + 0.5) AS BIGINT) DESC,
-         |      d.cent_id) AS crnk
-         |  FROM cdots d
-         |  JOIN n nv ON nv.vec_id = d.vec_id AND nv.nn > 0
-         |  JOIN n nc ON nc.vec_id = d.cent_id),
+    "ann_ivf_topk" -> (IvfCellsCte +
+      s""",
          |cells AS (SELECT vec_id AS cid, cent_id FROM asgn WHERE crnk <= 1),
          |qprobes AS (SELECT vec_id AS qid, cent_id FROM asgn WHERE crnk <= 2 AND vec_id < $NumQueries),
          |icand AS (
@@ -2508,22 +2275,8 @@ object AnnQueries {
 
     // the IVF CTEs ranked to crnk <= 4 once, then each sweep point
     // re-filters the probe set and scores against the brute truth
-    "ann_ivf_recall" -> (QuantCte +
-      s""", cents AS (SELECT vec_id AS cent_id FROM n WHERE vec_id % $CentroidStepSql = 0 AND nn > 0),
-         |cdots AS (
-         |  SELECT a.vec_id, c.cent_id, SUM(a.q * b.q) AS dot
-         |  FROM e a
-         |  JOIN e b ON b.i = a.i
-         |  JOIN cents c ON c.cent_id = b.vec_id
-         |  GROUP BY 1, 2),
-         |asgn AS (
-         |  SELECT d.vec_id, d.cent_id,
-         |    ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
-         |      CAST(FLOOR(d.dot / (sqrt(nv.nn) * sqrt(nc.nn)) * 1000000.0 + 0.5) AS BIGINT) DESC,
-         |      d.cent_id) AS crnk
-         |  FROM cdots d
-         |  JOIN n nv ON nv.vec_id = d.vec_id AND nv.nn > 0
-         |  JOIN n nc ON nc.vec_id = d.cent_id),
+    "ann_ivf_recall" -> (IvfCellsCte +
+      s""",
          |cells AS (SELECT vec_id AS cid, cent_id FROM asgn WHERE crnk <= 1),
          |bdots AS (
          |  SELECT a.vec_id AS qid, b.vec_id AS cid, CAST(SUM(a.q * b.q) AS BIGINT) AS dot

@@ -37,18 +37,43 @@ object EmbIvfIndex {
 
   import IndexStore.{Ivf, Layout, Plain, tag}
 
-  private def assignOnce(e: DataFrame, cents: DataFrame): DataFrame = {
-    import e.sparkSession.implicits._
+  /** The nearest-centroid rule, the one place it is written: every row of
+    * `vecs` (`vec_id`, `q`, `nn`, any others) against the broadcast
+    * codebook `cents` (`cent_id`, `qc`, `nc`), scored `c_ppm` (cosine ppm,
+    * [[graft.operators.VectorOps.cosPpm]]) and ranked per `vec_id` by
+    * `c_ppm` desc, ties to the smaller `cent_id`; only `crnk <= keep` rows
+    * stay. Returns the input's columns plus `cent_id`, `qc`, `nc`, `dot`,
+    * `c_ppm` and `crnk`. `keep = 1` is the cell assignment, more is a
+    * query's probe order. Norms must be nonzero (the `nn > 0` rule).
+    */
+  private[graft] def rank(vecs: DataFrame, cents: DataFrame, keep: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"vec_id").orderBy($"c_ppm".desc, $"cent_id")
-    e.join(broadcast(cents), lit(true))
+      .partitionBy(col("vec_id")).orderBy(col("c_ppm").desc, col("cent_id"))
+    vecs.join(broadcast(cents), lit(true))
       .withColumn("dot", expr(
         "aggregate(zip_with(q, qc, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"))
-      .withColumn("c_ppm",
-        floor($"dot" / (sqrt($"nn") * sqrt($"nc")) * lit(1000000.0) + lit(0.5)).cast("long"))
+      .withColumn("c_ppm", graft.operators.VectorOps.cosPpm(col("dot"), col("nn"), col("nc")))
       .withColumn("crnk", row_number().over(w))
-      .filter($"crnk" === 1)
-      .select($"cent_id", $"vec_id", $"q", $"nn")
+      .filter(if (keep == 1) col("crnk") === 1 else col("crnk") <= keep)
+  }
+
+  /** The posting lists of the cells `probes` names (a few `cent_id` rows
+    * per query), partition-pruned, as the candidate side of a probe:
+    * (`cent_id`, `cid`, `qb`, `nb`). The distinct probed ids are collected
+    * here, when the DataFrame is built (bounded: |queries|·nprobe ids), into
+    * an `isin` filter on the partition column, so the scan lists and reads
+    * only those cells' directories. Dynamic partition pruning does not
+    * replace the list: without it the executed cells scan carries
+    * `dynamicpruningexpression(true)` under AQE and reads every cell.
+    * The list is fixed at construction; an append keeps it exact (the
+    * codebook is frozen), a rebuild under a live DataFrame does not.
+    */
+  private[graft] def probedCells(s: SparkSession, d: String, probes: DataFrame): DataFrame = {
+    import s.implicits._
+    val probed = probes.select($"cent_id").distinct()
+      .collect().map(_.getLong(0)).sorted.toSeq
+    cells(s, d).filter($"cent_id".isin(probed: _*))
+      .select($"cent_id", $"vec_id".as("cid"), $"q".as("qb"), $"nn".as("nb"))
   }
 
   /** Build the codebook + posting lists if this session hasn't yet. */
@@ -65,7 +90,8 @@ object EmbIvfIndex {
       val cents = e.filter($"vec_id" % AnnQueries.centroidStep(s, d) === 0)
         .select($"vec_id".as("cent_id"), $"q".as("qc"), $"nn".as("nc"))
       val cent = Ivf.create(s, cents, "cent", tg, Plain)
-      Ivf.create(s, assignOnce(e, cent), "cells", tg, Layout(partCols = Seq("cent_id"))): Unit
+      Ivf.create(s, rank(e, cent, 1).select($"cent_id", $"vec_id", $"q", $"nn"), "cells", tg,
+        Layout(partCols = Seq("cent_id"))): Unit
     }
   }
 
@@ -128,8 +154,8 @@ object EmbIvfIndex {
         s"$distinct distinct vec_ids) — appends must carry unique ids")
     // Zero-norm rows are dropped exactly as ensure's rebuild drops them —
     // append == rebuild must hold for degenerate batches too.
-    Ivf.append(s, assignOnce(newVecs.filter(col("nn") > 0), s.table(Ivf.table("cent", tg))),
-      "cells", tg)
+    Ivf.append(s, rank(newVecs.filter(col("nn") > 0), s.table(Ivf.table("cent", tg)), 1)
+      .select($"cent_id", $"vec_id", $"q", $"nn"), "cells", tg)
     Ivf.refresh(s, tg)
   }
 

@@ -8,7 +8,9 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FileSystem, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 
 /** Hadoop FileSystem plumbing for topic + metadata I/O.
   *
@@ -26,8 +28,8 @@ import org.apache.spark.sql.SparkSession
   * [[HadoopIO.conf]] register both by the constants below.
   *
   * Executor tasks get [[HadoopIO.conf]] as one broadcast
-  * `SerializableConfiguration` per scan (`TopicReaderFactory`) or
-  * `Topic.write`, not as a copy inside every task.
+  * `SerializableConfiguration` per session conf ([[HadoopIO.confBroadcast]]),
+  * shared by every scan (`TopicReaderFactory`) and `Topic.write`.
   */
 object HadoopIO {
 
@@ -59,25 +61,40 @@ object HadoopIO {
     * copy is cached per underlying SparkContext conf and refreshed only
     * when the active session changes.
     */
-  def conf(): Configuration = {
+  def conf(): Configuration = slot().conf
+
+  /** [[conf]] broadcast to executor tasks, made once per cached copy (15–18
+    * ms of driver time each, so not once per scan) and kept, never
+    * destroyed, until [[invalidateConfCache]] or a new session conf
+    * replaces the copy. Needs an active session.
+    */
+  def confBroadcast(): Broadcast[SerializableConfiguration] = slot().broadcast
+
+  /** the derived copy of the session conf `src`, and its broadcast on first use */
+  private final class Slot(val src: Configuration, val conf: Configuration) {
+    lazy val broadcast: Broadcast[SerializableConfiguration] =
+      SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf))
+  }
+
+  private def slot(): Slot = {
     val src = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration).orNull
     val cur = cached
-    if (cur != null && (cur._1 eq src)) cur._2
+    if (cur != null && (cur.src eq src)) cur
     else {
       val base =
         if (src == null) new Configuration() else new Configuration(src)
       base.set("fs.file.impl", LocalFileSystemImpl)
       base.setBoolean("fs.file.impl.disable.cache", true)
-      cached = (src, base)
-      base
+      cached = new Slot(src, base)
+      cached
     }
   }
 
-  /** (source session conf identity, derived copy) — single-slot cache. */
-  @volatile private var cached: (Configuration, Configuration) = null
+  /** keyed by the source session conf's identity — single-slot cache */
+  @volatile private var cached: Slot = null
 
-  /** Drop the cached derived copy. The cache is keyed by the session
+  /** Drop the cached derived copy and its broadcast. The cache is keyed by the session
     * conf's IDENTITY, so a caller that MUTATES the session's Hadoop conf
     * (e.g. registering a custom `fs.<scheme>.impl` — FaultInjectionSpec)
     * must invalidate or the stale copy keeps serving.

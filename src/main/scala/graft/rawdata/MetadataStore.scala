@@ -1,6 +1,6 @@
 package graft.rawdata
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 
@@ -53,13 +53,11 @@ object MetadataStore {
   /** `k-<b64url(key)>.v-<20-digit ts>-<uuid8>` */
   private val VersionedName = "^k-([A-Za-z0-9_-]*)\\.v-([0-9]{20}-[0-9a-f]{8})$".r
 
-  /** (encoded key → newest version file path), one listing */
-  private def currentFiles(dir: String): Map[String, Path] = {
-    val conf = HadoopIO.conf()
-    val fs = HadoopIO.fs(dir, conf)
-    val p = new Path(dir)
-    if (!fs.exists(p)) Map.empty
-    else fs.listStatus(p).iterator
+  /** (encoded key, version, path) of every version file: one LIST, and a
+    * missing store is empty (the `Topic.names` rule — no `exists` call first)
+    */
+  private def versions(fs: FileSystem, dir: String): Seq[(String, String, Path)] =
+    (try fs.listStatus(new Path(dir)).toSeq catch { case _: java.io.FileNotFoundException => Nil })
       .filter(_.isFile)
       .flatMap { st =>
         st.getPath.getName match {
@@ -67,10 +65,12 @@ object MetadataStore {
           case _ => None
         }
       }
-      .toSeq
+
+  /** (encoded key → newest version file path), one listing */
+  private def currentFiles(dir: String): Map[String, Path] =
+    versions(HadoopIO.fs(dir, HadoopIO.conf()), dir)
       .groupBy(_._1)
-      .map { case (k, versions) => k -> versions.maxBy(_._2)._3 }
-  }
+      .map { case (k, vs) => k -> vs.maxBy(_._2)._3 }
 
   private def readBytes(dir: String, p: Path): Array[Byte] = {
     val fs = HadoopIO.fs(dir, HadoopIO.conf())
@@ -102,16 +102,7 @@ object MetadataStore {
       throw new java.io.IOException(s"metadata commit failed for key '$key'")
     }
     // prune older versions of THIS key only (other keys untouched)
-    fs.listStatus(new Path(dir)).iterator
-      .filter(_.isFile)
-      .map(_.getPath)
-      .filter { q =>
-        q.getName match {
-          case VersionedName(k, v) => k == enc(key) && v < version
-          case _ => false
-        }
-      }
-      .foreach(q => fs.delete(q, false))
+    versions(fs, dir).foreach { case (k, v, q) => if (k == enc(key) && v < version) fs.delete(q, false) }
   }
 
   def readAll(spark: SparkSession, topicDir: String): DataFrame = {
@@ -138,21 +129,9 @@ object MetadataStore {
     */
   def remove(spark: SparkSession, topicDir: String, keys: Seq[String]): Unit = {
     val dir = storeDir(topicDir)
-    val conf = HadoopIO.conf()
-    val fs = HadoopIO.fs(dir, conf)
+    val fs = HadoopIO.fs(dir, HadoopIO.conf())
     val encoded = keys.map(enc).toSet
-    if (fs.exists(new Path(dir))) {
-      fs.listStatus(new Path(dir)).iterator
-        .filter(_.isFile)
-        .map(_.getPath)
-        .filter { q =>
-          q.getName match {
-            case VersionedName(k, _) => encoded.contains(k)
-            case _ => false
-          }
-        }
-        .foreach(q => fs.delete(q, false))
-    }
+    versions(fs, dir).foreach { case (k, _, q) => if (encoded.contains(k)) fs.delete(q, false) }
   }
 
   def keys(spark: SparkSession, topicDir: String): Seq[String] =

@@ -4,13 +4,13 @@ import java.time.{Instant, ZoneOffset, ZonedDateTime}
 import java.time.format.DateTimeFormatter
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.SerializableConfiguration
 
 /** One Avro file of a topic, as described by its filename alone
   * (reference: AvroFileMetadata.java:53-57 and README naming section —
@@ -197,11 +197,11 @@ object Topic {
     // skip). Broadcast once as 8-byte name hashes (PreExisting), so a
     // 1.5M-file topic costs one ~12 MB broadcast, not a per-task closure
     // of full name strings. A replay ships an empty snapshot. The tasks'
-    // Hadoop conf is broadcast once too.
+    // Hadoop conf is the session's one broadcast (HadoopIO.confBroadcast).
     val listed = prepareTopicDir(fs, topicDir)
     val sc = messages.sparkSession.sparkContext
     val pre = sc.broadcast(if (replay) PreExisting.of(Nil) else listed)
-    val conf = sc.broadcast(new SerializableConfiguration(HadoopIO.conf()))
+    val conf = HadoopIO.confBroadcast()
     val written =
       try {
         // repartition, not rebalance: the byte roll needs each window
@@ -216,7 +216,7 @@ object Topic {
         windowed.mapPartitions { in =>
           new FileGroupWriter(topicDir, cfg, HadoopIO.fs(topicDir, conf.value.value), pre.value).run(in)
         }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, fileEncoder)).collect().toSeq
-      } finally { pre.destroy(); conf.destroy() }
+      } finally pre.destroy()
     landed(topicDir, written)
   }
 
@@ -486,11 +486,15 @@ object Topic {
   def lastMessage(topicDir: String): Option[RawdataMessage] =
     listFiles(topicDir).lastOption.flatMap(lastOf(_, HadoopIO.conf()))
 
-  /** The same, as a (tiny) DataFrame: a seek to the last file's start. */
+  /** The same, as a one-row (or, for an empty topic, empty) frame of the
+    * `graft-topic` schema: one listing and one last-block read on the
+    * driver, no scan.
+    */
   def lastMessageDF(spark: SparkSession, topicDir: String): DataFrame =
-    seek(spark, topicDir, listFiles(topicDir).lastOption.fold(Long.MaxValue)(_.fromTsMs))
-      .orderBy(col("ulid_hex").desc)
-      .limit(1)
+    spark.createDataFrame(
+      lastMessage(topicDir).map(m => Row(m.id, m.orderingGroup.orNull, m.sequenceNumber, m.position,
+        m.data, Ulid.hex(m.id), Ulid.tsMs(m.id))).toList.asJava,
+      graft.sources.TopicDataSource.Schema)
 
   /** a file's last message: one seek to its last block via the filename's offset */
   private def lastOf(f: TopicFile, conf: org.apache.hadoop.conf.Configuration): Option[RawdataMessage] =

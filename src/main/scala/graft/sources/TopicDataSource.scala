@@ -17,7 +17,6 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.rawdata.{AvroCodec, HadoopIO, Topic, Ulid}
 
@@ -278,11 +277,11 @@ final case class TopicOffset(n: Long) extends Offset {
 
 final case class TopicInputPartition(filePaths: Seq[String]) extends InputPartition
 
-/** One per scan (batch, or micro-batch): it broadcasts [[HadoopIO.conf]]
-  * once, and every task of the scan opens its files with it.
+/** One per scan (batch, or micro-batch): every task of the scan opens its
+  * files with the session's one [[HadoopIO.confBroadcast]].
   */
 final class TopicReaderFactory(required: StructType) extends PartitionReaderFactory {
-  private val conf = SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(HadoopIO.conf()))
+  private[graft] val conf = HadoopIO.confBroadcast()
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new TopicPartitionReader(partition.asInstanceOf[TopicInputPartition].filePaths, conf.value.value, required)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.VectorOps
 import graft.queries.EmbIvfIndex
 
 /** Streaming vector-search serving — ann_ivf_index's streaming twin:
@@ -68,10 +69,8 @@ object IvfServeStream {
         .select($"cent_id", $"vec_id".as("cid"), $"q".as("qb"), $"nn".as("nb")),
         Seq("cent_id"))
       .filter($"cid" =!= $"qid")
-      .withColumn("dot", graft.operators.VectorOps.dotCol(col("qa"), col("qb")))
-      .withColumn("cosPpm",
-        floor($"dot" / (sqrt($"na") * sqrt($"nb")) * lit(1000000.0) + lit(0.5)).cast("long"))
-      .select($"qid", $"cid", $"cosPpm")
+      .select($"qid", $"cid",
+        VectorOps.cosPpm(VectorOps.dotCol($"qa", $"qb"), $"na", $"nb").as("cosPpm"))
       .as[Cand]
     implicit val stEnc = Encoders.product[Answer] // dummy, state never set
     cands.groupByKey(_.qid)(Encoders.scalaLong)

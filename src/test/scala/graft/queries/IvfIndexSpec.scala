@@ -161,4 +161,31 @@ class IvfIndexSpec extends SparkSpec {
     }
     assert(internalErr.getMessage.contains("repeats vec_ids internally"))
   }
+
+  test("each probe query reads exactly its probed cells' partitions") {
+    // a partition filter alone proves nothing (isnotnull(cent_id) is one,
+    // and a DPP-only scan reads every cell): count the partitions the
+    // executed cells scan read. sf0.1 (2,000 vectors) has 20 cells, so
+    // nprobe=4 over 5 queries cannot cover the index by construction.
+    val d = sf.replace("sf0.001", "sf0.1")
+    val cellCount = EmbIvfIndex.cells(spark, d).select($"cent_id").distinct().count()
+    val qs = graft.operators.VectorOps.quantized(spark, d)
+      .filter($"nn" > 0 && $"vec_id" < AnnQueries.NumQueries)
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    for ((name, nprobe) <- Seq("ann_ivf_index" -> 2, "ann_ivf_recall" -> 4, "ann_ivf_pq" -> 2)) {
+      val probed = EmbIvfIndex.rank(qs, EmbIvfIndex.cents(spark, d), nprobe)
+        .select($"cent_id").distinct().count()
+      val df = graft.SparkEntry.queries(name)(spark, d)
+      df.collect()
+      val read = Plans.collect(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec if s.relation.location.rootPaths.exists(p =>
+          p.toString.contains("graft-ivf-index") && p.toString.contains("cells")) =>
+          s.metrics("numPartitions").value
+      }
+      assert(read.nonEmpty, s"$name no longer reads the IVF posting lists")
+      assert(read.forall(_ == probed), s"$name read $read cell partitions for $probed probed cells")
+      assert(probed < cellCount, s"$name probed all $cellCount cells")
+      spark.catalog.clearCache()
+    }
+  }
 }

@@ -74,6 +74,14 @@ class FakeGsSpec extends SparkSpec with BeforeAndAfterAll {
     assert(last === "pos-49") // highest ULID timestamp, not lexical order
   }
 
+  test("lastMessageDF lists the topic once") {
+    val dir = bucketDir("fakegs-last")
+    Topic.write(msgs(0 until 30), dir, TopicConfig(maxWindowMs = 600000L))
+    val lists0 = FakeGsFileSystem.nLists.get()
+    assert(Topic.lastMessageDF(spark, dir).select($"position").as[String].collect().toSeq === Seq("pos-29"))
+    assert(FakeGsFileSystem.nLists.get() - lists0 === 1)
+  }
+
   test("MetadataStore round-trips through fakegs://") {
     val dir = bucketDir("fakegs-meta")
     Topic.write(msgs(0 until 5), dir, TopicConfig(maxWindowMs = 600000L))

@@ -92,10 +92,29 @@ class TopicSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val full = DriverDecode.frame(spark, dir).orderBy(col("ulid_hex").desc).limit(1)
       .select("position").collect().head.getString(0)
     assert(fast.position === full)
-    val viaScan = Topic.lastMessageDF(spark, dir).select("position")
-    assert(viaScan.collect().head.getString(0) === full)
-    val parts = scanPartitions(dir)(viaScan.collect())
-    assert(parts.nonEmpty && parts.forall(_ < Topic.listFiles(dir).size), s"$parts")
+    // the frame form is the same last message as a full scan's max ULID, and runs no scan
+    val cols = Seq("ulid_hex", "ts_ms", "position", "sequenceNumber", "orderingGroup").map(col)
+    val viaScan = Topic.readDF(spark, dir).orderBy(col("ulid_hex").desc).limit(1).select(cols: _*)
+    val frame = Topic.lastMessageDF(spark, dir).select(cols: _*)
+    assert(viaScan.collect().head.getString(2) === full)
+    assert(frame.collect().toSeq === viaScan.collect().toSeq)
+    assert(scanPartitions(dir)(frame.collect()) === Nil)
+  }
+
+  test("every scan of a session ships the one Hadoop conf broadcast") {
+    val dir = Topic.tempDir("topic-conf-bc")
+    Topic.write(messages, dir, EventsAsTopic.cfg)
+    def shipped(): Long = {
+      val df = Topic.readDF(spark, dir).filter(col("ts_ms") > 0L)
+      df.collect()
+      collect(df.queryExecution.executedPlan) {
+        case b: BatchScanExec => b.readerFactory.asInstanceOf[graft.sources.TopicReaderFactory].conf.id
+      }.distinct match { case Seq(id) => id }
+    }
+    val first = shipped()
+    assert(shipped() === first)
+    HadoopIO.invalidateConfCache()
+    assert(shipped() !== first)
   }
 
   test("cursor: exclusive resume yields the immediately-next message") {
