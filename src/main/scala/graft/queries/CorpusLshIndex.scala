@@ -112,8 +112,14 @@ object CorpusLshIndex {
     * indexed corpus. Session-scoped like the rest of the index: a crash
     * mid-append is repaired by dropping the four tables (ensure then
     * rebuilds from scratch).
+    *
+    * `onPairs` gets the batch's verified pairs (doc_a < doc_b,
+    * jaccard_ppm; every candidate touching the batch), forced, before any
+    * table is mutated and cached only during the call; if it throws,
+    * nothing is appended.
     */
-  def append(s: SparkSession, d: String, newDocs: DataFrame): Unit = Lsh.synchronized {
+  def append(s: SparkSession, d: String, newDocs: DataFrame,
+      onPairs: DataFrame => Unit = _ => ()): Unit = Lsh.synchronized {
     ensure(s, d)
     val tg = tag(d)
     val shNew = DedupQueries.shingleArrays(newDocs).persist()
@@ -131,10 +137,12 @@ object CorpusLshIndex {
       .distinct()
     val shAll = s.table(Lsh.table("sh", tg)).unionByName(shNew)
     val jacNew = DedupQueries.jaccardFor(shAll, candNew).persist()
-    jacNew.count(): Unit // force off the pre-append tables
-    Seq(jacNew -> "jac", shNew -> "sh", sigNew -> "sig", bandNew -> "band")
-      .foreach { case (df, part) => Lsh.append(s, df, part, tg) }
-    Seq(shNew, sigNew, bandNew, jacNew).foreach(_.unpersist())
+    try {
+      jacNew.count(): Unit // force off the pre-append tables
+      onPairs(jacNew)
+      Seq(jacNew -> "jac", shNew -> "sh", sigNew -> "sig", bandNew -> "band")
+        .foreach { case (df, part) => Lsh.append(s, df, part, tg) }
+    } finally Seq(shNew, sigNew, bandNew, jacNew).foreach(_.unpersist())
     refresh(s, d)
   }
 
@@ -187,9 +195,8 @@ object CorpusLshIndex {
       // caching it at amp=100 held the whole ×100 pair mass in memory
       // under the verify join (the one consumer) and OOM'd the probe.
       timed("verify") {
-        val cand = DedupQueries.embedProbes(e, bits).withColumnRenamed("vec_id", "va")
-          .join(DedupQueries.embedExactBands(e).withColumnRenamed("vec_id", "vb"),
-            Seq("tbl", "bits"))
+        val cand = DedupQueries.embedCollisions(
+            DedupQueries.embedProbes(e, bits), DedupQueries.embedExactBands(e))
           .filter(col("va") < col("vb"))
           .select(col("va"), col("vb"))
           .distinct()
@@ -226,12 +233,9 @@ object CorpusLshIndex {
     val bandNew = DedupQueries.embedExactBands(eNew)
     val probesNew = DedupQueries.embedProbes(eNew, bits)
     val bandOld = s.table(Lsh.table("eband", tg))
-    val cross = probesNew.withColumnRenamed("vec_id", "vn")
-      .join(bandOld.withColumnRenamed("vec_id", "vo"), Seq("tbl", "bits"))
-      .select(least(col("vn"), col("vo")).as("va"),
-        greatest(col("vn"), col("vo")).as("vb"))
-    val within = probesNew.withColumnRenamed("vec_id", "va")
-      .join(bandNew.withColumnRenamed("vec_id", "vb"), Seq("tbl", "bits"))
+    val cross = DedupQueries.embedCollisions(probesNew, bandOld) // va new, vb indexed
+      .select(least(col("va"), col("vb")).as("va"), greatest(col("va"), col("vb")).as("vb"))
+    val within = DedupQueries.embedCollisions(probesNew, bandNew)
       .filter(col("va") < col("vb"))
       .select(col("va"), col("vb"))
     val cand = cross.unionByName(within).distinct()
@@ -241,10 +245,11 @@ object CorpusLshIndex {
     val qAll = graft.operators.VectorOps.quantized(s, d)
       .unionByName(eNew.select(col("vec_id"), col("q"), col("nn")))
     val jacNew = DedupQueries.embedVerify(cand, qAll, qAll).persist()
-    jacNew.count(): Unit // force off the pre-append tables
-    Lsh.append(s, jacNew, "epair", tg)
-    Lsh.append(s, bandNew, "eband", tg)
-    Seq(eNew, jacNew).foreach(_.unpersist())
+    try {
+      jacNew.count(): Unit // force off the pre-append tables
+      Lsh.append(s, jacNew, "epair", tg)
+      Lsh.append(s, bandNew, "eband", tg)
+    } finally Seq(eNew, jacNew).foreach(_.unpersist())
     refresh(s, d)
   }
 

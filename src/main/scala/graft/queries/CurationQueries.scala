@@ -872,8 +872,7 @@ object CurationQueries {
         .join(norms.select($"label".as("lb"), $"nn".as("nb")), Seq("lb"))
         .filter($"na" > 0 && $"nb" > 0)
         .select($"la", $"lb",
-          floor($"dot" / (sqrt($"na") * sqrt($"nb")) * lit(1000000.0) + lit(0.5))
-            .cast("long").as("cos_ppm"))
+          graft.operators.VectorOps.cosPpm($"dot", $"na", $"nb").as("cos_ppm"))
         .orderBy($"la", $"lb")
     },
 

@@ -31,13 +31,6 @@ object DedupQueries {
   /** dd_containment keeps pairs where |A∩B| / min(|A|,|B|) ≥ 0.6 */
   private val ContainmentThresholdPpm = 600000L
 
-  /** per-doc DISTINCT word-3-shingle array (doc_id, ss) — fully narrow:
-    * the dedup is `array_distinct` on the not-yet-exploded array, so the
-    * whole shingle build costs ZERO shuffles (the earlier form shuffled
-    * every shingle STRING through a collect_set groupBy just to dedup;
-    * the downstream signature aggregation shuffles anyway, and after md5
-    * it carries 8-byte hashes instead of shingle text).
-    */
   /** distinct word-3-shingle array from a token-array column `tk` —
     * the ONE shingle recipe, shared by the batch chain and the streaming
     * near-dup gate so the two can never drift.
@@ -94,6 +87,13 @@ object DedupQueries {
       .withColumn("chunk_chars", length(col("ch")).cast("long"))
       .drop("nt", "ch")
 
+  /** per-doc DISTINCT word-3-shingle array (doc_id, ss) — fully narrow:
+    * the dedup is `array_distinct` on the not-yet-exploded array, so the
+    * whole shingle build costs ZERO shuffles (the earlier form shuffled
+    * every shingle STRING through a collect_set groupBy just to dedup;
+    * the downstream signature aggregation shuffles anyway, and after md5
+    * it carries 8-byte hashes instead of shingle text).
+    */
   private[graft] def shingleArrays(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
@@ -173,17 +173,6 @@ object DedupQueries {
       .select($"doc_id", sig.as("simhash"))
   }
 
-  /** exact jaccard_ppm for the LSH candidates of `arr` — the per-doc
-    * shingle-ARRAY relation from shingleArrays (persisted input).
-    *
-    * Scale shape: the wide work is proportional to the CANDIDATES, not
-    * the corpus. The per-doc shingle sets already exist as narrow arrays
-    * (no re-aggregation), get semi-filtered to the docs that actually
-    * appear in a candidate pair, and the intersection is per-pair
-    * `array_intersect` — no full-corpus shuffle of exploded shingles
-    * (the round-2 form joined the whole shingle table twice to verify a
-    * tiny candidate set: 35 s at sf0.1 for 31 output pairs).
-    */
   /** survivors of quality gate → exact keep-first → LSH near-dup removal,
     * with text retained (shared by pipe_clean_corpus and pipe_pack_corpus)
     */
@@ -211,31 +200,6 @@ object DedupQueries {
     kept1.join(losers, Seq("doc_id"), "left_anti")
   }
 
-  /** Connected components of an undirected edge list (a, b) by
-    * min-label propagation WITH pointer jumping: each round every node
-    * takes the min over its own label, its neighbors' labels, and the
-    * label OF its label (path halving). The jump makes rounds O(log
-    * diameter) instead of O(diameter) — a pure neighbor walk needs as
-    * many rounds as the longest chain, and near-dup chains (doc i ~
-    * doc i+1 in versioned or sliding content) can be arbitrarily long;
-    * with the jump, 25 rounds cover diameters past 2^25 (ComponentsSpec
-    * proves a 200-node path converges). Returns (doc_id, cluster_id =
-    * min member, n_members), one row per clustered doc.
-    *
-    * Each round CUTS LINEAGE with an eager localCheckpoint instead of
-    * persist/unpersist: round r's plan references round r-1, so
-    * unpersisting the previous labels invalidates the new cache (Spark
-    * re-cache-on-unpersist semantics) and every action re-runs the
-    * whole round chain — measured 0.8 s per re-read vs ~0.1 s
-    * checkpointed, 22 s vs ~4 s for dd_cluster at sf0.1. The checkpoint
-    * also keeps the plan O(1) per round instead of growing. (On a
-    * multi-executor cluster, swap for reliable checkpoint() if executor
-    * loss during the loop must be survivable — the loop is
-    * deterministic, so a rerun is also correct.) Convergence is the
-    * monotone checksum sum(label): labels only ever decrease, so an
-    * unchanged sum IS a fixpoint — one scalar action per round instead
-    * of a changed-rows join.
-    */
   /** Dispatcher: verified duplicate-pair graphs are usually FAR smaller
     * than the corpus (they are the duplicates), so below
     * `SmallGraphEdges` edges (≈16 MB of longs on the driver — the same
@@ -355,8 +319,30 @@ object DedupQueries {
     } else componentsByPropagation(e0)
   }
 
-  /** distributed min-label propagation with pointer jumping — the
-    * general path for pair graphs too large to collect
+  /** Connected components of an undirected edge list (a, b) by
+    * min-label propagation WITH pointer jumping: each round every node
+    * takes the min over its own label, its neighbors' labels, and the
+    * label OF its label (path halving). The jump makes rounds O(log
+    * diameter) instead of O(diameter) — a pure neighbor walk needs as
+    * many rounds as the longest chain, and near-dup chains (doc i ~
+    * doc i+1 in versioned or sliding content) can be arbitrarily long;
+    * with the jump, 25 rounds cover diameters past 2^25 (ComponentsSpec
+    * proves a 200-node path converges). Returns (doc_id, cluster_id =
+    * min member, n_members), one row per clustered doc.
+    *
+    * Each round CUTS LINEAGE with an eager localCheckpoint instead of
+    * persist/unpersist: round r's plan references round r-1, so
+    * unpersisting the previous labels invalidates the new cache (Spark
+    * re-cache-on-unpersist semantics) and every action re-runs the
+    * whole round chain — measured 0.8 s per re-read vs ~0.1 s
+    * checkpointed, 22 s vs ~4 s for dd_cluster at sf0.1. The checkpoint
+    * also keeps the plan O(1) per round instead of growing. (On a
+    * multi-executor cluster, swap for reliable checkpoint() if executor
+    * loss during the loop must be survivable — the loop is
+    * deterministic, so a rerun is also correct.) Convergence is the
+    * monotone checksum sum(label): labels only ever decrease, so an
+    * unchanged sum IS a fixpoint — one scalar action per round instead
+    * of a changed-rows join.
     */
   private[graft] def componentsByPropagation(edges: DataFrame): DataFrame = {
     val s = edges.sparkSession
@@ -406,11 +392,42 @@ object DedupQueries {
     jaccardFor(arr, candidatesFrom(arr.select($"doc_id", explode($"ss").as("s"))))
   }
 
-  /** exact jaccard_ppm for an externally supplied candidate-pair relation
-    * (doc_a, doc_b) — the reusable tail of jaccardOf, also fed by the
-    * incremental (new-batch × corpus) candidate generator
+  /** The bit-band rule (dd_simhash_pairs, mm_phash_*, PhashStream):
+    * one (…, band INT, bits LONG) row per band i < k, bits = (h >> i·b) &
+    * (2^b − 1) of the long hash column `h`, every input column passed
+    * through. Hashes within hamming k−1 share a band (pigeonhole). A
+    * literal struct array: a transform(sequence) lambda is interpreted.
     */
-  private[graft] def jaccardFor(arr: DataFrame, cand: DataFrame): DataFrame = {
+  private[graft] def bitBands(df: DataFrame, h: String, k: Int, b: Int): DataFrame = {
+    val keys = (0 until k).map(i => struct(lit(i).cast("int").as("band"),
+      shiftright(col(h), i * b).bitwiseAND(lit((1L << b) - 1)).as("bits")))
+    val passThrough = df.columns.map(col).toSeq
+    df.select(passThrough :+ explode(array(keys: _*)).as("bb"): _*)
+      .select(passThrough ++ Seq(col("bb.band").as("band"), col("bb.bits").as("bits")): _*)
+  }
+
+  /** every (band, bits) collision of two [[bitBands]] relations, aliased
+    * `a`/`b`, with hamming = bit_count(a.h xor b.h); the caller keeps its
+    * pair filter, radius cut and distinct
+    */
+  private[graft] def bitBandJoin(l: DataFrame, r: DataFrame, h: String): DataFrame =
+    l.as("a").join(r.as("b"), col("a.band") === col("b.band") && col("a.bits") === col("b.bits"))
+      .withColumn("hamming", bit_count(col(s"a.$h").bitwiseXOR(col(s"b.$h"))).cast("long"))
+
+  /** exact (doc_a, doc_b, jaccard_ppm) of a candidate relation over
+    * `arr`, the shingle arrays from shingleArrays. The wide work tracks
+    * the CANDIDATES, not the corpus (the round-2 exploded-shingle join
+    * took 35 s at sf0.1 for 31 output pairs).
+    */
+  private[graft] def jaccardFor(arr: DataFrame, cand: DataFrame): DataFrame =
+    candidateSets(arr, cand)
+      .select(col("doc_a"), col("doc_b"), jaccardPpm.as("jaccard_ppm"))
+
+  /** `cand` (doc_a, doc_b, …) plus endpoint arrays `sa`/`sb` from `arr`
+    * (semi-filtered to candidate docs first) and n_int = |sa ∩ sb|; a
+    * candidate with an endpoint missing from `arr` is dropped
+    */
+  private[graft] def candidateSets(arr: DataFrame, cand: DataFrame): DataFrame = {
     val s = arr.sparkSession
     import s.implicits._
     val candDocs = cand.select(explode(array($"doc_a", $"doc_b")).as("doc_id")).distinct()
@@ -419,10 +436,12 @@ object DedupQueries {
       .join(sets.select($"doc_id".as("doc_a"), $"ss".as("sa")), Seq("doc_a"))
       .join(sets.select($"doc_id".as("doc_b"), $"ss".as("sb")), Seq("doc_b"))
       .withColumn("n_int", size(array_intersect($"sa", $"sb")).cast("long"))
-      .select($"doc_a", $"doc_b",
-        floor($"n_int" / (size($"sa") + size($"sb") - $"n_int") * lit(1000000.0) + lit(0.5))
-          .cast("long").as("jaccard_ppm"))
   }
+
+  /** jaccard ppm of arrays `sa`, `sb` with |sa ∩ sb| = `n_int` */
+  private[graft] val jaccardPpm: Column =
+    floor(col("n_int") / (size(col("sa")) + size(col("sb")) - col("n_int")) *
+      lit(1000000.0) + lit(0.5)).cast("long")
 
   /** minhash permutation j: linear map of the shingle's single md5-derived
     * 60-bit value, reduced mod the Mersenne prime 2^31-1. One md5 per
@@ -465,15 +484,21 @@ object DedupQueries {
     hashed.groupBy($"doc_id").agg(minAggs.head, minAggs.tail: _*)
   }
 
+  /** The minhash band-key rule (SQL twin: `lshCtes`): Perms/`rows`
+    * bands of `rows` consecutive minhashes `h(j)`, keyed by the md5 of
+    * their ","-joined values — an array<struct<band, bkey>> to explode
+    */
+  private def bandKeys(rows: Int)(h: Int => Column): Column =
+    array((0 until Perms / rows).map { b =>
+      val parts = (0 until rows).map(r => h(b * rows + r).cast("string"))
+      struct(lit(b).as("band"), md5(concat_ws(",", parts: _*)).as("bkey"))
+    }: _*)
+
   /** (doc_id, band, bkey) from the signature relation */
-  private[graft] def bandsOfSigs(sigs: DataFrame): DataFrame = {
+  private[graft] def bandsOfSigs(sigs: DataFrame, rows: Int = BandRows): DataFrame = {
     val s = sigs.sparkSession
     import s.implicits._
-    val bandCols = (0 until Perms / BandRows).map { b =>
-      val parts = (0 until BandRows).map(r => col(s"h${b * BandRows + r}").cast("string"))
-      struct(lit(b).as("band"), md5(concat_ws(",", parts: _*)).as("bkey"))
-    }
-    sigs.select($"doc_id", explode(array(bandCols: _*)).as("bb"))
+    sigs.select($"doc_id", explode(bandKeys(rows)(j => col(s"h$j"))).as("bb"))
       .select($"doc_id", $"bb.band".as("band"), $"bb.bkey".as("bkey"))
   }
 
@@ -493,14 +518,10 @@ object DedupQueries {
       sh => conv(substring(md5(sh), 1, 15), 16, 10).cast("long") % P)
     def h(j: Int) =
       array_min(transform($"xs", x => (lit(permA(j)) * x + lit(permB(j))) % P))
-    val bandCols = (0 until Perms / BandRows).map { b =>
-      val parts = (0 until BandRows).map(r => h(b * BandRows + r).cast("string"))
-      struct(lit(b).as("band"), md5(concat_ws(",", parts: _*)).as("bkey"))
-    }
     val passThrough = arr.columns.filterNot(_ == "ss").map(col).toSeq
     arr.filter(size($"ss") > 0)
       .withColumn("xs", xs)
-      .withColumn("bb", explode(array(bandCols: _*)))
+      .withColumn("bb", explode(bandKeys(BandRows)(h)))
       .select((passThrough :+ $"ss") ++
         Seq($"bb.band".as("band"), $"bb.bkey".as("bkey")): _*)
   }
@@ -681,22 +702,10 @@ object DedupQueries {
     "dd_simhash_pairs" -> { (s, d) =>
       import s.implicits._
       val bb = simhashBandBits(t(s, d, "documents").count())
-      val mask = (1L << bb) - 1
-      val sig = simhashes(s, d).persist()
-      // banding as a LITERAL 4-struct array, not transform(sequence):
-      // the HOF lambda is interpreted (CodegenFallback) per corpus row,
-      // the unrolled array(struct(shiftright...)) stays codegen (§4);
-      // measured 3/3 rounds faster same-JVM and value-identical
-      val bandCols = (0 to 3).map(b => struct(lit(b).cast("int").as("band"),
-        shiftright($"simhash", b * bb).bitwiseAND(lit(mask)).as("bits")))
-      val banded = sig.select($"doc_id", $"simhash",
-        explode(array(bandCols: _*)).as("bb"))
-        .select($"doc_id", $"simhash", $"bb.band".as("band"), $"bb.bits".as("bits"))
-      banded.as("a").join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.bits") === col("b.bits") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-          bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("hamming"))
+      val banded = bitBands(simhashes(s, d).persist(), "simhash", 4, bb)
+      bitBandJoin(banded, banded, "simhash")
+        .filter(col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"), $"hamming")
         // hamming is a function of the pair, so filtering BEFORE the
         // distinct drops the out-of-radius majority from the dedup
         // shuffle instead of carrying every within-band collision
@@ -831,33 +840,11 @@ object DedupQueries {
       import s.implicits._
       val sigs = CorpusLshIndex.sigs(s, d)
       val arr = CorpusLshIndex.shingles(s, d) // (doc_id, ss) distinct arrays
-      val sh = arr.select($"doc_id", explode($"ss").as("s"))
-      val sizes = arr.select($"doc_id", size($"ss").cast("long").as("n_sh")).persist()
       val rows = Seq(2, 3, 4).map { r =>
-        val bandCols = (0 until Perms / r).map { b =>
-          val parts = (0 until r).map(i => col(s"h${b * r + i}").cast("string"))
-          struct(lit(b).as("band"), md5(concat_ws(",", parts: _*)).as("bkey"))
-        }
-        val bands = sigs.select($"doc_id", explode(array(bandCols: _*)).as("bb"))
-          .select($"bb.band".as("band"), $"bb.bkey".as("bkey"), $"doc_id")
-        val cand = bands.select($"band", $"bkey", $"doc_id".as("doc_a"))
-          .join(bands.select($"band", $"bkey", $"doc_id".as("doc_b")), Seq("band", "bkey"))
-          .filter($"doc_a" < $"doc_b")
-          .select($"doc_a", $"doc_b").distinct()
-          .persist() // feeds the intersect join AND the final aggregate
-        val inter = cand
-          .join(sh.select($"doc_id".as("doc_a"), $"s"), Seq("doc_a"))
-          .join(sh.select($"doc_id".as("doc_b"), $"s"), Seq("doc_b", "s"))
-          .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("n_int"))
-        cand
-          .join(inter, Seq("doc_a", "doc_b"), "left")
-          .join(sizes.select($"doc_id".as("doc_a"), $"n_sh".as("na")), Seq("doc_a"))
-          .join(sizes.select($"doc_id".as("doc_b"), $"n_sh".as("nb")), Seq("doc_b"))
-          .withColumn("ni", coalesce($"n_int", lit(0L)))
-          .withColumn("jac",
-            floor($"ni" / ($"na" + $"nb" - $"ni") * lit(1000000.0) + lit(0.5)).cast("long"))
+        // every signed doc has a shingle array: one row per candidate
+        jaccardFor(arr, pairsOfBands(bandsOfSigs(sigs, r)))
           .agg(count(lit(1)).as("n_candidates"),
-            coalesce(sum(when($"jac" >= 400000, 1L).otherwise(0L)), lit(0L)).as("n_true"))
+            coalesce(sum(when($"jaccard_ppm" >= 400000, 1L).otherwise(0L)), lit(0L)).as("n_true"))
           .select(lit(r.toLong).as("band_rows"), lit((Perms / r).toLong).as("n_bands"),
             $"n_candidates", $"n_true",
             expr("CASE WHEN n_candidates = 0 THEN 0 " +
@@ -1092,14 +1079,7 @@ object DedupQueries {
     // the wide work touches only within-bucket pairs, never the corpus.
     "dd_containment" -> { (s, d) =>
       import s.implicits._
-      val arr = CorpusLshIndex.shingles(s, d)
-      val cand = CorpusLshIndex.candidates(s, d)
-      val candDocs = cand.select(explode(array($"doc_a", $"doc_b")).as("doc_id")).distinct()
-      val sets = arr.join(candDocs, Seq("doc_id"), "left_semi")
-      cand
-        .join(sets.select($"doc_id".as("doc_a"), $"ss".as("sa")), Seq("doc_a"))
-        .join(sets.select($"doc_id".as("doc_b"), $"ss".as("sb")), Seq("doc_b"))
-        .withColumn("n_int", size(array_intersect($"sa", $"sb")).cast("long"))
+      candidateSets(CorpusLshIndex.shingles(s, d), CorpusLshIndex.candidates(s, d))
         .select($"doc_a", $"doc_b",
           size($"sa").cast("long").as("n_a"), size($"sb").cast("long").as("n_b"),
           floor($"n_int" / least(size($"sa"), size($"sb")) * lit(1000000.0) + lit(0.5))
@@ -1736,20 +1716,6 @@ object DedupQueries {
       .orderBy($"doc_id")
   }
 
-  /** corpus-wide embedding near-dup pairs (vec_a < vec_b, cos_ppm ≥
-    * threshold) — the dd_embed_lsh body, shared with emb_semdedup's
-    * cluster-and-keep composition
-    */
-  /** exact-verified cosine for EVERY multi-probe LSH candidate pair
-    * (vec_a < vec_b), unthresholded — dd_embed_lsh filters it to the
-    * near-dup cutoff; emb_knn ranks it into a k-NN graph
-    */
-  /** (vec_id, q, nn, bands) for any (vec_id, embedding) relation —
-    * zero-norm vectors are excluded before pairing: cosine against a
-    * zero vector is NaN and ANSI CAST(NaN AS BIGINT) throws (they stay
-    * in the corpus — emb_semdedup's left join gives them their own
-    * singleton cluster)
-    */
   /** Corpus-scaled band width: bits = max(8, ceil(log2(n/8))), i.e. a
     * CONSTANT expected bucket occupancy (~8) however big the corpus.
     * This is the load-bearing LSH scale rule: at fixed bits, occupancy
@@ -1784,6 +1750,12 @@ object DedupQueries {
   private[graft] def embedLshBits(s: SparkSession, d: String): Int =
     embedLshBitsFor(t(s, d, "embeddings").count())
 
+  /** (vec_id, q, nn, bands) for any (vec_id, embedding) relation —
+    * zero-norm vectors are excluded before pairing: cosine against a
+    * zero vector is NaN and ANSI CAST(NaN AS BIGINT) throws (they stay
+    * in the corpus — emb_semdedup's left join gives them their own
+    * singleton cluster)
+    */
   private[graft] def embedBanded(vecs: DataFrame, bits: Int): DataFrame =
     graft.operators.VectorOps.withHyperplaneBands(
       graft.operators.VectorOps.quantize(vecs)
@@ -1805,9 +1777,9 @@ object DedupQueries {
 
   /** probe set per table: own band + its one-bit flips (hamming-1
     * multi-probe; collision is symmetric, so probing from one side of a
-    * pair loses nothing)
+    * pair loses nothing): (vec_id, carry…, tbl, bits)
     */
-  private[graft] def embedProbes(e: DataFrame, bits: Int): DataFrame = {
+  private[graft] def embedProbes(e: DataFrame, bits: Int, carry: Seq[String] = Nil): DataFrame = {
     val s = e.sparkSession
     import s.implicits._
     // unrolled (tbl × {exact, bit-flips}) struct array instead of the
@@ -1821,9 +1793,18 @@ object DedupQueries {
     } yield struct(lit(t).cast("int").as("tbl"),
       (if (k == -1) $"bands".getItem(t)
        else $"bands".getItem(t).bitwiseXOR(lit(1L << k))).as("bits"))
-    e.select($"vec_id", explode(array(cols: _*)).as("bb"))
-      .select($"vec_id", $"bb.tbl".as("tbl"), $"bb.bits".as("bits"))
+    val keep = $"vec_id" +: carry.map(col)
+    e.select(keep :+ explode(array(cols: _*)).as("bb"): _*)
+      .select(keep ++ Seq($"bb.tbl".as("tbl"), $"bb.bits".as("bits")): _*)
   }
+
+  /** every (tbl, bits) collision of a probe (vec_id as `va`) with an
+    * exact band (vec_id as `vb`), once per table; the caller keeps its
+    * pair filter or orientation and distinct
+    */
+  private[graft] def embedCollisions(probes: DataFrame, bands: DataFrame): DataFrame =
+    probes.withColumnRenamed("vec_id", "va")
+      .join(bands.withColumnRenamed("vec_id", "vb"), Seq("tbl", "bits"))
 
   /** exact integer cosine for a (va, vb) candidate relation; endpoint
     * vectors come from `qa` / `qb` relations of (vec_id, q, nn)
@@ -1835,11 +1816,14 @@ object DedupQueries {
     val sb = qb.select($"vec_id".as("vb"), $"q".as("qb"), $"nn".as("nb"))
     cand.join(sa, Seq("va")).join(sb, Seq("vb"))
       .withColumn("dot", graft.operators.VectorOps.dotCol(col("qa"), col("qb")))
-      .withColumn("cos_ppm",
-        floor($"dot" / (sqrt($"na") * sqrt($"nb")) * lit(1000000.0) + lit(0.5)).cast("long"))
+      .withColumn("cos_ppm", graft.operators.VectorOps.cosPpm($"dot", $"na", $"nb"))
       .select($"va".as("vec_a"), $"vb".as("vec_b"), $"cos_ppm")
   }
 
+  /** exact-verified cosine for EVERY multi-probe LSH candidate pair
+    * (vec_a < vec_b), unthresholded, built from scratch — the reference
+    * chain the materialized embed-pair index is checked against
+    */
   private[graft] def embedLshPairsRaw(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val bits = embedLshBits(s, d)
@@ -1852,8 +1836,10 @@ object DedupQueries {
     embedVerify(cand, e, e)
   }
 
-  /** thresholded near-dup pairs, read from the materialized embed-pair
-    * index (built once per corpus; CorpusLshIndex.embedPairs)
+  /** corpus-wide embedding near-dup pairs (vec_a < vec_b, cos_ppm ≥
+    * threshold) — the dd_embed_lsh body, shared with emb_semdedup's
+    * cluster-and-keep composition — read from the materialized
+    * embed-pair index (built once per corpus; CorpusLshIndex.embedPairs)
     */
   private[graft] def embedLshPairs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -1862,7 +1848,7 @@ object DedupQueries {
       .orderBy($"vec_a", $"vec_b")
   }
 
-  private val EmbedLshTables = 10
+  private[graft] val EmbedLshTables = 10
   private val EmbedLshBits = 8
   /** near-dup cutoff for dd_embed_lsh (the synthetic corpus's similar
     * pairs live in the 0.35–0.48 cosine range)

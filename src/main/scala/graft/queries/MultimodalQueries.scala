@@ -28,45 +28,36 @@ object MultimodalQueries {
       .select($"position", explode($"data").as(Seq("key", "payload")))
   }
 
+  /** (carry…, phash) of each row of a (…, txt) relation whose txt has at
+    * least 4 chars: the native single-pass phash32 kernel — row-local
+    * (no gram explode, no 32-column grouped aggregation), bit-equal to
+    * the SQL form by the order-independence of the ±1 bit sums
+    * (PhashKernelSpec); the oracles keep the explicit SQL replay
+    */
+  private[graft] def phashed(p: DataFrame, carry: Seq[String]): DataFrame =
+    p.filter(length(col("txt")) >= 4).select(carry.map(col) :+
+      org.apache.spark.sql.graftbridge.ColumnBridge.column(graft.functions.Phash32(
+        org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("txt")))).as("phash"): _*)
+
+  /** (position, phash) of every `props` payload */
+  private def phashSigs(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    phashed(payloads(s, d, 300).filter($"key" === "props")
+      .select($"position", decode($"payload", "UTF-8").as("txt")), Seq("position"))
+  }
+
   /** the shared banded phash candidate relation (pos_a, pos_b, hamming),
     * consumed by mm_phash_pairs (≤3 cut), mm_phash_hist (full curve) and
-    * transitively mm_phash_clusters: signature via the native single-pass
-    * phash32 kernel — row-local (no gram explode, no 32-column grouped
-    * aggregation), bit-equal to the SQL form by the order-independence of
-    * the ±1 bit sums (PhashKernelSpec); the oracles keep the explicit SQL
-    * replay. Candidates come from 4×8-bit band buckets, never all-pairs.
-    * The signature relation is persisted (caller owns the cache scope —
-    * the SparkEntry contract).
+    * transitively mm_phash_clusters: candidates come from 4×8-bit band
+    * buckets ([[DedupQueries.bitBands]]), never all-pairs. The signature
+    * relation is persisted (caller owns the cache scope — the SparkEntry
+    * contract).
     */
-  /** the 4 8-bit phash band structs as literal codegen'd columns —
-    * (band INT, bits LONG), identical values to the former
-    * transform(sequence(0,3), ...) interpreted lambda
-    */
-  private def phashBandCols(phash: org.apache.spark.sql.Column): Seq[org.apache.spark.sql.Column] =
-    (0 to 3).map(b => struct(lit(b).cast("int").as("band"),
-      shiftright(phash, b * 8).bitwiseAND(lit(255L)).as("bits")))
-
   private def phashCandidates(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val sig = payloads(s, d, 300).filter($"key" === "props")
-      .select($"position", decode($"payload", "UTF-8").as("txt"))
-      .filter(length($"txt") >= 4)
-      .select($"position",
-        org.apache.spark.sql.graftbridge.ColumnBridge.column(
-          graft.functions.Phash32(
-            org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("txt")))).as("phash"))
-      .persist()
-    // literal 4-struct band array instead of an interpreted
-    // transform(sequence) lambda per row (§4; same rewrite as
-    // dd_simhash_pairs) — value-identical, stays inside codegen
-    val banded = sig.select($"position", $"phash",
-        explode(array(phashBandCols($"phash"): _*)).as("bb"))
-      .select($"position", $"phash", $"bb.band".as("band"), $"bb.bits".as("bits"))
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bits") === col("b.bits") &&
-          col("a.position") < col("b.position"))
-      .select(col("a.position").as("pos_a"), col("b.position").as("pos_b"),
-        bit_count(col("a.phash").bitwiseXOR(col("b.phash"))).cast("long").as("hamming"))
+    val banded = DedupQueries.bitBands(phashSigs(s, d).persist(), "phash", 4, 8)
+    DedupQueries.bitBandJoin(banded, banded, "phash")
+      .filter(col("a.position") < col("b.position"))
+      .select(col("a.position").as("pos_a"), col("b.position").as("pos_b"), col("hamming"))
       .distinct()
   }
 
@@ -297,15 +288,7 @@ object MultimodalQueries {
     // bucket space, 4-row rollup.
     "mm_band_stats" -> { (s, d) =>
       import s.implicits._
-      val sig = payloads(s, d, 300).filter($"key" === "props")
-        .select($"position", decode($"payload", "UTF-8").as("txt"))
-        .filter(length($"txt") >= 4)
-        .select($"position",
-          org.apache.spark.sql.graftbridge.ColumnBridge.column(
-            graft.functions.Phash32(
-              org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("txt")))).as("phash"))
-      sig.select(explode(array(phashBandCols($"phash"): _*)).as("bb"))
-        .select($"bb.band".as("band"), $"bb.bits".as("bits"))
+      DedupQueries.bitBands(phashSigs(s, d), "phash", 4, 8)
         .groupBy($"band", $"bits").agg(count(lit(1)).as("c"))
         .groupBy($"band".cast("long").as("band"))
         .agg(sum($"c").as("n_assets"), count(lit(1)).as("n_buckets"),

@@ -187,33 +187,40 @@ final class TopicScan(path: String, loMs: Long, hiMs: Long, required: StructType
   *
   * Offsets index this stream's DISCOVERY ORDER (files sorted by name can
   * land out of ULID order under a distributed publish; discovery order is
-  * append-only, which offsets must be). The discovery log is DURABLE: it
-  * is rewritten under the query's checkpoint location before a new
-  * latestOffset is announced, so Spark can only commit a batch whose
-  * file list survives a restart — delivery is exactly-once across
-  * restarts (the mapping offset index → file path is stable). A log that
-  * no longer covers a checkpointed offset fails loudly instead of
-  * silently dropping files.
+  * append-only, which offsets must be). The discovery log is DURABLE:
+  * each growth writes one segment of only the new names,
+  * `graft-discovery-<start offset>.log` under the query's checkpoint
+  * location (temp name + rename; a pre-segment `graft-discovery.log` is
+  * the segment at 0), before a new latestOffset is announced, so Spark
+  * can only commit a batch whose file list survives a restart —
+  * delivery is exactly-once across restarts (the mapping offset index →
+  * file path is stable). A log that no longer covers a checkpointed
+  * offset fails loudly instead of silently dropping files.
   */
 final class TopicMicroBatchStream(
     path: String, loMs: Long, hiMs: Long, required: StructType, checkpointLocation: String)
     extends MicroBatchStream {
 
-  private val logPath = HadoopIO.child(checkpointLocation, "graft-discovery.log")
-  private val logTmp = HadoopIO.child(checkpointLocation, ".graft-discovery.log.tmp")
+  private val Segment = """graft-discovery-(\d+)\.log""".r
 
   private val discovered = scala.collection.mutable.ArrayBuffer.empty[String]
   private val known = scala.collection.mutable.HashSet.empty[String]
   loadLog()
 
-  /** restore the discovery order persisted by a previous run (falls back
-    * to the temp file if a crash landed between delete and rename)
+  /** restore the discovery order of a previous run: the segments in
+    * offset order, each starting where the one before ended
     */
   private def loadLog(): Unit = {
     val fs = HadoopIO.fs(checkpointLocation, HadoopIO.conf())
-    val src = if (fs.exists(logPath)) Some(logPath)
-      else if (fs.exists(logTmp)) Some(logTmp) else None
-    src.foreach { p =>
+    val listed = try fs.listStatus(new org.apache.hadoop.fs.Path(checkpointLocation)).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    listed.map(st => (st.getPath.getName, st.getPath)).collect {
+      case ("graft-discovery.log", p) => 0L -> p
+      case (Segment(start), p) => start.toLong -> p
+    }.sortBy(_._1).foreach { case (start, p) =>
+      if (start != discovered.size)
+        throw new IllegalStateException(
+          s"discovery log segment $p starts at $start but the log before it holds ${discovered.size} files")
       val in = fs.open(p)
       val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
       text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).foreach { f =>
@@ -222,25 +229,26 @@ final class TopicMicroBatchStream(
     }
   }
 
-  /** rewrite the log (tiny: one line per file) — called only when the
-    * discovery order grew, BEFORE the new offset is announced
+  /** one new segment of the names discovered from offset `from` on —
+    * written only on growth, BEFORE the new offset is announced
     */
-  private def saveLog(): Unit = {
+  private def saveLog(from: Int): Unit = {
     val fs = HadoopIO.fs(checkpointLocation, HadoopIO.conf())
+    val seg = HadoopIO.child(checkpointLocation, s"graft-discovery-$from.log")
+    val tmp = HadoopIO.child(checkpointLocation, s".graft-discovery-$from.log.tmp")
     fs.mkdirs(new org.apache.hadoop.fs.Path(checkpointLocation))
-    val out = fs.create(logTmp, true)
-    try out.write(discovered.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
-    if (fs.exists(logPath)) fs.delete(logPath, false)
-    if (!fs.rename(logTmp, logPath))
-      throw new IllegalStateException(s"failed to persist discovery log $logPath")
+    val out = fs.create(tmp, true)
+    try out.write(discovered.view.drop(from).mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(tmp, seg))
+      throw new IllegalStateException(s"failed to persist discovery log segment $seg")
   }
 
   private def discover(): Unit = synchronized {
-    var grew = false
+    val from = discovered.size
     Topic.pruneRange(Topic.listFiles(path), loMs, hiMs).foreach { f =>
-      if (known.add(f.path)) { discovered += f.path; grew = true }
+      if (known.add(f.path)) discovered += f.path
     }
-    if (grew) saveLog()
+    if (discovered.size > from) saveLog(from)
   }
 
   override def initialOffset(): Offset = TopicOffset(0)
@@ -258,7 +266,7 @@ final class TopicMicroBatchStream(
       if (e > discovered.size)
         throw new IllegalStateException(
           s"discovery log covers ${discovered.size} files but the checkpoint references offset $e " +
-            s"— checkpoint/log mismatch for $logPath")
+            s"— checkpoint/log mismatch under $checkpointLocation")
       discovered.slice(s, e).toVector
     }
     TopicDataSource.partitions(slice)

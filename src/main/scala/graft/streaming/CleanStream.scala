@@ -5,6 +5,17 @@ import org.apache.spark.sql.functions._
 
 import graft.queries.{CorpusLshIndex, DedupQueries, SamplingQueries, TextQueries}
 
+/** Ownership handle for a streaming gate's persisted STATIC side (the
+  * corpus index relations every micro-batch reuses). The gate's plan
+  * holds these caches for its whole run; close() releases them when the
+  * stream is torn down — without it, a long-lived session cycling gates
+  * accumulates pinned blocks (the cache-scope contract CacheScopeSpec
+  * enforces for the batch operators).
+  */
+final class GateCaches private[streaming] (cached: Seq[DataFrame]) extends AutoCloseable {
+  override def close(): Unit = cached.foreach(_.unpersist(): Unit)
+}
+
 /** Streaming head of the corpus-cleaning pipeline: documents tailed from
   * a topic are quality-gated and exactly deduplicated AS THEY ARRIVE,
   * instead of in a nightly batch over the full corpus.
@@ -20,17 +31,6 @@ import graft.queries.{CorpusLshIndex, DedupQueries, SamplingQueries, TextQueries
   * bound — the standard split between a streaming ingest gate and a
   * periodic wide-join compaction.
   */
-/** Ownership handle for a streaming gate's persisted STATIC side (the
-  * corpus index relations every micro-batch reuses). The gate's plan
-  * holds these caches for its whole run; close() releases them when the
-  * stream is torn down — without it, a long-lived session cycling gates
-  * accumulates pinned blocks (the cache-scope contract CacheScopeSpec
-  * enforces for the batch operators).
-  */
-final class GateCaches private[streaming] (cached: Seq[DataFrame]) extends AutoCloseable {
-  override def close(): Unit = cached.foreach(_.unpersist(): Unit)
-}
-
 object CleanStream {
 
   /** `docs`: streaming DataFrame with (doc_id, text, source, ts).
@@ -89,9 +89,7 @@ object CleanStream {
         col("n.ss").as("sa"), col("c.doc_id").as("match_doc"))
       .join(arrC.select($"doc_id".as("match_doc"), $"ss".as("sb")), Seq("match_doc"))
       .withColumn("n_int", size(array_intersect($"sa", $"sb")).cast("long"))
-      .withColumn("jaccard_ppm",
-        floor($"n_int" / (size($"sa") + size($"sb") - $"n_int") * lit(1000000.0) + lit(0.5))
-          .cast("long"))
+      .withColumn("jaccard_ppm", DedupQueries.jaccardPpm)
       .filter($"jaccard_ppm" >= thresholdPpm)
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("doc_id", "match_doc")
@@ -234,10 +232,16 @@ object CleanStream {
     * keeps "index == everything seen so far" as durable cross-batch
     * state (no unbounded executor state — the index is a table).
     *
+    * The flags are the append's own cross pairs (batch × pre-append
+    * index), read through its `onPairs` hook: each batch is shingled,
+    * banded and verified once, and one whose `onBatch` throws is not
+    * appended.
+    *
     * `docs`: streaming (doc_id, text, …) with doc_ids disjoint from the
     * corpus and each other. `onBatch` receives each micro-batch's flag
-    * relation (doc_id, match_doc, jaccard_ppm). Returns the started
-    * query (caller stops it).
+    * relation (doc_id, match_doc, jaccard_ppm); the frame is valid only
+    * during the call (its cached pairs are released when it returns).
+    * Returns the started query (caller stops it).
     */
   def indexMaintainingNearDup(docs: DataFrame, d: String,
       thresholdPpm: Long = 400000)(onBatch: DataFrame => Unit) = {
@@ -245,25 +249,17 @@ object CleanStream {
       val s = batch.sparkSession
       import s.implicits._
       val b = batch.select($"doc_id", $"text").persist()
-      val bandsN = DedupQueries.bandsFrom(
-        DedupQueries.shinglesOf(b))
-      val bandsC = CorpusLshIndex.bands(s, d)
-      val cand = bandsN.as("n").join(bandsC.as("c"),
-          col("n.band") === col("c.band") && col("n.bkey") === col("c.bkey") &&
-            col("n.doc_id") =!= col("c.doc_id"))
-        .select(col("n.doc_id").as("doc_a"), col("c.doc_id").as("doc_b"))
-        .distinct()
-      val arrAll = CorpusLshIndex.shingles(s, d)
-        .unionByName(DedupQueries.shingleArrays(b))
-      // pinned BEFORE the append below mutates the tables it reads
-      val flags = DedupQueries.jaccardFor(arrAll, cand)
-        .filter(col("jaccard_ppm") >= thresholdPpm)
-        .select(col("doc_a").as("doc_id"), col("doc_b").as("match_doc"),
-          col("jaccard_ppm"))
-        .localCheckpoint(true)
-      onBatch(flags)
-      CorpusLshIndex.append(s, d, b) // the batch joins the corpus
-      b.unpersist(): Unit
+      val ids = b.select($"doc_id")
+      // pairs with exactly one endpoint in the batch, batch doc first
+      try CorpusLshIndex.append(s, d, b, onPairs = pairs =>
+        onBatch(pairs.filter($"jaccard_ppm" >= thresholdPpm)
+          .select(explode(array(struct($"doc_a".as("doc_id"), $"doc_b".as("match_doc")),
+            struct($"doc_b".as("doc_id"), $"doc_a".as("match_doc")))).as("p"), $"jaccard_ppm")
+          .select($"p.doc_id", $"p.match_doc", $"jaccard_ppm")
+          .join(ids, Seq("doc_id"), "left_semi")
+          .join(ids.select($"doc_id".as("match_doc")), Seq("match_doc"), "left_anti")
+          .select($"doc_id", $"match_doc", $"jaccard_ppm"))
+      ) finally b.unpersist(): Unit
     }.start()
   }
 
@@ -325,18 +321,6 @@ object CleanStream {
       .drop("__h", "milli")
   }
 
-  /** Streaming QUALITY-WEIGHTED sampling gate — the streaming twin of
-    * samp_quality: each arriving document is accepted with probability
-    * quality/2, decided by the deterministic md5 hash (keep iff
-    * h·2·10⁶ < quality_ppm·2³², integer on both sides). Entirely
-    * STATELESS — one narrow per-row projection, no watermark, no state
-    * store — so the gate adds nothing to a stream's state footprint and
-    * its verdicts are id-identical to the batch sampler on the same
-    * rows (StreamQualitySampleSpec).
-    *
-    * `docs`: streaming (doc_id, text, source, ...). Returns
-    * (doc_id, source, q_ppm, keep).
-    */
   /** Streaming PII-SCRUB gate — txt_scrub's stream twin: every arriving
     * document's text is redacted (emails/URLs/long digit runs → typed
     * masks, in txt_scrub's pass order) BEFORE it is written anywhere
@@ -356,6 +340,18 @@ object CleanStream {
       .withColumn("n_masks",
         size(expr(s"regexp_extract_all(text, '${TextQueries.MaskAlt}', 0)")).cast("long"))
 
+  /** Streaming QUALITY-WEIGHTED sampling gate — the streaming twin of
+    * samp_quality: each arriving document is accepted with probability
+    * quality/2, decided by the deterministic md5 hash (keep iff
+    * h·2·10⁶ < quality_ppm·2³², integer on both sides). Entirely
+    * STATELESS — one narrow per-row projection, no watermark, no state
+    * store — so the gate adds nothing to a stream's state footprint and
+    * its verdicts are id-identical to the batch sampler on the same
+    * rows (StreamQualitySampleSpec).
+    *
+    * `docs`: streaming (doc_id, text, source, ...). Returns
+    * (doc_id, source, q_ppm, keep).
+    */
   def qualitySampleGate(docs: DataFrame): DataFrame =
     TextQueries.qualityScored(docs)
       .withColumn("q_ppm",

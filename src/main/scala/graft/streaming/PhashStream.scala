@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.queries.{DedupQueries, MultimodalQueries}
 
 /** Streaming perceptual-hash near-dup gate — mm_phash_pairs' streaming
   * twin: each arriving binary payload is phashed AS IT LANDS and probed
@@ -23,25 +25,14 @@ import org.apache.spark.sql.functions._
   */
 object PhashStream {
 
-  /** (position[, ts], band, bits, phash) banded rows of a
+  /** (position[, ts], phash, band, bits) banded rows of a
     * (position[, ts], txt) relation — shared shape for the static index
-    * and the arrival side. The signature is the native single-pass
-    * phash32 kernel (row-local, codegen'd — what keeps the gate
-    * stateless AND off the interpreted HOF path).
+    * and the arrival side: the batch operator's phash32 kernel
+    * (row-local, codegen'd — what keeps the gate stateless) and 4×8-bit
+    * bands
     */
-  private def banded(p: DataFrame, carry: Seq[String]): DataFrame = {
-    import p.sparkSession.implicits._
-    val cols = carry.map(col) ++ Seq($"phash", $"bb.band".as("band"), $"bb.bits".as("bits"))
-    p.filter(length($"txt") >= 4)
-      .withColumn("phash",
-        org.apache.spark.sql.graftbridge.ColumnBridge.column(
-          graft.functions.Phash32(
-            org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("txt")))))
-      .select(carry.map(col) :+ $"phash" :+
-        explode(expr(
-          "transform(sequence(0, 3), b -> named_struct('band', b, 'bits', (phash >> (b * 8)) & 255))")).as("bb"): _*)
-      .select(cols: _*)
-  }
+  private def banded(p: DataFrame, carry: Seq[String]): DataFrame =
+    DedupQueries.bitBands(MultimodalQueries.phashed(p, carry), "phash", 4, 8)
 
   /** near-dup flags. `assets`: streaming (position, ts, txt). `corpus`:
     * static (position, txt). Returns (position, ts, match_pos, hamming).
@@ -53,19 +44,14 @@ object PhashStream {
   def flagsScoped(assets: DataFrame, corpus: DataFrame,
       watermark: String = "1 hour"): (DataFrame, GateCaches) = {
     import corpus.sparkSession.implicits._
-    val idx = banded(corpus, Seq("position"))
-      .withColumnRenamed("position", "match_pos")
-      .withColumnRenamed("phash", "match_phash")
-      .persist()
-    val out = banded(assets, Seq("position", "ts"))
-      .join(idx, Seq("band", "bits"))
-      .filter($"position" =!= $"match_pos")
-      .withColumn("hamming",
-        bit_count($"phash".bitwiseXOR($"match_phash")).cast("long"))
+    val idx = banded(corpus, Seq("position")).persist()
+    val out = DedupQueries.bitBandJoin(banded(assets, Seq("position", "ts")), idx, "phash")
+      .filter(col("a.position") =!= col("b.position"))
       .filter($"hamming" <= 3)
+      .select(col("a.position").as("position"), col("a.ts").as("ts"),
+        col("b.position").as("match_pos"), $"hamming")
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("position", "match_pos")
-      .select($"position", $"ts", $"match_pos", $"hamming")
     (out, new GateCaches(Seq(idx)))
   }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame}
 
 import graft.operators.VectorOps
+import graft.queries.DedupQueries
 
 /** Streaming vector-similarity gate — dd_embed_lsh's stream twin: each
   * ARRIVING embedding is checked against the existing corpus's
@@ -27,12 +27,12 @@ import graft.operators.VectorOps
   */
 object VectorStream {
 
-  private val Tables = 10
   private val Bits = 8
 
   /** `arrivals`: streaming with (vec_id, embedding, ts). `corpus`:
     * static with (vec_id, embedding). Returns (vec_id, ts, match_vec,
-    * cos_ppm) for every corpus vector above `thresholdPpm`.
+    * cos_ppm) for every corpus vector above `thresholdPpm`. Banding is
+    * the batch index's, at a fixed 8 bits.
     */
   def simFlags(arrivals: DataFrame, corpus: DataFrame,
       thresholdPpm: Long = 350000, watermark: String = "1 hour"): DataFrame =
@@ -41,31 +41,18 @@ object VectorStream {
   def simFlagsScoped(arrivals: DataFrame, corpus: DataFrame,
       thresholdPpm: Long = 350000, watermark: String = "1 hour"): (DataFrame, GateCaches) = {
     import corpus.sparkSession.implicits._
-    val e = VectorOps.withHyperplaneBands(
-      VectorOps.quantize(corpus).select($"vec_id", $"q", $"nn"), Tables, Bits).persist()
-    // corpus side: exact band per table
-    val bands = e.select($"vec_id".as("match_vec"), explode(expr(
-      s"transform(sequence(0, ${Tables - 1}), t -> " +
-        "named_struct('tbl', t, 'bits', bands[t]))")).as("bb"))
-      .select($"match_vec", $"bb.tbl".as("tbl"), $"bb.bits".as("bits"))
-      .persist()
-    // stream side: own band + its one-bit flips per table (multi-probe)
-    val probes = VectorOps.withHyperplaneBands(
-      VectorOps.quantize(arrivals)
-        .select($"vec_id", $"ts", $"q", $"nn"), Tables, Bits)
-      .select($"vec_id", $"ts", $"q".as("qa"), $"nn".as("na"), explode(expr(
-        s"""flatten(transform(sequence(0, ${Tables - 1}), t ->
-           |  transform(sequence(-1, ${Bits - 1}), k -> named_struct('tbl', t, 'bits',
-           |    CASE WHEN k = -1 THEN bands[t]
-           |         ELSE bands[t] ^ shiftleft(1L, k) END))))""".stripMargin)).as("bb"))
-      .select($"vec_id", $"ts", $"qa", $"na", $"bb.tbl".as("tbl"), $"bb.bits".as("bits"))
-    val flagged = probes.join(bands, Seq("tbl", "bits"))
-      .filter($"vec_id" =!= $"match_vec")
-      .join(e.select($"vec_id".as("match_vec"), $"q".as("qb"), $"nn".as("nb")), Seq("match_vec"))
-      .withColumn("dot", VectorOps.dotCol(col("qa"), col("qb")))
-      .withColumn("cos_ppm",
-        floor($"dot" / (sqrt($"na") * sqrt($"nb")) * lit(1000000.0) + lit(0.5)).cast("long"))
+    def banded(vecs: DataFrame, cols: Column*) = VectorOps.withHyperplaneBands(
+      VectorOps.quantize(vecs).select(cols: _*), DedupQueries.EmbedLshTables, Bits)
+    val e = banded(corpus, $"vec_id", $"q", $"nn").persist()
+    val bands = DedupQueries.embedExactBands(e).persist() // corpus: exact bands
+    val probes = DedupQueries.embedProbes( // arrivals: multi-probe
+      banded(arrivals, $"vec_id", $"ts", $"q", $"nn"), Bits, Seq("ts", "q", "nn"))
+    val flagged = DedupQueries.embedCollisions(probes, bands)
+      .filter($"va" =!= $"vb")
+      .join(e.select($"vec_id".as("vb"), $"q".as("qb"), $"nn".as("nb")), Seq("vb"))
+      .withColumn("cos_ppm", VectorOps.cosPpm(VectorOps.dotCol($"q", $"qb"), $"nn", $"nb"))
       .filter($"cos_ppm" >= thresholdPpm)
+      .select($"va".as("vec_id"), $"ts", $"vb".as("match_vec"), $"cos_ppm")
     // pair dedup: multi-table probe collisions flag a pair repeatedly;
     // cos_ppm and ts are functions of the pair, so which duplicate
     // survives is immaterial. Streaming needs the watermark-bounded
@@ -76,7 +63,6 @@ object VectorStream {
         flagged.withWatermark("ts", watermark)
           .dropDuplicatesWithinWatermark("vec_id", "match_vec")
       else flagged.dropDuplicates("vec_id", "match_vec")
-    (deduped.select($"vec_id", $"ts", $"match_vec", $"cos_ppm"),
-      new GateCaches(Seq(e, bands)))
+    (deduped, new GateCaches(Seq(e, bands)))
   }
 }

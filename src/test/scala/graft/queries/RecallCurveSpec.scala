@@ -60,7 +60,14 @@ class RecallCurveSpec extends SparkSpec {
           s.output.exists(_.name == "cent_id") => s
     }
     assert(cellScans.nonEmpty, "ann_ivf_recall no longer reads the IVF posting lists")
-    assert(cellScans.forall(_.partitionFilters.nonEmpty),
+    // the probed-cells list itself (EmbIvfIndex.probedCells' isin), not
+    // just the isnotnull(cent_id) every partitioned read carries
+    def probedList(e: org.apache.spark.sql.catalyst.expressions.Expression) = e.exists {
+      case in: org.apache.spark.sql.catalyst.expressions.In => in.value.references.exists(_.name == "cent_id")
+      case in: org.apache.spark.sql.catalyst.expressions.InSet => in.child.references.exists(_.name == "cent_id")
+      case _ => false
+    }
+    assert(cellScans.forall(_.partitionFilters.exists(probedList)),
       "the posting-list scan lost its probed-cells partition pruning")
     spark.catalog.clearCache()
   }

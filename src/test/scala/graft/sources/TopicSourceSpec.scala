@@ -155,6 +155,46 @@ class TopicSourceSpec extends SparkSpec {
     assert(out.distinct.length === out.length, "no duplicate deliveries across restarts")
   }
 
+  test("the discovery log appends one segment per growth and a restart reads them back in order") {
+    import java.nio.file.{Files, Paths}
+    val sdir = Topic.tempDir("dsv2-seglog")
+    val ckpt = Topic.tempDir("dsv2-seglog-ckpt")
+    val all = EventsAsTopic.messagesFromEvents(spark, sf)
+    def open(c: String) =
+      new TopicMicroBatchStream(sdir, Long.MinValue, Long.MaxValue, TopicDataSource.Schema, c)
+    def files(st: TopicMicroBatchStream, n: Long): Seq[String] =
+      st.planInputPartitions(TopicOffset(0), TopicOffset(n))
+        .flatMap(_.asInstanceOf[TopicInputPartition].filePaths).toSeq
+    def seg(c: String, start: Long) = Paths.get(c, s"graft-discovery-$start.log")
+
+    Topic.write(all.filter($"sequenceNumber" <= 200), sdir, EventsAsTopic.cfg)
+    val first = open(ckpt)
+    val n1 = first.latestOffset().asInstanceOf[TopicOffset].n
+    val seg0 = Files.readAllBytes(seg(ckpt, 0))
+    Topic.write(all.filter($"sequenceNumber" > 200 && $"sequenceNumber" <= 300), sdir, EventsAsTopic.cfg)
+    val n2 = first.latestOffset().asInstanceOf[TopicOffset].n
+    assert(n1 > 0 && n2 > n1)
+    assert(java.util.Arrays.equals(Files.readAllBytes(seg(ckpt, 0)), seg0),
+      "a later growth must not rewrite an earlier segment")
+    val seg1 = new String(Files.readAllBytes(seg(ckpt, n1)), "UTF-8").split("\n").toSeq
+    assert(seg1 === files(first, n2).drop(n1.toInt), "the second segment holds only the new names")
+
+    val restarted = open(ckpt)
+    assert(files(restarted, n2) === files(first, n2))
+    assert(restarted.latestOffset() === TopicOffset(n2), "nothing new: no growth")
+
+    // a single-file log from before segments is the segment at 0
+    val legacy = Topic.tempDir("dsv2-seglog-legacy")
+    Files.write(Paths.get(legacy, "graft-discovery.log"),
+      files(first, n2).mkString("", "\n", "\n").getBytes("UTF-8"))
+    val fromLegacy = open(legacy)
+    assert(files(fromLegacy, n2) === files(first, n2))
+    Topic.write(all.filter($"sequenceNumber" > 300 && $"sequenceNumber" <= 400), sdir, EventsAsTopic.cfg)
+    val n3 = fromLegacy.latestOffset().asInstanceOf[TopicOffset].n
+    assert(n3 > n2 && Files.exists(seg(legacy, n2)))
+    assert(files(open(legacy), n3) === files(fromLegacy, n3))
+  }
+
   test("a stream over more files than the partition cap plans at most the cap, exactly once across a restart") {
     val cap = Topic.readPartitionCap(spark.sparkContext)
     val sdir = Topic.tempDir("dsv2-cap")

@@ -61,4 +61,41 @@ class StreamIndexMaintSpec extends SparkSpec {
     assert(pairs.contains((100L, 200L)))
     spark.catalog.clearCache()
   }
+
+  test("a failing onBatch appends nothing and leaves nothing persisted") {
+    val corpusDir = graft.rawdata.Topic.tempDir("maint-fail-corpus")
+    val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
+      "eta", "theta", "iota", "kappa", "lambda", "mu", "nu", "xi", "omicron",
+      "pi", "rho", "sigma", "tau", "upsilon")
+    Seq((1L, words.mkString(" ")),
+        (2L, "red orange yellow green blue indigo violet black white gray"))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
+    CorpusLshIndex.ensure(spark, corpusDir)
+    def tables() = Seq(CorpusLshIndex.shingles(spark, corpusDir), CorpusLshIndex.sigs(spark, corpusDir),
+      CorpusLshIndex.bands(spark, corpusDir), CorpusLshIndex.jaccard(spark, corpusDir))
+      .map(_.collect().toSet)
+    val before = tables()
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+
+    val streamDir = graft.rawdata.Topic.tempDir("maint-fail-stream")
+    val schema = Seq((0L, "")).toDF("doc_id", "text").schema
+    // a near-copy of doc 1, so the batch has a flag to hand over
+    Seq((100L, words.updated(10, "CHANGED").mkString(" "))).toDF("doc_id", "text")
+      .coalesce(1).write.mode("append").parquet(streamDir)
+    var handed = 0L
+    val q = CleanStream.indexMaintainingNearDup(
+      spark.readStream.schema(schema).parquet(streamDir), corpusDir) { batchFlags =>
+      handed = batchFlags.count()
+      throw new IllegalStateException("downstream sink failed")
+    }
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+    finally q.stop()
+    assert(handed == 1L, "the flag must reach onBatch before the failure")
+    CorpusLshIndex.refresh(spark, corpusDir)
+    assert(tables() === before, "a failed batch must leave every lsh table row-identical")
+    assert(spark.sparkContext.getPersistentRDDs.keySet === pinned,
+      "a failed batch must release everything it persisted")
+    spark.catalog.clearCache()
+  }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
+import graft.queries.DedupQueries
 
 /** The streaming vector-similarity gate must flag exactly the
   * (arrival, corpus) pairs the batch evaluation of the same LSH
@@ -45,5 +46,21 @@ class StreamVectorSpec extends SparkSpec {
       assert(streamed.forall(_._3 >= 350000L))
       assert(streamed.forall(t => t._1 != t._2))
     } finally q.stop()
+  }
+
+  test("the gate over a batch left side equals the batch embed LSH pairs touching the arrivals") {
+    val emb = Tables.t(spark, sf, "embeddings").select($"vec_id", $"embedding")
+    assert(DedupQueries.embedLshBitsFor(emb.count()) == 8, "the fixture must band at the gate's width")
+    val arrivals = emb.filter($"vec_id" < 200)
+      .withColumn("ts", timestamp_millis(lit(1700000000000L) + $"vec_id" * 1000))
+    val got = VectorStream.simFlags(arrivals, emb, 350000)
+      .select($"vec_id", $"match_vec").as[(Long, Long)].collect()
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.toSet
+    val expected = DedupQueries.embedLshPairsRaw(spark, sf)
+      .filter($"cos_ppm" >= 350000 && ($"vec_a" < 200 || $"vec_b" < 200))
+      .select($"vec_a", $"vec_b").as[(Long, Long)].collect().toSet
+    spark.catalog.clearCache()
+    assert(expected.nonEmpty, "expected similar pairs touching the arrival slice")
+    assert(got === expected, "the stream gate and the batch embed LSH disagree")
   }
 }
