@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import Json.{Num, Obj, Str}
 object Bench {
   /** the scale probes' query subset (unchanged since round 12 — the
     * amp=10/amp=100 probe budgets are sized for exactly this list, and
@@ -101,12 +102,13 @@ object Bench {
 
   /** regression rule: BOTH >1.5x the prior min AND >0.4 s absolute —
     * multiplicative alone flags sub-second noise, absolute alone
-    * forgives a 10 s query doubling
+    * forgives a 10 s query doubling. A -1 prior (the query crashed in
+    * the prior run) is no prior.
     */
   private[graft] def regressionsVs(prev: Map[String, Double],
       results: Seq[(String, Double)]): Seq[(String, Double, Double)] =
     results.flatMap { case (name, cur) =>
-      prev.get(name).collect {
+      prev.get(name).filter(_ >= 0).collect {
         case p if cur > 1.5 * p && cur - p > 0.4 => (name, p, cur)
       }
     }
@@ -135,11 +137,24 @@ object Bench {
   private[graft] def median5(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
   /** The ingest measurement (shared by the full bench and the
-    * SPARK_GRAFT_INGEST_ONLY profiling loop): [[IngestCopies]]×-amplified
-    * messages materialized via persist (NOT localCheckpoint —
-    * Dataset.unpersist can actually free cache-manager blocks, while
-    * localCheckpoint blocks would stay pinned for the rest of the JVM),
-    * one untimed warmup write+read, then 5 timed fresh write+read passes.
+    * SPARK_GRAFT_INGEST_ONLY profiling loop): messages through the full
+    * Avro topic path, the number directly comparable to the reference
+    * producer/consumer. Round 14 de-noised it (the 100k-msg best-of-2
+    * read rate swung 17 % round-over-round), each lever measured:
+    *  - [[IngestCopies]]× the message volume, so no pass sits on the
+    *    sub-second fixed-overhead floor;
+    *  - the messages are materialized (persist MEMORY_AND_DISK + count)
+    *    before timing, so the write rate prices the topic write path
+    *    (shuffle + Avro encode + commit), not the upstream events
+    *    scan+union. persist, NOT localCheckpoint: Dataset.unpersist
+    *    frees cache-manager blocks, while localCheckpoint blocks would
+    *    stay pinned through the memory-sensitive amp=100 probe;
+    *  - two untimed warmup write+reads, then 5 timed fresh passes whose
+    *    MEDIAN is the rate (min-of-N chases the lucky tail, a mean is
+    *    wrecked by one GC stall);
+    *  - the raw samples land in the per-pass section: this shared VM
+    *    shows minute-scale neighbor I/O episodes that move even a
+    *    median-of-5, so the artifact carries the spread.
     * Returns (message count, per-pass (writeSec, readSec) samples); the
     * persisted relation is freed before returning.
     */
@@ -158,29 +173,18 @@ object Bench {
       val warmDir = graft.rawdata.Topic.tempDir("bench-ingest-warm")
       graft.rawdata.Topic.write(msgs, warmDir, graft.rawdata.EventsAsTopic.cfg)
       graft.rawdata.Topic.read(spark, warmDir).count(): Unit
-      ScaleProbe.rmTree(new java.io.File(warmDir))
+      graft.rawdata.Topic.rmTree(new java.io.File(warmDir))
     }
     val samples = (1 to 5).map { _ =>
       val dir = graft.rawdata.Topic.tempDir("bench-ingest")
-      val i0 = System.nanoTime()
-      graft.rawdata.Topic.write(msgs, dir, graft.rawdata.EventsAsTopic.cfg)
-      val w = (System.nanoTime() - i0) / 1e9
-      val r0 = System.nanoTime()
-      n = graft.rawdata.Topic.read(spark, dir).count()
-      val r = (System.nanoTime() - r0) / 1e9
-      ScaleProbe.rmTree(new java.io.File(dir)) // measurement scratch
+      val w = timed(graft.rawdata.Topic.write(msgs, dir, graft.rawdata.EventsAsTopic.cfg): Unit).toTry.get
+      val r = timed { n = graft.rawdata.Topic.read(spark, dir).count() }.toTry.get
+      graft.rawdata.Topic.rmTree(new java.io.File(dir)) // measurement scratch
       (w, r)
     }
     msgs.unpersist(blocking = true)
     (n, samples)
   }
-
-  private[graft] def fmt(v: Double): String = {
-    val s = f"$v%.2f"
-    if (s.contains('.')) s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse else s
-  }
-  private[graft] def jsonObj(kvs: Seq[(String, Double)]): String =
-    kvs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
 
   /** serialize gate rows. A crashed probe's sentinel (-1) rows carry an
     * explicit error marker instead of prev/cur numbers a consumer could
@@ -188,72 +192,153 @@ object Bench {
     * close gate (non-empty `regressions`) fires either way.
     */
   private[graft] def regressionJson(rows: Seq[(String, Double, Double)]): String =
-    rows.map {
-      case (n, p, c) if p < 0 || c < 0 => s"""{"q":"$n","error":"probe_error"}"""
-      case (n, p, c) => s"""{"q":"$n","prev":${fmt(p)},"cur":${fmt(c)}}"""
-    }.mkString("[", ",", "]")
+    regressionRows(rows).render
+  private def regressionRows(rows: Seq[(String, Double, Double)]): Json = Json.Arr(rows.map {
+    case (n, p, c) if p < 0 || c < 0 => Obj("q" -> Str(n), "error" -> Str("probe_error"))
+    case (n, p, c) => Obj("q" -> Str(n), "prev" -> Num(p), "cur" -> Num(c))
+  })
+
+  private def attempt[A](body: => A): Either[Throwable, A] =
+    try Right(body) catch { case e: Throwable => Left(e) }
+
+  /** The one timer: the seconds `body` took, or the throw. A crash is
+    * "no time", never the partial elapsed time — an instantly-crashing
+    * stage or query is otherwise indistinguishable from a fast one. The
+    * caller renders a throw as the -1 sentinel or as a stage error, and
+    * keeps its own clearCache / System.gc() placement.
+    */
+  private[graft] def timed(body: => Unit): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    attempt(body).map(_ => (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** The crash rule over each query's pass samples (None = that pass
+    * threw): the result is the min of the samples, or -1 if any pass
+    * threw, so a crash never enters min-of-N as a fast time. Returns the
+    * results, their total over measured queries only, and one gate row
+    * per crashed query (-1 sentinels, rendered as a probe_error).
+    */
+  private[graft] def queryTimesOf(samples: Seq[(String, Seq[Option[Double]])])
+      : (Seq[(String, Double)], Double, Seq[(String, Double, Double)]) = {
+    val results = samples.map { case (n, xs) => n -> (if (xs.contains(None)) -1.0 else xs.flatten.min) }
+    (results, results.map(_._2).filter(_ >= 0).sum,
+      results.collect { case (n, v) if v < 0 => (n, -1.0, -1.0) })
+  }
+
+  /** the SPARK_GRAFT_INGEST_ONLY line: median rates and the raw samples */
+  private[graft] def ingestSection(n: Long, samples: Seq[(Double, Double)]): Json = Obj(
+    "metric" -> Str("ingest"), "msgs" -> Json.Int(n),
+    "write_msgs_per_sec" -> Json.Int((n / median5(samples.map(_._1))).round),
+    "read_msgs_per_sec" -> Json.Int((n / median5(samples.map(_._2))).round),
+    "write_sec_samples" -> Json.numArr(samples.map(_._1)),
+    "read_sec_samples" -> Json.numArr(samples.map(_._2)))
+
+  /** one index family's side-corpus maintenance times (-1 = not measured) */
+  private[graft] final case class Maintenance(fresh: Double, appended: Double,
+      compact: Double, compacted: Double)
+
+  /** the per-pass section's numbers (-1 = the stage threw or never ran) */
+  private[graft] final case class PerPass(setupSec: Double, lshSec: Double,
+      tokenSec: Double, graphSec: Double, ivfSec: Double, bpeSec: Double, indexSec: Double,
+      stages: Seq[(String, Double)], ingest: Seq[(Double, Double)], noise: Seq[Double],
+      candFresh: Double, lsh: Maintenance, ivf: Maintenance, graph: Maintenance,
+      run1: Seq[(String, Double)], run2: Seq[(String, Double)], rerun: Seq[(String, Double)]) {
+    def json: Json = Obj("detail" -> Str("per-pass"), "setup_sec" -> Num(setupSec),
+      "lsh_index_build_sec" -> Num(lshSec), "token_index_build_sec" -> Num(tokenSec),
+      "graph_index_build_sec" -> Num(graphSec), "ivf_index_build_sec" -> Num(ivfSec),
+      "bpe_artifact_sec" -> Num(bpeSec), "index_build_sec" -> Num(indexSec),
+      "stages" -> Json.numObj(stages), "ingest_write_sec_samples" -> Json.numArr(ingest.map(_._1)),
+      "ingest_read_sec_samples" -> Json.numArr(ingest.map(_._2)), "noise_probe_sec" -> Json.numArr(noise),
+      "lsh_compact_sec" -> Num(lsh.compact), "cand_gen_fresh_sec" -> Num(candFresh),
+      "cand_gen_appended_sec" -> Num(lsh.appended), "cand_gen_compacted_sec" -> Num(lsh.compacted),
+      "ivf_probe_fresh_sec" -> Num(ivf.fresh), "ivf_probe_appended_sec" -> Num(ivf.appended),
+      "ivf_compact_sec" -> Num(ivf.compact), "ivf_probe_compacted_sec" -> Num(ivf.compacted),
+      "graph_compact_sec" -> Num(graph.compact), "graph_probe_appended_sec" -> Num(graph.appended),
+      "graph_probe_compacted_sec" -> Num(graph.compacted), "queries_run1" -> Json.numObj(run1),
+      "queries_run2" -> Json.numObj(run2), "queries_rerun" -> Json.numObj(rerun))
+  }
+
+  /** one decade of the listing probe: seconds per stage, and whether the
+    * cached repeat paid a LIST RPC
+    */
+  private[graft] final case class ListingStages(list: Double, prune: Double, plan: Double,
+      pagedList: Double, cachedRepeat: Double, cachePaidRpc: Boolean)
+
+  /** the listing-probe section; a decade that threw renders -1 */
+  private[graft] def listingSection(at10k: Option[ListingStages], at100k: Option[ListingStages],
+      flagged: Seq[String]): Json = {
+    def pair(f: ListingStages => Double) = Json.numArr(Seq(at10k, at100k).map(_.fold(-1.0)(f)))
+    Obj("detail" -> Str("listing-probe"), "files" -> Json.Arr(Seq(Json.Int(10000), Json.Int(100000))),
+      "list_sec" -> pair(_.list), "prune_sec" -> pair(_.prune), "plan_sec" -> pair(_.plan),
+      "paged_list_sec" -> pair(_.pagedList), "cached_repeat_sec" -> pair(_.cachedRepeat),
+      "flagged" -> Json.strArr(flagged))
+  }
+
+  private[graft] def allQueriesSection(results: Seq[(String, Double)]): Json =
+    Obj("detail" -> Str("all-queries"), "n" -> Json.Int(results.size),
+      "queries" -> Json.numObj(results))
+
+  /** the final line's numbers; the line itself is rendered per checkpoint
+    * with the regression rows known so far
+    */
+  private[graft] final case class Headline(total: Double, nQueries: Int, nMsgs: Long,
+      writeRate: Double, readRate: Double, lshSec: Double, indexSec: Double,
+      queries: Seq[(String, Double)], sf: String) {
+    def json(regs: Seq[(String, Double, Double)]): Json = Obj("metric" -> Str("total"),
+      "value" -> Num(total), "unit" -> Str("sec"), "n_queries" -> Json.Int(nQueries),
+      "regressions" -> regressionRows(regs), "ingest_msgs" -> Json.Int(nMsgs),
+      "ingest_write_msgs_per_sec" -> Num(writeRate), "ingest_read_msgs_per_sec" -> Num(readRate),
+      "lsh_index_build_sec" -> Num(lshSec), "index_build_sec" -> Num(indexSec),
+      "queries" -> Json.numObj(queries), "sf" -> Str(sf))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt, Map(
       // Shuffle files live until ContextCleaner GCs their RDDs; with a
       // large heap the JVM may not GC for the whole run, so a 212-query
       // bench accumulates tens of GB of dead shuffle files in
       // spark.local.dir and the amp=100 probe then dies on a full disk.
       // Cut the periodic-GC interval (default 30min) so the cleaner
       // reclaims them while the bench runs.
-      .config("spark.cleaner.periodicGC.interval", "2min")
+      "spark.cleaner.periodicGC.interval" -> "2min",
       // the listing probe's paged+latent variant drives Topic.listFiles
       // through the fake bucket scheme: reference-shaped 1000-object
       // pages, 10 ms per LIST RPC (a realistic GCS page round-trip) —
       // 100k files = 100 paged RPCs ≈ 1 s of injected driver stall,
       // which the probe bounds and the listing cache must amortize
-      .config("spark.hadoop.fs.fakegs.impl",
-        classOf[graft.rawdata.FakeGsFileSystem].getName)
-      .config("spark.hadoop.fs.fakegs.impl.disable.cache", "true")
-      .config("spark.hadoop.fs.fakegs.auth.token",
-        graft.rawdata.FakeGsFileSystem.ExpectedToken)
-      .config("spark.hadoop.fs.fakegs.list.page.size", "1000")
-      .config("spark.hadoop.fs.fakegs.list.page.latency.ms", "10"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.hadoop.fs.fakegs.impl" -> classOf[graft.rawdata.FakeGsFileSystem].getName,
+      "spark.hadoop.fs.fakegs.impl.disable.cache" -> "true",
+      "spark.hadoop.fs.fakegs.auth.token" -> graft.rawdata.FakeGsFileSystem.ExpectedToken,
+      "spark.hadoop.fs.fakegs.list.page.size" -> "1000",
+      "spark.hadoop.fs.fakegs.list.page.latency.ms" -> "10"))
     // SPARK_GRAFT_INGEST_ONLY=1: measure just the topic write/read rates
     // (the profiling loop for producer-path changes — full bench noise
     // makes an isolated ingest number impossible to read otherwise)
     if (sys.env.get("SPARK_GRAFT_INGEST_ONLY").contains("1")) {
       val (n, samples) = measureIngest(spark, sfDir)
-      val w = median5(samples.map(_._1))
-      val r = median5(samples.map(_._2))
-      println(s"""{"metric":"ingest","msgs":$n,"write_msgs_per_sec":${(n / w).round},"read_msgs_per_sec":${(n / r).round},"write_sec_samples":[${samples.map(s => fmt(s._1)).mkString(",")}],"read_sec_samples":[${samples.map(s => fmt(s._2)).mkString(",")}]}""")
+      println(ingestSection(n, samples).render)
       spark.stop()
       return
     }
     // One-time ingest (events → Avro topic on disk) is setup, not query
     // time; build it up front so its cost doesn't land on whichever
     // topic-backed query happens to run first, and report it separately.
-    val s0 = System.nanoTime()
-    val topicDir = graft.rawdata.EventsAsTopic.topicDir(spark, sfDir)
-    // untimed JIT/codegen warmup so the alphabetically-first queries don't
-    // absorb the whole JVM warmup cost in their numbers
-    try { SparkEntry.entry(spark).count() } catch { case _: Throwable => () }
-    val setupSec = (System.nanoTime() - s0) / 1e9
+    val setupSec = timed {
+      graft.rawdata.EventsAsTopic.topicDir(spark, sfDir): Unit
+      // JIT/codegen warmup so the alphabetically-first queries don't
+      // absorb the whole JVM warmup cost in their numbers
+      attempt(SparkEntry.entry(spark).count()): Unit
+    }.toTry.get
     // The corpus indexes build ONCE per corpus and whole query families
     // read them — those builds are setup (the batch twin of topic
     // ingest), timed explicitly here so they land on no query's number.
     // Timed PER INDEX: lsh_index_build_sec covers exactly the text+embed
     // LSH build (comparable across rounds); the token and co-purchase
     // graph builds get their own fields.
-    // a probed body that THROWS reports the -1.0 sentinel, never the
-    // partial elapsed time — an instantly-crashing stage was previously
-    // indistinguishable from a fast pass in BENCH_DETAIL.json
-    def timedStage(body: => Unit): Double = {
-      val s = System.nanoTime()
-      try { body; (System.nanoTime() - s) / 1e9 }
-      catch { case _: Throwable => -1.0 }
-    }
+    // a stage that throws reports the -1.0 sentinel
+    def timedStage(body: => Unit): Double = timed(body).getOrElse(-1.0)
     // sub-stage collector for the sf0.1 builds: these times are the
     // amp=10 probe's stage BASELINE (decade chain: sf0.1 stages → amp=10
     // stage flags; amp=10 min stages → amp=100 stage flags)
@@ -279,121 +364,86 @@ object Bench {
     val indexSec =
       if (Seq(lshSec, tokenSec, graphSec).exists(_ < 0)) -1.0
       else lshSec + tokenSec + graphSec
-    // LSH index maintenance stage: each append adds one file per bucket,
-    // so candidate generation over a thrice-appended index reads 4 files
-    // per bucket; compact must restore fresh-build read cost. Measured on
-    // a side corpus (75 % base + 3 appends = the SAME full corpus as the
-    // fresh sfDir index, so cand_gen_fresh/appended/compacted are
-    // directly comparable).
-    import org.apache.spark.sql.functions.{col, pmod}
-    def candSec(d: String): Double = {
-      spark.catalog.clearCache()
-      timedStage(graft.queries.CorpusLshIndex.candidateGen(spark, d).count(): Unit)
-    }
-    val candFresh = candSec(sfDir)
-    val cdir = graft.rawdata.Topic.tempDir("bench-lsh-compact")
-    val docsAll = Tables.t(spark, sfDir, "documents")
-    var compactSec, candAppended, candCompacted = -1.0
-    try {
-      docsAll.filter(pmod(col("doc_id"), org.apache.spark.sql.functions.lit(4)) =!= 0)
-        .write.mode("overwrite").parquet(s"$cdir/documents.parquet")
-      graft.queries.CorpusLshIndex.ensure(spark, cdir)
-      for (r <- 0 to 2)
-        graft.queries.CorpusLshIndex.append(spark, cdir,
-          docsAll.filter(pmod(col("doc_id"), org.apache.spark.sql.functions.lit(4)) === 0 &&
-            pmod(col("doc_id"), org.apache.spark.sql.functions.lit(12)) === r * 4))
-      candAppended = candSec(cdir)
-      compactSec = timedStage(graft.queries.CorpusLshIndex.compact(spark, cdir))
-      candCompacted = candSec(cdir)
-    } catch { case _: Throwable => () }
-    finally {
-      // the side corpus AND its tmp index (a per-run tempdir tag — it
-      // would leak one index per bench run otherwise)
-      try graft.queries.CorpusLshIndex.dropFor(spark, cdir)
-      catch { case _: Throwable => () }
-      ScaleProbe.rmTree(new java.io.File(cdir))
-    }
-    // IVF index maintenance stage (EmbIvfIndex.compact's bench proof):
-    // frozen-codebook appends add one file set per touched cell, so a
-    // probe of an N-times-appended index opens ~N+1 files per probed
-    // cell; compact must restore ~fresh probe cost. Side corpus: 75 %
-    // base + 3 appends of the remaining quarter (probe times at fresh /
-    // appended / compacted layouts; the fresh number is the 75 %-base
-    // index, so compare appended vs compacted for the layout effect).
-    val idir = graft.rawdata.Topic.tempDir("bench-ivf-compact")
-    val embAll = Tables.t(spark, sfDir, "embeddings")
-    var ivfCompactSec, ivfProbeFresh, ivfProbeAppended, ivfProbeCompacted = -1.0
-    def ivfProbeSec(d: String): Double = {
-      spark.catalog.clearCache()
-      timedStage(SparkEntry.queries("ann_ivf_index")(spark, d).count(): Unit)
-    }
-    try {
-      embAll.filter(pmod(col("vec_id"), org.apache.spark.sql.functions.lit(4)) =!= 3)
-        .write.mode("overwrite").parquet(s"$idir/embeddings.parquet")
-      graft.queries.EmbIvfIndex.ensure(spark, idir)
-      ivfProbeFresh = ivfProbeSec(idir)
-      val step = graft.queries.AnnQueries.centroidStep(spark, idir)
-      val q = graft.operators.VectorOps.quantized(spark, sfDir)
-      for (r <- 0 to 2)
-        graft.queries.EmbIvfIndex.append(spark, idir,
-          q.filter(pmod(col("vec_id"), org.apache.spark.sql.functions.lit(4)) === 3 &&
-            pmod(col("vec_id"), org.apache.spark.sql.functions.lit(12)) === r * 4 + 3 &&
-            col("vec_id") % step =!= 0))
-      ivfProbeAppended = ivfProbeSec(idir)
-      ivfCompactSec = timedStage(graft.queries.EmbIvfIndex.compact(spark, idir))
-      ivfProbeCompacted = ivfProbeSec(idir)
-    } catch { case _: Throwable => () }
-    finally {
-      try graft.queries.EmbIvfIndex.dropFor(spark, idir)
-      catch { case _: Throwable => () }
-      ScaleProbe.rmTree(new java.io.File(idir))
-    }
-    // Graph index maintenance stage (CoPurchaseGraph.compact's bench
-    // proof, the last append-only family member to gain one): 3 appends
-    // scatter every bucket across ~|tasks| files; compact must restore
-    // ~fresh read cost for the u-keyed consumers. Side corpus split by
-    // order-key QUARTILES (the append contract needs monotone keys).
-    val gdir = graft.rawdata.Topic.tempDir("bench-cpg-compact")
-    var graphCompactSec, graphProbeAppended, graphProbeCompacted = -1.0
-    def graphProbeSec(d: String): Double = {
-      spark.catalog.clearCache()
-      timedStage(SparkEntry.queries("q39_triangles")(spark, d).count(): Unit)
-    }
-    try {
-      val liAll = Tables.t(spark, sfDir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"))
-      val cuts = Seq(0.25, 0.5, 0.75).map { q =>
-        liAll.agg(org.apache.spark.sql.functions.expr(
-          s"percentile_approx(l_orderkey, $q)")).head().getLong(0)
+    // Index maintenance stages, one per append-only family, each on a
+    // side corpus in a fresh temp dir: write `split` as the base `table`
+    // and build the index, time `probe` fresh (where the family has one),
+    // run the appends and time the probe, time compact, then the probe
+    // again. Appends scatter the index over more files per bucket or
+    // cell; compact must restore ~fresh read cost. A throw leaves every
+    // unmeasured time at -1; drop and the dir's delete always run (the
+    // per-run temp tag would leak one index per bench run otherwise).
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    def probeSec(probe: => Unit): Double = { spark.catalog.clearCache(); timedStage(probe) }
+    def maintenance(tag: String, table: String, split: => DataFrame,
+        appends: String => Seq[DataFrame], probe: String => Unit, timeFresh: Boolean)(
+        ensure: String => Unit, append: (String, DataFrame) => Unit, compact: String => Unit,
+        drop: String => Unit): Maintenance = {
+      val dir = graft.rawdata.Topic.tempDir(tag)
+      var fresh, appended, compactSec, compacted = -1.0
+      try {
+        split.write.mode("overwrite").parquet(s"$dir/$table.parquet")
+        ensure(dir)
+        if (timeFresh) fresh = probeSec(probe(dir))
+        appends(dir).foreach(append(dir, _))
+        appended = probeSec(probe(dir))
+        compactSec = timedStage(compact(dir))
+        compacted = probeSec(probe(dir))
+      } catch { case _: Throwable => () }
+      finally {
+        try drop(dir) catch { case _: Throwable => () }
+        graft.rawdata.Topic.rmTree(new java.io.File(dir))
       }
-      liAll.filter(col("l_orderkey") <= cuts(0))
-        .write.mode("overwrite").parquet(s"$gdir/lineitem.parquet")
-      graft.queries.CoPurchaseGraph.ensure(spark, gdir)
-      graft.queries.CoPurchaseGraph.append(spark, gdir,
-        liAll.filter(col("l_orderkey") > cuts(0) && col("l_orderkey") <= cuts(1)))
-      graft.queries.CoPurchaseGraph.append(spark, gdir,
-        liAll.filter(col("l_orderkey") > cuts(1) && col("l_orderkey") <= cuts(2)))
-      graft.queries.CoPurchaseGraph.append(spark, gdir,
-        liAll.filter(col("l_orderkey") > cuts(2)))
-      graphProbeAppended = graphProbeSec(gdir)
-      graphCompactSec = timedStage(graft.queries.CoPurchaseGraph.compact(spark, gdir))
-      graphProbeCompacted = graphProbeSec(gdir)
-    } catch { case _: Throwable => () }
-    finally {
-      try graft.queries.CoPurchaseGraph.dropFor(spark, gdir)
-      catch { case _: Throwable => () }
-      ScaleProbe.rmTree(new java.io.File(gdir))
+      Maintenance(fresh, appended, compactSec, compacted)
     }
+    import graft.queries.{CoPurchaseGraph => Cpg, CorpusLshIndex => Lsh, EmbIvfIndex => Ivf}
+    // LSH: 75 % base + 3 appends = the SAME full corpus as the fresh
+    // sfDir index, so cand_gen_fresh (on sfDir) / appended / compacted
+    // are directly comparable
+    def candGen(d: String): Unit = Lsh.candidateGen(spark, d).count(): Unit
+    val candFresh = probeSec(candGen(sfDir))
+    val docsAll = Tables.t(spark, sfDir, "documents")
+    val doc4 = pmod(col("doc_id"), lit(4))
+    val lshMaint = maintenance("bench-lsh-compact", "documents", docsAll.filter(doc4 =!= 0),
+      _ => (0 to 2).map(r => docsAll.filter(doc4 === 0 && pmod(col("doc_id"), lit(12)) === r * 4)),
+      candGen, timeFresh = false)(
+      Lsh.ensure(spark, _), Lsh.append(spark, _, _), Lsh.compact(spark, _), Lsh.dropFor(spark, _))
+    // IVF: frozen-codebook appends add one file set per touched cell, so
+    // a probe of an N-times-appended index opens ~N+1 files per probed
+    // cell. The fresh number is the 75 %-base index, so compare appended
+    // vs compacted for the layout effect.
+    val vec4 = pmod(col("vec_id"), lit(4))
+    val ivfMaint = maintenance("bench-ivf-compact", "embeddings",
+      Tables.t(spark, sfDir, "embeddings").filter(vec4 =!= 3), { d =>
+        val step = graft.queries.AnnQueries.centroidStep(spark, d)
+        val q = graft.operators.VectorOps.quantized(spark, sfDir)
+        (0 to 2).map(r => q.filter(vec4 === 3 &&
+          pmod(col("vec_id"), lit(12)) === r * 4 + 3 && col("vec_id") % step =!= 0))
+      }, d => SparkEntry.queries("ann_ivf_index")(spark, d).count(): Unit, timeFresh = true)(
+      Ivf.ensure(spark, _), Ivf.append(spark, _, _), Ivf.compact(spark, _), Ivf.dropFor(spark, _))
+    // co-purchase graph, read by the u-keyed consumers: split by
+    // order-key QUARTILES (the append contract needs monotone keys)
+    lazy val liAll = Tables.t(spark, sfDir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
+    lazy val cuts = Seq(0.25, 0.5, 0.75).map { q =>
+      liAll.agg(org.apache.spark.sql.functions.expr(
+        s"percentile_approx(l_orderkey, $q)")).head().getLong(0)
+    }
+    val ok = col("l_orderkey")
+    val graphMaint = maintenance("bench-cpg-compact", "lineitem", liAll.filter(ok <= cuts(0)),
+      _ => Seq(liAll.filter(ok > cuts(0) && ok <= cuts(1)),
+        liAll.filter(ok > cuts(1) && ok <= cuts(2)), liAll.filter(ok > cuts(2))),
+      d => SparkEntry.queries("q39_triangles")(spark, d).count(): Unit, timeFresh = false)(
+      Cpg.ensure(spark, _), Cpg.append(spark, _, _), Cpg.compact(spark, _), Cpg.dropFor(spark, _))
     // Listing-scale probe: SURVEY §4 argues O(100k) driver-side topic
     // listings are fine — measure it instead of arguing. Synthesizes N
     // metadata-only topic files (valid names, zero bytes: listFiles
     // parses names and, with distinct fromTsMs, never opens a file),
-    // then times listFiles, pruneFrom and the rd_compact_plan-shaped
-    // planning query at N = 10k and 100k. Super-linear decade growth
+    // then times listFiles, pruneFrom and rd_compact_plan's planning
+    // query (mergeGroups) at N = 10k and 100k. Super-linear decade growth
     // (>15x a 10x file count, above clock-noise floor) is flagged.
-    def listingProbe(n: Int): (Double, Double, Double, Double, Double, Boolean) = {
+    def listingProbe(n: Int): Option[ListingStages] = {
       val dir = graft.rawdata.Topic.tempDir(s"bench-listing-$n")
-      try {
+      try attempt {
         val base = 1700000000000L
         var i = 0
         while (i < n) {
@@ -428,81 +478,32 @@ object Bench {
         require(paged.length == n && repeat.length == n,
           "paged listing probe fixture broken")
         graft.rawdata.Topic.invalidateListing(gsDir)
-        val t2 = System.nanoTime()
-        val fdf = graft.rawdata.Topic.fileListingDF(spark, dir)
-          .select(col("fromTsMs").as("from_ts_ms"), col("count").as("n_messages"))
-        val wOrd = org.apache.spark.sql.expressions.Window
-          .partitionBy(org.apache.spark.sql.functions.lit(1))
-          .orderBy(col("from_ts_ms"))
-        fdf
-          .withColumn("budget", org.apache.spark.sql.functions.expr(
-            "greatest(1L, (sum(n_messages) over (partition by 1) div count(1) over (partition by 1)) * 3)"))
-          .withColumn("cum", org.apache.spark.sql.functions.sum(col("n_messages")).over(wOrd))
-          .withColumn("merge_group", org.apache.spark.sql.functions
-            .floor((col("cum") - col("n_messages")) / col("budget")).cast("long"))
-          .groupBy(col("merge_group"))
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n_files"))
-          .count()
-        val planSec = (System.nanoTime() - t2) / 1e9
-        (listSec, pruneSec, planSec, pagedSec, cachedSec, cachedPaidRpc)
-      } finally ScaleProbe.rmTree(new java.io.File(dir))
+        val planSec = timed(graft.rawdata.RawdataQueries.mergeGroups(spark, dir)
+          .groupBy(col("merge_group")).agg(org.apache.spark.sql.functions.count(lit(1)).as("n_files")).count(): Unit)
+          .toTry.get
+        ListingStages(listSec, pruneSec, planSec, pagedSec, cachedSec, cachedPaidRpc)
+      }.toOption finally graft.rawdata.Topic.rmTree(new java.io.File(dir))
     }
-    val lFail = (-1.0, -1.0, -1.0, -1.0, -1.0, true)
-    var listing10 = lFail
-    var listing100 = lFail
-    var listingFlagged: Seq[String] = Seq("probe_error")
-    var listingPairs = Map.empty[String, (Double, Double)]
-    try {
-      listing10 = listingProbe(10000)
-      listing100 = listingProbe(100000)
-      val floor = 0.05 // clock/JIT noise floor per stage
-      listingPairs = Map(
-        "list" -> (listing10._1, listing100._1),
-        "prune" -> (listing10._2, listing100._2),
-        "plan" -> (listing10._3, listing100._3),
-        "paged_list" -> (listing10._4, listing100._4),
-        "cache" -> (listing10._5, listing100._5))
-      // decade rule on the timed stages (paged_list absorbs ~1 s of
-      // injected page latency at 100k — still well inside 15x), plus the
-      // cache contract: a repeat consumer inside the interval must pay
-      // ZERO LIST RPCs and ~zero time at either decade
-      listingFlagged = Seq("list", "prune", "plan", "paged_list").collect {
-        case nm if listingPairs(nm)._2 > 15 * math.max(listingPairs(nm)._1, floor) => nm
-      } ++ (if (listing10._6 || listing100._6 ||
-          listing100._5 > math.max(0.05, 0.1 * listing100._4)) Seq("cache") else Nil)
-    } catch { case _: Throwable => () }
-    // ingest throughput — the number directly comparable to the reference
-    // producer/consumer (messages through the full Avro topic path).
-    // Round-14 de-noising of the artifact's noisiest headline number
-    // (the 100k-msg best-of-2 read rate swung 17 % round-over-round on
-    // JIT/page-cache noise — r13 verdict), each lever measured:
-    //  - [[IngestCopies]]× the message volume (key-offset copies; 3M
-    //    msgs), so no pass sits on the sub-second fixed-overhead floor
-    //    (10× was measured still short: the warmed read decodes ~2M
-    //    msg/s, so 1M msgs read in ~0.5 s and swung 22 % run-to-run);
-    //  - the message relation is MATERIALIZED (persist MEMORY_AND_DISK
-    //    + count — spills, never evicts-and-recomputes mid-pass) before
-    //    timing — the producer number prices the topic write path
-    //    (shuffle + Avro encode + commit), not the upstream events
-    //    scan+union, which was the dominant noisy term. persist, not
-    //    localCheckpoint: Dataset.unpersist releases cache-manager
-    //    blocks but NOT localCheckpoint blocks, which would have pinned
-    //    the 3M-msg relation through the memory-sensitive amp=100
-    //    probe (it has OOM'd on less);
-    //  - one untimed warmup write+read (C2-compile the codec path);
-    //  - MEDIAN of 5 fresh passes — min-of-N chases the lucky tail and
-    //    a mean is wrecked by one GC stall;
-    //  - the RAW per-pass samples land in the per-pass detail section
-    //    (ingest_write_sec_samples / ingest_read_sec_samples — the
-    //    stages_pass1/2 philosophy): this shared VM shows minute-scale
-    //    neighbor I/O episodes that move even a median-of-5 (a write
-    //    median measured 1.4-1.6M msg/s in two consecutive runs and
-    //    391k in the third, every pass inside the slow run slow), so
-    //    the artifact must carry the spread for any cross-round delta
-    //    to be readable as regression-or-noise.
-    val (nMsgsM, ingestSamples) = measureIngest(spark, sfDir)
-    val nMsgs = nMsgsM
+    val listing10 = listingProbe(10000)
+    val listing100 = listing10.flatMap(_ => listingProbe(100000))
+    val (listingFlagged, listingPairs) = listing10.zip(listing100) match {
+      case Some((a, b)) =>
+        val floor = 0.05 // clock/JIT noise floor per stage
+        val pairs = Map("list" -> (a.list, b.list), "prune" -> (a.prune, b.prune),
+          "plan" -> (a.plan, b.plan), "paged_list" -> (a.pagedList, b.pagedList),
+          "cache" -> (a.cachedRepeat, b.cachedRepeat))
+        // decade rule on the timed stages (paged_list absorbs ~1 s of
+        // injected page latency at 100k — still well inside 15x), plus the
+        // cache contract: a repeat consumer inside the interval must pay
+        // ZERO LIST RPCs and ~zero time at either decade
+        (Seq("list", "prune", "plan", "paged_list").filter { nm =>
+          pairs(nm)._2 > 15 * math.max(pairs(nm)._1, floor)
+        } ++ (if (a.cachePaidRpc || b.cachePaidRpc ||
+            b.cachedRepeat > math.max(0.05, 0.1 * b.pagedList)) Seq("cache") else Nil), pairs)
+      case None => (Seq("probe_error"), Map.empty[String, (Double, Double)])
+    }
+    // ingest throughput: see measureIngest for how it is de-noised
+    val (nMsgs, ingestSamples) = measureIngest(spark, sfDir)
     val writeSec = median5(ingestSamples.map(_._1))
     val readSec = median5(ingestSamples.map(_._2))
     val writeRate = if (writeSec > 0) nMsgs / writeSec else 0.0
@@ -515,12 +516,10 @@ object Bench {
     // list, not back-to-back runs: a transient GC/compaction stall then
     // lands on at most one sample of any query instead of both. The
     // first-pass times are kept in "queries_run1" so a cold/warm gap is
-    // still visible.
-    def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // still visible. A pass that throws is None (-1 in the artifact).
+    def timedQuery(fn: (SparkSession, String) => DataFrame): Option[Double] = {
       spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
+      timed(fn(spark, sfDir).count(): Unit).toOption
     }
     // SPARK_GRAFT_ONLY=a,b,c: time just those queries (iteration loop for
     // per-query performance work); skips the scale probes
@@ -535,21 +534,15 @@ object Bench {
     // 192 s run would have shown 3 inflated probe samples, r13's 145 s
     // flat ones. Three samples bracket both full passes, so an episode
     // inside either window is visible even when min-of-2 hides it.
-    def noiseProbeSec(): Double = {
-      val t0 = System.nanoTime()
-      // pmod keeps the ANSI sum far from Long overflow (4e8 · 1023 max)
-      spark.range(0L, 400000000L, 1L, cpus.toInt)
-        .select(org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.pmod(
-            org.apache.spark.sql.functions.xxhash64(
-              org.apache.spark.sql.functions.col("id")),
-            org.apache.spark.sql.functions.lit(1024L)))).head(): Unit
-      (System.nanoTime() - t0) / 1e9
-    }
+    // (pmod keeps the ANSI sum far from Long overflow: 4e8 · 1023 max)
+    def noiseProbeSec(): Double = timed {
+      spark.range(0L, 400000000L, 1L, cpus.toInt).select(org.apache.spark.sql.functions.sum(
+        pmod(org.apache.spark.sql.functions.xxhash64(col("id")), lit(1024L)))).head(): Unit
+    }.toTry.get
     val noise1 = noiseProbeSec()
-    val pass1 = ordered.map { case (name, fn) => name -> timed(fn) }.toMap
+    val pass1 = ordered.map { case (name, fn) => name -> timedQuery(fn) }.toMap
     val noise2 = noiseProbeSec()
-    val pass2 = ordered.map { case (name, fn) => name -> timed(fn) }.toMap
+    val pass2 = ordered.map { case (name, fn) => name -> timedQuery(fn) }.toMap
     val noise3 = noiseProbeSec()
     // Adaptive third sample: when the two passes disagree by >2x on a
     // non-trivial query, the slow sample was a contention/GC stall — but
@@ -557,15 +550,14 @@ object Bench {
     // 17 s for a query that measures 1.7 s isolated). One targeted rerun
     // for the disagreeing queries keeps total wall time bounded while
     // giving every noisy measurement a third chance at a quiet slot.
+    def disagree(a: Double, b: Double) = math.min(a, b) > 0.8 && math.max(a, b) > 2 * math.min(a, b)
     val rerun = ordered.collect {
-      case (name, fn)
-          if math.min(pass1(name), pass2(name)) > 0.8 &&
-            math.max(pass1(name), pass2(name)) > 2 * math.min(pass1(name), pass2(name)) =>
-        name -> timed(fn)
+      case (name, fn) if pass1(name).zip(pass2(name)).exists { case (a, b) => disagree(a, b) } =>
+        name -> timedQuery(fn)
     }.toMap
-    val results = ordered.map { case (name, _) =>
-      (name, Seq(pass1(name), pass2(name), rerun.getOrElse(name, Double.MaxValue)).min)
-    }
+    val (results, total, crashRows) = queryTimesOf(ordered.map { case (name, _) =>
+      name -> (Seq(pass1(name), pass2(name)) ++ rerun.get(name))
+    })
     // Round-over-round regression gate (the diff previously done by hand
     // after the artifact was already committed): the PREVIOUS round's
     // committed BENCH_DETAIL.json is read BEFORE this run overwrites it,
@@ -585,15 +577,11 @@ object Bench {
         else regressionsVs(prevQ, results)
       }
     } catch { case _: Throwable => Seq.empty }
-    // a super-linear listing decade (or a crashed listing probe) fails
-    // the bench LOUDLY through the same `regressions` field the
-    // round-close gate reads — previously listingFlagged fed no gate, so
-    // a listing regression would have shipped silently. prev/cur here are
-    // the 10k/100k-file stage times (the decade pair that flagged).
-    // Scale-probe STAGE flags append after each probe completes (the
-    // final line is re-rendered per checkpoint), closing the round-13
-    // hole: `stages` fed no gate.
-    val baseRegressions = queryRegressions ++
+    // crashed queries and flagged (or crashed) listing decades fail the
+    // bench LOUDLY through the same `regressions` field the round-close
+    // gate reads; scale-probe stage flags append after each probe (the
+    // final line is re-rendered per checkpoint)
+    val baseRegressions = queryRegressions ++ crashRows ++
       listingRegressionsOf(listingFlagged, listingPairs)
     // The driver keeps only the last ~2000 chars of stdout, and a line
     // with all ~90 queries at 2-dp is ~2050 chars by itself — it gets
@@ -603,20 +591,22 @@ object Bench {
     // every operator family. Full per-query and per-pass detail goes on
     // earlier lines AND into BENCH_DETAIL.json next to this repo's other
     // artifacts, where nothing can truncate it.
-    def json(kvs: Seq[(String, Double)]): String = jsonObj(kvs)
     spark.catalog.clearCache() // no pinned blocks outlive the run
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val byName = results.toMap
-    val headline = headlineNames.flatMap(n => byName.get(n).map(n -> _))
     val benchStagesMap = benchStages.result().toMap
-    val detailLine = s"""{"detail":"per-pass","setup_sec":${fmt(setupSec)},"lsh_index_build_sec":${fmt(lshSec)},"token_index_build_sec":${fmt(tokenSec)},"graph_index_build_sec":${fmt(graphSec)},"ivf_index_build_sec":${fmt(ivfSec)},"bpe_artifact_sec":${fmt(bpeSec)},"index_build_sec":${fmt(indexSec)},"stages":${json(benchStagesMap.toSeq.sortBy(_._1))},"ingest_write_sec_samples":[${ingestSamples.map(s => fmt(s._1)).mkString(",")}],"ingest_read_sec_samples":[${ingestSamples.map(s => fmt(s._2)).mkString(",")}],"noise_probe_sec":[${fmt(noise1)},${fmt(noise2)},${fmt(noise3)}],"lsh_compact_sec":${fmt(compactSec)},"cand_gen_fresh_sec":${fmt(candFresh)},"cand_gen_appended_sec":${fmt(candAppended)},"cand_gen_compacted_sec":${fmt(candCompacted)},"ivf_probe_fresh_sec":${fmt(ivfProbeFresh)},"ivf_probe_appended_sec":${fmt(ivfProbeAppended)},"ivf_compact_sec":${fmt(ivfCompactSec)},"ivf_probe_compacted_sec":${fmt(ivfProbeCompacted)},"graph_compact_sec":${fmt(graphCompactSec)},"graph_probe_appended_sec":${fmt(graphProbeAppended)},"graph_probe_compacted_sec":${fmt(graphProbeCompacted)},"queries_run1":${json(ordered.map { case (n, _) => n -> pass1(n) })},"queries_run2":${json(ordered.map { case (n, _) => n -> pass2(n) })},"queries_rerun":${json(rerun.toSeq.sortBy(_._1))}}"""
-    val listingLine = s"""{"detail":"listing-probe","files":[10000,100000],"list_sec":[${fmt(listing10._1)},${fmt(listing100._1)}],"prune_sec":[${fmt(listing10._2)},${fmt(listing100._2)}],"plan_sec":[${fmt(listing10._3)},${fmt(listing100._3)}],"paged_list_sec":[${fmt(listing10._4)},${fmt(listing100._4)}],"cached_repeat_sec":[${fmt(listing10._5)},${fmt(listing100._5)}],"flagged":[${listingFlagged.map("\"" + _ + "\"").mkString(",")}]}"""
-    val allLine = s"""{"detail":"all-queries","n":${results.size},"queries":${json(results)}}"""
+    def passOf(pass: Map[String, Option[Double]]) = ordered.map { case (n, _) => n -> pass(n).getOrElse(-1.0) }
+    val detailLine = PerPass(setupSec, lshSec, tokenSec, graphSec, ivfSec, bpeSec, indexSec,
+      benchStagesMap.toSeq.sortBy(_._1), ingestSamples, Seq(noise1, noise2, noise3), candFresh,
+      lshMaint, ivfMaint, graphMaint, passOf(pass1), passOf(pass2),
+      rerun.toSeq.sortBy(_._1).map { case (n, t) => n -> t.getOrElse(-1.0) }).json.render
+    val listingLine = listingSection(listing10, listing100, listingFlagged).render
+    val allLine = allQueriesSection(results).render
     // the final line is a FUNCTION of the regression rows: scale-probe
     // stage flags land after the probes run, so every artifact
     // checkpoint re-renders it with the rows known so far
-    def finalLineOf(regs: Seq[(String, Double, Double)]): String =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"regressions":${regressionJson(regs)},"ingest_msgs":$nMsgs,"ingest_write_msgs_per_sec":${fmt(writeRate)},"ingest_read_msgs_per_sec":${fmt(readRate)},"lsh_index_build_sec":${fmt(lshSec)},"index_build_sec":${fmt(indexSec)},"queries":${json(headline)},"sf":"$sfDir"}"""
+    val headline = Headline(total, results.size, nMsgs, writeRate, readRate, lshSec, indexSec,
+      headlineNames.flatMap(n => byName.get(n).map(n -> _)), sfDir)
+    def finalLineOf(regs: Seq[(String, Double, Double)]): String = headline.json(regs).render
     // pre-probe artifact first: a killed/timed-out probe must never cost
     // the round its bench detail. Every write goes through ONE assembly
     // (assembleDetail) holding the fixed sections — round 12 lost the
@@ -640,52 +630,39 @@ object Bench {
     // base-scale noise doesn't compound into the second-decade ratio,
     // with a tighter 1.3× flag threshold. SPARK_GRAFT_AMP=0 / SPARK_GRAFT_AMP2=0 disable;
     // runs only for the bench-default sf0.1 corpus.
-    def scaleJson(r: ScaleProbe.Result): String = {
-      val idx = r.indexSec.map { case (n, v) => "\"" + n + "_index_build_sec\":" + fmt(v) }
-      val errs = r.errors.map { case (n, e) => "\"" + n + ":" + e + "\"" }
-      s"""{"detail":"scale-probe","amp":${r.amp},"amplify_sec":${fmt(r.amplifySec)},"topic_ingest_sec":${fmt(r.topicIngestSec)},${(idx :+ s""""queries":${json(r.queries)}""").mkString(",")},"stages":${json(r.stages)},"stages_pass1":${json(r.stagePass1)},"stages_pass2":${json(r.stagePass2)},"stage_ratio":${json(r.stageRatios)},"stage_flagged":[${r.stageFlagged.map("\"" + _ + "\"").mkString(",")}],"linear_ratio":${json(r.ratios)},"flagged":[${r.flagged.map("\"" + _ + "\"").mkString(",")}],"stage_errors":[${errs.mkString(",")}],"truncated":${r.truncated}}"""
-    }
     def ampDir(amp: Int) = sys.env.getOrElse(s"SPARK_GRAFT_AMP_DIR_$amp",
       new java.io.File(sys.props("java.io.tmpdir"), s"graft_amp$amp").getAbsolutePath)
+    // a probe that threw renders its exception's class as the section
+    def scaleLine(amp: Int, probe: Either[Throwable, ScaleProbe.Result]): String =
+      probe.fold(ScaleProbe.errorSection(amp, _), ScaleProbe.section).render
     val amp = sys.env.getOrElse("SPARK_GRAFT_AMP", "10").toInt
     val probe10 =
       if (amp <= 1 || only.isDefined || !sfDir.contains("sf0.1")) None
-      else try {
-        Some(ScaleProbe.run(spark, sfDir, ampDir(amp), amp, probeNames, byName,
-          linFactor = amp.toDouble, passes = 2, flagRatio = 1.5, budgetSec = 480.0,
-          stagePasses = 2, stageBaseline = benchStagesMap))
-      } catch { case _: Throwable => None }
-    val scaleLine10 = probe10.map(scaleJson).orElse {
-      if (amp <= 1 || only.isDefined || !sfDir.contains("sf0.1")) None
-      else Some(s"""{"detail":"scale-probe","amp":$amp,"error":"probe failed"}""")
-    }
-    val regs10 = baseRegressions ++ probe10.toSeq.flatMap(r =>
+      else Some(attempt(ScaleProbe.run(spark, sfDir, ampDir(amp), amp, probeNames, byName,
+        linFactor = amp.toDouble, passes = 2, flagRatio = 1.5, budgetSec = 480.0,
+        stagePasses = 2, stageBaseline = benchStagesMap)))
+    val scaleLine10 = probe10.map(scaleLine(amp, _))
+    val r10 = probe10.flatMap(_.toOption)
+    val regs10 = baseRegressions ++ r10.toSeq.flatMap(r =>
       stageRegressionsOf(amp, r.stageFlagged, benchStagesMap, r.stages.toMap))
     // artifact checkpoint: a killed/timed-out amp=100 stage must never
     // cost the round its amp=10 probe
     writeDetail(scaleLine10.toSeq, regs10)
     val amp2 = sys.env.getOrElse("SPARK_GRAFT_AMP2", "100").toInt
-    val probe100 = probe10.filter(r => amp2 > amp && !r.truncated).flatMap { r10 =>
-      try {
-        val dest = ampDir(amp2)
-        val r = ScaleProbe.run(spark, sfDir, dest, amp2, probeNames,
-          r10.queries.toMap, linFactor = amp2.toDouble / amp, passes = 2,
-          flagRatio = 1.3, budgetSec = 2100.0,
-          stagePasses = 2, stageBaseline = r10.stages.toMap)
-        // the second-decade corpus (+topic+indexes, several GB) is probe
-        // scratch — reclaim it; the amp=10 dir stays for dev iteration
-        ScaleProbe.rmTree(new java.io.File(dest))
-        Some(Right(r): Either[String, ScaleProbe.Result])
-      } catch {
-        case e: Throwable =>
-          try ScaleProbe.rmTree(new java.io.File(ampDir(amp2))) catch { case _: Throwable => () }
-          Some(Left(s"""{"detail":"scale-probe","amp":$amp2,"error":"${e.getClass.getSimpleName}"}"""))
-      }
+    val probe100 = r10.filter(r => amp2 > amp && !r.truncated).map { base =>
+      val dest = ampDir(amp2)
+      // the second-decade corpus (+topic+indexes, several GB) is probe
+      // scratch — reclaim it either way; the amp=10 dir stays for dev
+      // iteration
+      try attempt(ScaleProbe.run(spark, sfDir, dest, amp2, probeNames,
+        base.queries.toMap, linFactor = amp2.toDouble / amp, passes = 2,
+        flagRatio = 1.3, budgetSec = 2100.0,
+        stagePasses = 2, stageBaseline = base.stages.toMap))
+      finally attempt(graft.rawdata.Topic.rmTree(new java.io.File(dest)))
     }
-    val scaleLine100 = probe100.map(_.fold(identity, scaleJson))
-    val regressions = regs10 ++ probe10.zip(probe100.flatMap(_.toOption)).toSeq.flatMap {
-      case (r10, r100) =>
-        stageRegressionsOf(amp2, r100.stageFlagged, r10.stages.toMap, r100.stages.toMap)
+    val scaleLine100 = probe100.map(scaleLine(amp2, _))
+    val regressions = regs10 ++ r10.zip(probe100.flatMap(_.toOption)).toSeq.flatMap {
+      case (a, b) => stageRegressionsOf(amp2, b.stageFlagged, a.stages.toMap, b.stages.toMap)
     }
     writeDetail(scaleLine10.toSeq ++ scaleLine100.toSeq, regressions)
     println(detailLine)

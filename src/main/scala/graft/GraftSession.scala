@@ -28,7 +28,7 @@ object GraftSession {
     // small-corpus iterative query (q42_reach 2.3->11.3 s — 8 rounds of
     // 1024-task overhead), and the one super-linear probe sub-stage
     // (embed verify) turned out volume-bound, not partition-bound (see
-    // ScaleProbe.run's finding note).
+    // ScaleProbe.stageAllowance).
     // driver testdata stores event timestamps as parquet TIMESTAMP(NANOS),
     // which Spark only reads as raw long (SPARK-40819); Tables.events
     // converts back to TimestampType.
@@ -56,13 +56,15 @@ object GraftSession {
     .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     .config("spark.ui.enabled", "false")
 
-  def apply(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
-    val spark = tune(
+  /** A tuned session on `master`; `conf` adds a main's own settings. */
+  def apply(master: String = "local[32]", shufflePartitions: Int = 32,
+      conf: Map[String, String] = Map.empty): SparkSession = {
+    val spark = tune(conf.foldLeft(
       SparkSession.builder()
         .master(master)
         .appName("graft")
         .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    ).getOrCreate()
+    ) { case (b, (k, v)) => b.config(k, v) }).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

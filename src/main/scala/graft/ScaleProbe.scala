@@ -48,27 +48,12 @@ object ScaleProbe {
     }
     write(Tables.t(spark, src, "region"), "region")
     write(Tables.t(spark, src, "nation"), "nation")
-    amplified("customer") { (df, i) =>
-      df.withColumn("c_custkey", col("c_custkey") + off(i))
-    }
-    amplified("supplier") { (df, i) =>
-      df.withColumn("s_suppkey", col("s_suppkey") + off(i))
-    }
-    amplified("part") { (df, i) =>
-      df.withColumn("p_partkey", col("p_partkey") + off(i))
-    }
-    amplified("orders") { (df, i) =>
-      df.withColumn("o_orderkey", col("o_orderkey") + off(i))
-        .withColumn("o_custkey", col("o_custkey") + off(i))
-    }
-    amplified("lineitem") { (df, i) =>
-      df.withColumn("l_orderkey", col("l_orderkey") + off(i))
-        .withColumn("l_partkey", col("l_partkey") + off(i))
-        .withColumn("l_suppkey", col("l_suppkey") + off(i))
-    }
-    amplified("events") { (df, i) =>
-      df.withColumn("event_id", col("event_id") + off(i))
-        .withColumn("user_id", col("user_id") + off(i))
+    // the key-only tables: copy i shifts each key column by i·2^32
+    Seq("customer" -> Seq("c_custkey"), "supplier" -> Seq("s_suppkey"), "part" -> Seq("p_partkey"),
+      "orders" -> Seq("o_orderkey", "o_custkey"),
+      "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
+      "events" -> Seq("event_id", "user_id")).foreach { case (table, keys) =>
+      amplified(table)((df, i) => keys.foldLeft(df)((d, k) => d.withColumn(k, col(k) + off(i))))
     }
     amplified("documents") { (df, i) =>
       if (i == 0) df
@@ -142,9 +127,14 @@ object ScaleProbe {
     *    occupancy × bits), measured 3.0–4.9× over naive-linear across
     *    the r13/r14 runs (min-of-2: 139.7 s in-bench, 121.5 s in a
     *    standalone JVM — the growth is real, not harness state) and
-    *    falsified three ways as a partition/spill problem. 5.5 = the
-    *    measured band + headroom, still far below the ~10× a
-    *    quadratic stage shows one decade up.
+    *    falsified three ways as a partition/spill problem (round 13,
+    *    local[32]): a global initialPartitionNum=1024 taxed every small
+    *    iterative query (q42_reach 2.3→11.3 s), a probe-scoped 32·amp
+    *    thrashed TaskMemoryManager page allocation and killed the
+    *    build, a probe-scoped 1024 changed nothing (164 s vs 158 s).
+    *    The stage is bound by TOTAL candidate volume; on a cluster the
+    *    knob is executors. 5.5 = the measured band + headroom, still
+    *    far below the ~10× a quadratic stage shows one decade up.
     *  - graph_edge has NO data curvature — a standalone clean-JVM
     *    amp=100 run measures 22.5 s (ratio ≈ 0.44, deeply sublinear);
     *    inside the full bench the same stage measures 70–126 s (r13
@@ -173,16 +163,21 @@ object ScaleProbe {
     */
   private[graft] def stageFlagsOf(stages: Seq[(String, Double)],
       stageBaseline: Map[String, Double], linFactor: Double,
-      flagMinSec: Double): (Seq[(String, Double)], Seq[String]) = {
-    val stagesMap = stages.toMap
-    val ratios = stages.flatMap { case (name, sec) =>
-      stageBaseline.get(name).filter(_ > 0.05).map(base =>
-        name -> sec / (linFactor * base))
+      flagMinSec: Double): (Seq[(String, Double)], Seq[String]) =
+    flagsOf(stages, stageBaseline, linFactor, flagMinSec, stageAllowance)
+
+  /** the one decade rule for stages and queries: ratio = t / (linFactor ·
+    * base) for a base above 0.05 s; flag past `allowance` AND above
+    * `flagMinSec`, so fixed per-query overhead can't flag
+    */
+  private def flagsOf(times: Seq[(String, Double)], baseline: Map[String, Double],
+      linFactor: Double, flagMinSec: Double,
+      allowance: String => Double): (Seq[(String, Double)], Seq[String]) = {
+    val ratios = times.flatMap { case (name, sec) =>
+      baseline.get(name).filter(_ > 0.05).map(base => name -> sec / (linFactor * base))
     }
-    val flagged = ratios.collect {
-      case (name, r) if r > stageAllowance(name) && stagesMap(name) > flagMinSec => name
-    }
-    (ratios, flagged)
+    val secs = times.toMap
+    (ratios, ratios.collect { case (name, r) if r > allowance(name) && secs(name) > flagMinSec => name })
   }
 
   /** Run the probe: amplify into `dest`, rebuild the topic + the corpus
@@ -225,39 +220,19 @@ object ScaleProbe {
       stageBaseline: Map[String, Double] = Map.empty): Result = {
     val t0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - t0) / 1e9
-    def timed(body: => Unit): Double = {
-      val s = System.nanoTime()
-      body
-      (System.nanoTime() - s) / 1e9
-    }
-    // Shuffle-parallelism finding (round 13, measured, kept as a
-    // negative result): the sub-stage keys isolated embed_verify as the
-    // ONLY super-linear sub-stage (~4× over naive-linear decade-over-
-    // decade at amp=100). The too-few-partitions/spill hypothesis was
-    // TESTED and FALSIFIED on this 128 GiB local[32] harness — global
-    // initialPartitionNum=1024 taxed every small iterative query
-    // (q42_reach 2.3→11.3 s), probe-scoped 32·amp=3200 thrashed
-    // TaskMemoryManager page allocation and killed the build, and
-    // probe-scoped 1024 changed nothing (164 s vs the 158 s baseline).
-    // The stage is bound by TOTAL candidate volume — the probe join
-    // emits ~n·tables·(bits+1)·occupancy rows before distinct, and both
-    // bits and occupancy carry the DESIGNED log/√ growth
-    // (embedLshBitsFor), ~1.5× per decade — amplified here by one JVM's
-    // fixed memory bandwidth. On a real cluster the operator knob is
-    // executors; the stage keys below keep the curvature measured every
-    // round so a drift past the log factor is visible immediately.
     try {
     // self-contained run: a stale dest from an earlier probe would let
     // the topic-ingest stage (and any index table left by another JVM)
     // report near-zero — delete first so every stage pays its real cost
-    rmTree(new java.io.File(dest))
+    graft.rawdata.Topic.rmTree(new java.io.File(dest))
     graft.rawdata.EventsAsTopic.invalidate(dest)
     // reclaim the preceding stages' dead shuffle files before the big
     // amplified shuffles start (ContextCleaner acts on GC; a large heap
     // may not have GC'd once across the whole preceding bench)
     System.gc()
-    val amplifySec = timed(amplify(spark, src, dest, amp))
-    val topicSec = timed(graft.rawdata.EventsAsTopic.topicDir(spark, dest): Unit)
+    // a throw here ends the probe: the caller reports the probe's error
+    val amplifySec = Bench.timed(amplify(spark, src, dest, amp)).toTry.get
+    val topicSec = Bench.timed(graft.rawdata.EventsAsTopic.topicDir(spark, dest): Unit).toTry.get
     // sub-stage collector for the two heavyweight builds (90 % of probe
     // wall-time at amp=100): per-table graph timings and the embed
     // sig/band/cand/verify split land in the probe JSON at both decades
@@ -279,12 +254,11 @@ object ScaleProbe {
     // One failing stage (e.g. transient disk pressure) records an error
     // and lets the rest of the probe still measure.
     def stageSafe(name: String, gcAfter: Boolean)(body: => Unit): Option[Double] =
-      try {
-        val t = timed(body)
-        if (gcAfter) System.gc()
-        Some(t)
-      } catch {
-        case e: Throwable =>
+      Bench.timed(body) match {
+        case Right(t) =>
+          if (gcAfter) System.gc()
+          Some(t)
+        case Left(e) =>
           errors += name -> e.getClass.getSimpleName
           System.gc()
           None
@@ -335,16 +309,8 @@ object ScaleProbe {
       val samples = passTimes.flatMap(_.get(name))
       if (samples.isEmpty) None else Some(name -> samples.min)
     }
-    val ratios = queries.flatMap { case (name, sec) =>
-      baseline.get(name).filter(_ > 0.05).map { base =>
-        name -> sec / (linFactor * base)
-      }
-    }
     // super-linear flag: meaningfully slower than linFactor × baseline
-    // AND big enough that fixed per-query overhead isn't the explanation
-    val flagged = ratios.collect {
-      case (name, r) if r > flagRatio && queries.toMap.apply(name) > flagMinSec => name
-    }
+    val (ratios, flagged) = flagsOf(queries, baseline, linFactor, flagMinSec, _ => flagRatio)
     // per-stage min over the rebuild passes, then the same flag shape as
     // the queries: ratio over its per-stage budget AND above the
     // fixed-overhead floor (sub-2 s stages can't flag — graph_wm-class
@@ -362,8 +328,21 @@ object ScaleProbe {
     } finally System.gc() // release the probe's dead shuffle files promptly
   }
 
-  def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(): Unit
-  }
+  /** The scale-probe section of the bench report; Bench and
+    * ScaleProbeMain both print it.
+    */
+  def section(r: Result): Json = Json.Obj(Seq(
+      "detail" -> Json.Str("scale-probe"), "amp" -> Json.Int(r.amp),
+      "amplify_sec" -> Json.Num(r.amplifySec), "topic_ingest_sec" -> Json.Num(r.topicIngestSec)) ++
+    r.indexSec.map { case (n, v) => s"${n}_index_build_sec" -> Json.Num(v) } ++ Seq(
+      "queries" -> Json.numObj(r.queries), "stages" -> Json.numObj(r.stages),
+      "stages_pass1" -> Json.numObj(r.stagePass1), "stages_pass2" -> Json.numObj(r.stagePass2),
+      "stage_ratio" -> Json.numObj(r.stageRatios), "stage_flagged" -> Json.strArr(r.stageFlagged),
+      "linear_ratio" -> Json.numObj(r.ratios), "flagged" -> Json.strArr(r.flagged),
+      "stage_errors" -> Json.strArr(r.errors.map { case (n, e) => s"$n:$e" }),
+      "truncated" -> Json.Bool(r.truncated)): _*)
+
+  /** the section of a probe that threw before returning its [[Result]] */
+  def errorSection(amp: Int, e: Throwable): Json = Json.Obj("detail" -> Json.Str("scale-probe"),
+    "amp" -> Json.Int(amp), "error" -> Json.Str(e.getClass.getSimpleName))
 }

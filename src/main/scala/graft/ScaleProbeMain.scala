@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone runner for the amplified-scale probe (dev loop: iterate on
   * the probe without paying the full 212-query bench first).
   *
@@ -9,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Probes SPARK_GRAFT_SF_DIR (default sf0.1) at the given amplification
   * against no baseline (ratios empty — this runner is for stage timings,
-  * disk behavior and stage_errors, not regression flags).
+  * disk behavior and stage_errors, not regression flags). Prints the
+  * bench report's scale-probe section for the run.
   */
 object ScaleProbeMain {
   def main(args: Array[String]): Unit = {
@@ -18,22 +17,14 @@ object ScaleProbeMain {
     val stagePasses = args.lift(2).map(_.toInt).getOrElse(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.cleaner.periodicGC.interval", "2min"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt,
+      Map("spark.cleaner.periodicGC.interval" -> "2min"))
     val dest = new java.io.File(sys.props("java.io.tmpdir"), s"graft_amp$amp").getAbsolutePath
     val r = ScaleProbe.run(spark, sfDir, dest, amp, Bench.probeNames,
       Map.empty, linFactor = amp.toDouble, passes = passes, budgetSec = 2400.0,
       stagePasses = stagePasses)
-    println(s"amplify=${r.amplifySec}s topic=${r.topicIngestSec}s")
-    r.indexSec.foreach { case (n, t) => println(f"index $n: $t%.1f s") }
-    r.stages.foreach { case (n, t) => println(f"stage $n: $t%.2f s") }
-    r.queries.foreach { case (n, t) => println(f"query $n: $t%.2f s") }
-    println(s"errors=${r.errors} truncated=${r.truncated}")
-    ScaleProbe.rmTree(new java.io.File(dest))
+    println(ScaleProbe.section(r).render)
+    graft.rawdata.Topic.rmTree(new java.io.File(dest))
     spark.stop()
   }
 }

@@ -202,7 +202,7 @@ object CorpusLshIndex {
           .distinct()
         Lsh.create(s, DedupQueries.embedVerify(cand, e, e), "epair", tg, bucketed("vec_a"))
       }
-      // finally: a failed band/verify stage (the case ScaleProbe's
+      // finally: a failed band/verify stage (the case the scale probe's
       // fault isolation continues past) must not leave the full banded
       // corpus pinned in the cache manager for the rest of the JVM
       } finally e.unpersist(): Unit
@@ -280,8 +280,8 @@ object CorpusLshIndex {
   }
 
   /** Drop ONLY the embedding-side tables (epair + eband) so the staged
-    * embed build can re-run for min-of-N stage timing (ScaleProbe's
-    * de-noised passes) without rebuilding the text-side tables. Data
+    * embed build can re-run for min-of-N stage timing (the scale
+    * probe's de-noised passes) without rebuilding the text-side tables. Data
     * files stay in place — both staged writes are Overwrite, and epair
     * (the commit marker) is dropped first so a crash between the two
     * drops still leaves the pair uncommitted, never a fresh epair

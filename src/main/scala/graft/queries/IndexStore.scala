@@ -123,7 +123,7 @@ object IndexStore {
 
     def drop(s: SparkSession, tg: String): Unit = {
       tables(s, tg).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"): Unit)
-      graft.ScaleProbe.rmTree(tagDir(tg))
+      graft.rawdata.Topic.rmTree(tagDir(tg))
     }
 
     /** on-disk data-file count of one table — the compaction observable */

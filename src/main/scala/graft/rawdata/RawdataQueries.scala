@@ -18,6 +18,19 @@ object RawdataQueries {
 
   private def topic(s: SparkSession, d: String): String = EventsAsTopic.topicDir(s, d)
 
+  /** rd_compact_plan's packing over a topic dir's file listing: one
+    * (from_ts_ms, n_messages) row per file with the `merge_group` that
+    * greedily packs consecutive files into ≤ 3× the mean file's messages.
+    */
+  private[graft] def mergeGroups(s: SparkSession, dir: String): DataFrame =
+    Topic.fileListingDF(s, dir)
+      .select(col("fromTsMs").as("from_ts_ms"), col("count").as("n_messages"))
+      .withColumn("budget", expr(
+        "greatest(1L, (sum(n_messages) over (partition by 1) div count(1) over (partition by 1)) * 3)"))
+      .withColumn("cum", sum(col("n_messages")).over(Window.partitionBy(lit(1)).orderBy(col("from_ts_ms"))))
+      .withColumn("merge_group",
+        floor((col("cum") - col("n_messages")) / col("budget")).cast("long"))
+
   /** The (approxTimestamp, tolerance) a cursorOf caller supplies — the
     * reference API's contract is that the caller knows roughly when the
     * message happened (AvroRawdataClient.java:89-115 takes both). Modeled
@@ -128,15 +141,7 @@ object RawdataQueries {
     // that listing (one row per topic file, the same bounded relation
     // every maintenance pass already holds in memory).
     "rd_compact_plan" -> { (s, d) =>
-      val files = Topic.fileListingDF(s, topic(s, d))
-        .select(col("fromTsMs").as("from_ts_ms"), col("count").as("n_messages"))
-      val wOrd = Window.partitionBy(lit(1)).orderBy(col("from_ts_ms"))
-      files
-        .withColumn("budget", expr(
-          "greatest(1L, (sum(n_messages) over (partition by 1) div count(1) over (partition by 1)) * 3)"))
-        .withColumn("cum", sum(col("n_messages")).over(wOrd))
-        .withColumn("merge_group",
-          floor((col("cum") - col("n_messages")) / col("budget")).cast("long"))
+      mergeGroups(s, topic(s, d))
         .groupBy(col("merge_group"))
         .agg(count(lit(1)).as("n_files"), sum(col("n_messages")).as("n_messages"),
           min(col("from_ts_ms")).as("first_from_ts_ms"),
@@ -152,15 +157,7 @@ object RawdataQueries {
     // Same listing-only derivation as rd_compact_plan (no message data
     // touched), rolled to one row; ppm DECIMAL-guarded.
     "rd_compact_gain" -> { (s, d) =>
-      val files = Topic.fileListingDF(s, topic(s, d))
-        .select(col("fromTsMs").as("from_ts_ms"), col("count").as("n_messages"))
-      val wOrd = Window.partitionBy(lit(1)).orderBy(col("from_ts_ms"))
-      files
-        .withColumn("budget", expr(
-          "greatest(1L, (sum(n_messages) over (partition by 1) div count(1) over (partition by 1)) * 3)"))
-        .withColumn("cum", sum(col("n_messages")).over(wOrd))
-        .withColumn("merge_group",
-          floor((col("cum") - col("n_messages")) / col("budget")).cast("long"))
+      mergeGroups(s, topic(s, d))
         .groupBy(col("merge_group"))
         .agg(count(lit(1)).as("n_files"), sum(col("n_messages")).as("grp_messages"))
         .agg(sum(col("n_files")).as("files_before"),

@@ -558,6 +558,12 @@ object Topic {
     d.getAbsolutePath
   }
 
+  /** delete a local file or directory tree (scratch dirs, index tag dirs) */
+  def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(rmTree)
+    f.delete(): Unit
+  }
+
   /** Local scratch dir as an explicit `file:` URI — exercises the exact
     * URI-scheme resolution a `gs://`/`s3a://` topic would take.
     */

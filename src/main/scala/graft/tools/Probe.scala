@@ -23,13 +23,14 @@ object Probe {
         case "explain" => df.explain("formatted")
         case "show" => df.show(50, false)
         case "time" =>
+          var rows = -1L
           val runs = (1 to 2).map { _ =>
             spark.catalog.clearCache()
-            val t0 = System.nanoTime()
-            val rows = graft.SparkEntry.queries(n)(spark, dir).count()
-            ((System.nanoTime() - t0) / 1e9, rows)
+            graft.Bench.timed { rows = graft.SparkEntry.queries(n)(spark, dir).count() }
           }
-          println(f"  ${runs.map(_._1).min}%.2f s  (passes ${runs.map(r => f"${r._1}%.2f").mkString("/")}, rows ${runs.head._2})")
+          // a pass that threw has no time: it shows as its exception
+          val min = if (runs.forall(_.isRight)) graft.Json.fmt(runs.flatMap(_.toOption).min) else "error"
+          println(s"  $min s  (passes ${runs.map(_.fold(_.getClass.getSimpleName, graft.Json.fmt)).mkString("/")}, rows $rows)")
       }
     }
     spark.stop()

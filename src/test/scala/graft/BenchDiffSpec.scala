@@ -201,4 +201,74 @@ class BenchDiffSpec extends AnyFunSuite {
       "d" -> 99.0)) // no prior (new query) → skipped
     assert(got === Seq(("a", 1.0, 1.9)))
   }
+
+  test("crash rule: a pass that threw is no time, never a fast result") {
+    assert(Bench.timed(throw new IllegalStateException("boom")).isLeft)
+    assert(Bench.timed(()).exists(_ >= 0))
+    val (results, total, rows) = Bench.queryTimesOf(Seq(
+      "a" -> Seq(Some(2.0), Some(1.5)), // min of the passes
+      "b" -> Seq(Some(0.01), None), // crashed after 10 ms: -1, not 0.01
+      "c" -> Seq(Some(3.0), Some(9.0), Some(2.5)), // the rerun joins the min
+      "d" -> Seq(Some(1.0), Some(1.0), None))) // the rerun threw
+    assert(results === Seq("a" -> 1.5, "b" -> -1.0, "c" -> 2.5, "d" -> -1.0))
+    assert(total === 4.0, "total sums measured results only")
+    assert(rows === Seq(("b", -1.0, -1.0), ("d", -1.0, -1.0)))
+    assert(Bench.regressionJson(rows.take(1)) === """[{"q":"b","error":"probe_error"}]""")
+    // next run: a crashed query's -1 prior is no prior
+    assert(Bench.regressionsVs(Map("b" -> -1.0, "a" -> 1.5), Seq("b" -> 5.0, "a" -> 1.6)) ===
+      Seq.empty)
+  }
+
+  // Golden strings: what the hand-interpolated templates the typed
+  // sections replaced printed for the same inputs (-1 sentinels, 6.0 and
+  // 0.125, empty maps) — the artifact's bytes must not move.
+  test("golden: ingest-only, all-queries and final lines") {
+    assert(Bench.ingestSection(30000L, Seq((0.47, 0.19), (6.0, 0.125), (0.5, 0.2),
+      (0.59, 0.18), (0.6, 0.27))).render ===
+      """{"metric":"ingest","msgs":30000,"write_msgs_per_sec":50847,"read_msgs_per_sec":157895,"write_sec_samples":[0.47,6,0.5,0.59,0.6],"read_sec_samples":[0.19,0.13,0.2,0.18,0.27]}""")
+    assert(Bench.allQueriesSection(Seq("dd_minhash" -> 6.0, "q1_agg" -> 0.125,
+      "rd_read_topic" -> -1.0)).render ===
+      """{"detail":"all-queries","n":3,"queries":{"dd_minhash":6,"q1_agg":0.13,"rd_read_topic":-1}}""")
+    assert(Bench.allQueriesSection(Seq.empty).render ===
+      """{"detail":"all-queries","n":0,"queries":{}}""")
+    val h = Bench.Headline(6.125, 3, 30000L, 59638.09, 0.125, -1.0, 6.0,
+      Seq("q1_agg" -> 0.125, "dd_minhash" -> 6.0), "data/sf0.1")
+    assert(h.json(Seq(("q1_agg", 1.0, 1.9), ("listing:probe_error", -1.0, -1.0))).render ===
+      """{"metric":"total","value":6.13,"unit":"sec","n_queries":3,"regressions":[{"q":"q1_agg","prev":1,"cur":1.9},{"q":"listing:probe_error","error":"probe_error"}],"ingest_msgs":30000,"ingest_write_msgs_per_sec":59638.09,"ingest_read_msgs_per_sec":0.13,"lsh_index_build_sec":-1,"index_build_sec":6,"queries":{"q1_agg":0.13,"dd_minhash":6},"sf":"data/sf0.1"}""")
+    assert(h.copy(total = 0.0, nQueries = 0, queries = Nil).json(Nil).render ===
+      """{"metric":"total","value":0,"unit":"sec","n_queries":0,"regressions":[],"ingest_msgs":30000,"ingest_write_msgs_per_sec":59638.09,"ingest_read_msgs_per_sec":0.13,"lsh_index_build_sec":-1,"index_build_sec":6,"queries":{},"sf":"data/sf0.1"}""")
+  }
+
+  test("golden: per-pass and listing-probe sections") {
+    val p = Bench.PerPass(4.99, -1.0, 0.125, 6.0, 1.28, 6.97, -1.0,
+      Seq("embed_verify" -> 0.125, "graph_edge" -> 1.35), Seq((0.47, 0.19), (6.0, 0.125)),
+      Seq(2.23, 6.0, 0.125), candFresh = 0.8,
+      lsh = Bench.Maintenance(-1.0, -1.0, 1.3, -1.0), ivf = Bench.Maintenance(0.5, 6.0, 0.125, -1.0),
+      graph = Bench.Maintenance(-1.0, -1.0, -1.0, -1.0),
+      run1 = Seq("dd_minhash" -> 0.07, "q1_agg" -> -1.0),
+      run2 = Seq("dd_minhash" -> 6.0, "q1_agg" -> 0.125), rerun = Nil)
+    assert(p.json.render ===
+      """{"detail":"per-pass","setup_sec":4.99,"lsh_index_build_sec":-1,"token_index_build_sec":0.13,"graph_index_build_sec":6,"ivf_index_build_sec":1.28,"bpe_artifact_sec":6.97,"index_build_sec":-1,"stages":{"embed_verify":0.13,"graph_edge":1.35},"ingest_write_sec_samples":[0.47,6],"ingest_read_sec_samples":[0.19,0.13],"noise_probe_sec":[2.23,6,0.13],"lsh_compact_sec":1.3,"cand_gen_fresh_sec":0.8,"cand_gen_appended_sec":-1,"cand_gen_compacted_sec":-1,"ivf_probe_fresh_sec":0.5,"ivf_probe_appended_sec":6,"ivf_compact_sec":0.13,"ivf_probe_compacted_sec":-1,"graph_compact_sec":-1,"graph_probe_appended_sec":-1,"graph_probe_compacted_sec":-1,"queries_run1":{"dd_minhash":0.07,"q1_agg":-1},"queries_run2":{"dd_minhash":6,"q1_agg":0.13},"queries_rerun":{}}""")
+    val at10k = Bench.ListingStages(0.87, 0.125, 2.05, 1.18, 0.0, cachePaidRpc = false)
+    val at100k = Bench.ListingStages(1.4, 0.01, 6.0, 5.07, 0.0, cachePaidRpc = false)
+    assert(Bench.listingSection(Some(at10k), Some(at100k), Nil).render ===
+      """{"detail":"listing-probe","files":[10000,100000],"list_sec":[0.87,1.4],"prune_sec":[0.13,0.01],"plan_sec":[2.05,6],"paged_list_sec":[1.18,5.07],"cached_repeat_sec":[0,0],"flagged":[]}""")
+    assert(Bench.listingSection(Some(at10k), None, Seq("probe_error")).render ===
+      """{"detail":"listing-probe","files":[10000,100000],"list_sec":[0.87,-1],"prune_sec":[0.13,-1],"plan_sec":[2.05,-1],"paged_list_sec":[1.18,-1],"cached_repeat_sec":[0,-1],"flagged":["probe_error"]}""")
+  }
+
+  test("golden: scale-probe section, truncated with stage errors, and its error form") {
+    val r = ScaleProbe.Result(100, 61.0, 0.125, Seq("lsh" -> 6.0, "embed" -> -1.0),
+      Seq("q1_agg" -> 12.5), Seq("q1_agg" -> 1.25), Seq("q1_agg"), truncated = true,
+      errors = Seq("embed" -> "OutOfMemoryError", "graph#2" -> "SparkException"),
+      stages = Seq("graph_edge" -> 81.9), stageRatios = Seq("graph_edge" -> 1.6),
+      stagePass1 = Seq("graph_edge" -> 81.9))
+    assert(ScaleProbe.section(r).render ===
+      """{"detail":"scale-probe","amp":100,"amplify_sec":61,"topic_ingest_sec":0.13,"lsh_index_build_sec":6,"embed_index_build_sec":-1,"queries":{"q1_agg":12.5},"stages":{"graph_edge":81.9},"stages_pass1":{"graph_edge":81.9},"stages_pass2":{},"stage_ratio":{"graph_edge":1.6},"stage_flagged":[],"linear_ratio":{"q1_agg":1.25},"flagged":["q1_agg"],"stage_errors":["embed:OutOfMemoryError","graph#2:SparkException"],"truncated":true}""")
+    assert(ScaleProbe.section(ScaleProbe.Result(10, 0.0, 0.0, Nil, Nil, Nil, Nil, truncated = false))
+      .render ===
+      """{"detail":"scale-probe","amp":10,"amplify_sec":0,"topic_ingest_sec":0,"queries":{},"stages":{},"stages_pass1":{},"stages_pass2":{},"stage_ratio":{},"stage_flagged":[],"linear_ratio":{},"flagged":[],"stage_errors":[],"truncated":false}""")
+    assert(ScaleProbe.errorSection(100, new IllegalStateException("x")).render ===
+      """{"detail":"scale-probe","amp":100,"error":"IllegalStateException"}""")
+  }
 }

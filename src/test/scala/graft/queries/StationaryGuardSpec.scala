@@ -31,7 +31,7 @@ class StationaryGuardSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("bounded-event-type-enum contract"),
       s"guard must name the contract, got: ${e.getMessage}")
-    graft.ScaleProbe.rmTree(new java.io.File(dir))
+    graft.rawdata.Topic.rmTree(new java.io.File(dir))
   }
 
   test("ev_stationary: the real corpus stays inside the guard") {

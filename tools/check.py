@@ -1,25 +1,32 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate.
 
-Usage: python3 tools/check.py [sfdir] [outdir] [--no-run]
+Usage: python3 tools/check.py [sfdir] [outdir] [--no-run] [--only a,b]
 
 Runs graft.Verify via sbt at sfdir (default sf0.01), then replays every
 oracle_sql.json query in DuckDB over the same parquet tables and
 compares value-by-value (columns sorted by name, rows sorted by all
 columns, floats compared to 1e-9 relative — stricter than a hash, and
 tells you WHERE it diverged).
+
+--only a,b runs graft.Verify with its query-name filter and compares only
+those names; a subset run does not rewrite CORRECTNESS_LOCAL.json.
 """
 import json, math, subprocess, sys
 from pathlib import Path
 
 import duckdb
 
-SF = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else "/root/testdata/sf0.01"
-OUT = sys.argv[2] if len(sys.argv) > 2 and not sys.argv[2].startswith("--") else "/tmp/graft_verify"
+args = sys.argv[1:]
+ONLY = args.pop(args.index("--only") + 1).split(",") if "--only" in args else None
+pos = [a for a in args if not a.startswith("--")]
+SF = pos[0] if pos else "/root/testdata/sf0.01"
+OUT = pos[1] if len(pos) > 1 else "/tmp/graft_verify"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 if "--no-run" not in sys.argv:
-    r = subprocess.run(["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
+    main = f"runMain graft.Verify {SF} {OUT}" + (f" {','.join(ONLY)}" if ONLY else "")
+    r = subprocess.run(["sbt", "-batch", main],
                        capture_output=True, text=True, timeout=1800)
     if "[success]" not in r.stdout:
         print(r.stdout[-4000:]); print(r.stderr[-4000:]); sys.exit(1)
@@ -70,8 +77,8 @@ def record(name, rows_match=None, schema_match=None, hash_match=None,
     entries[name] = {"rows_match": rows_match, "schema_match": schema_match,
                      "hash_match": hash_match, "spark_rows": spark_rows,
                      "oracle_rows": oracle_rows, "err": err}
-for name in sorted(json.loads(Path(OUT, "oracle_sql.json").read_text()) | {
-        k: None for k in [p.name for p in Path(OUT).iterdir() if p.is_dir()]}):
+names = ONLY or (oracle | {p.name: None for p in Path(OUT).iterdir() if p.is_dir()})
+for name in sorted(names):
     res_dir = Path(OUT) / name
     if not res_dir.is_dir():
         fails.append((name, "no spark output"))
@@ -115,8 +122,9 @@ for name in sorted(json.loads(Path(OUT, "oracle_sql.json").read_text()) | {
 # builder-side oracle state matches what the driver will compute, so an
 # oracle regression is caught before the driver runs (committed at round
 # close next to BENCH_DETAIL.json)
-Path("CORRECTNESS_LOCAL.json").write_text(
-    json.dumps(dict(sorted(entries.items())), indent=1) + "\n")
+if ONLY is None:
+    Path("CORRECTNESS_LOCAL.json").write_text(
+        json.dumps(dict(sorted(entries.items())), indent=1) + "\n")
 print(f"\nPASS ({len(passes)}): {' '.join(passes)}")
 for n, rows in skips: print(f"SKIP (rows-only, {rows} rows): {n}")
 for n, why in fails: print(f"FAIL: {n}: {why}")
